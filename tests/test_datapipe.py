@@ -318,6 +318,41 @@ def test_repetition_stats_flags_repetitive_doc(spark):
     assert rows[1]["keep"]
 
 
+def _ngram_diversity_brute(text, max_n=3):
+    """Python reference: literal single-space split, n-grams in token
+    order, exact 6dp half-up rounding of distinct/total."""
+    if text is None:
+        return (None,) * (max_n + 1)
+    t = text.split(" ")
+    out = [len(t)]
+    for n in range(1, max_n + 1):
+        grams = [" ".join(t[i : i + n]) for i in range(len(t) - n + 1)]
+        d, c = len(set(grams)), len(grams)
+        out.append(((2000000 * d + c) // (2 * c)) / 1000000.0 if c else None)
+    return tuple(out)
+
+
+def test_ngram_diversity_matches_brute_force(spark):
+    texts = {
+        0: "a b c a b c a b d",
+        1: "single",
+        2: "too short",
+        3: "x x x x x x x",
+        4: "",
+        5: None,
+        6: "a  b  a  b ",
+        7: "the cat sat on the mat the cat sat on the hat",
+    }
+    docs = spark.createDataFrame(
+        sorted(texts.items()), "doc_id long, text string"
+    )
+    got = {
+        r["doc_id"]: (r["n_tokens"], r["distinct_1"], r["distinct_2"], r["distinct_3"])
+        for r in tx.ngram_diversity(docs).collect()
+    }
+    assert got == {k: _ngram_diversity_brute(v) for k, v in texts.items()}
+
+
 def test_quantize_int8_roundtrip_and_saturation(spark):
     emb = spark.createDataFrame(
         [(0, [0.5, -2.0, 1.0]), (1, [0.0, 0.25, -0.25])],

@@ -42,11 +42,19 @@ def _brute_components(n_nodes, edge_list):
 
 def test_two_phase_matches_min_label_on_random_graphs(spark):
     rng = random.Random(42)
+    graphs = []
     for _ in range(3):
         n = 60
-        edge_list = [
+        graphs.append((n, [
             (rng.randrange(n), rng.randrange(n)) for _ in range(rng.randrange(20, 55))
-        ]
+        ]))
+    # high-degree case: hub 100 with 200 leaves on both sides of its id
+    # (one collect_set row holds all of them) plus a 20-edge chain off
+    # leaf 201; node 0 and 222..229 stay isolated
+    leaves = [i for i in range(1, 202) if i != 100]
+    hub = [(100, i) for i in leaves] + [(i, i + 1) for i in range(201, 221)]
+    graphs.append((230, hub))
+    for n, edge_list in graphs:
         nodes, edges = _frames(spark, n, edge_list)
         truth = _brute_components(n, edge_list)
         assert _labels(gr.connected_components(nodes, edges)) == truth
@@ -65,7 +73,9 @@ def test_two_phase_path_graph_converges_in_log_rounds(spark):
     labels, rounds = gr.connected_components_two_phase(
         nodes, edges, return_rounds=True
     )
-    assert rounds <= 14, f"two-phase took {rounds} rounds on a 1000-node path"
+    # exact count: each round's edge set is fixed by the algorithm, so any
+    # change in the round count means the star steps changed
+    assert rounds == 11, f"two-phase took {rounds} rounds on a 1000-node path"
     assert _labels(labels) == {i: 0 for i in range(n)}
 
 

@@ -38,13 +38,14 @@ caught (or neutralized) LOCALLY — before the driver ever sees it.
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.check import canon, canon_duck_type, type_mismatches  # noqa: E402
 from trading_etl_spark.queries._oracle_norm import (  # noqa: E402

@@ -502,13 +502,42 @@ def test_adx_one_group_shuffle(spark):
 
 
 def test_ngram_diversity_no_shuffle_no_python(spark):
-    """The distinct-n diagnostic is entirely map-side codegen."""
+    """The distinct-n diagnostic is map-side and splits each document
+    once: the token array is a projected attribute, not a ``split``
+    re-inlined into every n-gram element of the ``transform`` lambdas."""
     docs = spark.createDataFrame(
         [(1, "a b c d"), (2, "a a a")], "doc_id long, text string"
     )
     plan = _physical(text.ngram_diversity(docs))
     assert "Exchange" not in plan, plan
     assert "EvalPython" not in plan and "InPandas" not in plan, plan
+    assert plan.count("split(") == 1, plan
+
+
+def test_star_round_is_collect_set_shape(spark):
+    """One large-star + small-star round: a ``collect_set`` groupBy per
+    star plus the final ``distinct`` — three hash exchanges (the
+    optimizer drops the large-star ``distinct`` under the small star's
+    duplicate-agnostic ``collect_set``), no join, no broadcast. The
+    per-node minimum is projected BELOW each explode, so it is computed
+    once per node instead of once per exploded neighbor."""
+    from trading_etl_spark.operators import graph as gr
+
+    e = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "u long, v long")
+    plan = _physical(gr._small_star(gr._large_star(e)))
+    assert plan.count("Exchange hashpartitioning") == 3, plan
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+    lines = plan.splitlines()
+    generates = [i for i, ln in enumerate(lines) if "Generate explode" in ln]
+    assert len(generates) == 2, plan
+    for i in generates:
+        below = lines[i + 1 :]
+        project = next(ln for ln in below if "Project [" in ln)
+        assert "array_min(" in project, plan
+        # the Project feeding the Generate, not one further down
+        assert below.index(project) < next(
+            j for j, ln in enumerate(below) if "ObjectHashAggregate" in ln
+        ), plan
 
 
 def test_knn_filtered_label_predicate_reaches_scan(spark):

@@ -91,7 +91,7 @@ def main() -> None:
             deadline = time.time() + 60
             while time.time() < deadline:
                 p = q.lastProgress
-                if p and p["numInputRows"] >= 0 and p["batchId"] >= i:
+                if p and p["batchId"] >= i:
                     break
                 time.sleep(0.1)
         time.sleep(2)  # let the final batch's progress land
@@ -110,6 +110,9 @@ def main() -> None:
         for p in prog
         if p.get("numInputRows", 0) > 0 and "durationMs" in p
     ]
+    # durationMs may lack triggerExecution or addBatch on some progress
+    # events; such a row has no duration to report, so skip it
+    rows = [r for r in rows if r[1] is not None and r[2] is not None]
     seen = {}
     for bid, trig, add, nrows in rows:
         seen[bid] = (trig, add, nrows)

@@ -22,9 +22,12 @@ contract —
   algorithm (Kiveris et al., "Connected Components in MapReduce and
   Beyond", SoCC'14) — converges in O(log n) rounds on ANY topology, the
   safe choice when cluster diameters are adversarial (chains of
-  pairwise-similar documents). Each round is two groupBy-join passes
-  over the edge list; rounds are asserted against min-label in
-  tests/test_graph.py on path/clique/random graphs.
+  pairwise-similar documents). Each star step is one ``collect_set``
+  groupBy on node id followed by one ``distinct`` — no join, no
+  broadcast. Memory bound: one row holds the neighbor id array of a
+  node, so the highest-degree node's ids must fit in a task. Results
+  are asserted against min-label and union-find in tests/test_graph.py
+  on path/clique/hub/random graphs.
 
 Both truncate lineage every iteration with ``localCheckpoint`` so plans
 stay O(1) deep, and both keep all data on executors — the driver sees
@@ -33,7 +36,7 @@ only per-round convergence aggregates.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -92,16 +95,18 @@ def connected_components(
 def _large_star(e: DataFrame) -> DataFrame:
     """Connect every neighbor LARGER than the center to the center's
     minimum: for each u over the symmetrized adjacency, m = min(Γ(u) ∪
-    {u}); emit (v, m) for v ∈ Γ(u), v > u. One groupBy + one join, both
-    keyed on node id."""
+    {u}); emit (v, m) for v ∈ Γ(u), v > u. One ``collect_set`` groupBy
+    on u, then one ``distinct`` — two exchanges, no join. m is projected
+    BELOW the explode so it is computed once per node, not once per
+    exploded neighbor (quadratic at a star center). Memory bound: one
+    row holds Γ(u), so the highest-degree node's neighbor ids must fit
+    in a task."""
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select("u", F.least("mn", F.col("u")).alias("m"))
-    )
     return (
-        sym.join(mins, "u")
+        sym.groupBy("u")
+        .agg(F.collect_set("v").alias("nb"))
+        .select("u", "nb", F.least(F.array_min("nb"), F.col("u")).alias("m"))
+        .select("u", "m", F.explode("nb").alias("v"))
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
         .distinct()
@@ -111,20 +116,23 @@ def _large_star(e: DataFrame) -> DataFrame:
 def _small_star(e: DataFrame) -> DataFrame:
     """Connect every neighbor SMALLER than the center (and the center)
     to the minimum: orient edges (hi, lo), m = min(N(u) ∪ {u}); emit
-    (v, m) for v ∈ N(u) ∪ {u} \\ {m}."""
-    hi_lo = (
+    (v, m) for v ∈ N(u) ∪ {u} \\ {m}. Same shape as :func:`_large_star`:
+    one ``collect_set`` groupBy on the larger endpoint (the set also
+    dedups the oriented edges), m projected below the explode, one
+    ``distinct``; the same one-row-per-node memory bound."""
+    return (
         e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    mins = hi_lo.groupBy("u").agg(F.min("v").alias("m"))
-    nbrs = (
-        hi_lo.join(mins, "u")
+        .groupBy("u")
+        .agg(F.collect_set("v").alias("nb"))
+        .select("u", "nb", F.array_min("nb").alias("m"))
+        .select(
+            "m", F.explode(F.concat("nb", F.array(F.col("u")))).alias("v")
+        )
         .filter(F.col("v") != F.col("m"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .distinct()
     )
-    centers = mins.select("u", F.col("m").alias("v"))
-    return nbrs.union(centers).distinct()
 
 
 def connected_components_two_phase(
@@ -143,7 +151,9 @@ def connected_components_two_phase(
     reachable vertex id; isolated vertices are singletons.
 
     Convergence is detected from a (count, xxhash64-xor) signature of the
-    edge set — one cheap aggregate per round instead of a set-difference
+    edge set, computed by ``observe`` on the relation each round
+    checkpoints — it rides the ``localCheckpoint`` job instead of running
+    an aggregate job of its own, and replaces a per-round set-difference
     join (xor, not sum: order-independent and immune to ANSI-mode long
     overflow; the edge set is distinct so pairs can't cancel). A signature
     match is then CONFIRMED exactly with one ``exceptAll`` anti-join
@@ -167,14 +177,18 @@ def connected_components_two_phase(
     rounds = 0
     for _ in range(max_iter):
         prev_e = e
-        e = _small_star(_large_star(e)).localCheckpoint()
-        rounds += 1
-        sig = tuple(
-            e.agg(
-                F.count(F.lit(1)),
-                F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)),
-            ).first()
+        obs = Observation()
+        e = (
+            _small_star(_large_star(e))
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("x"),
+            )
+            .localCheckpoint()
         )
+        rounds += 1
+        sig = (obs.get["n"], obs.get["x"])
         # Signature match → exact confirmation: both relations are distinct
         # with equal counts (the signature's count component), so an empty
         # set-difference proves true equality, ruling out a hash collision.

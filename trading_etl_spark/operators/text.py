@@ -104,7 +104,16 @@ def eval_once(col) -> Column:
     array, and CollapseProject leaves the deterministic computation fused
     in the stage below. The VALUE is unchanged (partition ids are always
     ≥ 0; a rand() guard does NOT survive — Spark 4 range-folds rand
-    comparisons to a literal and re-inlines)."""
+    comparisons to a literal and re-inlines).
+
+    Pushdown caveat: the guard makes the WHOLE projection
+    nondeterministic, and Catalyst pushes no predicate through a
+    projection with a nondeterministic field — not only the inferred
+    generator filter. A consumer filtering the output (say on doc_id)
+    then computes the pinned column for every input row and cannot prune
+    the scan. Apply key filters before the pinned projection (as
+    ``dedup_incremental_minhash`` does through its cached relation) and do
+    not wrap columns a consumer may filter on."""
     return F.when(F.spark_partition_id() >= 0, col)
 
 
@@ -257,33 +266,54 @@ def ngram_diversity(docs: DataFrame, max_n: int = 3) -> DataFrame:
     the Gopher repetition gate, but scored per doc so it composes with
     the sampling/quality pipeline).
 
-    Entirely map-side codegen: n-grams build via ``transform`` over an
-    index ``sequence`` with ``element_at`` gathers (construction order is
-    the token order, matching the DuckDB twin exactly), distinct counts
-    via ``array_distinct`` — zero shuffles, zero Python, memory bounded
-    by the document. Docs shorter than n rows yield NULL for that n (the
-    ratio is undefined, not 0) in both engines."""
-    t = F.split("text", " ")
+    Map-side, zero shuffles and zero Python, memory bounded by the
+    document. n-grams build via ``transform`` over an index ``sequence``
+    with ``element_at`` gathers (construction order is the token order,
+    matching the DuckDB twin exactly); the higher-order-function
+    projection runs interpreted, not in generated code. Each per-row
+    array is PROJECTED once as an attribute: the tokens ``_t``, each
+    n-gram array ``_g{n}`` (NULL when the doc has fewer than n tokens),
+    then its distinct and total sizes. Every one of them is referenced
+    more than once downstream, so ``CollapseProject`` keeps them as
+    attributes; an unprojected ``split`` Column would be re-evaluated in
+    every ``element_at`` of the lambda — one full split per n-gram
+    element, O(tokens²) per doc. Docs shorter than n yield NULL for that
+    n (the ratio is undefined, not 0) in both engines."""
+    t = F.col("_t")
+    ns = range(1, max_n + 1)
 
-    def ratio(n: int) -> Column:
+    def grams(n: int) -> Column:
         if n == 1:
-            grams = t
-        else:
-            grams = F.transform(
+            return t
+        return F.when(
+            F.size(t) >= n,
+            F.transform(
                 F.sequence(F.lit(1), F.size(t) - (n - 1)),
                 lambda i: F.concat_ws(
                     " ", *[F.element_at(t, i + j) for j in range(n)]
                 ),
-            )
-        return F.when(
-            F.size(t) >= n,
-            ratio6(F.size(F.array_distinct(grams)), F.size(grams)),
-        ).alias(f"distinct_{n}")
+            ),
+        )
 
-    return docs.select(
-        "doc_id",
-        F.size(t).cast("long").alias("n_tokens"),
-        *[ratio(n) for n in range(1, max_n + 1)],
+    return (
+        docs.select("doc_id", F.split("text", " ").alias("_t"))
+        .select("doc_id", "_t", *[grams(n).alias(f"_g{n}") for n in ns])
+        .select(
+            "doc_id",
+            F.size(t).alias("_n"),
+            *[F.size(F.array_distinct(f"_g{n}")).alias(f"_d{n}") for n in ns],
+            *[F.size(f"_g{n}").alias(f"_c{n}") for n in ns],
+        )
+        .select(
+            "doc_id",
+            F.col("_n").cast("long").alias("n_tokens"),
+            *[
+                F.when(
+                    F.col("_n") >= n, ratio6(F.col(f"_d{n}"), F.col(f"_c{n}"))
+                ).alias(f"distinct_{n}")
+                for n in ns
+            ],
+        )
     )
 
 

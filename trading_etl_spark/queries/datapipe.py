@@ -537,7 +537,7 @@ def q_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-1/2/3 n-gram diversity per document (r10-born) — map-side
-    codegen n-gram construction + array_distinct, zero shuffles."""
+    n-gram construction + array_distinct, zero shuffles."""
     return tx.ngram_diversity(_docs(spark, sf_dir))
 
 
