@@ -279,148 +279,75 @@ def main() -> None:
 
     canary_burst("pre_cold")
 
-    # Cold candle-chain build, reported as its own line: tick scan → dedup →
-    # 1m agg → derived agg, single shuffle. The chain cache it populates is
-    # the in-session analog of the reference's materialized OHLC tables;
-    # the headline numbers below measure query logic over those cached
-    # relations (and say so here rather than pretending otherwise). Each of
-    # the N_RUNS repeats is genuinely cold — caches cleared before each —
-    # and the LAST build leaves the caches warm for the headline rounds.
+    # Cold lines: every cache the headline lines read warm keeps its build
+    # cost measured. Each of the N_RUNS repeats clears the line's cache
+    # kinds and times the build alone; the LAST build leaves the caches
+    # warm for the headline rounds.
+    # - candle_chain_cold: tick scan → dedup → 1m agg → derived agg, the
+    #   analog of the reference's materialized OHLC tables;
+    # - candle_cache_cold: the four relations the as-of/backtest/signal
+    #   queries read (deduped ticks, 1h candles, SMA facts, signal events)
+    #   over a WARM chain, built by the two-thread materializer and then
+    #   scanned end to end;
+    # - kmeans_train_cold, ivf_index_build_cold: the train-once codebook
+    #   and the IVF inverted lists the ANN/SemDeDup lines serve from;
+    # - lsh_bands_build_cold, exsub_positions_build_cold, bloom_build_cold:
+    #   the persisted index/filter artifacts of a corpus rollout; the
+    #   upstream shingle relation stays warm.
     # The cold lines stay CONSECUTIVE deliberately: interleaving them into
     # the headline rounds would clear the relation caches every round,
     # forcing every headline query onto fresh cached-relation identities
     # (new plans, fresh codegen) — measured +1.5-2 s of per-round re-warm
     # on the as-of query alone, an artifact, not query cost.
-    from trading_etl_spark.queries.datapipe import _CODEBOOK_CACHE, _codebook
-    from trading_etl_spark.queries.trading import clear_candle_caches
-
-    chain_fn = queries["ohlc_derived_multi_tf"]
-    cold: list[float] = []
-    for _ in range(N_RUNS):
-        clear_candle_caches(spark)
-        cold.append(run_once(chain_fn))
-    runs["candle_chain_cold"] = cold
-    canary_burst("post_chain_cold")
-
-    # Cold DOWNSTREAM-cache materialization, its own line (VERDICT r7 task
-    # #5): the as-of/backtest/signal queries read through four cached
-    # relations derived from the chain — deduped ticks, 1h candles, SMA
-    # facts, buy/sell signal events. candle_chain_cold above measures only
-    # the chain build; this line measures building those four relations over
-    # a WARM chain, so the headline as-of number below is pure steady-state
-    # query cost (round 1 previously re-paid this materialization). Each
-    # repeat clears only the downstream caches (_CHAIN_CACHE stays warm);
-    # the last build leaves everything warm for the headline rounds.
+    from trading_etl_spark import cache
+    from trading_etl_spark.operators import text as text_mod
+    from trading_etl_spark.queries import datapipe
     from trading_etl_spark.queries import trading as trading_mod
 
-    cache_cold: list[float] = []
-    for _ in range(N_RUNS):
-        trading_mod.clear_caches(
-            (
-                trading_mod._TICKS_CACHE,
-                trading_mod._CANDLE_CACHE,
-                trading_mod._SMA_CACHE,
-                trading_mod._EVENTS_1H_CACHE,
-            ),
-            spark.sparkContext.applicationId,
-        )
-        t0 = time.time()
-        # r17: the materializer overlaps the two independent build chains
-        # (ticks dedup ∥ candles→SMA→events, guide §2.6) and the relations
-        # are now EAGERLY materialized (localCheckpoint) — the noop writes
-        # below scan the materialized rows end-to-end as before, so the
-        # timed content (build all four relations cold + full scan) is
-        # unchanged; only the serialization of the two chains is gone.
+    def scan(df) -> None:
+        df.write.format("noop").mode("overwrite").save()
+
+    def relations_cold() -> None:
         trading_mod.materialize_trading_relations(spark, sf_dir)
-        trading_mod._buysell_events_1h(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        trading_mod._ticks(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        cache_cold.append(round(time.time() - t0, 3))
-    runs["candle_cache_cold"] = cache_cold
-    canary_burst("post_cache_cold")
+        scan(trading_mod._buysell_events_1h(spark, sf_dir))
+        scan(trading_mod._ticks(spark, sf_dir))
 
-    # Cold coarse-quantizer training, its own line for the same honesty
-    # reason: the train-once model caches mean the ANN/SemDeDup headline
-    # numbers measure serving over a warm codebook (the production read
-    # path); this line keeps the training cost itself measured. The last
-    # run leaves the cache warm for the consumers.
-    train_cold: list[float] = []
-    for _ in range(N_RUNS):
-        _CODEBOOK_CACHE.clear()
-        t0 = time.time()
-        _codebook(spark, sf_dir)  # eager Lloyd loop — no action needed
-        train_cold.append(round(time.time() - t0, 3))
-    runs["kmeans_train_cold"] = train_cold
-    canary_burst("post_train_cold")
-
-    # Cold IVF inverted-list build (r10): corpus cell assignment + norms
-    # are index-BUILD state (what FAISS's IndexIVF stores); the warm ANN
-    # headline line reads the cached lists, so this line keeps the build
-    # cost measured. clear_caches unpersists the cached relation; the
-    # last build leaves it warm for the headline rounds.
-    from trading_etl_spark.queries.datapipe import _IVF_INDEX_CACHE, _ivf_index
-
-    index_cold: list[float] = []
-    for _ in range(N_RUNS):
-        trading_mod.clear_caches(
-            (_IVF_INDEX_CACHE,), spark.sparkContext.applicationId
-        )
-        t0 = time.time()
-        _ivf_index(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        index_cold.append(round(time.time() - t0, 3))
-    runs["ivf_index_build_cold"] = index_cold
-    canary_burst("post_index_cold")
-
-    # Cold TEXT-index builds (r17): the banded LSH index relation, the
-    # positional shingle-hash relation, and the decontamination Bloom
-    # bitmap became session caches this round (they are the persisted
-    # index/filter artifacts of a corpus rollout — built once, probed by
-    # every consumer), so the warm dedup/decontaminate headline lines now
-    # measure serving. These lines keep each moved build cost measured,
-    # same honesty contract as kmeans_train_cold / ivf_index_build_cold.
-    # Each repeat clears ONLY its own cache (the upstream shingle relation
-    # stays warm — its build precedent predates these lines and lands in
-    # first_run_total_sec); the last build leaves the cache warm.
-    from trading_etl_spark.operators import text as text_mod
-    from trading_etl_spark.queries.datapipe import _docs, _split_shingles
-
-    docs_rel = _docs(spark, sf_dir)
-    app_id = spark.sparkContext.applicationId
-
-    bands_cold: list[float] = []
-    for _ in range(N_RUNS):
-        trading_mod.clear_caches((text_mod._BANDS_REL_CACHE,), app_id)
-        t0 = time.time()
-        text_mod._band_keys_cached(text_mod._shingles_cached(docs_rel))
-        bands_cold.append(round(time.time() - t0, 3))
-    runs["lsh_bands_build_cold"] = bands_cold
-
-    pos_cold: list[float] = []
-    for _ in range(N_RUNS):
-        trading_mod.clear_caches((text_mod._POS_REL_CACHE,), app_id)
-        t0 = time.time()
-        text_mod._positions_cached(docs_rel, text_mod.EXSUB_K)
-        pos_cold.append(round(time.time() - t0, 3))
-    runs["exsub_positions_build_cold"] = pos_cold
-
+    docs_rel = datapipe._docs(spark, sf_dir)
     # the exact test relation decontaminate_bloom caches on (same
     # _split_shingles handle → same plan identity)
     test_rel = (
-        _split_shingles(spark, sf_dir)
+        datapipe._split_shingles(spark, sf_dir)
         .filter(F.col("split") == "test")
         .select(F.col("doc_id").alias("test_doc_id"), "shingle")
     )
-    bloom_cold: list[float] = []
-    for _ in range(N_RUNS):
-        trading_mod.clear_caches((text_mod._BLOOM_CACHE,), app_id)
-        t0 = time.time()
-        text_mod._bloom_cached(test_rel)
-        bloom_cold.append(round(time.time() - t0, 3))
-    runs["bloom_build_cold"] = bloom_cold
-    canary_burst("post_text_index_cold")
+    cold_lines = [
+        ("candle_chain_cold", trading_mod.CANDLE_KINDS,
+         lambda: scan(queries["ohlc_derived_multi_tf"](spark, sf_dir)),
+         "post_chain_cold"),
+        ("candle_cache_cold", ("ticks", "ohlc_1h", "sma", "events_1h"),
+         relations_cold, "post_cache_cold"),
+        ("kmeans_train_cold", ("codebook",),
+         lambda: datapipe._codebook(spark, sf_dir), "post_train_cold"),
+        ("ivf_index_build_cold", ("ivf_index",),
+         lambda: scan(datapipe._ivf_index(spark, sf_dir)), "post_index_cold"),
+        ("lsh_bands_build_cold", ("bands",),
+         lambda: text_mod._band_keys_cached(text_mod._shingles_cached(docs_rel)),
+         None),
+        ("exsub_positions_build_cold", ("positions",),
+         lambda: text_mod._positions_cached(docs_rel, text_mod.EXSUB_K), None),
+        ("bloom_build_cold", ("bloom",),
+         lambda: text_mod._bloom_cached(test_rel), "post_text_index_cold"),
+    ]
+    for line, kinds, build, burst in cold_lines:
+        samples: list[float] = []
+        for _ in range(N_RUNS):
+            cache.clear(spark, *kinds)
+            t0 = time.time()
+            build()
+            samples.append(round(time.time() - t0, 3))
+        runs[line] = samples
+        if burst:
+            canary_burst(burst)
 
     # Round-interleaved headline measurement (VERDICT r6 task #7): the
     # whole headline set runs once per round over the warm caches, and the

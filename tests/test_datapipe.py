@@ -1377,7 +1377,7 @@ def test_semantic_dedup_correct_under_cell_skew(spark):
 
 def test_model_caches_key_on_corpus(spark):
     # the train-once caches must never serve one corpus's model for
-    # another: keys are (applicationId, sf_dir).
+    # another: keys are (applicationId, kind, sf_dir).
     import os
 
     import pytest as _pytest
@@ -1396,6 +1396,16 @@ def test_model_caches_key_on_corpus(spark):
     rows_a = {(r.cell, tuple(r.cv)) for r in ca1.collect()}
     rows_b = {(r.cell, tuple(r.cv)) for r in cb.collect()}
     assert rows_a != rows_b    # and genuinely different centroids
+    # the driver-local rows twin is exactly the relation's rows, and it is
+    # dropped and retrained together with its codebook
+    twin = dp._codebook_rows(spark, a)
+    assert twin == [(r.cell, list(r.cv)) for r in ca1.collect()]
+    from trading_etl_spark import cache
+
+    cache.clear(spark, "codebook")
+    assert dp._codebook(spark, a) is not ca1
+    assert dp._codebook_rows(spark, a) is not twin
+    assert dp._codebook_rows(spark, a) == twin
 
 
 def test_write_training_shards_manifest_consistent(spark, tmp_path):
@@ -1532,7 +1542,7 @@ def test_mixture_plan_rates_and_epochs(spark):
 
 
 def test_plan_cache_key_reuse_and_isolation(spark, tmp_path):
-    """r12: the shared relation caches key on (appId, semanticHash,
+    """The session cache keys a DataFrame param on (semanticHash,
     exprId-canonicalized plan string). Two invariants:
 
     - REUSE: two independently-built identical plans share ONE cached
@@ -1545,6 +1555,8 @@ def test_plan_cache_key_reuse_and_isolation(spark, tmp_path):
     """
     from pyspark.sql import functions as F
 
+    from trading_etl_spark import cache
+    from trading_etl_spark.cache import plan_cache_key
     from trading_etl_spark.operators import text as tx
 
     p1, p2 = str(tmp_path / "a"), str(tmp_path / "b")
@@ -1553,19 +1565,18 @@ def test_plan_cache_key_reuse_and_isolation(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(p2)
 
     d1, d2 = spark.read.parquet(p1), spark.read.parquet(p1)
-    assert tx.plan_cache_key(d1) == tx.plan_cache_key(d2)
-    assert tx._shingles_cached(d1) is tx._shingles_cached(d2)
+    assert plan_cache_key(d1) == plan_cache_key(d2)
+    sh1 = tx._shingles_cached(d1)
+    assert sh1 is tx._shingles_cached(d2)
 
     other_path = spark.read.parquet(p2)
     filtered = spark.read.parquet(p1).filter(F.col("doc_id") > 2)
-    assert tx.plan_cache_key(other_path) != tx.plan_cache_key(d1)
-    assert tx.plan_cache_key(filtered) != tx.plan_cache_key(d1)
+    assert plan_cache_key(other_path) != plan_cache_key(d1)
+    assert plan_cache_key(filtered) != plan_cache_key(d1)
     assert tx._shingles_cached(filtered) is not tx._shingles_cached(d1)
 
-    from trading_etl_spark.queries.datapipe import clear_model_caches
-
-    clear_model_caches(spark)
-    assert not tx._SHINGLE_REL_CACHE
+    assert cache.clear(spark, "shingles") >= 2
+    assert tx._shingles_cached(d1) is not sh1
 
 
 # --- simplified silhouette (r14) ----------------------------------------------

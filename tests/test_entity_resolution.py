@@ -481,30 +481,31 @@ def test_pos_bound_evaluates_before_bag_in_join_condition(spark):
 
 
 def test_fuzzy_toks_relation_cached_per_session(spark):
-    """The two-pass token relation is train-once per (app, sf_dir) via the
-    shared FIFO registry (r15 self-review: a per-call persist leaked one
-    cached vocabulary relation per invocation) — two calls must reuse the
-    SAME persisted DataFrame and the same measured key-row count, and the
-    shared clear helper must evict it."""
+    """The two-pass token relation is train-once per (app, sf_dir) in the
+    session cache (a per-call persist leaked one cached vocabulary
+    relation per invocation) — two calls must reuse the SAME
+    persisted DataFrame and the same measured key-row count, and clearing
+    the session's entries must evict and unpersist it."""
+    from trading_etl_spark import cache
     from trading_etl_spark.queries import analytics
-    from trading_etl_spark.queries.trading import clear_caches
 
-    clear_caches((analytics._FUZZY_TOKS_CACHE,))
+    cache.clear(spark, "fuzzy_toks")
     toks1, rows1 = analytics._fuzzy_toks(spark, SF_DIR)
     toks2, rows2 = analytics._fuzzy_toks(spark, SF_DIR)
     assert toks1 is toks2, "second call rebuilt the relation"
     assert rows1 == rows2 and rows1 > 0
     assert toks1.is_cached
-    assert clear_caches((analytics._FUZZY_TOKS_CACHE,)) == 1
-    assert not analytics._FUZZY_TOKS_CACHE
+    assert cache.clear(spark, "fuzzy_toks") == 1
+    assert not toks1.is_cached
+    assert cache.clear(spark, "fuzzy_toks") == 0
 
-    # ADVICE r15: the module-level clear helper (the analytics leg of the
-    # session-wide 'evict everything' trio next to clear_candle_caches /
-    # clear_model_caches) reaches this cache too — an eager sweep that
-    # enumerates the three helpers leaves no persisted relation behind
-    analytics._fuzzy_toks(spark, SF_DIR)
-    assert analytics.clear_analytics_caches(spark) == 1
-    assert not analytics._FUZZY_TOKS_CACHE
+    # the session-wide sweep (no kinds named) reaches this cache too, so a
+    # sweep leaves no persisted relation behind
+    toks3, _ = analytics._fuzzy_toks(spark, SF_DIR)
+    assert toks3 is not toks1
+    assert cache.clear(spark) >= 1
+    assert not toks3.is_cached
+    assert cache.clear(spark, "fuzzy_toks") == 0
 
 
 def test_rarest_k_recall_tradeoff_on_zipfian_multitoken_names(spark):

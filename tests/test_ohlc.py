@@ -127,11 +127,10 @@ def test_clear_candle_caches_evicts_and_unpersists(spark):
     plan = hourly._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan, plan
     assert "Scan parquet" not in plan, plan
-    assert tq._CHAIN_CACHE
     n = tq.clear_candle_caches(spark)
-    assert n >= 1
-    assert not tq._CHAIN_CACHE and not tq._CANDLE_CACHE
+    assert n >= 2  # at least the chain pair and the 1h candles
     assert not base.storageLevel.useMemory
+    assert tq.clear_candle_caches(spark) == 0  # nothing of them is left
 
 
 def test_candle_gap_fill_flat_candles(spark, tmp_path, monkeypatch):
@@ -152,15 +151,11 @@ def test_candle_gap_fill_flat_candles(spark, tmp_path, monkeypatch):
         "currency_pair_code string, time timestamp, open double, high double,"
         " low double, close double",
     )
-    key = (spark.sparkContext.applicationId, "gap-test")
-    trading._CANDLE_CACHE[key] = candles
-    try:
-        out = {
-            r["time"]: r
-            for r in trading.q_candle_gap_fill(spark, "gap-test").collect()
-        }
-    finally:
-        trading._CANDLE_CACHE.pop(key, None)
+    monkeypatch.setattr(trading, "_ohlc_1h", lambda spark, sf_dir: candles)
+    out = {
+        r["time"]: r
+        for r in trading.q_candle_gap_fill(spark, "gap-test").collect()
+    }
     assert len(out) == 3
     gap = out[datetime(2024, 1, 1, 1)]
     assert gap["is_gap"] is True

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import cached, materialize
+
 N_QUERIES = 16  # vec_id < 16 are the demo query vectors
 TOP_K = 3
 
@@ -446,10 +448,23 @@ def _mean_update_rows(assigned: DataFrame, col: str) -> list[tuple[int, list[flo
     ]
 
 
+CODEBOOK_SCHEMA = "cell int, cv array<double>"
+
+
 def kmeans_codebook(
     emb: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS
 ) -> DataFrame:
-    """Train an IVF coarse quantizer with Lloyd's k-means — (cell, cv) rows.
+    """:func:`kmeans_centroids` as a (cell, cv) relation."""
+    return emb.sparkSession.createDataFrame(
+        kmeans_centroids(emb, k, iters), CODEBOOK_SCHEMA
+    )
+
+
+def kmeans_centroids(
+    emb: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS
+) -> list[tuple[int, list[float]]]:
+    """Train an IVF coarse quantizer with Lloyd's k-means — driver-local
+    (cell, centroid) rows, sorted by cell.
 
     Deterministic by construction so the result is engine-independent:
 
@@ -467,7 +482,6 @@ def kmeans_codebook(
     At 100 TB you train the codebook on a sample (``emb.sample(frac)``)
     and only the final full-corpus assignment scans everything once.
     """
-    spark = emb.sparkSession
     seeds = (
         emb.select("vec_id", "emb", F.md5(F.col("vec_id").cast("string")).alias("h"))
         .orderBy("h", "vec_id")
@@ -475,11 +489,10 @@ def kmeans_codebook(
         .collect()
     )
     cent_rows = [(i, [float(x) for x in r["emb"]]) for i, r in enumerate(seeds)]
-    schema = "cell int, cv array<double>"
     for _ in range(iters):
         assigned = assign_cells_rows(emb, cent_rows)
         cent_rows = _mean_update_rows(assigned, "emb")
-    return spark.createDataFrame(cent_rows, schema)
+    return cent_rows
 
 
 def _nearest_cell_udf(cent_rows: list[tuple[int, list[float]]]):
@@ -1136,33 +1149,27 @@ def srp_banded(
     ).select("vec_id", F.posexplode("keys").alias("band_idx", "band_key"))
 
 
-# FIFO-bounded session cache for the banded SRP signature relation
-# (vec_id, band_idx, band_key) (r18): the same persisted-LSH-index
-# discipline as text._band_keys_cached — FOUR query paths (near-dup LSH
-# pairs, dup-graph PageRank, triangle stats, keeper centrality) each
-# re-ran the SRP projection UDF over the whole corpus per call, and the
-# banded self-join referenced it TWICE per plan. The index relation is
-# built once per (app, emb plan, banding params) and served materialized;
-# cleared via clear_model_caches with the other similarity caches.
-_SRP_BANDED_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _srp_banded_cached(
     emb: DataFrame,
     dim: int = EMB_DIM,
     n_bands: int = SRP_BANDS,
     band_bits: int = SRP_BAND_BITS,
 ) -> DataFrame:
-    from ..operators.text import plan_cache_key
-    from ..queries.trading import _cache_put, _materialize
-
-    key = (*plan_cache_key(emb), dim, n_bands, band_bits)
-    df = _SRP_BANDED_CACHE.get(key)
-    if df is None:
-        df = _materialize(srp_banded(emb, dim=dim, n_bands=n_bands,
-                                     band_bits=band_bits))
-        _cache_put(_SRP_BANDED_CACHE, key, df)
-    return df
+    # The banded SRP index relation (vec_id, band_idx, band_key), built once
+    # per emb plan and banding: four query paths (near-dup LSH pairs,
+    # dup-graph PageRank, triangle stats, keeper centrality) read it, and
+    # the banded self-join references it twice per plan.
+    return cached(
+        emb.sparkSession,
+        "srp_bands",
+        lambda: materialize(
+            srp_banded(emb, dim=dim, n_bands=n_bands, band_bits=band_bits)
+        ),
+        emb,
+        dim,
+        n_bands,
+        band_bits,
+    )
 
 
 def embedding_near_dup_lsh(

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import cached, materialize
+
 # --- tokenization / shingles -------------------------------------------------
 
 SHINGLE_N = 3
@@ -133,55 +135,14 @@ def shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     ).select("doc_id", F.explode("sh").alias("shingle"))
 
 
-def plan_cache_key(df: DataFrame) -> tuple:
-    """Collision-proof cache identity for a DataFrame's plan (ADVICE r11):
-    ``semanticHash`` alone is 32-bit — two different plans colliding in one
-    application would silently serve the wrong cached relation. Keying on
-    the analyzed plan string as well makes a silent collision require BOTH
-    a 32-bit hash collision AND byte-identical plan text; a formatting-
-    level miss just rebuilds, which is safe. The string is canonicalized
-    by stripping expression ids (``#123``) — they increment globally per
-    instantiation, so the raw string would never match across two builds
-    of the SAME logical plan and the cache would get zero reuse (exprId
-    differences are exactly what ``semanticHash`` already canonicalizes).
-    appId first so ``clear_caches(..., app_id)`` still filters per
-    session."""
-    import re as _re
-
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        _re.sub(r"#\d+", "", plan),
-    )
-
-
-# FIFO-bounded session cache for the exploded shingle relation (ADVICE r11):
-# the dedup/LSH operators each cached their shingles inline, but nothing
-# ever unpersisted them — every distinct input fixture (bench sf0.1, the
-# 10×/100× scaling corpora) left a session-lifetime cached relation. One
-# registry bounds the lifetime (evictions unpersist via trading._cache_put)
-# and lets same-input operators share ONE materialized shingle relation;
-# cleared through queries.datapipe.clear_model_caches.
-_SHINGLE_REL_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _shingles_cached(docs: DataFrame) -> DataFrame:
-    from ..queries.trading import _cache_put
-
-    key = plan_cache_key(docs)
-    sh = _SHINGLE_REL_CACHE.get(key)
-    if sh is None:
-        # r17: materialize with truncated lineage (localCheckpoint) rather
-        # than .cache() — every LSH/dedup consumer references this relation
-        # 3-4× per query (signatures, intersections, both size sides), so
-        # the full docs→tokens→explode subtree used to be re-analyzed that
-        # many times per build; see queries.trading._materialize.
-        from ..queries.trading import _materialize
-
-        sh = _materialize(shingles(docs))
-        _cache_put(_SHINGLE_REL_CACHE, key, sh)
-    return sh
+    # Materialized with truncated lineage: every LSH/dedup consumer
+    # references this relation 3-4× per query (signatures, intersections,
+    # both size sides), which re-analyzed the docs→tokens→explode subtree
+    # that many times per build.
+    return cached(
+        docs.sparkSession, "shingles", lambda: materialize(shingles(docs)), docs
+    )
 
 
 # --- per-document analysis ---------------------------------------------------
@@ -1367,26 +1328,17 @@ def _band_keys(sig: DataFrame) -> DataFrame:
     ).select("doc_id", "bd.band_idx", "bd.band_key")
 
 
-# FIFO-bounded session cache for the banded LSH index relation
-# (doc_id, band_idx, band_key) (r17): FIVE operators (all-pairs LSH dedup,
-# incremental probe, fuzzy decontamination, containment screening, the LSH
-# eval report) each re-derived signatures + band keys from the shingle
-# relation per call. The docstrings already state this relation IS the
-# persisted index at 100 TB (built once, appended to); the in-session
-# analog is one eager materialization per shingle relation. Keyed on the
-# shingle relation's plan identity; cleared via clear_model_caches.
-_BANDS_REL_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _band_keys_cached(sh: DataFrame) -> DataFrame:
-    from ..queries.trading import _cache_put, _materialize
-
-    key = plan_cache_key(sh)
-    df = _BANDS_REL_CACHE.get(key)
-    if df is None:
-        df = _materialize(_band_keys(_minhash_from_shingles(sh)))
-        _cache_put(_BANDS_REL_CACHE, key, df)
-    return df
+    # The banded LSH index relation (doc_id, band_idx, band_key): five
+    # operators (all-pairs LSH dedup, incremental probe, fuzzy
+    # decontamination, containment screening, the LSH eval report) read it.
+    # At 100 TB it is the persisted index, built once and appended to.
+    return cached(
+        sh.sparkSession,
+        "bands",
+        lambda: materialize(_band_keys(_minhash_from_shingles(sh))),
+        sh,
+    )
 
 
 def _minhash_band_candidates(sh: DataFrame) -> DataFrame:
@@ -1638,26 +1590,13 @@ def simhash(docs: DataFrame) -> DataFrame:
     return agg.select("doc_id", sim.alias("simhash"))
 
 
-# FIFO-bounded session cache for the simhash SIGNATURE relation
-# (doc_id, simhash) (r18): the persisted-index discipline of
-# _BANDS_REL_CACHE applied to the simhash family — dedup_simhash's banded
-# self-join referenced the signature relation TWICE per plan, so the
-# 64-sum token aggregation (and the token explode feeding it) ran twice
-# per call and once more per consumer (both CC canonicalization queries
-# derive their edge list from it). Keyed on the docs plan identity;
-# cleared via queries.datapipe.clear_model_caches.
-_SIMHASH_REL_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _simhash_cached(docs: DataFrame) -> DataFrame:
-    from ..queries.trading import _cache_put, _materialize
-
-    key = plan_cache_key(docs)
-    df = _SIMHASH_REL_CACHE.get(key)
-    if df is None:
-        df = _materialize(simhash(docs))
-        _cache_put(_SIMHASH_REL_CACHE, key, df)
-    return df
+    # The (doc_id, simhash) signature relation: dedup_simhash's banded
+    # self-join references it twice per plan, and both CC canonicalization
+    # queries derive their edge list from it.
+    return cached(
+        docs.sparkSession, "simhash", lambda: materialize(simhash(docs)), docs
+    )
 
 
 def _hamming64_sql(a: str, b: str) -> str:
@@ -1913,12 +1852,6 @@ def dsir_resample(
 BLOOM_M_BITS = 1 << 20  # 128 KiB bitmap — ~1% fp at ~100k keys (m/n≈10, k=7)
 BLOOM_K = 7
 
-# Session cache for the built Bloom bitmap (r17) — the decontamination
-# filter artifact, keyed on the TEST side's plan identity + sizing so a
-# different eval set or corpus rebuilds it. Entries are m/8-byte strings.
-_BLOOM_CACHE: dict[tuple, bytes] = {}
-
-
 def _bloom_positions(h, m_bits: int, k: int):
     """k probe positions per 64-bit key via Kirsch–Mitzenmacher double
     hashing: pos_i = (h1 + i·h2) mod m, with the stride forced odd so it
@@ -1986,16 +1919,16 @@ def _bloom_cached(
     call re-paid a full test-side scan for bytes that cannot change under
     the same test relation. bench.py's bloom_build_cold line clears this
     cache and times the build alone, keeping the moved cost measured."""
-    from ..queries.trading import _cache_put
-
-    bkey = plan_cache_key(test) + (m_bits, k)
-    bloom = _BLOOM_CACHE.get(bkey)
-    if bloom is None:
-        bloom = bloom_build(
+    return cached(
+        test.sparkSession,
+        "bloom",
+        lambda: bloom_build(
             test.select(F.xxhash64("shingle").alias("h")), "h", m_bits, k
-        )
-        _cache_put(_BLOOM_CACHE, bkey, bloom)
-    return bloom
+        ),
+        test,
+        m_bits,
+        k,
+    )
 
 
 def decontaminate_bloom(
@@ -2096,40 +2029,27 @@ EXSUB_K = 8          # detection shingle width (tokens)
 EXSUB_MIN_TOKENS = 16  # minimum duplicated span length to report
 
 
-# FIFO-bounded session cache for the POSITIONAL shingle-hash relation
-# (doc_id, pos, h) the two exact-substring operators share (r17, guide
-# §2.4/§5): the span finder and the span stripper each referenced this
-# relation TWICE per query (the dup/first-occurrence agg side and the
-# join-back probe side), so one query re-ran the tokenize→posexplode→
-# xxhash64 map stage — the family's most expensive stage — twice, and the
-# two operators together four times. Like the distinct-shingle relation
-# above, at 100 TB this is a materialized intermediate table (one compact
-# row per corpus token); in-session one eager localCheckpoint serves all
-# four references. Cleared through queries.datapipe.clear_model_caches.
-_POS_REL_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _positions_cached(docs: DataFrame, k: int) -> DataFrame:
-    from ..queries.trading import _cache_put, _materialize
-
-    key = plan_cache_key(docs) + (k,)
-    pos = _POS_REL_CACHE.get(key)
-    if pos is None:
+    # The positional shingle-hash relation (doc_id, pos, h): the span
+    # finder and the span stripper each reference it twice per query (the
+    # dup/first-occurrence agg side and the join-back probe side), and the
+    # tokenize→posexplode→xxhash64 map stage is the family's most expensive.
+    def build():
         pos_hashes = F.expr(
             f"IF(size(toks) >= {k},"
             f" transform(sequence(1, size(toks) - {k - 1}),"
             f" i -> xxhash64(array_join(slice(toks, i, {k}), ' '))),"
             f" array())"
         )
-        pos = _materialize(
+        return materialize(
             with_tokens(docs)
             .select("doc_id", F.posexplode(pos_hashes).alias("idx", "h"))
             .select(
                 "doc_id", (F.col("idx") + 1).cast("long").alias("pos"), "h"
             )
         )
-        _cache_put(_POS_REL_CACHE, key, pos)
-    return pos
+
+    return cached(docs.sparkSession, "positions", build, docs, k)
 
 
 def exact_substring_spans(

@@ -3,9 +3,9 @@
 Two gate surfaces materialize a small on-disk fixture once per
 (applicationId, sf_dir) and reuse it across invocations — the streaming
 gates' single-file candle dump and the compaction gate's many-small-files
-events twin. Both need the same bespoke eviction the in-memory
-``trading._cache_put`` can't provide: an evicted entry must also rmtree
-its directory, and every root registers an atexit cleanup (review r9:
+events twin. Both need an eviction the in-memory session cache
+(``trading_etl_spark.cache``) does not provide: an evicted entry must also
+rmtree its directory, and every root registers an atexit cleanup (review r9:
 the two hand-rolled copies of this loop must not evolve separately).
 """
 

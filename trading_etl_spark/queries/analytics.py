@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import cached
 from ..operators.text import half_away_div, ratio6
 
 
@@ -1857,25 +1858,6 @@ FUZZY_BLOCK_K = 2
 FUZZY_BROADCAST_MAX_KEY_ROWS = 2_000_000
 
 
-# the (p_name, n_parts, tok) distinct-name token relation + its measured
-# row count, train-once per (app, sf_dir) — FIFO-bounded via trading's
-# shared _cache_put so repeated calls (bench repeats, the 5-leg sweep, a
-# long-lived session) reuse ONE persisted relation and ONE stats job
-# instead of leaking a cached copy per call (r15 self-review finding).
-_FUZZY_TOKS_CACHE: dict = {}
-
-
-def clear_analytics_caches(spark: SparkSession | None = None) -> int:
-    """Eagerly drop this module's materialized-relation caches (ADVICE
-    r15: session-wide 'evict everything' sweeps enumerate the trading and
-    datapipe helpers — this is the analytics leg, same shared eviction
-    loop; optionally only the given session's). Returns entries evicted."""
-    from .trading import clear_caches
-
-    app_id = spark.sparkContext.applicationId if spark is not None else None
-    return clear_caches((_FUZZY_TOKS_CACHE,), app_id)
-
-
 def _fuzzy_broadcast_ok(key_rows: int) -> bool:
     """THE broadcast gate for the fuzzy-match path — both consumers (the
     freq side in :func:`_fuzzy_blocked_keyed`, the keyed self-join side in
@@ -1903,19 +1885,18 @@ def _name_token_relation(parts: DataFrame) -> DataFrame:
 
 
 def _fuzzy_toks(spark: SparkSession, sf_dir: str):
-    from .trading import _cache_put
+    """The (p_name, n_parts, tok) distinct-name token relation and its
+    measured row count, built once per (app, sf_dir)."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _FUZZY_TOKS_CACHE.get(key)
-    if got is None:
+    def build():
         toks = _name_token_relation(_t(spark, sf_dir, "part")).persist()
         # one action does double duty: materializes the persisted two-pass
         # relation AND measures the key-row upper bound (rarest-K keeps a
         # subset of these rows; distinct tokens are a further subset) that
         # gates BOTH broadcasts below
-        got = (toks, toks.count())
-        _cache_put(_FUZZY_TOKS_CACHE, key, got)
-    return got
+        return toks, toks.count()
+
+    return cached(spark, "fuzzy_toks", build, sf_dir)
 
 
 def _bag_lb_sql(a: str, b: str) -> str:
@@ -2131,9 +2112,9 @@ def q_part_name_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     the recall contract.
 
     Scale: the name dedup is one hash agg (distinct names ≪ rows — a
-    vocabulary-sized relation, persisted once per (app, sf_dir) via the
-    FIFO cache registry shared with the candle/model caches, so repeated
-    calls reuse one relation and one stats job); the rarest-K rank is
+    vocabulary-sized relation, persisted once per (app, sf_dir) in the
+    session cache, so repeated calls reuse one relation and one stats
+    job); the rarest-K rank is
     one window over the tiny keyed relation. BOTH broadcasts — the
     token-frequency relation feeding the rank AND the keyed self-join
     side — ride the same measured gate: they broadcast ONLY when the

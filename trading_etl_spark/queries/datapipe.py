@@ -12,38 +12,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import cached, materialize
 from ..operators import graph as gr
 from ..operators import multimodal as mm
 from ..operators import similarity as sim
 from ..operators import text as tx
 
 
-# Lazy HANDLE cache for the two base scans (r17, guide §1/§6): every call
-# to spark.read.parquet re-lists the path and re-reads the footer on the
-# DRIVER (~70 ms here, worse on object stores), and every downstream
-# plan_cache_key() re-analyzes the fresh plan. ~40 builders in this module
-# each paid that per call. The cached value is the UNMATERIALIZED
-# DataFrame — no rows are computed or pinned; execution still scans
-# parquet every run. Keyed like every session cache; entries hold no
-# storage so eviction's unpersist is a no-op.
-_BASE_REL_CACHE: dict = {}
-
-
-def _base_rel(spark: SparkSession, sf_dir: str, name: str, loader) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _BASE_REL_CACHE.get(key)
-    if df is None:
-        df = loader(spark, sf_dir)
-        _cache_put(_BASE_REL_CACHE, key, df)
-    return df
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _base_rel(spark, sf_dir, "docs", tx.load_documents)
+    # The cached value is the UNMATERIALIZED handle, no rows: each
+    # spark.read.parquet re-lists the path and re-reads the footer on the
+    # driver (~70 ms), and each downstream plan_cache_key re-analyzes the
+    # fresh plan; ~40 query functions in this module paid that per call.
+    return cached(spark, "docs", lambda: tx.load_documents(spark, sf_dir), sf_dir)
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _base_rel(spark, sf_dir, "emb", sim.load_embeddings)
+    return cached(spark, "emb", lambda: sim.load_embeddings(spark, sf_dir), sf_dir)
 
 
 def _as_long(df: DataFrame, *cols: str) -> DataFrame:
@@ -54,137 +39,81 @@ def _as_long(df: DataFrame, *cols: str) -> DataFrame:
 
 # --- deduplication ------------------------------------------------------------
 
-# The trained coarse quantizer is a MODEL ARTIFACT: train once per
-# (app, corpus), serve every consumer — kmeans-IVF, the IVFADC coarse
-# stage, SemDeDup's cells — the reference's materialize-then-read
-# discipline applied to models. Lloyd's loop is eager (driver-reduced
-# per iteration), so sharing removes two full retrainings per gate run.
-# FIFO-bounded like the candle caches; entries are tiny k×dim local
-# relations (nothing persisted, no unpersist needed on eviction).
-# FIFO-bounded with trading's shared helper (one eviction policy for every
-# materialized-relation/model cache in the repo).
-from .trading import _cache_put  # noqa: E402
-
-_CODEBOOK_CACHE: dict = {}
-_CODEBOOK_ROWS_CACHE: dict = {}  # driver-local collected twin of _CODEBOOK_CACHE
-_IVF_INDEX_CACHE: dict = {}
-_PQ_CACHE: dict = {}
-_SHINGLE_CACHE: dict = {}
-_BPE_CACHE: dict = {}
-
-
-def clear_model_caches(spark: SparkSession | None = None) -> int:
-    """Eagerly drop the train-once model/relation caches (the datapipe
-    counterpart of trading.clear_candle_caches, same shared eviction loop;
-    optionally only the given session's). Returns entries evicted."""
-    from .trading import clear_caches
-
-    app_id = spark.sparkContext.applicationId if spark is not None else None
-    return clear_caches(
-        (_CODEBOOK_CACHE, _CODEBOOK_ROWS_CACHE, _IVF_INDEX_CACHE, _PQ_CACHE,
-         _SHINGLE_CACHE, _BPE_CACHE, _BASE_REL_CACHE, tx._SHINGLE_REL_CACHE,
-         tx._POS_REL_CACHE, tx._BANDS_REL_CACHE, tx._BLOOM_CACHE,
-         tx._SIMHASH_REL_CACHE, sim._SRP_BANDED_CACHE),
-        app_id,
-    )
-
-
 def _bpe_fitted(spark: SparkSession, sf_dir: str):
     """The fitted BPE state (merge tuples + final vocabulary relation),
-    train-once per (app, sf_dir) like :func:`_codebook` — both BPE
-    queries (merge table, fertility stats) share one fit instead of
-    re-running the 12-round driver loop each (the r6 train-once
-    discipline). The vocabulary member is localCheckpointed, so eviction's
-    unpersist is a no-op and storage frees with the RDD."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _BPE_CACHE.get(key)
-    if got is None:
-        got = tx._bpe_fit(tx.load_documents(spark, sf_dir), tx.BPE_MERGES)
-        _cache_put(_BPE_CACHE, key, got)
-    return got
+    train-once per (app, sf_dir) like :func:`_codebook`: both BPE queries
+    (merge table, fertility stats) share one fit instead of re-running the
+    12-round driver loop each."""
+    return cached(
+        spark,
+        "bpe",
+        lambda: tx._bpe_fit(tx.load_documents(spark, sf_dir), tx.BPE_MERGES),
+        sf_dir,
+    )
 
 
 def _split_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, 8-gram shingle, split) relation both decontamination
-    paths probe — cached per (app, sf_dir) like the candle/tick relations
-    (in a real pipeline this IS a materialized intermediate table; the
-    shingle explode is the most expensive map stage the decontamination
-    family runs)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SHINGLE_CACHE.get(key)
-    if df is None:
-        from .trading import _materialize
-
-        df = _materialize(
+    paths probe (in a real pipeline a materialized intermediate table; the
+    shingle explode is the family's most expensive map stage)."""
+    return cached(
+        spark,
+        "split_shingles",
+        lambda: materialize(
             tx.shingles(_docs(spark, sf_dir), n=tx.CONTAM_SHINGLE_N)
             .withColumn("split", tx._split_col())
-        )
-        _cache_put(_SHINGLE_CACHE, key, df)
-    return df
+        ),
+        sf_dir,
+    )
+
+
+def _trained_codebook(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
+    """The trained coarse quantizer as a (relation, driver-local rows) pair
+    in ONE entry, so the rows can never outlive their codebook. It is a
+    model artifact: trained once per (app, corpus), it serves kmeans-IVF,
+    the IVFADC coarse stage and SemDeDup's cells. The rows are the form the
+    Arrow assignment kernels close over; k×dim doubles."""
+
+    def build():
+        rows = sim.kmeans_centroids(_emb(spark, sf_dir))
+        return spark.createDataFrame(rows, sim.CODEBOOK_SCHEMA), rows
+
+    return cached(spark, "codebook", build, sf_dir)
 
 
 def _codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _CODEBOOK_CACHE.get(key)
-    if df is None:
-        df = sim.kmeans_codebook(_emb(spark, sf_dir))
-        _cache_put(_CODEBOOK_CACHE, key, df)
-        # the rows twin must never outlive a retrained codebook entry
-        _CODEBOOK_ROWS_CACHE.pop(key, None)
-    return df
+    return _trained_codebook(spark, sf_dir)[0]
 
 
 def _codebook_rows(spark: SparkSession, sf_dir: str) -> list:
-    """The trained codebook as driver-local (cell, vector) rows — the form
-    the Arrow assignment kernels close over. Collected ONCE per (app,
-    corpus) (r17, guide §5): consumers that re-collect the k×dim local
-    relation per call pay a ~0.25 s driver job each for bytes that never
-    change (training is deterministic per corpus). k×dim doubles — tiny."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    rows = _CODEBOOK_ROWS_CACHE.get(key)
-    if rows is None:
-        rows = [
-            (int(r["cell"]), list(r["cv"]))
-            for r in _codebook(spark, sf_dir).collect()
-        ]
-        _cache_put(_CODEBOOK_ROWS_CACHE, key, rows)
-    return rows
+    return _trained_codebook(spark, sf_dir)[1]
 
 
 def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cached IVF inverted-list relation (r10): corpus cell
     assignments + norms are index-BUILD state (what FAISS's IndexIVF
     stores), so serving reads the prebuilt lists instead of re-running
-    the Arrow assignment stage per query — the same train-once
-    discipline as :func:`_codebook`, one tier down. Measured at sf0.1:
-    the serving path drops from ~1.45 s to the probe join alone
-    (bench line ivf_index_build_cold keeps the build cost measured)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _IVF_INDEX_CACHE.get(key)
-    if df is None:
-        from .trading import _materialize
-
-        df = _materialize(
+    the Arrow assignment stage per query. Measured at sf0.1: the serving
+    path drops from ~1.45 s to the probe join alone (bench line
+    ivf_index_build_cold keeps the build cost measured)."""
+    return cached(
+        spark,
+        "ivf_index",
+        lambda: materialize(
             sim.ivf_inverted_index(
                 _emb(spark, sf_dir),
                 _codebook(spark, sf_dir),
                 cent_rows=_codebook_rows(spark, sf_dir),
             )
-        )
-        _cache_put(_IVF_INDEX_CACHE, key, df)
-    return df
+        ),
+        sf_dir,
+    )
 
 
 def _pq(spark: SparkSession, sf_dir: str):
     """The trained PQ model (codes relation + per-subspace books) shared by
-    pq_codes / ADC search / IVFADC — same train-once discipline as
-    :func:`_codebook`."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    model = _PQ_CACHE.get(key)
-    if model is None:
-        model = sim.pq_model(_emb(spark, sf_dir))
-        _cache_put(_PQ_CACHE, key, model)
-    return model
+    pq_codes / ADC search / IVFADC."""
+    return cached(spark, "pq", lambda: sim.pq_model(_emb(spark, sf_dir)), sf_dir)
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

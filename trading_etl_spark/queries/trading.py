@@ -17,6 +17,8 @@ import math as _math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cache
+from ..cache import materialize
 from ..io import first_wins
 from ..operators import indicators, ohlc, signals
 from ..operators.asof import asof_join_backward_bucketed, asof_join_forward_bucketed
@@ -30,85 +32,16 @@ LOOKBACK = "2024-01-14 20:00:00"  # W2 recompute-window start (cursor − lookba
 
 # --- Spark-side builders -----------------------------------------------------
 
-# The reference materializes every OHLC table once, and all downstream
-# consumers read the materialized tables (transform.py flow ordering). The
-# in-session equivalent is caching the chain per (app, sf_dir): the tick
-# scan + dedup + base/derived aggs run once, and the ~10 consumer queries
-# (derived, fanout, pivot, cube, rollup, indicators, signals, backtest)
-# read the cached candle relations. At 100 TB these are written parquet
-# tables; candle rows are ~3 orders of magnitude smaller than ticks, so
-# the cache is small relative to the input.
-_CHAIN_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-# Bound for every materialized-relation cache below (VERDICT r4 Wrong #5:
-# unbounded process-lifetime caches are a footgun for a long-lived embedding
-# session). FIFO eviction: dicts preserve insertion order, the oldest entry
-# is unpersisted and dropped once a cache would exceed the cap — evicting a
-# relation a consumer still holds is safe (Spark just recomputes it).
-_CACHE_MAX_ENTRIES = 8
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Materialize a session relation AND truncate its lineage
-    (``localCheckpoint(eager=True)``) instead of a bare ``.cache()``.
-
-    Why (r17, guide §5/§3.3): these relations are the in-session analog of
-    the reference's materialized tables, and every consumer query's
-    DataFrame is REBUILT per run — with ``.cache()`` the consumer still
-    carries the full analyzed tree of the chain (tick scan → dedup → candle
-    aggs → SMA windows → signal events), so each build/plan pass re-analyzes
-    hundreds of nodes before the cache lookup even applies. Measured at
-    sf0.1 (quiet host, min-of-3): event_asof_tick build+plan 0.68 s → 0.21 s
-    and exec 2.09 s → 1.08 s; the whole cache-consumer family halved.
-    ``localCheckpoint`` cuts the plan to a LogicalRDD scan of the
-    materialized partitions — same rows, same session lifetime as the old
-    cache. Eager, so the build cost lands at materialization time (exactly
-    what the bench's cold lines measure). On a cluster deploy, executor
-    loss invalidates a local checkpoint — production writes these relations
-    as real tables (the reference's discipline); in-session serving is
-    identical either way. Eviction: dropping the entry releases the
-    DataFrame, and the ContextCleaner frees the checkpoint blocks on GC
-    (the relations are candle-sized, so transient overlap is MBs)."""
-    return df.localCheckpoint(eager=True)
-
-
-def _unpersist_entry(entry) -> None:
-    for df in entry if isinstance(entry, tuple) else (entry,):
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # non-DF member / session already stopped
-
-
-def _cache_put(cache: dict, key, value) -> None:
-    while len(cache) >= _CACHE_MAX_ENTRIES:
-        _unpersist_entry(cache.pop(next(iter(cache))))
-    cache[key] = value
-
-
-def clear_caches(caches, app_id: str | None = None) -> int:
-    """Shared eviction loop for every materialized-relation/model cache:
-    unpersist + drop all entries (optionally only one session's)."""
-    evicted = 0
-    for cache in caches:
-        for key in [k for k in cache if app_id is None or k[0] == app_id]:
-            _unpersist_entry(cache.pop(key))
-            evicted += 1
-    return evicted
+# Session relations read by the consumer queries below, one cache kind each;
+# the in-session analog of the reference's materialized tables
+# (transform.py flow ordering: ticks → OHLC → fact_sma → signal events).
+CANDLE_KINDS = ("chain", "ticks", "ohlc_1h", "ohlc_1h_vol", "sma", "events_1h")
 
 
 def clear_candle_caches(spark: SparkSession | None = None) -> int:
-    """Unpersist and drop every cached candle relation (optionally only the
-    given session's). The caches are keyed per (applicationId, sf_dir),
-    FIFO-bounded at ``_CACHE_MAX_ENTRIES`` (so a long-lived session can't
-    accumulate unboundedly), and this clears them eagerly. Returns the
-    number of entries evicted."""
-    app_id = spark.sparkContext.applicationId if spark is not None else None
-    return clear_caches(
-        (_CHAIN_CACHE, _CANDLE_CACHE, _TICKS_CACHE, _SMA_CACHE, _EVENTS_1H_CACHE,
-         _VOL_CANDLE_CACHE),
-        app_id,
-    )
+    """Unpersist and drop every cached candle relation (only ``spark``'s
+    when given). Returns the number of entries evicted."""
+    return cache.clear(spark, *CANDLE_KINDS)
 
 
 def candle_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -119,20 +52,16 @@ def candle_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     builds its ohlc_1m / ohlc_all_tf views from this, and every in-module
     consumer query reads through it so the chain runs once per (app, sf_dir).
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pair = _CHAIN_CACHE.get(key)
-    if pair is None:
+
+    def build():
         # ONE config read feeds both the dim relation and the driver-local
-        # duration list (ADVICE r17: two independent from_env() reads could
-        # in principle diverge mid-call; the durations MUST come from the
-        # same config as the timeframes or the LCM buckets on the wrong
-        # grid)
+        # duration list: the durations MUST come from the same config as
+        # the timeframes or the LCM buckets on the wrong grid
         cfg = dims.EngineConfig.from_env()
         base, derived = ohlc.ohlc_chain_single_shuffle(
             ticks.raw_ticks(spark, sf_dir),
             dims.dim_timeframe(spark, cfg),
-            # driver-local duration list from the SAME config object as the
-            # dim relation — skips the per-build 6-row collect (r17, §5)
+            # driver-local: skips a per-build collect of the 6-row dim
             durations=dims.timeframe_durations(cfg),
         )
         # The chain pair stays a plain .cache(): one consumer action
@@ -141,54 +70,29 @@ def candle_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
         # pair would split into two jobs + a double store — measured
         # +1.3 s on the candle_chain_cold build at sf0.1 (r17). The deep
         # consumer stacks are truncated one level down instead
-        # (_ohlc_1h/_fact_sma/_buysell_events go through _materialize),
+        # (_ohlc_1h/_fact_sma/_buysell_events go through materialize),
         # so chain consumers' plans stay shallow anyway.
-        pair = (base.cache(), derived.cache())
-        _cache_put(_CHAIN_CACHE, key, pair)
-    return pair
+        return base.cache(), derived.cache()
+
+    return cache.cached(spark, "chain", build, sf_dir)
 
 
 def _ohlc_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     return candle_chain(spark, sf_dir)[0]
 
 
-# The reference materializes OHLC into tables BEFORE indicators read them
-# (transform.py flow ordering: update_ohlc_tables → indicator flow). The 1h
-# candle relation is likewise materialized here — cached per (app, sf_dir) —
-# so the 6 indicator/signal/backtest queries (and the two sides of the SMA
-# self-join) reuse one tick-scan+dedup+agg chain instead of re-deriving it
-# per union branch. At 100 TB this is a written parquet table; in-session,
-# cache() is the equivalent.
-_CANDLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# The deduped tick relation IS a materialized table in the reference
-# (ticker.ticker_{pair}); every consumer below reads that table, so the
-# in-session analog is one cached dedup instead of re-scanning + re-deduping
-# raw events per query. ~1 row/s/pair ⇒ 3 orders of magnitude smaller than
-# the raw feed; at 100 TB this is the written ticker parquet table.
-_TICKS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _TICKS_CACHE.get(key)
-    if df is None:
-        df = _materialize(ticks.load_ticks(spark, sf_dir))
-        _cache_put(_TICKS_CACHE, key, df)
-    return df
+    return cache.cached(
+        spark, "ticks", lambda: materialize(ticks.load_ticks(spark, sf_dir)), sf_dir
+    )
 
 
 def _ohlc_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _CANDLE_CACHE.get(key)
-    if df is None:
+    def build():
         tf_1h = dims.dim_timeframe(spark).filter(F.col("timeframe_code") == "1h")
-        df = _materialize(ohlc.ohlc_derived(_ohlc_1m(spark, sf_dir), tf_1h))
-        _cache_put(_CANDLE_CACHE, key, df)
-    return df
+        return materialize(ohlc.ohlc_derived(_ohlc_1m(spark, sf_dir), tf_1h))
 
-
-_VOL_CANDLE_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return cache.cached(spark, "ohlc_1h", build, sf_dir)
 
 
 def _ohlc_1h_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -196,14 +100,12 @@ def _ohlc_1h_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries no traded volume), aggregated straight off the cached deduped
     ticks: the volume-weighted indicator family (OBV, VWAP) needs volume,
     which the shared volume-less candle chain deliberately drops. One
-    (pair, hour) hash-agg with map-side partials; cached like the other
-    session-materialized relations (r11-born)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _VOL_CANDLE_CACHE.get(key)
-    if df is None:
-        t = _ticks(spark, sf_dir)
-        df = (
-            t.groupBy(
+    (pair, hour) hash-agg with map-side partials."""
+
+    def build():
+        return materialize(
+            _ticks(spark, sf_dir)
+            .groupBy(
                 "currency_pair_code",
                 F.date_trunc("hour", "time").alias("time"),
             )
@@ -216,56 +118,40 @@ def _ohlc_1h_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumn("timeframe_code", F.lit("1h"))
         )
-        df = _materialize(df)
-        _cache_put(_VOL_CANDLE_CACHE, key, df)
-    return df
 
-
-# fact_sma IS a materialized table in the reference (transform_services.py
-# writes it before any signal/backtest query reads it) — cache the in-session
-# analog so the 5 signal/backtest/asof/reaction consumers reuse one SMA
-# window pass instead of re-deriving it from the candle cache each.
-_SMA_CACHE: dict[tuple[str, str, tuple[int, ...]], DataFrame] = {}
+    return cache.cached(spark, "ohlc_1h_vol", build, sf_dir)
 
 
 def _fact_sma_1h(spark: SparkSession, sf_dir: str, periods: list[int]) -> DataFrame:
     """SMA facts on 1h candles, values rounded to 6dp so the cross predicate
     decides identically in both engines."""
-    key = (spark.sparkContext.applicationId, sf_dir, tuple(periods))
-    cached = _SMA_CACHE.get(key)
-    if cached is not None:
-        return cached
-    candles = _ohlc_1h(spark, sf_dir)
-    parts = [
-        indicators.sma(candles, p).withColumn("value", F.round("value", 6))
-        for p in periods
-    ]
-    df = parts[0]
-    for part in parts[1:]:
-        df = df.unionByName(part)
-    df = _materialize(df)
-    _cache_put(_SMA_CACHE, key, df)
-    return df
 
+    def build():
+        candles = _ohlc_1h(spark, sf_dir)
+        parts = [
+            indicators.sma(candles, p).withColumn("value", F.round("value", 6))
+            for p in periods
+        ]
+        df = parts[0]
+        for part in parts[1:]:
+            df = df.unionByName(part)
+        return materialize(df)
 
-# The buy/sell signal events are read by 6+ consumers (backtests, the three
-# as-of variants, the reaction window) and — since the r7 as-of horizon
-# prune — TWICE per as-of plan (once as the probe union side, once as the
-# 1-row min/max bounds aggregate). The relation is tiny (hundreds of rows);
-# caching it makes the bounds pass a sub-ms scan instead of a re-derivation
-# of the whole signal window chain.
-_EVENTS_1H_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return cache.cached(spark, "sma", build, sf_dir, tuple(periods))
 
 
 def _buysell_events_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EVENTS_1H_CACHE.get(key)
-    if cached is None:
-        cached = _materialize(
+    # The events are read TWICE per as-of plan (the probe union side and
+    # the 1-row min/max bounds aggregate); materialized, the bounds pass is
+    # a sub-ms scan instead of a re-derivation of the signal window chain.
+    return cache.cached(
+        spark,
+        "events_1h",
+        lambda: materialize(
             signals.buysell_events(_fact_sma_1h(spark, sf_dir, [14, 28]), 14, 28)
-        )
-        _cache_put(_EVENTS_1H_CACHE, key, cached)
-    return cached
+        ),
+        sf_dir,
+    )
 
 
 def materialize_trading_relations(spark: SparkSession, sf_dir: str) -> None:
@@ -278,7 +164,7 @@ def materialize_trading_relations(spark: SparkSession, sf_dir: str) -> None:
     - signal events (warm chain → 1h candles → SMA facts → buy/sell events).
 
     Both roots share only the already-warm chain/parquet footers; their
-    jobs touch disjoint caches. Eager materialization (``_materialize``)
+    jobs touch disjoint caches. Eager materialization (``materialize``)
     computes every row, so no separate action is needed. Used by the
     bench's candle_cache_cold line and by any session warm-up; measured at
     sf0.1 the overlap takes the cold build from ~2.9 s (serial) to the

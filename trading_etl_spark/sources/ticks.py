@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import cache
 from .dims import currency_values_sql, dim_currency
 
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
@@ -181,46 +182,30 @@ def tickify(events: DataFrame) -> DataFrame:
     )
 
 
-# Scan-split probe cache (r17, guide §5): ``df.rdd.getNumPartitions()``
-# plans the scan to count its splits — ~0.15 s of pure driver work per
-# fresh DataFrame handle, re-paid by every cold chain/cache build. The
-# split count of the same parquet path in the same session is a pure
-# function of (file set, reader conf); the key carries the split-sizing
-# conf (``spark.sql.files.maxPartitionBytes``) so a mid-session conf
-# change re-probes instead of serving a stale count, and a same-session
-# APPEND to the path (the streaming landing-zone pattern) is invalidated
-# by ``clear_source_caches`` below — wired into the shared eviction
-# machinery like every other session cache (ADVICE r17). No rows are
-# computed or pinned (same discipline as datapipe._base_rel).
-_SPLITS_CACHE: dict[tuple, int] = {}
+# The session conf a file scan's split count depends on (FilePartition's
+# maxSplitBytes and partition-count cap).
+SPLIT_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+    "spark.sql.files.maxPartitionNum",
+    "spark.sql.leafNodeDefaultParallelism",
+)
 
 
 def clear_source_caches(spark: SparkSession | None = None) -> int:
-    """Drop the scan-split probe cache (optionally one session's) — call
-    after appending files to a previously-probed path so the under-split
-    repartition heuristic re-probes the grown file set (ADVICE r17)."""
-    app_id = spark.sparkContext.applicationId if spark is not None else None
-    keys = [k for k in _SPLITS_CACHE if app_id is None or k[0] == app_id]
-    for k in keys:
-        del _SPLITS_CACHE[k]
-    return len(keys)
+    """Drop the scan-split probe cache (only ``spark``'s when given)."""
+    return cache.clear(spark, "splits")
 
 
 def _scan_splits(spark: SparkSession, path_key: str, df: DataFrame) -> int:
-    key = (
-        spark.sparkContext.applicationId,
-        path_key,
-        spark.conf.get("spark.sql.files.maxPartitionBytes"),
+    """``df.rdd.getNumPartitions()``, which plans the scan to count its
+    splits: ~0.15 s of driver work per fresh handle, re-paid by every cold
+    chain build. Cached per (path files, split-sizing conf)."""
+    conf = tuple(spark.conf.get(k, None) for k in SPLIT_CONFS)
+    return cache.cached(
+        spark, "splits", lambda: df.rdd.getNumPartitions(), path_key, conf
     )
-    n = _SPLITS_CACHE.get(key)
-    if n is None:
-        while len(_SPLITS_CACHE) >= 64:  # bound long-lived embedding
-            # sessions; evict the OLDEST entry only (ADVICE r17 — a full
-            # clear would evict hot keys including the one being added)
-            _SPLITS_CACHE.pop(next(iter(_SPLITS_CACHE)))
-        n = df.rdd.getNumPartitions()
-        _SPLITS_CACHE[key] = n
-    return n
 
 
 def raw_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:

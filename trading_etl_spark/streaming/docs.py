@@ -30,11 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..cache import cached
 from ..operators.text import (
     _band_keys,
     _minhash_from_shingles,
     incremental_probe,
-    plan_cache_key,
     shingles,
 )
 
@@ -46,32 +46,20 @@ DOC_STREAM_SCHEMA = T.StructType(
 )
 
 
-# Per-corpus index cache, FIFO-bounded through trading._cache_put like
-# every other materialized-relation cache (r6 convention): repeated poll
-# cycles over the same corpus reuse ONE cached index instead of stacking
-# a fresh copy per stream start, and evicted entries are unpersisted.
-_INDEX_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def build_corpus_index(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(shingles, band_keys) for the static corpus, each cached — the
     in-session analog of the persisted LSH index tables a production
     rollout writes once (band_keys bucketed by band_key, shingles by
     doc_id) and only appends to. Built lazily; the first micro-batch
-    materializes both, every later batch reads the cache. Keyed by the
-    corpus plan's (semanticHash, analyzed-plan string) per session, so
-    repeated stream starts over the same corpus share one index and a
-    hash collision cannot serve a different corpus's index (clear via
-    ``queries.trading.clear_caches((_INDEX_CACHE,))``)."""
-    from ..queries.trading import _cache_put
+    materializes both, every later batch reads the cache. Keyed on the
+    corpus plan per session, so repeated stream starts over the same corpus
+    share one index instead of stacking a fresh copy per start."""
 
-    key = plan_cache_key(corpus)
-    pair = _INDEX_CACHE.get(key)
-    if pair is None:
+    def build():
         sh = shingles(corpus).cache()
-        pair = (sh, _band_keys(_minhash_from_shingles(sh)).cache())
-        _cache_put(_INDEX_CACHE, key, pair)
-    return pair
+        return sh, _band_keys(_minhash_from_shingles(sh)).cache()
+
+    return cached(corpus.sparkSession, "corpus_index", build, corpus)
 
 
 def start_incremental_dedup_stream(
