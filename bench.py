@@ -327,7 +327,7 @@ def main() -> None:
         ("candle_cache_cold", ("ticks", "ohlc_1h", "sma", "events_1h"),
          relations_cold, "post_cache_cold"),
         ("kmeans_train_cold", ("codebook",),
-         lambda: datapipe._codebook(spark, sf_dir), "post_train_cold"),
+         lambda: datapipe._trained_codebook(spark, sf_dir), "post_train_cold"),
         ("ivf_index_build_cold", ("ivf_index",),
          lambda: scan(datapipe._ivf_index(spark, sf_dir)), "post_index_cold"),
         ("lsh_bands_build_cold", ("bands",),

@@ -73,6 +73,37 @@ def test_append_under_source_dir_is_served_without_clearing(spark, tmp_path):
     assert shingled.filter(shingled.doc_id == doc["doc_id"]).count() > 0
 
 
+def test_append_reaches_streaming_candle_dump(spark, tmp_path):
+    """The streaming candle gates replay a disk dump of the 1h candles, kept
+    per (app, source dir). An append under the source directory must
+    rebuild the dump, so the appended hour reaches the gate's output."""
+    from pyspark.sql import functions as F
+
+    from trading_etl_spark.queries import streamgate
+
+    if not os.path.isdir(SF_DIR):
+        pytest.skip("testdata corpus not present")
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    src = str(tmp_path / "src")
+    _write_parts(events, f"{src}/events.parquet", 2)
+    ema = streamgate.QUERIES["streaming_ema_14_1h"]
+
+    def last_hour():
+        return ema(spark, src).agg(F.max("time")).first()[0]
+
+    before = last_hour()
+    tick = events.slice(events.num_rows - 1).to_pylist()[0]
+    tick.update(
+        event_id=max(events.column("event_id").to_pylist()) + 1,
+        ts=max(events.column("ts").to_pylist()) + datetime.timedelta(hours=1),
+    )
+    pq.write_table(
+        pa.Table.from_pylist([tick], schema=events.schema),
+        f"{src}/events.parquet/part-9.parquet",
+    )
+    assert last_hour() - before == datetime.timedelta(hours=1)
+
+
 def test_second_application_never_sees_first_entry(spark):
     from trading_etl_spark import cache
 

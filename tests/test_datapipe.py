@@ -3,6 +3,8 @@ hand-built document and embedding frames with known-by-construction answers."""
 
 import math
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from trading_etl_spark.operators import similarity as sim
@@ -184,6 +186,76 @@ def test_knn_ivf_prunes_to_cell(spark):
     assert {r["neighbor_id"] for r in out} == {1, 2}
     top = min(out, key=lambda r: r["rank"])
     assert top["neighbor_id"] == 2  # best same-cell neighbor
+
+
+def test_knn_split_probe_runs_once_per_relation(spark, monkeypatch, tmp_path):
+    """The brute-force family spreads an under-split corpus scan; its split
+    count is the cached split probe, so a second call on the same
+    embeddings, through a fresh handle, does not plan the scan again to
+    count its splits."""
+    from trading_etl_spark import cache
+
+    _emb(spark).drop("emb").write.parquet(str(tmp_path / "embeddings.parquet"))
+    cache.clear(spark, "splits")
+    probes = []
+    cls = type(_emb(spark))
+    rdd = cls.__dict__["rdd"]  # a cached_property: one plan per handle
+    monkeypatch.setattr(
+        cls, "rdd", property(lambda df: probes.append(1) or rdd.func(df))
+    )
+    for _ in range(2):
+        sim.knn_bruteforce(sim.load_embeddings(spark, str(tmp_path)))
+    assert len(probes) == 1
+
+
+# every vector is the same, so every candidate ties at cosine 1.0 (and at
+# one ADC score): each operator's top-3 must be its 3 lowest candidate ids,
+# ranks 1..3. Labels carve the candidate sets: query 0 has label 0.
+_TIE_LABELS = [0, 1, 2, 1, 0, 2, 1, 0, 1, 0, 2, 1]
+_TIE_CASES = {
+    "knn_bruteforce": (lambda e: sim.knn_bruteforce(e, n_queries=1), [1, 2, 3]),
+    # label-2 candidates only
+    "knn_filtered": (lambda e: sim.knn_filtered(e, n_queries=1, label=2), [2, 5, 10]),
+    # different-label candidates; same-label 4, 7, 9 give positive_sim
+    "hard_negatives": (lambda e: sim.hard_negatives(e, n_queries=1), [1, 2, 3]),
+    "knn_matryoshka": (
+        lambda e: sim.knn_matryoshka(e, n_queries=1, prefix_dim=4), [1, 2, 3]
+    ),
+    # the query's own label cell
+    "knn_ivf": (lambda e: sim.knn_ivf(e, n_queries=1), [4, 7, 9]),
+    # every label centroid ties too: the probe takes cells 0 and 1
+    "knn_ivf_multiprobe": (
+        lambda e: sim.knn_ivf_multiprobe(e, n_queries=1, nprobe=2), [1, 3, 4]
+    ),
+    "knn_ivf_kmeans": (
+        lambda e: sim.knn_ivf_kmeans(e, n_queries=1, n_cells=2, iters=1), [1, 2, 3]
+    ),
+    "knn_pq_adc": (
+        lambda e: sim.knn_pq_adc(e, n_queries=1, m=2, n_cells=2, iters=1, dim=8),
+        [1, 2, 3],
+    ),
+    "knn_ivfadc": (
+        lambda e: sim.knn_ivfadc(
+            e, n_queries=1, n_coarse=2, coarse_iters=1, m=2, pq_k=2, pq_iters=1, dim=8
+        ),
+        [1, 2, 3],
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_TIE_CASES))
+def test_knn_ties_rank_by_lowest_neighbor_id(spark, op):
+    vec = [0.5, 0.25, -0.125, 0.75, 0.0, 0.5, -0.25, 0.125]
+    emb = spark.createDataFrame(
+        [(i, vec, label) for i, label in enumerate(_TIE_LABELS)],
+        "vec_id long, emb array<double>, label int",
+    )
+    run, want = _TIE_CASES[op]
+    rows = sorted(run(emb).collect(), key=lambda r: r["rank"])
+    sim_col = "adc_sim" if "adc" in op else "cos_sim"
+    assert [r["rank"] for r in rows] == [1, 2, 3]
+    assert [r["neighbor_id"] for r in rows] == want
+    assert len({r[sim_col] for r in rows}) == 1  # the three really tie
 
 
 def test_embedding_near_dup_threshold(spark):
@@ -378,7 +450,9 @@ def test_connected_components_transitive_clusters(spark):
     )
     comp = {
         r["id"]: r["comp"]
-        for r in gr.connected_components(nodes, edges, id_col="doc_id").collect()
+        for r in gr.connected_components_two_phase(
+            nodes, edges, id_col="doc_id"
+        ).collect()
     }
     assert comp == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5, 6: 6}
 
@@ -624,8 +698,8 @@ def test_kmeans_codebook_separates_clusters(spark):
         (5, [0.02, 0.0, 0.97]),
     ]
     emb = spark.createDataFrame(rows, "vec_id long, emb array<double>")
-    cent = sim.kmeans_codebook(emb, k=2, iters=3)
-    assigned = sim.assign_cells(emb, cent).collect()
+    book = sim.kmeans_codebook(emb, k=2, iters=3)
+    assigned = sim.assign_cells(emb, book).collect()
     cells = {r["vec_id"]: r["cell"] for r in assigned}
     assert cells[0] == cells[1] == cells[2]
     assert cells[3] == cells[4] == cells[5]
@@ -689,9 +763,11 @@ def test_kmeans_codebook_deterministic(spark):
         [(i, [float((i * 7) % 5), float((i * 3) % 4), 1.0]) for i in range(20)],
         "vec_id long, emb array<double>",
     )
-    a = {(r["cell"], tuple(r["cv"])) for r in sim.kmeans_codebook(emb, k=3, iters=2).collect()}
-    b = {(r["cell"], tuple(r["cv"])) for r in sim.kmeans_codebook(emb, k=3, iters=2).collect()}
-    assert a == b
+    a = sim.kmeans_codebook(emb, k=3, iters=2)
+    b = sim.kmeans_codebook(emb, k=3, iters=2)
+    assert a.rows == b.rows
+    # the relation form holds exactly the driver-local rows
+    assert [(r["cell"], list(r["cv"])) for r in b.rel.collect()] == a.rows
 
 
 def test_knn_ivf_kmeans_finds_cluster_neighbors(spark):
@@ -716,10 +792,10 @@ def test_kmeans_codebook_tolerates_emptied_cells(spark):
     # assignment must still cover every vector exactly once.
     rows = [(i, [1.0, 0.0]) for i in range(5)] + [(i, [0.0, 1.0]) for i in range(5, 10)]
     emb = spark.createDataFrame(rows, "vec_id long, emb array<double>")
-    cent = sim.kmeans_codebook(emb, k=3, iters=3)
-    n_cells = cent.count()
-    assert 1 <= n_cells <= 3
-    assigned = sim.assign_cells(emb, cent)
+    book = sim.kmeans_codebook(emb, k=3, iters=3)
+    n_cells = book.rel.count()
+    assert 1 <= n_cells <= 3 and n_cells == len(book.rows)
+    assigned = sim.assign_cells(emb, book)
     assert assigned.count() == 10
     assert assigned.select("vec_id").distinct().count() == 10
 
@@ -1388,24 +1464,26 @@ def test_model_caches_key_on_corpus(spark):
     b = "/root/testdata/sf0.01"
     if not (os.path.isdir(a) and os.path.isdir(b)):
         _pytest.skip("driver testdata corpora not present")
-    ca1 = dp._codebook(spark, a)
-    ca2 = dp._codebook(spark, a)
-    cb = dp._codebook(spark, b)
+    ca1 = dp._trained_codebook(spark, a)
+    ca2 = dp._trained_codebook(spark, a)
+    cb = dp._trained_codebook(spark, b)
     assert ca1 is ca2          # same (app, corpus) → cached object
     assert ca1 is not cb       # different corpus → different model
-    rows_a = {(r.cell, tuple(r.cv)) for r in ca1.collect()}
-    rows_b = {(r.cell, tuple(r.cv)) for r in cb.collect()}
+    rows_a = {(r.cell, tuple(r.cv)) for r in ca1.rel.collect()}
+    rows_b = {(r.cell, tuple(r.cv)) for r in cb.rel.collect()}
     assert rows_a != rows_b    # and genuinely different centroids
-    # the driver-local rows twin is exactly the relation's rows, and it is
-    # dropped and retrained together with its codebook
-    twin = dp._codebook_rows(spark, a)
-    assert twin == [(r.cell, list(r.cv)) for r in ca1.collect()]
+    # the driver-local rows are exactly the relation's rows, and they are
+    # dropped and retrained together with their relation
+    twin = ca1.rows
+    assert twin == [(r.cell, list(r.cv)) for r in ca1.rel.collect()]
     from trading_etl_spark import cache
 
     cache.clear(spark, "codebook")
-    assert dp._codebook(spark, a) is not ca1
-    assert dp._codebook_rows(spark, a) is not twin
-    assert dp._codebook_rows(spark, a) == twin
+    retrained = dp._trained_codebook(spark, a)
+    assert retrained is not ca1
+    assert retrained.rel is not ca1.rel
+    assert retrained.rows is not twin
+    assert retrained.rows == twin
 
 
 def test_write_training_shards_manifest_consistent(spark, tmp_path):

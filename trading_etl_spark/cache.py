@@ -86,17 +86,17 @@ def _stat(path: str) -> tuple:
     return path, st.st_size, st.st_mtime_ns
 
 
-def _key_and_fingerprint(params: tuple) -> tuple[tuple, tuple]:
-    key, files = [], []
+def fingerprint(*params: Any) -> tuple:
+    """The sorted ``(path, size, mtime_ns)`` of the source files ``params``
+    name: every file under a ``str`` param and every file of a
+    ``DataFrame`` param's ``inputFiles()``. Other params add nothing."""
+    files = []
     for p in params:
         if isinstance(p, DataFrame):
-            key.append(plan_cache_key(p))
             files += p.inputFiles()
-        else:
-            key.append(p)
-            if isinstance(p, str):
-                files += _source_files(p)
-    return tuple(key), tuple(sorted({_stat(f) for f in files}))
+        elif isinstance(p, str):
+            files += _source_files(p)
+    return tuple(sorted({_stat(f) for f in files}))
 
 
 def _release(value: Any) -> None:
@@ -111,15 +111,18 @@ def _release(value: Any) -> None:
 def cached(spark: SparkSession, kind: str, build: Callable[[], Any], *params: Any) -> Any:
     """``build()`` once per ``(session, kind, params)`` while the source
     files the params name stay unchanged; see the module docstring."""
-    params, fingerprint = _key_and_fingerprint(params)
+    sources = fingerprint(*params)
+    params = tuple(
+        plan_cache_key(p) if isinstance(p, DataFrame) else p for p in params
+    )
     key = (spark.sparkContext.applicationId, params)
     with _lock:
         entries = _entries.setdefault(kind, {})
         hit = entries.get(key)
-        if hit is not None and hit[0] != fingerprint:
+        if hit is not None and hit[0] != sources:
             del entries[key]
     if hit is not None:
-        if hit[0] == fingerprint:
+        if hit[0] == sources:
             return hit[1]
         # released BEFORE the rebuild: Spark's cache registry can match a
         # re-read of the same path to the stale plan, and would then treat
@@ -129,7 +132,7 @@ def cached(spark: SparkSession, kind: str, build: Callable[[], Any], *params: An
     evicted = []
     with _lock:
         now = entries.get(key)
-        if now is not None and now[0] == fingerprint:
+        if now is not None and now[0] == sources:
             # another thread stored this entry while this one built; the
             # duplicate is dropped, not unpersisted, because an identical
             # plan shares the stored value's cached data
@@ -138,7 +141,7 @@ def cached(spark: SparkSession, kind: str, build: Callable[[], Any], *params: An
             evicted.append(now[1])
         while len(entries) >= MAX_PER_KIND and key not in entries:
             evicted.append(entries.pop(next(iter(entries)))[1])
-        entries[key] = (fingerprint, value)
+        entries[key] = (sources, value)
     for old in evicted:
         _release(old)
     return value

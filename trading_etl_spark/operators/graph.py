@@ -9,87 +9,25 @@ No reference analog (the reference has no dedup at all) — this is part of
 the LLM-training-data-pipeline surface mandated as first-class by
 BASELINE.json.
 
-Scale design: two interchangeable algorithms over the same (id, comp)
-contract —
+Scale design: connected components by the large-star/small-star
+algorithm (Kiveris et al., "Connected Components in MapReduce and Beyond",
+SoCC'14) — O(log n) rounds on ANY topology, so adversarial cluster
+diameters (chains of pairwise-similar documents) cost no more rounds than
+near-cliques. Each star step is one ``collect_set`` groupBy on node id
+followed by one ``distinct`` — no join, no broadcast. Memory bound: one
+row holds the neighbor id array of a node, so the highest-degree node's
+ids must fit in a task. Results are asserted against union-find in
+tests/test_graph.py on path/clique/hub/random graphs.
 
-* ``connected_components``: Pregel-style min-label propagation — each
-  iteration is one equi-join (labels ⋈ edges on the source id) plus one
-  hash-agg (min label per destination), both shuffles keyed on node id.
-  Iteration count is bounded by the dup-graph DIAMETER, tiny for real
-  dedup graphs (clusters are near-cliques: copies of the same document
-  all share bands with each other).
-* ``connected_components_two_phase``: the large-star/small-star
-  algorithm (Kiveris et al., "Connected Components in MapReduce and
-  Beyond", SoCC'14) — converges in O(log n) rounds on ANY topology, the
-  safe choice when cluster diameters are adversarial (chains of
-  pairwise-similar documents). Each star step is one ``collect_set``
-  groupBy on node id followed by one ``distinct`` — no join, no
-  broadcast. Memory bound: one row holds the neighbor id array of a
-  node, so the highest-degree node's ids must fit in a task. Results
-  are asserted against min-label and union-find in tests/test_graph.py
-  on path/clique/hub/random graphs.
-
-Both truncate lineage every iteration with ``localCheckpoint`` so plans
-stay O(1) deep, and both keep all data on executors — the driver sees
-only per-round convergence aggregates.
+Each round truncates lineage with ``localCheckpoint`` so plans stay O(1)
+deep, and all data stays on executors — the driver sees only per-round
+convergence signatures.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-
-
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src: str = "u",
-    dst: str = "v",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components by iterative min-label propagation.
-
-    ``nodes``: one row per vertex (column ``id_col``); isolated vertices
-    become singleton components. ``edges``: undirected pairs (``src``,
-    ``dst``), either orientation. Returns (id, comp) where comp is the
-    MINIMUM vertex id reachable from ``id`` — deterministic regardless of
-    partitioning, the property the oracle compare needs.
-
-    The convergence check is a driver-side ``count()`` per round — the
-    standard iterative-algorithm pattern (GraphX does the same); the data
-    itself never leaves the executors.
-    """
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = sym.localCheckpoint()
-    labels = nodes.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("comp")
-    ).localCheckpoint()
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(labels, sym["u"] == labels["id"])
-            .groupBy("v")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        # old and new label in ONE checkpointed relation: the convergence
-        # count is then an in-memory scan, not a second join per round.
-        joined = (
-            labels.join(nbr, labels["id"] == nbr["v"], "left")
-            .select(
-                labels["id"].alias("id"),
-                F.col("comp").alias("old_comp"),
-                F.least(
-                    F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
-                ).alias("comp"),
-            )
-            .localCheckpoint()
-        )
-        changed = joined.filter(F.col("comp") != F.col("old_comp")).count()
-        labels = joined.select("id", "comp")
-        if changed == 0:
-            break
-    return labels
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -146,9 +84,11 @@ def connected_components_two_phase(
 ) -> DataFrame | tuple[DataFrame, int]:
     """Connected components via alternating large-star/small-star rounds
     (Kiveris et al., SoCC'14) — O(log n) rounds on any topology, vs the
-    O(diameter) of min-label propagation. Same contract as
-    ``connected_components``: returns (id, comp) with comp = minimum
-    reachable vertex id; isolated vertices are singletons.
+    O(diameter) of min-label propagation. ``nodes``: one row per vertex
+    (column ``id_col``); ``edges``: undirected pairs (``src``, ``dst``),
+    either orientation. Returns (id, comp) with comp = the MINIMUM
+    reachable vertex id — deterministic regardless of partitioning;
+    isolated vertices are singletons.
 
     Convergence is detected from a (count, xxhash64-xor) signature of the
     edge set, computed by ``observe`` on the relation each round
@@ -239,7 +179,7 @@ def pagerank(
     this answers "which member matters").
 
     ``edges`` are undirected pairs in either orientation (symmetrized
-    here, like :func:`connected_components`); dangling nodes (no edges)
+    here); dangling nodes (no edges)
     keep the bare teleport mass — the no-redistribution variant, chosen
     because it is expressible identically in the DuckDB oracle. A FIXED
     iteration count (no convergence probe) keeps the whole query a single

@@ -888,6 +888,7 @@ _COMPACT_FIXTURES_MAX = 4
 
 
 def _compaction_fixture(spark: SparkSession, sf_dir: str) -> str:
+    import hashlib
     import os
     import tempfile
 
@@ -907,15 +908,19 @@ def _compaction_fixture(spark: SparkSession, sf_dir: str) -> str:
             .parquet(path)
         )
 
+    # the root is deterministic, so it names the whole source path: two
+    # corpora with the same basename must never share (and on eviction
+    # delete) one fixture
+    src = os.path.abspath(sf_dir)
     return get_or_build_dump(
         _COMPACT_FIXTURES,
         _COMPACT_FIXTURES_MAX,
-        (spark.sparkContext.applicationId, sf_dir),
+        (spark.sparkContext.applicationId, src),
         lambda: os.path.join(
             tempfile.gettempdir(),
             "trading_etl_spark_compact",
             spark.sparkContext.applicationId,
-            os.path.basename(os.path.normpath(sf_dir)),
+            f"{os.path.basename(src)}-{hashlib.md5(src.encode()).hexdigest()[:12]}",
         ),
         build,
     )

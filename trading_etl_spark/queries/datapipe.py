@@ -41,9 +41,9 @@ def _as_long(df: DataFrame, *cols: str) -> DataFrame:
 
 def _bpe_fitted(spark: SparkSession, sf_dir: str):
     """The fitted BPE state (merge tuples + final vocabulary relation),
-    train-once per (app, sf_dir) like :func:`_codebook`: both BPE queries
-    (merge table, fertility stats) share one fit instead of re-running the
-    12-round driver loop each."""
+    train-once per (app, sf_dir) like :func:`_trained_codebook`: both BPE
+    queries (merge table, fertility stats) share one fit instead of
+    re-running the 12-round driver loop each."""
     return cached(
         spark,
         "bpe",
@@ -67,26 +67,14 @@ def _split_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _trained_codebook(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
-    """The trained coarse quantizer as a (relation, driver-local rows) pair
-    in ONE entry, so the rows can never outlive their codebook. It is a
-    model artifact: trained once per (app, corpus), it serves kmeans-IVF,
-    the IVFADC coarse stage and SemDeDup's cells. The rows are the form the
-    Arrow assignment kernels close over; k×dim doubles."""
-
-    def build():
-        rows = sim.kmeans_centroids(_emb(spark, sf_dir))
-        return spark.createDataFrame(rows, sim.CODEBOOK_SCHEMA), rows
-
-    return cached(spark, "codebook", build, sf_dir)
-
-
-def _codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _trained_codebook(spark, sf_dir)[0]
-
-
-def _codebook_rows(spark: SparkSession, sf_dir: str) -> list:
-    return _trained_codebook(spark, sf_dir)[1]
+def _trained_codebook(spark: SparkSession, sf_dir: str) -> sim.Codebook:
+    """The trained coarse quantizer, both forms in ONE entry so the rows
+    can never outlive their relation. It is a model artifact: trained once
+    per (app, corpus), it serves kmeans-IVF, the IVFADC coarse stage and
+    SemDeDup's cells."""
+    return cached(
+        spark, "codebook", lambda: sim.kmeans_codebook(_emb(spark, sf_dir)), sf_dir
+    )
 
 
 def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,9 +89,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ivf_index",
         lambda: materialize(
             sim.ivf_inverted_index(
-                _emb(spark, sf_dir),
-                _codebook(spark, sf_dir),
-                cent_rows=_codebook_rows(spark, sf_dir),
+                _emb(spark, sf_dir), _trained_codebook(spark, sf_dir)
             )
         ),
         sf_dir,
@@ -282,24 +268,11 @@ def q_dupgraph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dup-cluster canonicalization: simhash near-dup pairs → connected
-    components (iterative min-label propagation) → one keeper per cluster
-    (component_id = min doc_id; singletons keep themselves)."""
-    docs = _docs(spark, sf_dir)
-    pairs = tx.dedup_simhash(docs)
-    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    labels = gr.connected_components(docs.select("doc_id"), edges, id_col="doc_id")
-    return labels.select(
-        F.col("id").alias("doc_id"),
-        F.col("comp").alias("component_id"),
-        (F.col("comp") == F.col("id")).alias("is_keeper"),
-    )
-
-
-def q_dedup_components_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same canonicalization as dedup_connected_components, but via the
-    large-star/small-star algorithm — O(log n) rounds on any topology
-    (Kiveris et al., SoCC'14). Shares the min-label query's oracle: both
-    must produce identical components."""
+    components (large-star/small-star, O(log n) rounds on any topology —
+    Kiveris et al., SoCC'14) → one keeper per cluster (component_id = min
+    doc_id; singletons keep themselves). Registered under both
+    ``dedup_connected_components`` and ``dedup_cc_two_phase``, which share
+    one oracle."""
     docs = _docs(spark, sf_dir)
     pairs = tx.dedup_simhash(docs)
     edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
@@ -415,7 +388,7 @@ def q_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _as_long(
         sim.knn_ivf_kmeans(
             _emb(spark, sf_dir),
-            cent=_codebook(spark, sf_dir),
+            codebook=_trained_codebook(spark, sf_dir),
             assigned=_ivf_index(spark, sf_dir),
         ),
         "rank",
@@ -435,7 +408,9 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
     exact = sim.knn_bruteforce(e).select("query_id", "neighbor_id")
     approx = sim.knn_ivf_kmeans(
-        e, cent=_codebook(spark, sf_dir), assigned=_ivf_index(spark, sf_dir)
+        e,
+        codebook=_trained_codebook(spark, sf_dir),
+        assigned=_ivf_index(spark, sf_dir),
     ).select("query_id", "neighbor_id")
     totals = exact.agg(
         F.count_distinct("query_id").alias("n_queries"),
@@ -475,7 +450,7 @@ def q_ivf_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN lifecycle, over the cached codebook + inverted lists."""
     return sim.ivf_drift_report(
         _emb(spark, sf_dir),
-        _codebook(spark, sf_dir),
+        _trained_codebook(spark, sf_dir),
         assigned=_ivf_index(spark, sf_dir),
     )
 
@@ -688,7 +663,7 @@ def q_knn_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _as_long(
         sim.knn_ivfadc(
             _emb(spark, sf_dir),
-            coarse_cent=_codebook(spark, sf_dir),
+            codebook=_trained_codebook(spark, sf_dir),
             pq=_pq(spark, sf_dir),
             assigned=_ivf_index(spark, sf_dir),
         ),
@@ -702,7 +677,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving (vec_id, cell)."""
     return _as_long(
         sim.semantic_dedup(
-            _emb(spark, sf_dir), cent_rows=_codebook_rows(spark, sf_dir)
+            _emb(spark, sf_dir), codebook=_trained_codebook(spark, sf_dir)
         ),
         "cell",
     )
@@ -815,7 +790,7 @@ QUERIES = {
     "dedup_lsh_eval": q_lsh_eval,
     "dedup_simhash": q_dedup_simhash,
     "dedup_connected_components": q_dedup_components,
-    "dedup_cc_two_phase": q_dedup_components_two_phase,
+    "dedup_cc_two_phase": q_dedup_components,
     "decontaminate_train_ngrams": q_decontaminate,
     "decontaminate_bloom_prefilter": q_decontaminate_bloom,
     "decontaminate_fuzzy_lsh": q_decontaminate_fuzzy,
@@ -1918,8 +1893,8 @@ WHERE media_type = 'video'
 """.strip(),
 }
 
-# The two-phase CC variant must produce byte-identical components to the
-# min-label one — they share the recursive-CTE oracle.
+# dedup_cc_two_phase and dedup_connected_components run the same query and
+# share the recursive-CTE oracle.
 ORACLES["dedup_cc_two_phase"] = ORACLES["dedup_connected_components"]
 
 # Bigram-PMI oracle: same tokenization CTE, identical ratio association

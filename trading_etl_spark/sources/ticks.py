@@ -198,14 +198,28 @@ def clear_source_caches(spark: SparkSession | None = None) -> int:
     return cache.clear(spark, "splits")
 
 
-def _scan_splits(spark: SparkSession, path_key: str, df: DataFrame) -> int:
+def _scan_splits(spark: SparkSession, key: str | DataFrame, df: DataFrame) -> int:
     """``df.rdd.getNumPartitions()``, which plans the scan to count its
     splits: ~0.15 s of driver work per fresh handle, re-paid by every cold
-    chain build. Cached per (path files, split-sizing conf)."""
+    chain build. Cached per ``key`` (the source path, or the scanned
+    relation itself) and split-sizing conf."""
     conf = tuple(spark.conf.get(k, None) for k in SPLIT_CONFS)
     return cache.cached(
-        spark, "splits", lambda: df.rdd.getNumPartitions(), path_key, conf
+        spark, "splits", lambda: df.rdd.getNumPartitions(), key, conf
     )
+
+
+def spread_if_underpartitioned(
+    src: DataFrame, out: DataFrame, key: str | DataFrame
+) -> DataFrame:
+    """``out`` repartitioned to defaultParallelism when the scan behind
+    ``src`` arrives under-split — a single small parquet file is ONE task
+    for every stage above it. A real many-split source is left alone. The
+    split count is :func:`_scan_splits`, probed once per ``key``."""
+    par = src.sparkSession.sparkContext.defaultParallelism
+    if _scan_splits(src.sparkSession, key, src) < par:
+        return out.repartition(par)
+    return out
 
 
 def raw_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,10 +236,7 @@ def raw_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the guard no-ops. Batch-only — streaming sources manage their own
     partitioning."""
     ev = load_events(spark, sf_dir)
-    par = spark.sparkContext.defaultParallelism
-    if _scan_splits(spark, f"{sf_dir}/events.parquet", ev) < par:
-        ev = ev.repartition(par)
-    return tickify(ev)
+    return tickify(spread_if_underpartitioned(ev, ev, f"{sf_dir}/events.parquet"))
 
 
 def load_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
