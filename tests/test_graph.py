@@ -8,6 +8,8 @@ hop of label travel per round).
 
 import random
 
+import pytest
+
 from trading_etl_spark.operators import graph as gr
 
 
@@ -235,3 +237,12 @@ def test_triangle_stats_star_hub_degree_orientation(spark):
     out_deg = {r["u"]: r["c"] for r in oriented.groupBy("u").count().withColumnRenamed("count", "c").collect()}
     assert 0 not in out_deg, "hub must have zero out-edges under degree orientation"
     assert max(out_deg.values()) <= 2, "leaf out-degree stays O(sqrt(E))"
+
+
+def test_two_phase_raises_when_max_iter_ends_before_fixed_point(spark):
+    # a 50-node chain needs several rounds; one round can never confirm a
+    # fixed point, so the call must fail rather than return its labels
+    edge_list = [(i, i + 1) for i in range(49)]
+    nodes, edges = _frames(spark, 50, edge_list)
+    with pytest.raises(RuntimeError, match="no fixed point in 1 rounds"):
+        gr.connected_components_two_phase(nodes, edges, max_iter=1)

@@ -12,7 +12,11 @@ from datetime import datetime, timedelta
 import numpy as np
 import pytest
 
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
 from trading_etl_spark.operators.indicators import (
+    GROUP_KEYS,
     _atr_series,
     _ema_series,
     _macd_series,
@@ -20,9 +24,13 @@ from trading_etl_spark.operators.indicators import (
     atr,
     bollinger,
     ema,
+    ema_periods,
+    keep_col,
     macd,
     rsi,
+    rsi_periods,
     sma,
+    sma_periods,
     stochastic,
 )
 from trading_etl_spark.schemas import OHLC_SCHEMA
@@ -499,3 +507,57 @@ def test_candle_patterns_known_shapes(spark):
     assert [r["hammer"] for r in out] == [False, True, False, False, False]
     assert [r["bull_engulf"] for r in out] == [False, False, True, False, False]
     assert [r["bear_engulf"] for r in out] == [False, False, False, True, False]
+
+
+ALL_PERIODS = [3, 5, 14]
+
+
+def _walks(spark):
+    """Two random-walk series; the second is shorter than the largest period,
+    so all of its period-14 rows are warm-up NULLs."""
+    rng = np.random.default_rng(7)
+    t0 = datetime(2024, 1, 1)
+    rows = []
+    for pair, n in (("USD/JPY", 40), ("EUR/JPY", 10)):
+        closes = 100.0 + np.cumsum(rng.normal(size=n))
+        rows += [
+            (pair, "1h", t0 + timedelta(hours=i), float(c), float(c), float(c), float(c))
+            for i, c in enumerate(closes)
+        ]
+    return spark.createDataFrame(rows, OHLC_SCHEMA)
+
+
+def _fact_rows(df):
+    return sorted(
+        df.collect(), key=lambda r: (r["currency_pair_code"], r["period"], r["time"])
+    )
+
+
+@pytest.mark.parametrize(
+    "single, multi",
+    [(sma, sma_periods), (ema, ema_periods), (rsi, rsi_periods)],
+    ids=["sma", "ema", "rsi"],
+)
+def test_all_periods_kernel_equals_single_period_union(spark, single, multi):
+    """The one-pass kernel equals the union of single-period calls, row for
+    row and bit for bit — over whole series, and under a keep mask that
+    gives each period its own suffix (the incremental refresh's input)."""
+    ohlc = _walks(spark)
+    want = [single(ohlc, p) for p in ALL_PERIODS]
+    assert _fact_rows(multi(ohlc, ALL_PERIODS)) == _fact_rows(
+        want[0].unionByName(want[1]).unionByName(want[2])
+    )
+
+    # rows kept from the end of each series, per period: period 3's suffix
+    # starts mid-series, so its warm-up must count from that suffix's start
+    kept = {3: 8, 5: 25, 14: 40}
+    newest_first = Window.partitionBy(*GROUP_KEYS).orderBy(F.desc("time"))
+    masked = ohlc.withColumn("_r", F.row_number().over(newest_first)).select(
+        *ohlc.columns, *[(F.col("_r") <= n).alias(keep_col(p)) for p, n in kept.items()]
+    )
+    want = [
+        single(masked.filter(keep_col(p)).select(*ohlc.columns), p) for p in ALL_PERIODS
+    ]
+    got = _fact_rows(multi(masked, ALL_PERIODS))
+    assert got == _fact_rows(want[0].unionByName(want[1]).unionByName(want[2]))
+    assert len(got) == 8 + 8 + 25 + 10 + 40 + 10

@@ -10,17 +10,17 @@
 
 Scale notes: a naive anti-join against a 100 TB fact table would shuffle the
 whole table per append. ``first_wins_append`` therefore prunes the existing
-side to the incoming batch's time range first — with time-partitioned parquet
-that is partition pruning, so the anti-join touches only the overlapping
-partitions. The incoming side of an append is typically small → Catalyst/AQE
-broadcasts it.
+side to the incoming batch's time range and to its values of each partition
+column that is a key — partition pruning, so the anti-join touches only the
+partitions a collision could live in. The incoming side of an append is
+typically small → Catalyst/AQE broadcasts it.
 """
 
 from __future__ import annotations
 
 import contextlib
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import fs
@@ -41,7 +41,7 @@ def writer_lock(spark: SparkSession, path: str):
     The left-anti append is first-wins only under ONE writer: two
     simultaneous appenders could both pass the anti-join (neither sees the
     other's in-flight rows) and double-write a key — the reference gets
-    this for free from Postgres primary keys (VERDICT r4 Missing #4).
+    this for free from Postgres primary keys.
     The guard is a sibling marker file ``<table>._writer_lock`` created
     atomically (fs.try_acquire_marker); the loser raises
     ``ConcurrentWriteError`` immediately — fail-fast, no blocking, the
@@ -57,8 +57,8 @@ def writer_lock(spark: SparkSession, path: str):
     ``fs.NON_ATOMIC_CREATE_SCHEMES``) a create is HEAD-then-PUT, so the
     marker is NOT exactly-one-wins — two racing writers could both
     "acquire" it and the first-wins contract silently breaks. Rather than
-    ship an advisory lock that looks safe, this hard-fails there
-    (VERDICT r5 Missing #4): on an object store use an ACID table format
+    ship an advisory lock that looks safe, this hard-fails there: on an
+    object store use an ACID table format
     (Delta/Iceberg MERGE), an external lock service (DynamoDB/ZooKeeper),
     or pass ``lock=False`` to first_wins_append under an external
     single-writer coordinator.
@@ -110,61 +110,92 @@ def first_wins_append(
     ``lock=True`` (default) serializes writers through :func:`writer_lock`
     so interleaved appends cannot double-write a key; pass ``lock=False``
     only when an external coordinator already guarantees a single writer.
-    Returns the number of rows actually written. The existing side is pruned
-    to the incoming batch's ``prune_on`` range (partition/row-group pruning at
-    scale) before the anti-join — but ONLY when ``prune_on`` is itself one of
-    the PK ``keys``: pruning on a non-key column could hide an existing key
-    that lives outside the batch's range and re-insert it. The incoming batch
-    is deduped on the keys on BOTH paths so an internally-duplicated batch
-    can never write two copies of a PK (the ON CONFLICT contract). The table
+    Returns the number of rows actually written. The incoming batch is
+    deduped on the keys on both paths, so an internally-duplicated batch can
+    never write two copies of a PK (the ON CONFLICT contract). The table
     existence probe goes through the Hadoop FileSystem for the path's scheme
     (file:/, hdfs://, s3a://) — never ``os.path``.
+
+    A new table is one write job; the row count is observed on that job.
+    An existing table is appended by :func:`_append_existing`.
     """
-    incoming = incoming.dropDuplicates(keys).cache()
-    fresh = None
+    batch = incoming.dropDuplicates(keys)
     guard = writer_lock(spark, path) if lock else contextlib.nullcontext()
+    with guard:
+        if fs.exists(spark, path):
+            return _append_existing(spark, path, batch, keys, prune_on, partition_by)
+        obs = Observation()
+        writer = batch.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
+        n = obs.get["n"]
+        # An empty unpartitioned write still leaves a readable table with the
+        # right schema, so the next reader gets zero rows, not PATH_NOT_FOUND.
+        # A partitioned write of zero rows leaves a directory with no data
+        # files, whose existence then breaks schema inference for every later
+        # read and append: the path stays absent until a non-empty batch.
+        if n == 0 and partition_by:
+            fs.delete(spark, path)
+        return n
+
+
+def _append_existing(
+    spark: SparkSession,
+    path: str,
+    batch: DataFrame,
+    keys: list[str],
+    prune_on: str,
+    partition_by: list[str] | None,
+) -> int:
+    """Anti-join a key-deduped ``batch`` against the existing table at
+    ``path`` and append the rows whose key is new.
+
+    One observed job fills the batch's cache and returns its row count, the
+    ``prune_on`` range and the values of each partition column that is a
+    key. The existing side is then pruned to that range and those partition
+    directories: a key collision implies equal values in every key column,
+    so nothing that could collide is pruned. The range prune applies only
+    when ``prune_on`` is itself a key — pruning on a non-key column could
+    hide an existing key that lives outside the batch's range and re-insert
+    it. The fresh rows are counted before the write, so an empty batch (the
+    streaming gates append every micro-batch) adds no file.
+    """
+    prune_time = bool(prune_on) and prune_on in keys and prune_on in batch.columns
+    part_keys = [c for c in partition_by or [] if c in keys]
+    stats = [F.count(F.lit(1)).alias("n")]
+    if prune_time:
+        stats += [F.min(prune_on).alias("lo"), F.max(prune_on).alias("hi")]
+    stats += [F.collect_set(c).alias(c) for c in part_keys]
+    batch = batch.cache()
+    fresh = None
     try:
-        with guard:
-            if fs.exists(spark, path):
-                existing = spark.read.parquet(path)
-                if prune_on and prune_on in keys and prune_on in incoming.columns:
-                    bounds = incoming.agg(
-                        F.min(prune_on).alias("lo"), F.max(prune_on).alias("hi")
-                    ).first()
-                    if bounds and bounds["lo"] is not None:
-                        existing = existing.filter(
-                            (F.col(prune_on) >= bounds["lo"])
-                            & (F.col(prune_on) <= bounds["hi"])
-                        )
-                fresh = first_wins(existing, incoming, keys)
-            else:
-                fresh = incoming
-            fresh = fresh.cache()
-            n = fresh.count()
-            # Write through even when n == 0 on the FIRST append: an empty
-            # initial relation is a legal first write, and it must still create
-            # the table path with the right schema — otherwise the next reader
-            # hits PATH_NOT_FOUND instead of an empty table. EXCEPT when
-            # partitioned: a Hive-partitioned write of zero rows produces a
-            # directory with no data files (only _SUCCESS), whose existence
-            # then breaks schema inference for every later read and append. A
-            # partitioned table's schema lives in its data files, so it cannot
-            # be created empty — leave the path absent until the first
-            # non-empty batch.
-            if n == 0 and partition_by and not fs.exists(spark, path):
-                return 0
-            if n or not fs.exists(spark, path):
-                writer = fresh.write.mode("append")
-                if partition_by:
-                    writer = writer.partitionBy(*partition_by)
-                writer.parquet(path)
-            return n
+        obs = Observation()
+        # a noop write scans the batch once: it fills the cache and the
+        # observation without an aggregate of its own
+        batch.observe(obs, *stats).write.format("noop").mode("overwrite").save()
+        seen = obs.get
+        if seen["n"] == 0:
+            return 0
+        existing = spark.read.parquet(path)
+        if prune_time and seen["lo"] is not None:
+            existing = existing.filter(F.col(prune_on).between(seen["lo"], seen["hi"]))
+        for c in part_keys:
+            existing = existing.filter(F.col(c).isin(seen[c]))
+        fresh = first_wins(existing, batch, keys).cache()
+        n = fresh.count()
+        if n:
+            writer = fresh.write.mode("append")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(path)
+        return n
     finally:
-        # a per-batch caller (the streaming gates run this every micro-
-        # batch) must not accumulate one pinned relation per call (r18)
+        # the streaming gates run this every micro-batch: release both
+        # relations so calls do not accumulate pinned memory
         if fresh is not None:
             fresh.unpersist()
-        incoming.unpersist()
+        batch.unpersist()
 
 
 class AcidFormatUnavailable(RuntimeError):
@@ -204,8 +235,8 @@ def first_wins_merge(
     max_retries: int = 5,
 ) -> None:
     """W1 first-wins append on an ACID (Delta) table — the object-store
-    path :func:`writer_lock` hard-fails toward (VERDICT r5 Missing #4 /
-    r6 task #5): ``MERGE … WHEN NOT MATCHED THEN INSERT`` under the
+    path :func:`writer_lock` hard-fails toward: ``MERGE … WHEN NOT
+    MATCHED THEN INSERT`` under the
     format's optimistic-concurrency commit protocol, which is what makes
     CONCURRENT writers safe where the marker lock cannot be:
 
@@ -234,7 +265,7 @@ def first_wins_merge(
     # createIfNotExists is idempotent under the commit protocol (both
     # racers may attempt it; the log serializes them), and the key check
     # then lives entirely inside serialized MERGE commits. The create is
-    # GUARDED on table existence (ADVICE r8): the builder validates its
+    # GUARDED on table existence: the builder validates its
     # schema against an existing table column-order-sensitively, so an
     # established table + a batch with reordered columns would throw a
     # schema mismatch here even though the name-based MERGE below handles

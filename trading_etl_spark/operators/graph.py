@@ -104,6 +104,8 @@ def connected_components_two_phase(
     termination round, not per round. At the fixed point every component
     is a star centered at its minimum id, so the final labels are one
     groupBy over the star edges.
+    Raises ``RuntimeError`` when ``max_iter`` rounds pass without a
+    confirmed fixed point.
     With ``return_rounds=True`` also returns the number of rounds run
     (asserted O(log n) on a 1000-node path in tests/test_graph.py).
     """
@@ -135,9 +137,14 @@ def connected_components_two_phase(
         if sig == prev_sig and e.exceptAll(prev_e).isEmpty():
             break
         prev_sig = sig
-    # Fixed point = stars (u → component min). groupBy(min) rather than a
-    # plain projection so a max_iter bailout still yields valid (if not
-    # fully converged) labels instead of duplicate rows per node.
+    else:
+        # labels from an unconfirmed round can split a component: fail
+        # instead of returning them
+        raise RuntimeError(
+            f"connected components found no fixed point in {rounds} rounds "
+            f"(max_iter={max_iter})"
+        )
+    # Fixed point = stars (u → component min).
     star = e.groupBy("u").agg(F.min("v").alias("star_comp"))
     labels = (
         nodes.select(F.col(id_col).alias("id"))

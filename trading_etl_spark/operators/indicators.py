@@ -8,6 +8,10 @@ The reference pulls time-ordered closes out of Postgres into NumPy and calls
 - EMA and RSI are order-sensitive recursions, not expressible as Spark frame
   windows → grouped ``applyInPandas`` per (pair, timeframe): each group's
   series lands in one task in time order, vectorized via Arrow.
+- A fact table's periods share one pass: :func:`sma_periods` is one sort and
+  one ``WindowExec`` with a frame per period, and :func:`ema_periods` /
+  :func:`rsi_periods` are one grouped pass that runs every period on each
+  sorted series, so the per-pass cost is paid once, not once per period.
 
 TA-Lib semantics reproduced exactly (FIXTURES.md §8 golden vectors), with one
 representation choice: TA-Lib's warm-up NaN is stored as NULL — the
@@ -47,8 +51,77 @@ INDICATOR_OUT_SCHEMA = (
 )
 
 
+def keep_col(period: int) -> str:
+    """Name of the optional boolean input column that restricts ``period``
+    to a subset of each series: the rows where it is true, which must be a
+    suffix of the series in time order (an incremental refresh's new rows
+    plus their warm-up). Without the column every row is computed."""
+    return f"_keep_{period}"
+
+
+def sma_periods(
+    ohlc: DataFrame, periods: Iterable[int], calc_version: str = "0"
+) -> DataFrame:
+    """Simple moving average for every period in one window pass — one sort
+    and one ``WindowExec`` with a rows frame per period; warm-up rows are
+    NULL. Emits ``INDICATOR_OUT_SCHEMA`` rows, one per (row, period) kept.
+
+    With a :func:`keep_col` mask the warm-up of period ``p`` counts from the
+    start of ``p``'s own suffix, not from the start of the input: the row
+    number in that suffix is ``rn − (n_rows − n_kept_p)``. A row at least
+    ``p`` deep in its suffix has its whole frame inside the suffix, so its
+    value is the average of the same rows, in the same order, as a call on
+    the suffix alone.
+    """
+    periods = list(periods)
+    w = Window.partitionBy(*GROUP_KEYS).orderBy("time")
+    # the whole series, on the same ordering so it shares the WindowExec
+    series = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    rn = F.row_number().over(w)
+    staged = []
+    for p in periods:
+        keep, rn_p = F.lit(True), rn
+        if keep_col(p) in ohlc.columns:
+            keep = F.col(keep_col(p))
+            n_rows = F.count(F.lit(1)).over(series)
+            rn_p = rn - (n_rows - F.sum(keep.cast("int")).over(series))
+        value = F.when(rn_p >= p, F.avg("close").over(w.rowsBetween(-(p - 1), 0)))
+        staged += [value.alias(f"_v{p}"), keep.alias(f"_k{p}")]
+    # a window expression inside a generator fails analysis: compute the window
+    # columns first, then stack them into rows
+    stacked = F.array(
+        *[
+            F.struct(
+                F.lit(p).cast("int").alias("period"),
+                F.col(f"_v{p}").alias("value"),
+                F.col(f"_k{p}").alias("keep"),
+            )
+            for p in periods
+        ]
+    )
+    return (
+        ohlc.select(*GROUP_KEYS, "time", *staged)
+        .select(*GROUP_KEYS, "time", F.inline(stacked))
+        .filter("keep")
+        .select(
+            *GROUP_KEYS,
+            "period",
+            F.lit(calc_version).alias("calc_version"),
+            "time",
+            "value",
+        )
+    )
+
+
 def sma(ohlc: DataFrame, period: int, calc_version: str = "0") -> DataFrame:
-    """Simple moving average as a native window — warm-up rows are NULL."""
+    """Simple moving average as a native window — warm-up rows are NULL.
+
+    Not a one-period :func:`sma_periods`: here ``period`` is a literal
+    projection, so a filter on ``period`` over a union of these calls (the
+    cross signals' self-join) prunes the other branches. Behind the stacked
+    form's ``Generate`` every branch stays, and Spark 4.1 then fails to plan
+    the join over the union (a ``PartitioningCollection`` numPartitions
+    mismatch)."""
     w = Window.partitionBy(*GROUP_KEYS).orderBy("time")
     frame = w.rowsBetween(-(period - 1), 0)
     rn = F.row_number().over(w)
@@ -101,34 +174,65 @@ def _rsi_series(closes: np.ndarray, period: int) -> np.ndarray:
     return out
 
 
-def _grouped_indicator(ohlc: DataFrame, period: int, calc_version: str, fn) -> DataFrame:
+def _grouped_periods(
+    ohlc: DataFrame, periods: Iterable[int], calc_version: str, fn
+) -> DataFrame:
+    """One ``groupBy(pair, tf).applyInPandas`` for every period: each group
+    is sorted once and ``fn`` runs per period over the rows its
+    :func:`keep_col` mask keeps (all rows without one)."""
+    periods = list(periods)
+    masks = {p: keep_col(p) for p in periods if keep_col(p) in ohlc.columns}
+
     def compute(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("time")
-        values = fn(pdf["close"].to_numpy(dtype=np.float64), period)
-        return pd.DataFrame(
-            {
-                "currency_pair_code": pdf["currency_pair_code"].to_numpy(),
-                "timeframe_code": pdf["timeframe_code"].to_numpy(),
-                "period": np.int32(period),
-                "calc_version": calc_version,
-                "time": pdf["time"].to_numpy(),
-                "value": values,
-            }
-        )
+        closes = pdf["close"].to_numpy(dtype=np.float64)
+        keys = {c: pdf[c].to_numpy() for c in (*GROUP_KEYS, "time")}
+        parts = []
+        for p in periods:
+            rows = pdf[masks[p]].to_numpy(dtype=bool) if p in masks else slice(None)
+            parts.append(
+                pd.DataFrame(
+                    {
+                        "currency_pair_code": keys["currency_pair_code"][rows],
+                        "timeframe_code": keys["timeframe_code"][rows],
+                        "period": np.int32(p),
+                        "calc_version": calc_version,
+                        "time": keys["time"][rows],
+                        "value": fn(closes[rows], p),
+                    }
+                )
+            )
+        return pd.concat(parts, ignore_index=True)
 
-    return ohlc.select(*GROUP_KEYS, "time", "close").groupBy(*GROUP_KEYS).applyInPandas(
-        compute, INDICATOR_OUT_SCHEMA
+    return (
+        ohlc.select(*GROUP_KEYS, "time", "close", *masks.values())
+        .groupBy(*GROUP_KEYS)
+        .applyInPandas(compute, INDICATOR_OUT_SCHEMA)
     )
+
+
+def ema_periods(
+    ohlc: DataFrame, periods: Iterable[int], calc_version: str = "0"
+) -> DataFrame:
+    """Exponential moving average for every period in one grouped pass."""
+    return _grouped_periods(ohlc, periods, calc_version, _ema_series)
+
+
+def rsi_periods(
+    ohlc: DataFrame, periods: Iterable[int], calc_version: str = "0"
+) -> DataFrame:
+    """Relative Strength Index for every period in one grouped pass."""
+    return _grouped_periods(ohlc, periods, calc_version, _rsi_series)
 
 
 def ema(ohlc: DataFrame, period: int, calc_version: str = "0") -> DataFrame:
     """Exponential moving average, TA-Lib seeding (recursive → applyInPandas)."""
-    return _grouped_indicator(ohlc, period, calc_version, _ema_series)
+    return ema_periods(ohlc, [period], calc_version)
 
 
 def rsi(ohlc: DataFrame, period: int, calc_version: str = "0") -> DataFrame:
     """Relative Strength Index, Wilder smoothing (recursive → applyInPandas)."""
-    return _grouped_indicator(ohlc, period, calc_version, _rsi_series)
+    return rsi_periods(ohlc, [period], calc_version)
 
 
 def _macd_series(
@@ -233,7 +337,7 @@ ADX_OUT_SCHEMA = (
 
 
 def adx(ohlc: DataFrame, period: int = 14) -> DataFrame:
-    """ADX(period) with ±DI per (pair, timeframe) (r10-born) — THREE
+    """ADX(period) with ±DI per (pair, timeframe) — THREE
     coupled Wilder smoothings (+DM, −DM, TR) feeding a fourth (DX→ADX),
     the deepest member of the grouped Arrow-kernel recursion family
     (same shuffle shape as :func:`rsi`/:func:`atr`). The DuckDB twin
@@ -348,8 +452,7 @@ def bollinger(ohlc: DataFrame, period: int = 20, num_std: float = 2.0) -> DataFr
     not row_number: count-over-frame equals row_number clamped at
     ``period`` (identical ``>= period`` decision), and sharing the frame
     lets WindowExec run one frame processor instead of adding an
-    unbounded-preceding frame for the row number alone (r9 diagnosis:
-    ~0.22 s -> ~0.18 s at sf0.1)."""
+    unbounded-preceding frame for the row number alone."""
     w = Window.partitionBy(*GROUP_KEYS).orderBy("time")
     frame = w.rowsBetween(-(period - 1), 0)
     warm = F.col("_n") >= period
@@ -437,22 +540,6 @@ def stochastic(ohlc: DataFrame, k_period: int = 14, d_period: int = 3) -> DataFr
     )
 
 
-def indicators_all(
-    ohlc: DataFrame, periods: Iterable[int], calc_version: str = "0"
-) -> dict[str, DataFrame]:
-    """All three indicator fact relations for a set of periods (the
-    set-based replacement for the reference's nested loops,
-    ``transform.py:85-119``)."""
-    out: dict[str, DataFrame] = {}
-    for name, fn in (("sma", sma), ("ema", ema), ("rsi", rsi)):
-        parts = [fn(ohlc, p, calc_version) for p in periods]
-        df = parts[0]
-        for part in parts[1:]:
-            df = df.unionByName(part)
-        out[name] = df
-    return out
-
-
 HOLT_ALPHA, HOLT_BETA = 0.2, 0.1
 HOLT_OUT_SCHEMA = (
     "currency_pair_code string, timeframe_code string, time timestamp, "
@@ -525,8 +612,7 @@ def holt_forecast(
 def donchian(ohlc: DataFrame, period: int = 20) -> DataFrame:
     """Donchian channels as native frame windows (zero Python): upper =
     highest high, lower = lowest low over the trailing ``period`` rows,
-    mid = their mean — the breakout-channel indicator (r9-born, widening
-    the native-window family beyond the reference's SMA). All three NULL
+    mid = their mean — the breakout-channel indicator. All three NULL
     until a full window is available (the same count-over-frame warm-up
     gate as :func:`bollinger`); one (pair, timeframe) shuffle."""
     w = Window.partitionBy(*GROUP_KEYS).orderBy("time")
@@ -547,7 +633,7 @@ def donchian(ohlc: DataFrame, period: int = 20) -> DataFrame:
 
 
 def williams_r(ohlc: DataFrame, period: int = 14) -> DataFrame:
-    """Williams %R as native frame windows (zero Python, r10-born):
+    """Williams %R as native frame windows (zero Python):
     %R = −100·(HH − close)/(HH − LL) over the trailing ``period`` rows —
     the inverted-scale cousin of the fast stochastic (%R = %K − 100).
     NULL until a full window exists; a zero-range window (HH = LL) maps
@@ -569,7 +655,7 @@ def williams_r(ohlc: DataFrame, period: int = 14) -> DataFrame:
 
 def cci(ohlc: DataFrame, period: int = 20) -> DataFrame:
     """Commodity Channel Index (Lambert) as native windows + one JVM
-    higher-order fold (zero Python, r10-born):
+    higher-order fold (zero Python):
 
         tp  = (high + low + close) / 3
         cci = (tp − SMA(tp)) / (0.015 · MD)
@@ -624,8 +710,8 @@ def ichimoku(
     kijun: int = ICHIMOKU_KIJUN,
     senkou_b: int = ICHIMOKU_SENKOU_B,
 ) -> DataFrame:
-    """Ichimoku Kinko Hyo as native windows + row offsets (zero Python,
-    r9-born). Midpoint lines over trailing highs/lows:
+    """Ichimoku Kinko Hyo as native windows + row offsets (zero Python).
+    Midpoint lines over trailing highs/lows:
 
     - ``tenkan_sen``  = (HH(tenkan) + LL(tenkan)) / 2
     - ``kijun_sen``   = (HH(kijun) + LL(kijun)) / 2
@@ -674,7 +760,7 @@ def keltner(
     atr_period: int = 10,
     mult: float = 2.0,
 ) -> DataFrame:
-    """Keltner Channels (r11-born): mid = EMA(close, ema_period), bands =
+    """Keltner Channels: mid = EMA(close, ema_period), bands =
     mid ± mult·ATR(atr_period) — the volatility-channel sibling of
     Bollinger that swaps the stddev band for Wilder's ATR. Both inputs are
     order-sensitive recursions, so the ONE grouped Arrow kernel computes
@@ -729,7 +815,7 @@ def _trix_series(closes: np.ndarray, period: int) -> np.ndarray:
 
 
 def trix(ohlc: DataFrame, period: int = 15) -> DataFrame:
-    """TRIX(period) (r11-born): 100·ROC₁ of a TRIPLE EMA of close — the
+    """TRIX(period): 100·ROC₁ of a TRIPLE EMA of close — the
     momentum oscillator whose triple smoothing filters sub-period noise.
     Three chained order-sensitive recursions → one grouped Arrow kernel,
     single (pair, timeframe) shuffle like :func:`macd` (which chains two).
@@ -756,7 +842,7 @@ def trix(ohlc: DataFrame, period: int = 15) -> DataFrame:
 
 
 def obv(candles: DataFrame, volume_col: str = "volume") -> DataFrame:
-    """On-Balance Volume (r11-born) as a native cumulative window (zero
+    """On-Balance Volume as a native cumulative window (zero
     Python): OBV = running Σ of volume signed by the close-to-close
     direction (+vol on up-close, −vol on down, 0 on flat; the first row
     contributes 0 — Granville's convention). One (pair, timeframe)
@@ -781,8 +867,8 @@ def obv(candles: DataFrame, volume_col: str = "volume") -> DataFrame:
 def vwap_anchored(
     candles: DataFrame, volume_col: str = "volume", round_dp: int | None = None
 ) -> DataFrame:
-    """Session-anchored VWAP (r11-born) as native cumulative windows (zero
-    Python): within each (pair, timeframe, UTC day) the running
+    """Session-anchored VWAP as native cumulative windows (zero Python):
+    within each (pair, timeframe, UTC day) the running
     Σ(typical·vol)/Σ(vol), typical = (high+low+close)/3 — the intraday
     fair-value anchor that resets at the session boundary, the standard
     execution-quality benchmark. Two running sums share ONE (pair,
@@ -790,24 +876,22 @@ def vwap_anchored(
     window state at 100 TB (no unbounded-preceding over years of
     history — the anchor IS the partition key).
 
-    Reduction-order independence (r13 redesign, the PageRank precedent,
-    VERDICT r12 task #1): the running numerator accumulates in INTEGER
+    Reduction-order independence: the running numerator accumulates in INTEGER
     fixed-point — per-row typical·vol is quantized to 1e-6 units
     (floor(x·1e6 + 0.5), one deterministic per-row double expression,
     bit-identical on any IEEE engine given the same parenthesization) and
     summed as BIGINT, so the cumulative sum is exact and identical under
     ANY reduction order — sequential running frames (Spark) and
     pairwise/segment-tree window reductions (DuckDB) agree bit-for-bit,
-    killing the 6dp round-half ties that ulp-level drift flipped in r12
-    (1 of 3,887 rows). The denominator (volume) is already integral.
+    so ulp-level drift cannot flip a 6dp round-half tie. The denominator
+    (volume) is already integral.
     Overflow headroom: per-row tpv·1e6 at price 1e5 × hourly volume 1e6 is
     ~1e17 and a day partition holds ≤24 rows → worst-case day sum ~2.4e18
     < int64 max 9.2e18 (the ``round_dp`` path doubles it: 4.8e18, still
     inside). The division back to double happens once per row on exact
     integers — deterministic.
 
-    ``round_dp=6`` (divergence class 5, found fixing class 4): engines
-    disagree on ROUNDING the identical raw double too — Spark's F.round
+    ``round_dp=6``: engines disagree on ROUNDING the identical raw double too — Spark's F.round
     half-ups the double's SHORTEST decimal repr (BigDecimal.valueOf:
     "32.5666665" → .566667) while DuckDB rounds the scaled double's exact
     binary expansion (32.56666649999…966 → .566666). So the 6dp rounding
@@ -840,7 +924,7 @@ def vwap_anchored(
 
 
 def candle_patterns(ohlc: DataFrame) -> DataFrame:
-    """Single/two-candle pattern flags (r11-born) as pure codegen
+    """Single/two-candle pattern flags as pure codegen
     comparisons + one LAG (zero Python):
 
     - ``doji``: body ≤ 10% of the high-low range (open ≈ close);

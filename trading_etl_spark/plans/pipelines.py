@@ -20,18 +20,19 @@ Warehouse layout (parquet, UTC):
 
 Scale notes: partition columns mirror the reference's table-per-(pair, tf)
 sharding (SURVEY.md §1.1) so per-(pair, tf) reads prune to one directory;
-appends prune the anti-join's existing side by the incoming time range
-(io.py). Dims are 6-row broadcasts.
+appends prune the anti-join's existing side to the incoming time range
+and partition values (io.py). Dims are 6-row broadcasts.
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
-
-import os
-
 from pyspark.sql import functions as F
 
+from .. import fs
 from ..config import DEFAULT_INDICATOR_PERIODS
 from ..io import first_wins_append
 from ..operators import indicators, ohlc, signals
@@ -81,40 +82,43 @@ LOOKBACK_PERIODS = 4  # warm-up window = 4×period buckets (reference uses 2×:
 
 
 def _candles_after_cursor(
-    candles: DataFrame, fact: DataFrame, period: int
+    candles: DataFrame, fact: DataFrame, periods: list[int]
 ) -> DataFrame:
-    """W2: prune the candle input to each group's new rows plus a
-    ``LOOKBACK_PERIODS × period``-ROW warm-up before the MAX(time) cursor —
-    row-based like the reference (``OFFSET 2×period ROWS``,
-    transform_services.py:161-175), because candle streams have gaps and a
-    time-based lookback can under-fill the warm-up window.
+    """W2: the candles a refresh of ``fact`` needs, marked per period.
 
-    new-row count per group is a windowed conditional sum; keep rank ≤
-    new_count + lookback_rows ranked by time desc. Groups with no cursor
-    (first run) keep full history. At 100 TB a generous coarse time filter
-    (partition pruning) precedes this ranking pass.
+    One aggregate takes every period's MAX(time) cursor per (pair, tf), and
+    one ``row_number`` ranks each series by time descending. Period ``p``
+    keeps the rows ranked ≤ ``n_new_p + LOOKBACK_PERIODS × p``, where
+    ``n_new_p`` counts the rows after ``p``'s cursor: its new rows plus a
+    warm-up of ``LOOKBACK_PERIODS × p`` rows, a suffix of the series. A
+    group with no cursor for ``p`` (first run) keeps its whole history.
+    The lookback is counted in rows, like the reference (``OFFSET 2×period
+    ROWS``, transform_services.py:161-175): candle streams have gaps, so a
+    time-based lookback, or a time prefilter ahead of the ranking, could
+    under-fill the warm-up window. Each period's rule is one boolean
+    :func:`indicators.keep_col` column; rows no period keeps are dropped.
     """
     cursors = (
-        fact.filter(F.col("period") == period)
-        .groupBy("currency_pair_code", "timeframe_code")
-        .agg(F.max("time").alias("_max_time"))
+        fact.groupBy(*indicators.GROUP_KEYS)
+        .pivot("period", periods)
+        .agg(F.max("time"))
+        .select(*indicators.GROUP_KEYS, *[F.col(str(p)).alias(f"_cursor_{p}") for p in periods])
     )
-    grp = Window.partitionBy("currency_pair_code", "timeframe_code")
-    rank_desc = F.row_number().over(grp.orderBy(F.desc("time")))
-    n_new = F.sum(
-        F.when(F.col("time") > F.col("_max_time"), 1).otherwise(0)
-    ).over(grp)
+    by_time = Window.partitionBy(*indicators.GROUP_KEYS).orderBy(F.desc("time"))
+    series = by_time.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    keeps = []
+    for p in periods:
+        cursor = F.col(f"_cursor_{p}")
+        n_new = F.sum(F.when(F.col("time") > cursor, 1).otherwise(0)).over(series)
+        keeps.append(
+            (cursor.isNull() | (F.col("_rank") <= n_new + LOOKBACK_PERIODS * p))
+            .alias(indicators.keep_col(p))
+        )
     return (
-        candles.join(
-            F.broadcast(cursors), ["currency_pair_code", "timeframe_code"], "left"
-        )
-        .withColumn("_rank", rank_desc)
-        .withColumn("_n_new", n_new)
-        .filter(
-            F.col("_max_time").isNull()
-            | (F.col("_rank") <= F.col("_n_new") + LOOKBACK_PERIODS * period)
-        )
-        .drop("_max_time", "_rank", "_n_new")
+        candles.join(F.broadcast(cursors), indicators.GROUP_KEYS, "left")
+        .withColumn("_rank", F.row_number().over(by_time))
+        .select(*candles.columns, *keeps)
+        .filter(reduce(operator.or_, [F.col(indicators.keep_col(p)) for p in periods]))
     )
 
 
@@ -125,8 +129,9 @@ def indicator_pipeline(
     calc_version: str = "0",
     incremental: bool = True,
 ) -> dict[str, int]:
-    """SMA/EMA/RSI facts over every (pair, timeframe, period) in one set-based
-    pass each (transform.py:79-121 without the nested Python loops).
+    """SMA/EMA/RSI facts over every (pair, timeframe, period): one relation
+    and one append per fact table (transform.py:79-121 without the nested
+    Python loops).
 
     With ``incremental`` and an existing fact table, each (pair, tf, period)
     group recomputes only from its W2 cursor-minus-lookback onward; the W1
@@ -136,22 +141,18 @@ def indicator_pipeline(
     periods = periods or DEFAULT_INDICATOR_PERIODS
     candles = spark.read.parquet(f"{warehouse}/ohlc")
     out: dict[str, int] = {}
-    for name, fn in (("sma", indicators.sma), ("ema", indicators.ema), ("rsi", indicators.rsi)):
+    for name, kernel in (
+        ("sma", indicators.sma_periods),
+        ("ema", indicators.ema_periods),
+        ("rsi", indicators.rsi_periods),
+    ):
         path = f"{warehouse}/fact_{name}"
-        fact = spark.read.parquet(path) if os.path.exists(path) else None
-        parts = []
-        for p in periods:
-            cand_p = (
-                _candles_after_cursor(candles, fact, p)
-                if (incremental and fact is not None)
-                else candles
-            )
-            parts.append(fn(cand_p, p, calc_version))
-        df = parts[0]
-        for part in parts[1:]:
-            df = df.unionByName(part)
+        todo = candles
+        if incremental and fs.exists(spark, path):
+            todo = _candles_after_cursor(candles, spark.read.parquet(path), periods)
         out[f"fact_{name}_rows"] = first_wins_append(
-            spark, path, df, IND_KEYS, partition_by=["timeframe_code"]
+            spark, path, kernel(todo, periods, calc_version), IND_KEYS,
+            partition_by=["timeframe_code"],
         )
     return out
 
