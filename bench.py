@@ -93,66 +93,8 @@ HEADLINE = [
 WARMUP = "text_lang_id"
 
 # Repeats per query; per-query medians AND minima are reported (single-run
-# noise on this box is ±30-70%, and sustained load defeats median-of-3 —
-# see the r5 phantom-regression adjudication in VERDICT r5 #1).
+# noise on this box is ±30-70%, and sustained load defeats median-of-3).
 N_RUNS = 5
-
-# --- Page-cache canary (closes the r17 adjudication blind spot) ---------
-# The CPU codegen canary cannot see IO/page-cache/memory pressure: the r17
-# bench run started right after the scaling probe churned its 100x fixtures
-# read two git-identical lines +22%/+24% REAL under DROPPED cpu brackets
-# (tools/adjudicate.py docstring). This probe makes that pressure class
-# observable: a fixed canary file, warmed once at bench start, re-read and
-# timed at every burst. Memory pressure that evicts page cache evicts this
-# file too, and the FIRST re-read of the next burst pays the disk cold
-# read. Calibrated on this host: warm re-read 6-11 ms (max/min jitter
-# <= 2x), cold read after eviction 0.26 s — a 43x step, so the
-# adjudicator's 3x-relative + 0.05 s-absolute excusal thresholds sit an
-# order of magnitude above jitter and an order below the signal.
-PAGECACHE_CANARY_MB = 64
-
-
-def _pagecache_read_sec(path: str) -> float:
-    """Time one full sequential unbuffered-layer read of the canary file.
-    Warm (cached) on this host: ~0.006-0.011 s for 64 MiB; cold: ~0.26 s."""
-    t0 = time.time()
-    with open(path, "rb", buffering=0) as f:
-        while f.read(8 << 20):
-            pass
-    return round(time.time() - t0, 4)
-
-
-def _evict_pagecache(path: str) -> bool:
-    """Drop THIS file's pages from the page cache (no system-wide effect).
-    Returns False where posix_fadvise is unavailable (non-POSIX)."""
-    if not hasattr(os, "posix_fadvise"):
-        return False
-    fd = os.open(path, os.O_RDONLY)
-    try:
-        os.posix_fadvise(fd, 0, 0, os.POSIX_FADV_DONTNEED)
-    finally:
-        os.close(fd)
-    return True
-
-
-def make_pagecache_canary(dirpath: str, mb: int = PAGECACHE_CANARY_MB):
-    """Create + fsync the canary file, then self-calibrate: evict our own
-    pages (posix_fadvise DONTNEED), time the cold read, time the warm
-    re-read. Returns (path, cold_sec, warm_sec); cold_sec is None when
-    eviction is unsupported. The calibration pair ships in host_canary so
-    every record carries its own sensitivity proof — if cold/warm is small
-    on some future host/filesystem, the io excusal rule is visibly weak
-    there rather than silently miscalibrated."""
-    path = os.path.join(dirpath, "pagecache_canary.bin")
-    blk = bytes(range(256)) * 4096  # 1 MiB
-    with open(path, "wb") as f:
-        for _ in range(mb):
-            f.write(blk)
-        f.flush()
-        os.fsync(f.fileno())  # dirty pages survive DONTNEED; flush first
-    cold = _pagecache_read_sec(path) if _evict_pagecache(path) else None
-    warm = _pagecache_read_sec(path)
-    return path, cold, warm
 
 
 def main() -> None:
@@ -163,15 +105,18 @@ def main() -> None:
     from trading_etl_spark.registry import build_queries
     from trading_etl_spark.session import get_spark
 
-    spark = get_spark("bench")
     queries = build_queries()
+    # a renamed query would otherwise drop its line from the record unseen
+    unknown = [k for k in [*HEADLINE, WARMUP] if k not in queries]
+    if unknown:
+        raise KeyError(f"bench names unregistered queries: {unknown}")
+    spark = get_spark("bench")
 
     # Warm the JVM/codegen/parquet-footer caches so timings reflect
     # steady-state query execution, not first-query startup. The warm-up
     # query is deliberately OUTSIDE the candle chain so the chain build is
     # measured, not hidden (ADVICE r1).
-    if WARMUP in queries:
-        queries[WARMUP](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    queries[WARMUP](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     # Warm the Python/Arrow worker pool too: the first pandas-UDF query would
     # otherwise pay worker fork + Arrow init — startup cost, not query cost.
@@ -203,81 +148,6 @@ def main() -> None:
         return round(time.time() - t0, 3)
 
     runs: dict[str, list[float]] = {}
-
-    # --- Burst-local host canary (VERDICT r15 task #2) -------------------
-    # The r15 adjudication gap: the driver's bench moved +16% across lines
-    # whose code did not change while the END-of-run canary read flat — a
-    # single canary placement cannot see load that arrives and leaves
-    # mid-run. Fix: sample the same fixed-work codegen probe (pure
-    # whole-stage-codegen JVM loop, no IO, no Python, no dependence on any
-    # operator under test) BETWEEN query bursts and record the series in
-    # BENCH_DETAIL. Each burst is 2 samples (~0.2 s quiet); labels follow
-    # the bench's block structure so a loaded burst localizes the noise to
-    # the exact lines it poisoned. Adjudication rule (mechanized in
-    # tools/adjudicate.py, also in PLANS.md): a line's move is
-    # attributable to host load iff A canary burst bracketing its block
-    # moved >=15% in the same direction, POSITION-WISE vs the
-    # same-labeled bursts of the prior round's record (the JVM matures
-    # over the run, so early bursts sit structurally above the end-of-run
-    # floor in every round — same-label comparison holds that constant).
-    # ANY-bracket by design: load arriving mid-block moves only the
-    # closing bracket, load draining mid-block only the opening one —
-    # requiring both would misread either case as an engine move
-    # (headline lines, whose mins interleave rounds, instead compare
-    # against the LEAST-moved round burst); a line that moves under
-    # flat brackets is real.
-    bench_t0 = time.time()
-    canary_bursts: list[dict] = []
-
-    # Page-cache canary file on the same filesystem the bench writes to
-    # (the warehouse dir). Self-calibrates at creation; see
-    # make_pagecache_canary / the r17 blind-spot note at the top.
-    _wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    os.makedirs(_wh, exist_ok=True)
-    pc_path, pc_cold, pc_warm = make_pagecache_canary(_wh)
-    import atexit
-
-    # the happy path removes the file after the end burst; this covers
-    # mid-bench exceptions/interrupts so a failed run cannot leak the
-    # 64 MiB canary into the warehouse dir
-    atexit.register(lambda: os.path.exists(pc_path) and os.remove(pc_path))
-
-    # warm the canary plan itself before the first timed burst: the first
-    # two samples of a cold canary pay Janino/JIT (measured 0.544/0.167 vs
-    # the 0.09 steady state), which would poison the pre_cold bracket and
-    # make every chain_cold adjudication read LOAD
-    for _ in range(2):
-        spark.range(200_000_000).groupBy().sum("id").collect()
-
-    def canary_burst(label: str, n: int = 2) -> list[float]:
-        samples = []
-        for _ in range(n):
-            t0 = time.time()
-            spark.range(200_000_000).groupBy().sum("id").collect()
-            samples.append(round(time.time() - t0, 3))
-        # Page-cache probe AFTER the cpu samples. The adjudication
-        # statistic is the FIRST read (io_first_sec): if memory pressure
-        # evicted the canary since the previous burst, only that read pays
-        # the disk (it re-warms the cache for the rest) — a min over the
-        # burst would hide exactly the signal we want. The later reads
-        # (io_rewarm_min_sec) are the re-warmed within-burst baseline:
-        # first >> rewarm = eviction since the prior burst; all elevated =
-        # ongoing IO contention at this bracket.
-        io_samples = [_pagecache_read_sec(pc_path) for _ in range(2)]
-        canary_bursts.append(
-            {
-                "at": label,
-                "t_rel_sec": round(time.time() - bench_t0, 1),
-                "samples": samples,
-                "min_sec": min(samples),
-                "io_samples": io_samples,
-                "io_first_sec": io_samples[0],
-                "io_rewarm_min_sec": min(io_samples[1:]),
-            }
-        )
-        return samples
-
-    canary_burst("pre_cold")
 
     # Cold lines: every cache the headline lines read warm keeps its build
     # cost measured. Each of the N_RUNS repeats clears the line's cache
@@ -322,23 +192,21 @@ def main() -> None:
     )
     cold_lines = [
         ("candle_chain_cold", trading_mod.CANDLE_KINDS,
-         lambda: scan(queries["ohlc_derived_multi_tf"](spark, sf_dir)),
-         "post_chain_cold"),
+         lambda: scan(queries["ohlc_derived_multi_tf"](spark, sf_dir))),
         ("candle_cache_cold", ("ticks", "ohlc_1h", "sma", "events_1h"),
-         relations_cold, "post_cache_cold"),
+         relations_cold),
         ("kmeans_train_cold", ("codebook",),
-         lambda: datapipe._trained_codebook(spark, sf_dir), "post_train_cold"),
+         lambda: datapipe._trained_codebook(spark, sf_dir)),
         ("ivf_index_build_cold", ("ivf_index",),
-         lambda: scan(datapipe._ivf_index(spark, sf_dir)), "post_index_cold"),
+         lambda: scan(datapipe._ivf_index(spark, sf_dir))),
         ("lsh_bands_build_cold", ("bands",),
-         lambda: text_mod._band_keys_cached(text_mod._shingles_cached(docs_rel)),
-         None),
+         lambda: text_mod._band_keys_cached(text_mod._shingles_cached(docs_rel))),
         ("exsub_positions_build_cold", ("positions",),
-         lambda: text_mod._positions_cached(docs_rel, text_mod.EXSUB_K), None),
+         lambda: text_mod._positions_cached(docs_rel, text_mod.EXSUB_K)),
         ("bloom_build_cold", ("bloom",),
-         lambda: text_mod._bloom_cached(test_rel), "post_text_index_cold"),
+         lambda: text_mod._bloom_cached(test_rel)),
     ]
-    for line, kinds, build, burst in cold_lines:
+    for line, kinds, build in cold_lines:
         samples: list[float] = []
         for _ in range(N_RUNS):
             cache.clear(spark, *kinds)
@@ -346,8 +214,6 @@ def main() -> None:
             build()
             samples.append(round(time.time() - t0, 3))
         runs[line] = samples
-        if burst:
-            canary_burst(burst)
 
     # Round-interleaved headline measurement (VERDICT r6 task #7): the
     # whole headline set runs once per round over the warm caches, and the
@@ -356,13 +222,9 @@ def main() -> None:
     # every query instead of all runs of a few. Round 1 additionally pays
     # the one-time SMA/signal cache materialization (the steady state the
     # per-query min then excludes, exactly as in prior rounds).
-    for rnd in range(N_RUNS):
+    for _ in range(N_RUNS):
         for name in HEADLINE:
-            fn = queries.get(name)
-            if fn is None:
-                continue
-            runs.setdefault(name, []).append(run_once(fn))
-        canary_burst(f"post_headline_round_{rnd + 1}")
+            runs.setdefault(name, []).append(run_once(queries[name]))
 
     # --- Partition-pruning proof lines (VERDICT r8 task #8b) -------------
     # The day-partitioned many-small-files events twin (the compaction
@@ -415,7 +277,6 @@ def main() -> None:
     for _ in range(N_RUNS):
         runs.setdefault("events_scan_full", []).append(run_once(_scan_full))
         runs.setdefault("events_scan_pruned_3d", []).append(run_once(_scan_pruned))
-    canary_burst("post_pruning_lines")
 
     # --- Skew-stress lines (VERDICT r8 task #8a) -------------------------
     # Hot-key join fixture: 95% of the big side carries ONE key; the small
@@ -459,7 +320,6 @@ def main() -> None:
     # join + per-orderkey agg then run with ZERO exchanges (asserted
     # below — the CI claim in test_bucketing, now timed) while the plain
     # parquet twin shuffles. Setup is one-time, not a timed line.
-    import re as _re
     import shutil as _shutil
 
     from trading_etl_spark.io import write_bucketed
@@ -502,7 +362,7 @@ def main() -> None:
         )
 
     n_exchanges = len(
-        _re.findall(
+        re.findall(
             "Exchange hashpartitioning",
             _join_bucketed(spark, sf_dir)._jdf.queryExecution().executedPlan().toString(),
         )
@@ -515,7 +375,6 @@ def main() -> None:
     for _ in range(N_RUNS):
         runs.setdefault("join_orderkey_bucketed", []).append(run_once(_join_bucketed))
         runs.setdefault("join_orderkey_shuffled", []).append(run_once(_join_shuffled))
-    canary_burst("post_bucket_lines")
 
     prev_bjt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -527,74 +386,10 @@ def main() -> None:
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bjt)
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    canary_burst("post_skew_lines")
-
-    # --- Host-noise canary (VERDICT r11 task #3) -------------------------
-    # Two fixed-work probes with NO dependence on any operator under test,
-    # recorded so round-over-round line drift can be attributed: if the
-    # canaries move with the query mins, the HOST slowed down (ambient
-    # load / shared infra), not the engine. cpu = pure whole-stage-codegen
-    # JVM loop (no IO, no Python); fs = os-level listing of the ~2000-file
-    # pruning fixture (the metadata path the small-file scan lines pay).
-    # Detail-only — the driver-parsed stdout line must not grow.
-    import glob as _glob
-
-    # the end burst IS the probe — one helper, one workload definition
-    # (r16 self-review: a hand-rolled copy here would quietly diverge from
-    # canary_burst and break the cross-burst min comparison); 5 samples
-    # keep cpu_codegen_runs series-comparable with r11..r15
-    cpu_canary = canary_burst("end", n=5)
-    fs_canary = []
-    for _ in range(5):
-        t0 = time.time()
-        n_listed = len(_glob.glob(f"{fixture}/dt=*/*.parquet"))
-        fs_canary.append(round(time.time() - t0, 4))
-    host_canary = {
-        # min of the END-of-run burst — ADVICE r16: the r16 record briefly
-        # redefined this field as the min over ALL bursts (the run-wide
-        # quietest, typically an earlier burst), silently breaking series
-        # comparability with the r11-r15 records; the r11-r15 semantics
-        # (min of the 5 end-of-run samples) are restored here and the
-        # run-wide floor moved to its own NEW key below. The r16 record's
-        # value for THIS key is the one semantic outlier in the series.
-        "cpu_codegen_min_sec": min(cpu_canary),
-        # min over EVERY sample in the run (bursts included) — the run's
-        # quietest moment; new key (r17) so the series above stays clean
-        "cpu_codegen_run_floor_sec": min(
-            min(b["samples"]) for b in canary_bursts
-        ),
-        # the 5 consecutive end-of-run samples, series-comparable r11..r15
-        "cpu_codegen_runs": cpu_canary,
-        # burst-local series (VERDICT r15 task #2): one burst before the
-        # cold block, one after each cold line's block, one after every
-        # headline round, one after each proof-line block, one at end.
-        # Adjudicate a line move as HOST LOAD iff A burst bracketing
-        # its block moved >=15% in the same direction vs the same-labeled
-        # bursts of the prior round (any-bracket — mid-block load moves
-        # only one bracket; tools/adjudicate.py documents the full rule);
-        # flat brackets = the move is real engine behavior.
-        "cpu_codegen_bursts": canary_bursts,
-        "fs_list_min_sec": min(fs_canary),
-        "fs_list_runs": fs_canary,
-        "fs_files_listed": n_listed,
-        # page-cache canary self-calibration (r17 blind-spot closure):
-        # cold = read after fadvise-evicting our own file, warm = cached
-        # re-read. The io_first_sec series in the bursts above is
-        # meaningful evidence of pressure only while cold >> warm — ship
-        # both so each record proves its own sensitivity.
-        "pagecache_file_mb": PAGECACHE_CANARY_MB,
-        "pagecache_calib_cold_sec": pc_cold,
-        "pagecache_calib_warm_sec": pc_warm,
-    }
-    try:
-        os.remove(pc_path)
-    except OSError:
-        pass
 
     spark.stop()
     headline_json, detail = summarize(runs, sf)
     detail["partition_pruning"] = pruning_files
-    detail["host_canary"] = host_canary
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
@@ -615,10 +410,6 @@ DETAIL_REQUIRED_KEYS = (
     "queries_runs",
     "partition_pruning",
     "scaling",
-    # r16 (VERDICT r15 task #2): the burst-local host canary is the
-    # round-over-round load-adjudication evidence — a refactor that drops
-    # it silently re-opens the r15 "+16% under a flat canary" gap
-    "host_canary",
 )
 
 
@@ -670,7 +461,7 @@ def summarize(runs: dict[str, list[float]], sf: float | None) -> tuple[str, dict
             "of all runs of a few; cold lines consecutive (they "
             "clear caches); queries=median-of-N, queries_min="
             "min-of-N; min is the load-noise-robust statistic "
-            "(external load only adds time) — adjudicate "
+            "(external load only adds time) — compare "
             "regressions on min, not median"
         ),
     }

@@ -25,6 +25,9 @@ def _fake_runs():
         "candle_cache_cold",
         "kmeans_train_cold",
         "ivf_index_build_cold",
+        "lsh_bands_build_cold",
+        "exsub_positions_build_cold",
+        "bloom_build_cold",
         "events_scan_full",
         "events_scan_pruned_3d",
         "skew_join_agg_naive",
@@ -80,12 +83,6 @@ def test_detail_payload_carries_required_proof_blocks(tmp_path):
 
     _, detail = bench.summarize(_fake_runs(), sf=0.1)
     detail["partition_pruning"] = {"full": 10, "pruned": 2}
-    detail["host_canary"] = {
-        "cpu_codegen_min_sec": 0.1,
-        "cpu_codegen_bursts": [
-            {"at": "pre_cold", "t_rel_sec": 0.0, "samples": [0.1], "min_sec": 0.1}
-        ],
-    }
     written = bench.write_detail(detail, path)
     assert written["scaling"] == scaling  # carried forward, stamp intact
     on_disk = json.load(open(path))
@@ -111,67 +108,9 @@ def test_committed_detail_file_has_required_proof_blocks():
         assert key in on_disk, f"committed BENCH_DETAIL.json lost {key}"
     # the scaling block must carry its provenance stamp (ADVICE r10)
     assert "measured_commit" in on_disk["scaling"]
-    # the canary must be BURST-LOCAL (VERDICT r15 task #2): a series of
-    # labeled samples spanning the run, bracketed by pre_cold and end, so
-    # a mid-run load burst is attributable to the lines it poisoned
-    bursts = on_disk["host_canary"]["cpu_codegen_bursts"]
-    labels = [b["at"] for b in bursts]
-    assert labels[0] == "pre_cold" and labels[-1] == "end"
-    assert len(labels) >= 8, "burst series too sparse to localize load"
-    # and PAGE-CACHE instrumented (r17 blind-spot closure): every burst
-    # carries the eviction-sensitive first-read statistic, and the record
-    # ships its own cold/warm sensitivity calibration — without these the
-    # io excusal rule in tools/adjudicate.py silently cannot run
-    assert all("io_first_sec" in b for b in bursts), (
-        "committed record lost the page-cache canary series"
-    )
-    calib_cold = on_disk["host_canary"]["pagecache_calib_cold_sec"]
-    calib_warm = on_disk["host_canary"]["pagecache_calib_warm_sec"]
-    assert calib_cold is None or calib_cold / calib_warm >= 3.0, (
-        "committed record's own calibration shows the io canary cannot "
-        "separate eviction from warm jitter on the bench host"
-    )
 
 
-def test_pagecache_canary_probe_separates_cold_from_warm(tmp_path):
-    """r17 blind-spot closure: the io excusal rule in tools/adjudicate.py
-    is meaningful only while an evicted (cold) canary read is far above a
-    cached (warm) one. make_pagecache_canary self-calibrates exactly that
-    pair; on this host the 64 MiB file measures 43x. Assert the separation
-    on a smaller file with a generous margin — if a future host/filesystem
-    collapses it (e.g. DONTNEED unsupported), this fails here instead of
-    the adjudicator silently losing its io signal."""
-    import pytest as _pytest
+def test_bench_names_only_registered_queries():
+    from trading_etl_spark.registry import build_queries
 
-    def _fs_type(path):
-        # longest-prefix mount-point match from /proc/mounts
-        best, fs = "", None
-        try:
-            for line in open("/proc/mounts"):
-                parts = line.split()
-                if len(parts) >= 3 and path.startswith(parts[1]) and len(
-                    parts[1]
-                ) > len(best):
-                    best, fs = parts[1], parts[2]
-        except OSError:
-            pass
-        return fs
-
-    if _fs_type(str(tmp_path)) in ("tmpfs", "ramfs"):
-        # memory-backed fs: the pages ARE the file, DONTNEED evicts
-        # nothing, cold ~= warm by construction. The bench-side canary
-        # fails SAFE there (io never clears the 0.05 s absolute floor,
-        # so it can never excuse a move) and the committed-record
-        # calibration assert above makes the neutering visible.
-        _pytest.skip("tmp_path is memory-backed — fadvise cannot evict")
-
-    path, cold, warm = bench.make_pagecache_canary(str(tmp_path), mb=16)
-    assert warm > 0
-    if cold is None:
-        _pytest.skip("posix_fadvise unavailable — io canary self-disables")
-    # well above the adjudicator's 3x excusal threshold, well below the
-    # measured 40x+, so the assertion is robust to fs/host variation
-    assert cold / warm >= 3.0, (
-        f"eviction cold read {cold:.4f}s is not separable from warm "
-        f"{warm:.4f}s — the io excusal rule would be miscalibrated here"
-    )
+    assert set(bench.HEADLINE) | {bench.WARMUP} <= set(build_queries())

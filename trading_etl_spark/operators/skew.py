@@ -16,8 +16,8 @@ Both are exact — results identical to the unsalted plan (tested) — and both
 use deterministic salts (crc32, not rand()) so retried tasks produce the
 same rows, which Spark's speculative execution / task-retry model requires.
 
-Measured adjudication (r9, local[32], 95%-hot-key fixtures — the bench's
-skew_join_agg_* lines keep it measured every round):
+Measured on local[32] with 95%-hot-key fixtures (bench.py's
+skew_join_agg_* lines keep it measured):
 
 - ``salted_join`` wins ~2-4x over the naive shuffle join exactly in its
   documented niche: the small side too wide to broadcast AND a downstream

@@ -1256,19 +1256,6 @@ MINHASH_SEEDS = 12
 MINHASH_BANDS = 6  # 6 bands × 2 rows
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """12 md5-based minhashes per doc (min over shingles of md5(seed:shingle)
-    as a hex string — engine-independent).
-
-    Deliberately the exploded groupBy form, NOT ``array_min(transform(...))``
-    over the shingle array: the min-agg evaluates its md5 inside whole-stage
-    codegen with map-side partial combine, while the array form runs 12
-    interpreted lambdas per shingle — measured 2× SLOWER at sf0.1 despite
-    saving the shuffle. The shuffle input is partial-aggregated to one row
-    per doc before the exchange, so it's cheap at any scale."""
-    return _minhash_from_shingles(shingles(docs))
-
-
 # Carter-Wegman prime for the (h1 + s·h2) mod P seed family: 2^61 − 1.
 # h1 is 60-bit, h2 32-bit, s ≤ MINHASH_SEEDS−1 → h1 + s·h2 < 2^61, no
 # BIGINT overflow in either engine.

@@ -1981,9 +1981,7 @@ def _apply_lev_lb_filters(df: DataFrame, a: str = "name_a",
     candidate-pair relation — single source of truth shared by the
     shipped pipeline (:func:`_fuzzy_match_pairs`) and the closed-vocab
     scaling probe (tools/scaling_probe.py), so the probe's pinned ratios
-    can never silently decouple from the shipped filters (ADVICE r16:
-    the probe hand-copied the expressions — the same divergence class the
-    r16 self-review fixed for the bench canary).
+    can never silently decouple from the shipped filters.
 
     All three bounds are sound (can NEVER drop a true ≤d pair), so the
     operator OUTPUT is provably unchanged by this chain; only the

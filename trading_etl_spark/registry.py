@@ -15,126 +15,23 @@ from .queries import analytics, datapipe, streamgate, trading
 
 _DOMAINS = [trading, datapipe, analytics, streamgate]
 
-# The driver records correctness for the FIRST 50 registered queries only
-# (CORRECTNESS_r01 covered 50/55 in registration order). Queries listed here
-# are redundant siblings of an in-window query — same operator family,
-# cheaper/scale-path twin stays in the window — so they register LAST.
-# tests/test_registry.py asserts the window invariants.
+# The driver checks correctness for the first 50 registered queries only.
+# Keys in _DEFER register last, after every other key; each is a sibling of
+# a key that stays in the window (same operator family), named by the
+# "twin: <key>" in its comment. tests/test_registry.py asserts both rules.
 _DEFER: list[str] = [
-    # r14 rotation wave 8 (VERDICT r13 task #1) moved the 16 oldest-evidence
-    # queries INTO the window, computed oldest-first from CORRECTNESS_r*.json
-    # at r13 (see RECERT_QUEUE below for the mechanism): led by
-    # embedding_knn_ivf_multiprobe (last driver-green round 2 — the oldest
-    # evidence in the registry, omitted from the r13-written queue) and
-    # event_props_json_agg (r3), then text_simhash +
-    # top_customers_by_open_value (r3) and 12 of the 14 r4-evidence rows
-    # (tick_sessions and train_test_split, alphabetically last of the r4
-    # block, head the wave-9 queue). See the wave-8 block at the END of
-    # this list for the 16 freshly-r13-certified rows that made room.
-    # r5 rotation (VERDICT r4 task #1): the 13 never-driver-checked queries
-    # (funnel, cohort, histogram, SCD2, forward as-of, weighted sampling,
-    # bigram PMI, RAG chunking, two-phase CC, sliding windows, stream-stream
-    # join, HLL/GK sketches) plus the new streaming_firstwins_append moved
-    # INTO the window; these 14 redundant siblings — every one with r1-r4
-    # driver-green rows AND a same-family twin still in the window — moved
-    # out to make room. All stay oracle-verified by tools/check.py.
-    # (r15 rotation wave 9 moved the 13 r5/r6-era rows that opened this
-    # list — tick_sessions, train_test_split, candle_gap_fill,
-    # event_asof_next_tick, text_bigram_pmi, dim_scd2_history,
-    # user_funnel_conversion, sample_weighted_quality, text_chunk_rag,
-    # streaming_sliding_stats, text_pii_redact, urgent_not_finished_setops,
-    # ema_14_1h — back INTO the window; see the wave-9 block at the END.)
-    # r7 rotation wave 1 (VERDICT r6 task #1): 12 of the 22 r6-born queries
-    # (macd, bollinger, semantic dedup, bloom decontaminate, streaming
-    # sessions/sma-cross/scd2, dsir, scd2 merge, rrf, matryoshka, profile)
-    # moved INTO the window for driver certification; these 12 rotated out
-    # to make room — every one carries an r6 (most also earlier) driver-green
-    # row and a same-family twin still in the window. All stay
-    # oracle-verified by tools/check.py.
-    # r8 rotation wave 2 (VERDICT r7 task #3): 12 of the 19 uncertified
-    # r6/r7-born queries (operator-family firsts prioritized) plus
-    # approx_value_quantiles (task #4: the GK-sketch quantile family regains
-    # its in-window representative — its r7 deferral wrongly claimed
-    # orders_table_profile computes percentiles) moved INTO the window; these
-    # 13 rotated out to make room — every one carries an r7 (most also
-    # earlier) driver-green row and a same-family twin still in the window.
-    # All stay oracle-verified by tools/check.py.
-    # (r17 rotation wave 11 moved the five r7-evidence rows that opened
-    # this block — streaming_tick_sessions, streaming_sma_cross,
-    # tpch_pricing_summary, streaming_view_click_join, text_lang_id —
-    # back INTO the window at the MAX_STALENESS_ROUNDS bound; see the
-    # wave-11 block at the END of this list.)
-    # r9 rotation wave 3 (VERDICT r8 task #1): ALL 15 never-driver-certified
-    # queries (7 r6/r7-born wave-3 carryovers + 8 r8-born) moved INTO the
-    # window — this empties the certification backlog. These 15 r8-green
-    # queries rotated out to make room; every one keeps a same-family twin
-    # in the window (event_asof_tick_plain / corpus_strip_dup_spans run or
-    # apply the SAME oracle/operator as their rotated-out twins).
-    # (r17 rotation wave 11 moved the eleven oldest r8-evidence rows of
-    # this block — event_asof_tick, backtest_pnl, events_value_histogram,
-    # dedup_minhash_lsh, dedup_exact_substring, bpe_train_merges,
-    # priority_shipmonth_q12, local_supplier_volume, candle_rollup,
-    # atr_14_1h, dupgraph_pagerank — back INTO the window; see the
-    # wave-11 block at the END of this list.)
-    # (r18 rotation wave 12 moved the four r8-evidence rows that opened
-    # this block — ticks_freshness_sla, rsi_14_1h, sma_golden_cross,
-    # stochastic_14_3_1h — back INTO the window; see the wave-12 block at
-    # the END of this list.)
-    # r10 rotation wave 4 (VERDICT r9 task #1): the 10 never-driver-certified
-    # queries (9 r9-born + media_resize) moved INTO the window — for the first
-    # time NO registered query lacks a driver-green row in its history. These
-    # 10 r9-driver-green queries rotated out to make room; every one keeps a
-    # same-family twin in the window (events_compaction_plan /
-    # decontaminate_fuzzy_lsh / dupgraph_triangle_stats / donchian_20_1h /
-    # ichimoku_9_26_52_1h / customer_rfm_segments / media_dhash are the
-    # incoming twins; idempotent_append_fresh runs streaming_firstwins_append's
-    # EXACT oracle). All stay oracle-verified by tools/check.py.
-    # (r18 rotation wave 12 moved the ten r9-evidence rows that stood here —
-    # media_extract_meta, events_retention_plan, events_zorder_stats,
-    # decontaminate_bloom_prefilter, dedup_keeper_centrality,
-    # volatility_20_1h, pair_rolling_correlation, events_value_winsorize,
-    # embedding_knn_ivfadc, streaming_firstwins_append — back INTO the
-    # window; see the wave-12 block at the END of this list.)
-    # r11 rotation wave 5 (VERDICT r10 task #1): ALL 14 never-driver-certified
-    # r10-born queries moved INTO the window — the certification backlog is
-    # empty again. These 14 r10-driver-green queries rotated out to make room;
-    # every one keeps a same-family twin in the window (the incoming r10-born
-    # queries ARE the twins — williams_r_14_1h / cci_20_1h / late_shipment_q4 /
-    # promo_revenue_q14 / revenue_concentration_q11 / events_orphan_files /
-    # embedding_knn_filtered / text_ngram_diversity / dedup_minhash_containment /
-    # adx_14_1h / top_supplier_q15 / idle_rich_customers_q22; media_dhash stays
-    # in window for the media kernels). All stay oracle-verified by
-    # tools/check.py.
     "donchian_20_1h",         # min/max channel windows; twin: sma_14_1h
     "ichimoku_9_26_52_1h",    # shifted midpoint windows; twin: cci_20_1h [twin: sma_14_1h]
     "shipping_priority_q3",   # TPC-H star join; twin: late_shipment_q4 [twin: market_share_q8]
     "disjunctive_revenue_q19",  # disjunctive predicate join; twin: promo_revenue_q14 [twin: market_share_q8]
-    # (r18 rotation wave 12 moved customer_rfm_segments — the oldest r10
-    # row of this block — back INTO the window; wave-12 block at the END.)
     "events_compaction_plan",  # small-file maintenance dry-run; twin: events_orphan_files
     "embedding_knn_ivf_kmeans",  # trained-cell IVF serving; twin: embedding_knn_filtered [twin: embedding_ann_recall_eval]
     "text_quality_score",     # zero-shuffle text gate; twin: text_ngram_diversity [twin: text_ccnet_ppl_buckets]
     "dedup_lsh_eval",         # banded-candidate evaluation; twin: dedup_minhash_containment [twin: streaming_ingest_dedup_gate]
     "holt_forecast_1h",       # grouped Arrow kernel; MACD keeps the kernel family [twin: macd_12_26_9_1h]
     "returned_item_q10",      # TPC-H star agg; twin: top_supplier_q15 [twin: large_volume_q18]
-    # (r18 rotation wave 12 moved customers_no_open_orders_anti back INTO
-    # the window; wave-12 block at the END of this list.)
     "media_resize",           # BMP pixel kernel; twin: media_frame_sample
     "media_audio_features",   # WAV sample kernel; twin: media_frame_sample
-    # r12 rotation wave 6 (VERDICT r11 task #2): ALL 15 never-driver-certified
-    # r11-born queries moved INTO the window (backlog emptied again), plus the
-    # newly registered streaming_ingest_dedup_gate (streaming/docs.py's ingest
-    # gate — the one registration this round, per the steady-state posture
-    # below: it certifies a NEW operator family, the streaming incremental-
-    # dedup ingest path). These 16 r11-driver-green queries rotated out to
-    # make room; every one keeps a same-family twin in the window — for most,
-    # the incoming r11-born queries ARE the twins (keltner/trix keep the
-    # grouped Arrow-kernel family, obv/vwap the cumulative-window family,
-    # Q7/Q8/Q9/Q13/Q17/Q18/Q21 the TPC-H star/anti/threshold families,
-    # hard-negatives the embedding-search family, mixture-plan the sampling
-    # family, the incremental probe + ingest gate the banded-MinHash family).
-    # williams_r_14_1h deliberately STAYS in-window for its post--0.0-fix
-    # re-certification (VERDICT r11 task #1 done-criterion).
     "adx_14_1h",              # grouped Wilder kernel; MACD keeps the kernel family [twin: macd_12_26_9_1h]
     "backtest_max_drawdown",  # cumulative window; twins: vwap_daily_1h, vwap_daily_1h
     "cci_20_1h",              # keyed native-window; twin: sma_14_1h
@@ -151,15 +48,6 @@ _DEFER: list[str] = [
     "text_ngram_diversity",   # zero-shuffle text gate; twins: text_ccnet_ppl_buckets, text_unigram_logprob
     "orders_table_profile",   # conditional-agg profile; twin: candle_returns_quartile (quantile/profile family)
     "candle_unpivot",         # candle reshaping; the 1m agg keeps the candle family [twin: ohlc_1m]
-    # r13 rotation wave 7 (VERDICT r12 task #2): the 16 queries whose ONLY
-    # driver-green evidence was round 1 moved back INTO the window (first
-    # driver contact in eleven rounds, and first since the canon hardening
-    # closed classes 3-5). These 16 freshly-r12-certified rows rotated out
-    # to make room; every one keeps a same-family twin in the window — for
-    # several, the incoming r1-only queries ARE the twins.
-    # vwap_daily_1h deliberately STAYS in-window for its post-fixed-point
-    # re-certification (VERDICT r12 task #1 done-criterion), exactly as
-    # williams_r_14_1h did in wave 6.
     "williams_r_14_1h",       # keyed native-window; twin: sma_14_1h (incoming wave 8)
     "keltner_20_10_1h",       # grouped Arrow kernel; MACD keeps the kernel family [twin: macd_12_26_9_1h]
     "obv_1h",                 # cumulative window; twins: vwap_daily_1h (staying), backtest_equity_curve + backtest_trades (incoming)
@@ -176,27 +64,13 @@ _DEFER: list[str] = [
     "bpe_encode_fertility",   # token stats; twins: text_token_count (incoming), text_unigram_logprob
     "text_tfidf_top_terms",   # explode→count→rank; twins: text_top_terms_per_lang (incoming), bm25_search
     "media_dhash",            # BMP/WAV kernels; twin: media_frame_sample (in-window mapInPandas media row)
-    # r14 rotation wave 8 (VERDICT r13 task #1): the 16 oldest-evidence
-    # queries (r2-r4 driver rows; see the block at the TOP of this list)
-    # moved INTO the window; these 16 freshly-r13-certified rows rotated
-    # out, each with a same-family twin staying in the window — for most,
-    # the incoming oldest-evidence queries ARE the twins (ohlc_derived_
-    # multi_tf keeps the candle re-agg family, sma_14_1h the keyed
-    # native-window SMA family, candle_returns_quartile the exact-quantile
-    # family, text_simhash the fingerprint family, event_props_json_agg
-    # the events-agg family, embedding_knn_ivf_multiprobe the IVF family).
-    # media_frame_sample, watermark_max_time and vwap_daily_1h deliberately
-    # STAY in-window: each is its operator family's only in-window
-    # representative (media kernels, MAX-watermark cursor, cumulative
-    # window for the deferred backtest/obv rows).
     "avg_close_pivot",        # pivot col-name templating; candle family [twin: ohlc_1m]
     "backtest_equity_curve",  # cumulative window; twin: vwap_daily_1h (staying cumulative-window rep)
     "backtest_trades",        # LAG signal chain; twin: vwap_daily_1h (staying cumulative-window rep)
     "candle_cube",            # grouping-set cube; the 1m agg keeps the candle family [twin: ohlc_1m]
     "dedup_ngram_jaccard",    # banded n-gram Jaccard; twin: streaming_ingest_dedup_gate (same banded probe)
     "embedding_knn_bruteforce",  # exact top-k baseline; twin: embedding_ann_recall_eval (runs brute force as its truth side)
-    "embedding_knn_ivf",      # IVF top-k; twin: embedding_ann_recall_eval (staying IVF-family evaluator; repointed
-                              # at r17 when embedding_knn_ivf_multiprobe rotated out in wave 11)
+    "embedding_knn_ivf",      # IVF top-k; twin: embedding_ann_recall_eval (IVF-family evaluator)
     "embedding_near_dup",     # cosine near-dup; twin: embedding_ann_recall_eval (ANN family)
     "embedding_near_dup_lsh",  # LSH-bucketed near-dup; twin: embedding_ann_recall_eval (ANN family)
     "event_type_copairs",     # events co-occurrence agg; twin: event_props_json_agg (incoming events-agg family)
@@ -206,56 +80,28 @@ _DEFER: list[str] = [
     "text_fingerprint",       # rolling-hash fingerprint; twin: text_simhash (incoming fingerprint family)
     "text_token_count",       # token counting; twin: text_unigram_logprob (staying token-stats rep)
     "text_top_terms_per_lang",  # explode→count→rank; twin: bm25_search (staying retrieval/rank rep)
-    # r14 wave 8b (same round, after wave 8): six r14-born queries enter the
-    # window for first certification — part_name_fuzzy_match (NEW
-    # entity-resolution family), embedding_cluster_silhouette (NEW
-    # cluster-quality eval), and the four TPC-H completions
-    # (forecast_revenue_q6 / min_cost_supplier_q2 / parts_supplier_q16 /
-    # excess_share_supplier_q20 — the documented one-time exception to the
-    # birth freeze closing the suite at 22/22). These six
-    # freshly-r13-certified rows rotate out to make room, each with a
-    # same-family twin still in the window.
     "tick_zscore_outliers",   # rolling mean/std outlier gate; twin: sma_14_1h (staying keyed-window stats rep)
     "approx_distinct_users",  # HLL distinct; Q16 keeps exact count-distinct in window [twin: parts_supplier_q16]
     "top_customers_page2_offset",  # sort+offset paging; Q18 keeps the sorted top-N family [twin: large_volume_q18]
     "latest_tick_per_pair",   # top-1-by-time lookup; twin: watermark_max_time (staying latest/cursor rep)
     "dim_broadcast_enrich",   # broadcast dim join; twin: market_share_q8 (staying broadcast star-join rep)
     "ticks_dedup_second",     # 1-second first-wins dedup; twin: dedup_exact (staying exact-dedup rep)
-    # r15 rotation wave 9 (VERDICT r14 task #2): the 16 oldest-evidence
-    # queries — the machine-checked RECERT_QUEUE computed at r14
-    # (tick_sessions + train_test_split at r4, the eleven r5 rows, the
-    # three r6 rows) — moved INTO the window; these 16 freshly-r14-
-    # certified rows rotated out, each with a same-family twin staying in
-    # the window (for most, the incoming oldest-evidence queries ARE the
-    # twins). Deliberate stays: part_name_fuzzy_match (post-blocking-
-    # hardening re-certification, the VERDICT r14 task #1 done-criterion),
-    # embedding_cluster_silhouette + min_cost_supplier_q2 (their oracle/
-    # expression changed this round — the williams_r/vwap post-fix
-    # precedent), and the family-only reps media_frame_sample,
-    # watermark_max_time, vwap_daily_1h, sma_14_1h, text_simhash.
     "ohlc_derived_multi_tf",  # A2 re-agg; the 1m agg it derives from keeps the family [twin: ohlc_1m]
     "trix_15_1h",             # triple-EMA cascade; MACD keeps the grouped-kernel family [twin: macd_12_26_9_1h]
     "event_asof_tick_plain",  # backward as-of; the nearest variant keeps the family [twin: event_asof_nearest_tick]
     "event_reaction_window",  # event-study window; as-of family [twin: event_asof_nearest_tick]
     "dedup_simhash",          # simhash near-dup; twin: dedup_exact (staying exact-dedup rep)
     "dedup_passages",         # passage banding; twin: streaming_ingest_dedup_gate (staying banded probe)
-    "dedup_connected_components",  # CC base; twin: dedup_cc_two_phase (staying CC rep)
+    "dedup_connected_components",  # large-star/small-star CC; twin: dedup_cc_two_phase (same query and oracle)
     "dupgraph_triangle_stats",  # dup-graph triangles; twin: dedup_cc_two_phase (staying graph rep)
     "text_repetition_filter",  # zero-shuffle text gate; twin: text_ccnet_ppl_buckets (staying gate rep)
     "corpus_pack_sequences",  # two-pass packing; twin: text_rolling_fingerprint (incoming slicing rep)
     "stratified_sample_by_lang",  # hash-bucket sampling; twin: corpus_dsir_resample (incoming sampling rep)
     "embedding_quantize_int8",  # int8 quantization; twin: embedding_pq_codes (incoming code producer)
     "embedding_label_centroids",  # label centroids; twin: embedding_cluster_silhouette (staying centroid computer)
-    "embedding_ivf_drift_report",  # IVF drift; twin: embedding_ann_recall_eval (staying IVF-family evaluator;
-                              # repointed at r17 when embedding_knn_ivf_multiprobe rotated out in wave 11)
+    "embedding_ivf_drift_report",  # IVF drift; twin: embedding_ann_recall_eval (IVF-family evaluator)
     "daily_active_users",     # exact DISTINCT agg; twin: parts_supplier_q16 (staying count-distinct)
     "top_customers_by_open_value",  # O1 sort; twin: large_volume_q18 (staying sorted top-N)
-    # r16 rotation wave 10 (VERDICT r15 task #1): the 16 RECERT_QUEUE rows
-    # written at r15 — the eight r6-evidence rows (which hit
-    # MAX_STALENESS_ROUNDS = 10 exactly at r16) plus the eight oldest r7
-    # rows — moved INTO the window; these 16 freshly-r15-certified rows
-    # rotated out, each with a same-family twin staying in the window —
-    # for most, the incoming oldest-evidence queries ARE the twins.
     "tick_sessions",          # time-gap sessions; twin: streaming_ohlc_1m (staying streaming window-agg rep)
     "train_test_split",       # hash-bucket split; twin: corpus_dsir_resample (incoming sampling rep)
     "candle_gap_fill",        # candle scaffold+fill; twin: ohlc_1m (incoming candle-agg rep)
@@ -272,15 +118,6 @@ _DEFER: list[str] = [
     "corpus_clean_pipeline",  # composed clean pipeline; twin: streaming_ingest_dedup_gate (staying banded-probe rep)
     "decontaminate_train_ngrams",  # exact n-gram decontam; twin: decontaminate_fuzzy_lsh (staying decontam rep)
     "embedding_knn_pq_adc",   # ADC scoring; twin: embedding_pq_codes (incoming, produces the codes ADC reads)
-    # r17 rotation wave 11 (VERDICT r16 task #1): the 16 RECERT_QUEUE rows
-    # written at r16 — the five r7-evidence rows (which hit
-    # MAX_STALENESS_ROUNDS = 10 exactly at r17) plus the eleven oldest r8
-    # rows — moved INTO the window; these 16 freshly-r16-certified rows
-    # rotated out, each with a same-family twin staying in the window —
-    # for several, the incoming oldest-evidence queries ARE the twins.
-    # Deliberate stay: part_name_fuzzy_match remains in-window for its
-    # post-positional-filter re-certification (the r15 oracle-change
-    # precedent).
     "ticks_parse_validate",   # S2 scalar parse/validate; every candle consumer runs the same
                               # source path — twin: ohlc_1m (staying candle-agg rep)
     "bollinger_20_2_1h",      # stddev-band windows; twin: sma_14_1h (staying keyed native-window rep)
@@ -293,23 +130,12 @@ _DEFER: list[str] = [
     "events_snapshot_diff",   # snapshot diff; twin: events_orphan_files (staying maintenance dry-run rep)
     "star_join_revenue",      # star join; twin: market_share_q8 (staying star-join rep)
     "returned_order_priority_semi",  # semi-join; twin: custdist_q13 (staying set-ops/anti rep)
-    "forecast_revenue_q6",    # lineitem conditional agg; twin: large_volume_q18 (staying TPC-H
-                              # agg rep — repointed at r18 when tpch_pricing_summary rotated out)
-    "min_cost_supplier_q2",   # min-cost correlated join; twin: market_share_q8 (staying star-join
-                              # rep — repointed at r18 when local_supplier_volume rotated out)
+    "forecast_revenue_q6",    # lineitem conditional agg; twin: large_volume_q18 (TPC-H agg rep)
+    "min_cost_supplier_q2",   # min-cost correlated join; twin: market_share_q8 (star-join rep)
     "excess_share_supplier_q20",  # supplier/part share; twin: parts_supplier_q16 (staying supplier-part rep)
     "streaming_dedup_exact",  # streaming watermark dedup; twin: streaming_ingest_dedup_gate (staying streaming-dedup rep)
     "streaming_ema_14_1h",    # stateful EMA recursion; twin: streaming_rsi_14_1h (staying stateful-recursion rep)
-    "corpus_strip_dup_spans",  # span application; twin: text_rolling_fingerprint (staying, same
-                              # positional shingle-hash kernel — repointed at r18 when
-                              # dedup_exact_substring rotated out)
-    # r18 rotation wave 12 (VERDICT r17 task #7): the 16 RECERT_QUEUE rows
-    # written at r17 — the four r8-evidence rows (which hit
-    # MAX_STALENESS_ROUNDS = 10 exactly at r18), the ten r9 rows and the
-    # two oldest r10 rows — moved INTO the window; these 16
-    # freshly-r17-certified rows rotated out, each with a same-family twin
-    # staying in the window — for several, the incoming oldest-evidence
-    # queries ARE the twins.
+    "corpus_strip_dup_spans",  # span application; twin: text_rolling_fingerprint (same positional shingle-hash kernel)
     "atr_14_1h",              # true-range window; twin: volatility_20_1h (incoming volatility-window rep)
     "backtest_pnl",           # signal-driven backtest; twin: sma_golden_cross (incoming — generates the signals this consumes)
     "bpe_train_merges",       # tokenizer-merge training; twin: text_unigram_logprob (staying corpus token-statistics rep)
@@ -328,79 +154,10 @@ _DEFER: list[str] = [
     "tpch_pricing_summary",   # lineitem scan-agg; twin: large_volume_q18 (staying TPC-H agg rep)
 ]
 
-# Steady-state window posture (VERDICT r11 task #7): with 174 registered
-# queries and a 50-row driver window, full re-certification latency is
-# ~3.5 rounds and rising with every birth. From r12 on, new query births are
-# FROZEN unless the query certifies a NEW operator family (a capability with
-# no driver-green representative, e.g. this round's streaming ingest gate);
-# otherwise rounds spend freed rotation slots re-certifying the OLDEST
-# driver-green rows (lowest max round in CORRECTNESS_r*.json history) so
-# certification evidence stays fresh across the whole registry instead of
-# accreting a long tail of r1-r4-only rows.
-#
-# r14 executed rotation wave 8: the 16 oldest-evidence rows (r2-r4; led by
-# embedding_knn_ivf_multiprobe, the registry's oldest at r2) are IN the
-# window; 16 freshly-r13-certified rows rotated out (see the wave-8 block
-# at the end of _DEFER).
-#
-# r14 births (wave 8b): part_name_fuzzy_match certifies the NEW
-# entity-resolution family (blocked edit-distance linkage — no prior
-# representative) and embedding_cluster_silhouette the NEW cluster-quality
-# eval; forecast_revenue_q6 / min_cost_supplier_q2 / parts_supplier_q16 /
-# excess_share_supplier_q20 are the four remaining TPC-H shapes — a
-# documented ONE-TIME exception to the birth freeze that closes the TPC-H
-# suite at 22/22 (a bounded, suite-completing batch certified in its birth
-# round, not open-ended drift). Registry: 180 queries, 130 deferred.
-#
-# r15 executed rotation wave 9 (VERDICT r14 task #2): the 16 RECERT_QUEUE
-# rows written at r14 (r4-r6 evidence, tick_sessions first) are IN the
-# window; 16 freshly-r14-certified rows rotated out (wave-9 block at the
-# end of _DEFER). No births this round — the birth freeze holds; the
-# freed slots all went to re-certification. Window-economics policy
-# (VERDICT r14 task #3) is recorded in PLANS.md (dated r15) and enforced
-# by tests/test_registry.py::test_registry_staleness_bounded: the driver
-# window is a fixed 50 rows (observed every round since r1 — not ours to
-# widen), so registry-wide freshness between driver contacts is
-# guaranteed by the per-round 5-leg local bit-exact sweep, and the
-# staleness alarm fails CI if any deferred query's newest driver-green
-# row ages past MAX_STALENESS_ROUNDS.
-#
-# r16 executed rotation wave 10 (VERDICT r15 task #1): the 16 RECERT_QUEUE
-# rows written at r15 — the eight r6-evidence rows, which reached
-# MAX_STALENESS_ROUNDS = 10 exactly this round, plus the eight oldest r7
-# rows — are IN the window; 16 freshly-r15-certified rows rotated out
-# (wave-10 block at the end of _DEFER). No births — the birth freeze
-# holds; all freed slots went to re-certification.
-#
-# r17 executed rotation wave 11 (VERDICT r16 task #1): the 16 RECERT_QUEUE
-# rows written at r16 — the five r7-evidence rows, which reached
-# MAX_STALENESS_ROUNDS = 10 exactly this round, plus the eleven oldest r8
-# rows — are IN the window; 16 freshly-r16-certified rows rotated out
-# (wave-11 block at the end of _DEFER). No births — the birth freeze
-# holds; all freed slots went to re-certification. part_name_fuzzy_match
-# stays in-window for post-positional-filter re-certification.
-#
-# r18 executed rotation wave 12 (VERDICT r17 task #7): the 16 RECERT_QUEUE
-# rows written at r17 — the four r8-evidence rows, which reach
-# MAX_STALENESS_ROUNDS = 10 exactly this round, the ten r9 rows and the
-# two oldest r10 rows — are IN the window; 16 freshly-r17-certified rows
-# rotated out (wave-12 block at the end of _DEFER). No births — the birth
-# freeze holds; all freed slots went to re-certification.
-
-# RECERT_QUEUE — the next rotation wave, MACHINE-CHECKED (VERDICT r13 task
-# #6): the 16 oldest-evidence deferred queries, ordered strictly by
-# (newest driver-green round, name) computed from CORRECTNESS_r*.json.
+# RECERT_QUEUE: the 16 deferred queries with the oldest driver evidence,
+# ordered by (newest driver-green round, name) from CORRECTNESS_r*.json.
 # tests/test_registry.py::test_recert_queue_matches_correctness_history
-# recomputes this from the CORRECTNESS files and asserts equality, so the
-# written queue can never again silently omit the oldest query (the r13
-# wrongness-#1 class: the hand-written r14 queue dropped
-# embedding_knn_ivf_multiprobe, whose evidence was the oldest on record).
-# Rotation waves consume this list front-first; recompute it (the test
-# failure message prints the expected value) whenever a wave executes or
-# a new CORRECTNESS file lands. After wave 12 the queue holds the twelve
-# remaining r10-evidence rows and the four oldest r11 rows — wave 13's
-# worklist (the r10 rows reach the staleness bound at r20, so there is a
-# round of slack; standing bookkeeping says execute the wave anyway).
+# recomputes it and prints the expected value when it is stale.
 RECERT_QUEUE: list[str] = [
     "dedup_lsh_eval",              # r10
     "disjunctive_revenue_q19",     # r10
@@ -420,17 +177,11 @@ RECERT_QUEUE: list[str] = [
     "cci_20_1h",                   # r11
 ]
 
-# Max-staleness alarm (VERDICT r14 task #3, policy dated in PLANS.md r15):
-# no registered query's newest driver-green row may age more than this many
-# rounds. The number is derived, not picked: full-registry refresh latency
-# at 130 deferred / 16 slots per wave is ~8.1 rounds, so 10 gives the
-# rotation ~2 rounds of slack while still firing well before the r13-era
-# rot (rows that sat 11+ rounds on r1-only evidence). Enforced by
-# tests/test_registry.py::test_registry_staleness_bounded; between driver
-# contacts, freshness of the 130 deferred rows is guaranteed by the
-# per-round 5-leg local bit-exact sweep (tools/check.py at sf0.001 /
-# sf0.01×{8,3,17 shuffle partitions} / sf0.1), whose result is logged in
-# PLANS.md for every shipped round.
+# No registered query's newest driver-green row may be older than this many
+# rounds (tests/test_registry.py::test_registry_staleness_bounded): a full
+# refresh of 130 deferred keys at 16 per wave takes ~8.1 rounds, and 10
+# leaves ~2 rounds of slack. Between driver contacts, tools/check.py's
+# local bit-exact sweep covers every key.
 MAX_STALENESS_ROUNDS = 10
 
 
