@@ -278,15 +278,17 @@ def main() -> None:
         runs.setdefault("events_scan_full", []).append(run_once(_scan_full))
         runs.setdefault("events_scan_pruned_3d", []).append(run_once(_scan_pruned))
 
-    # --- Skew-stress lines (VERDICT r8 task #8a) -------------------------
+    # --- Skew-stress lines ----------------------------------------------
     # Hot-key join fixture: 95% of the big side carries ONE key; the small
     # side is deliberately too wide to broadcast (thresholds pinned to -1
     # for these lines only) and the downstream per-key agg pins the join's
     # output partitioning, which blocks AQE's skew-split rewrite — the
-    # documented niche of operators/skew.salted_join. The pair of lines
-    # shows the salted path beating the naive shuffle join ~2x in exactly
-    # that niche (when the small side CAN broadcast, AQE's runtime
-    # broadcast conversion wins instead — measured r9, see skew.py).
+    # documented niche of operators/skew.salted_join. On local[32] the pair
+    # showed the salted path beating the naive shuffle join ~2x in that
+    # niche; on a 4-core local[4] host it shows salted slower (min 3.54 s
+    # vs 3.14 s, and 4.52 s vs 3.99 s, in two runs). When the small side
+    # CAN broadcast, AQE's runtime broadcast conversion wins instead (see
+    # skew.py).
     from trading_etl_spark.operators.skew import salted_join
 
     skew_big = spark.range(4_000_000).select(

@@ -154,14 +154,15 @@ def test_asof_bucketed_matches_plain(spark):
 
 
 def test_horizon_prune_is_identity(spark):
-    """VERDICT r6 task #4: pruning the in-bucket window's build side to the
-    probe's bucket horizon must not change results — build rows OUTSIDE the
-    horizon reach probes only through the finals/carry relation, which
-    reads the full build side. The fixture puts the only quote for one
-    probe MANY buckets before the probe horizon (the carry-through-pruned-
-    history case that a naive min-minus-one-bucket filter on the whole
-    build side would break) and quotes after the horizon that backward
-    as-of must ignore either way."""
+    """Pruning the in-bucket window's build side to the probe's bucket
+    horizon must not change results — build rows OUTSIDE the horizon reach
+    probes only through the edge/carry relation, which reads the full build
+    side. The fixture puts the only quote for one probe MANY buckets before
+    the probe horizon (the carry-through-pruned-history case that a naive
+    min-minus-one-bucket filter on the whole build side would break) and
+    quotes after the horizon that backward as-of must ignore and forward
+    as-of must reach through the carry. Expected values are hand-computed
+    from the unpruned definition."""
     from trading_etl_spark.operators.asof import (
         asof_join_backward_bucketed,
         asof_join_forward_bucketed,
@@ -184,38 +185,31 @@ def test_horizon_prune_is_identity(spark):
         ],
         "k string, time timestamp, tag string",
     )
-    for fn in (asof_join_backward_bucketed, asof_join_forward_bucketed):
-        pruned = {
+    for fn, want in (
+        (asof_join_backward_bucketed,
+         {"a-mid": 90.0, "a-late": 100.0, "b-carry-far": 200.0}),
+        (asof_join_forward_bucketed,
+         {"a-mid": 100.0, "a-late": 110.0, "b-carry-far": None}),
+    ):
+        got = {
             r["tag"]: r["bid"]
             for r in fn(
                 probes, quotes, on="time", by=["k"], value_cols=["bid"],
-                bucket_seconds=3600, prune_build_horizon=True,
+                bucket_seconds=3600,
             ).collect()
         }
-        full = {
-            r["tag"]: r["bid"]
-            for r in fn(
-                probes, quotes, on="time", by=["k"], value_cols=["bid"],
-                bucket_seconds=3600, prune_build_horizon=False,
-            ).collect()
-        }
-        assert pruned == full, fn.__name__
-    # and the backward carry through pruned history is the far-early quote
-    got = {
-        r["tag"]: r["bid"]
-        for r in asof_join_backward_bucketed(
-            probes, quotes, on="time", by=["k"], value_cols=["bid"],
-            bucket_seconds=3600,
-        ).collect()
-    }
-    assert got == {"a-mid": 90.0, "a-late": 100.0, "b-carry-far": 200.0}
+        assert got == want, fn.__name__
 
 
 def test_horizon_prune_build_is_lazy_and_broadcast(spark):
-    """The bounds must be a lazy broadcast 1-row aggregate: building the
-    pruned as-of submits no job, and the plan shows the broadcast range
-    condition feeding a map-side filter (not a shuffled join)."""
-    from trading_etl_spark.operators.asof import asof_join_backward_bucketed
+    """The bounds must be a lazy broadcast 1-row aggregate in both
+    directions: building the pruned as-of submits no job, and the plan
+    shows the broadcast range condition feeding a map-side filter (not a
+    shuffled join)."""
+    from trading_etl_spark.operators.asof import (
+        asof_join_backward_bucketed,
+        asof_join_forward_bucketed,
+    )
 
     quotes = spark.createDataFrame(
         [("A", _ts("2024-01-01 10:30:00"), 1.0)], "k string, time timestamp, bid double"
@@ -225,19 +219,19 @@ def test_horizon_prune_build_is_lazy_and_broadcast(spark):
     )
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    # scoped job group, not global id diffs — immune to retainedJobs
-    # eviction and to concurrent streaming jobs (r11 flake fix)
-    try:
-        sc.setJobGroup("asof-build-probe", "probe")
-        df = asof_join_backward_bucketed(
-            probes, quotes, on="time", by=["k"], value_cols=["bid"]
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        built = tracker.getJobIdsForGroup("asof-build-probe")
-    finally:
-        sc.setJobGroup("", "")
-    assert not built, f"as-of build submitted jobs: {sorted(built)}"
-    assert "BroadcastNestedLoopJoin" in plan, plan
+    for fn in (asof_join_backward_bucketed, asof_join_forward_bucketed):
+        # scoped job group, not global id diffs — immune to retainedJobs
+        # eviction and to concurrent streaming jobs
+        group = f"asof-build-probe-{fn.__name__}"
+        try:
+            sc.setJobGroup(group, "probe")
+            df = fn(probes, quotes, on="time", by=["k"], value_cols=["bid"])
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            built = tracker.getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup("", "")
+        assert not built, f"{fn.__name__} build submitted jobs: {sorted(built)}"
+        assert "BroadcastNestedLoopJoin" in plan, (fn.__name__, plan)
 
 
 def test_asof_forward_semantics_and_bucket_boundaries(spark):

@@ -116,6 +116,40 @@ def test_config_added_timeframe_flows_to_ohlc_and_indicators(spark):
     assert "'2h'" in dims.timeframe_values_sql(cfg)
 
 
+def test_candle_chain_matches_pipeline_composition(spark, monkeypatch):
+    """The two candle producers agree row for row: the query surface's
+    single-shuffle chain (trading.candle_chain) and the ETL pipeline's
+    composition (ohlc_base over load_ticks, then ohlc_derived), under the
+    default timeframes and a config-added 2h."""
+    from trading_etl_spark.config import EngineConfig
+    from trading_etl_spark.operators import ohlc as ohlc_ops
+    from trading_etl_spark.queries import trading as tq
+    from trading_etl_spark.sources import dims, ticks
+
+    sf_dir = "/root/testdata/sf0.001"
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*ohlc_ops.OHLC_COLS).collect())
+
+    for extra in (None, "2h:7200"):
+        if extra is None:
+            monkeypatch.delenv("ETL_EXTRA_TIMEFRAMES", raising=False)
+        else:
+            monkeypatch.setenv("ETL_EXTRA_TIMEFRAMES", extra)
+        tq.clear_candle_caches(spark)
+        try:
+            chain_base, chain_derived = tq.candle_chain(spark, sf_dir)
+            base = ohlc_ops.ohlc_base(ticks.load_ticks(spark, sf_dir))
+            tf = dims.dim_timeframe(spark, EngineConfig.from_env())
+            derived = ohlc_ops.ohlc_derived(base, tf)
+            assert rows(chain_base) == rows(base), extra
+            got, want = rows(chain_derived), rows(derived)
+            assert got == want, extra
+            assert ("2h" in {r[1] for r in got}) == (extra is not None)
+        finally:
+            tq.clear_candle_caches(spark)
+
+
 def test_clear_candle_caches_evicts_and_unpersists(spark):
     from trading_etl_spark.queries import trading as tq
 

@@ -313,15 +313,15 @@ def main() -> None:
         "- `dedup_minhash_lsh` shuffles are the banded candidate join and the",
         "  verification joins over the cached shingle relation.",
         "- the as-of queries (`event_asof_tick` / `_next` / `_nearest`,",
-        "  `candle_gap_fill`) carry the r7 probe-horizon prune: the 1-row",
+        "  `candle_gap_fill`) carry the probe-horizon prune: the 1-row",
         "  min/max-of-events bounds aggregate broadcasts into a range",
         "  condition on the tick/candle side of the heavy in-bucket window",
         "  (one of the BroadcastNestedLoopJoin nodes counted above — a",
         "  map-side filter, dynamic so it cannot appear in parquet",
         "  PushedFilters; the tick side is the cached relation anyway), so",
-        "  the carry-forward window never sorts history no event can reach;",
+        "  the in-bucket window never sorts history no event can reach;",
         "  out-of-horizon build rows still flow through the candle-sized",
-        "  finals/carry relation (semantic identity, pinned in",
+        "  edge/carry relation (semantic identity, pinned in",
         "  tests/test_asof.py::test_horizon_prune_is_identity).",
     ]
     with open(f"{REPO}/PLANS.md", "w") as f:

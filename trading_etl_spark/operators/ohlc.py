@@ -25,15 +25,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalars import epoch_bucket
+from ..sources.ticks import first_tick_per_second
 
 OHLC_COLS = ["currency_pair_code", "timeframe_code", "time", "open", "high", "low", "close"]
 
 
-def ohlc_base(ticks: DataFrame) -> DataFrame:
-    """A1: ticks → 1-minute candles."""
+def ohlc_base(ticks: DataFrame, *carry: str) -> DataFrame:
+    """A1: ticks → 1-minute candles, grouped on and keeping ``carry``."""
     return (
         ticks.groupBy(
-            "currency_pair_code", F.date_trunc("minute", "time").alias("time")
+            "currency_pair_code", *carry, F.date_trunc("minute", "time").alias("time")
         )
         .agg(
             F.min_by("bid", "time").alias("open"),
@@ -43,6 +44,7 @@ def ohlc_base(ticks: DataFrame) -> DataFrame:
         )
         .select(
             "currency_pair_code",
+            *carry,
             F.lit("1m").alias("timeframe_code"),
             "time",
             "open",
@@ -53,8 +55,9 @@ def ohlc_base(ticks: DataFrame) -> DataFrame:
     )
 
 
-def ohlc_derived(ohlc_1m: DataFrame, timeframes: DataFrame) -> DataFrame:
-    """A2: 1m candles → all non-1m timeframes in one shuffle.
+def ohlc_derived(ohlc_1m: DataFrame, timeframes: DataFrame, *carry: str) -> DataFrame:
+    """A2: 1m candles → all non-1m timeframes in one shuffle, grouped on
+    and keeping ``carry``.
 
     ``timeframes``: dim_timeframe rows to produce (timeframe_code,
     duration_seconds). Epoch-floor bucketing matches the reference formula
@@ -68,6 +71,7 @@ def ohlc_derived(ohlc_1m: DataFrame, timeframes: DataFrame) -> DataFrame:
         ohlc_1m.crossJoin(F.broadcast(tfs))
         .groupBy(
             "currency_pair_code",
+            *carry,
             F.col("_tf").alias("timeframe_code"),
             bucket.alias("time"),
         )
@@ -78,12 +82,6 @@ def ohlc_derived(ohlc_1m: DataFrame, timeframes: DataFrame) -> DataFrame:
             F.max_by("close", "time").alias("close"),
         )
     )
-
-
-def ohlc_all(ticks: DataFrame, timeframes: DataFrame) -> DataFrame:
-    """Base + derived candles as one relation keyed by timeframe_code."""
-    base = ohlc_base(ticks)
-    return base.unionByName(ohlc_derived(base, timeframes)).select(*OHLC_COLS)
 
 
 COARSE_SECONDS = 14400  # seed default: 4h — every other seed timeframe divides it
@@ -104,8 +102,8 @@ def chain_bucket_seconds(
     source behind ``dims.dim_timeframe`` — ``dims.timeframe_durations()``)
     pass it to skip the collect: even on the 6-row literal dim that collect
     is a full analyze+schedule round trip, measured 0.32 s of every cold
-    chain build at sf0.1 (r17, guide §5 — the driver should do almost no
-    data work). Semantics are identical: same list, same LCM.
+    chain build at sf0.1 — the driver should do almost no data work.
+    Semantics are identical: same list, same LCM.
     """
     import math
 
@@ -139,47 +137,10 @@ def ohlc_chain_single_shuffle(
     optional driver-local duration list (see ``chain_bucket_seconds``).
     """
     coarse = chain_bucket_seconds(timeframes, durations)
-    b = F.floor(F.unix_timestamp("time") / coarse).alias("_b")
-    first = F.min_by(F.struct("bid", "ask"), F.struct("ts", "event_id")).alias("f")
-    deduped = (
-        raw_ticks.withColumn("_b", b)
-        .repartition("currency_pair_code", "_b")
-        .groupBy("currency_pair_code", "_b", "time")
-        .agg(first)
-        .select("currency_pair_code", "_b", "time", F.col("f.bid"), F.col("f.ask"))
-    )
-    base = (
-        deduped.groupBy(
-            "currency_pair_code", "_b", F.date_trunc("minute", "time").alias("time")
-        )
-        .agg(
-            F.min_by("bid", "time").alias("open"),
-            F.max("bid").alias("high"),
-            F.min("bid").alias("low"),
-            F.max_by("bid", "time").alias("close"),
-        )
-        .select("currency_pair_code", "_b", F.lit("1m").alias("timeframe_code"),
-                "time", "open", "high", "low", "close")
-    )
-    tfs = timeframes.filter(F.col("duration_seconds") != 60).select(
-        F.col("timeframe_code").alias("_tf"), "duration_seconds"
-    )
-    derived = (
-        base.crossJoin(F.broadcast(tfs))
-        .groupBy(
-            "currency_pair_code",
-            "_b",
-            F.col("_tf").alias("timeframe_code"),
-            epoch_bucket("time", "duration_seconds").alias("time"),
-        )
-        .agg(
-            F.min_by("open", "time").alias("open"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.max_by("close", "time").alias("close"),
-        )
-        .select(*OHLC_COLS)
-    )
+    b = F.floor(F.unix_timestamp("time") / coarse)
+    keyed = raw_ticks.withColumn("_b", b).repartition("currency_pair_code", "_b")
+    base = ohlc_base(first_tick_per_second(keyed, "_b"), "_b")
+    derived = ohlc_derived(base, timeframes, "_b").select(*OHLC_COLS)
     return base.select(*OHLC_COLS), derived
 
 

@@ -25,18 +25,6 @@ from pyspark.sql import functions as F
 
 JOIN_KEYS = ["currency_pair_code", "timeframe_code", "calc_version", "time"]
 
-EVENT_COLS = [
-    "event_datetime",
-    "currency_pair_code",
-    "price",
-    "quantity",
-    "event_type",
-    "trigger_indicator_name",
-    "trigger_indicator_value",
-    "trigger_indicator_timeframe",
-    "trigger_indicator_period",
-]
-
 
 def _paired_sma(fact_sma: DataFrame, short_period: int, long_period: int) -> DataFrame:
     valid = fact_sma.filter(F.col("value").isNotNull() & ~F.isnan("value"))

@@ -1122,9 +1122,6 @@ def embedding_near_dup_lsh(
     )
 
 
-QUANT_SCALE = 127.0  # symmetric int8 scalar quantization over [-1, 1]
-
-
 def quantize_int8(emb: DataFrame) -> DataFrame:
     """Symmetric int8 scalar quantization of the embedding column:
     code_i = round(clamp(x_i, -1, 1) · 127) — the storage/ANN-sidecar format

@@ -19,12 +19,15 @@ same rows, which Spark's speculative execution / task-retry model requires.
 Measured on local[32] with 95%-hot-key fixtures (bench.py's
 skew_join_agg_* lines keep it measured):
 
-- ``salted_join`` wins ~2-4x over the naive shuffle join exactly in its
-  documented niche: the small side too wide to broadcast AND a downstream
-  per-key agg pinning the join's output partitioning (which blocks AQE's
-  skew-split rewrite). When the small side CAN broadcast, AQE's runtime
-  broadcast conversion beats salting ~10x — always leave broadcast
-  available first.
+- ``salted_join`` won ~2-4x over the naive shuffle join on local[32]
+  exactly in its documented niche: the small side too wide to broadcast
+  AND a downstream per-key agg pinning the join's output partitioning
+  (which blocks AQE's skew-split rewrite). The win does not carry to small
+  hosts: on a 4-core local[4] host the same bench lines show salted
+  SLOWER (min 3.54 s salted vs 3.14 s naive, and 4.52 s vs 3.99 s, in two
+  runs), so measure on the target host before choosing it. When the small
+  side CAN broadcast, AQE's runtime broadcast conversion beats salting
+  ~10x — always leave broadcast available first.
 - ``salted_count_distinct`` did NOT beat the native plan at any tested
   size (4M-48M rows): Spark rewrites a distinct agg into a two-phase
   aggregate whose first shuffle keys on (group, value), which already

@@ -48,9 +48,9 @@ def candle_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     """(1m, derived) candles via the single-shuffle chain (ohlc.py): dedup,
     base agg, and derived agg share one (pair, 4h-bucket) partitioning.
 
-    Public API (VERDICT r4 task #4): the SQL catalog (catalog.register_views)
-    builds its ohlc_1m / ohlc_all_tf views from this, and every in-module
-    consumer query reads through it so the chain runs once per (app, sf_dir).
+    Public API: the SQL catalog (catalog.register_views) builds its ohlc_1m /
+    ohlc_all_tf views from this, and every in-module consumer query reads
+    through it so the chain runs once per (app, sf_dir).
     """
 
     def build():
@@ -68,7 +68,7 @@ def candle_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
         # materializes base AND derived in a single fused job (derived's
         # plan reads base's InMemoryRelation), which an eager checkpoint
         # pair would split into two jobs + a double store — measured
-        # +1.3 s on the candle_chain_cold build at sf0.1 (r17). The deep
+        # +1.3 s on the candle_chain_cold build at sf0.1. The deep
         # consumer stacks are truncated one level down instead
         # (_ohlc_1h/_fact_sma/_buysell_events go through materialize),
         # so chain consumers' plans stay shallow anyway.

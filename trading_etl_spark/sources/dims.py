@@ -58,7 +58,7 @@ def timeframe_durations(cfg: EngineConfig | None = None) -> list[int]:
     the duration list (the chain-bucket LCM). Built from the same
     ``timeframe_rows`` config source, so it can never diverge from the dim
     relation; collecting the 6-row literal dim instead costs a full
-    analyze+schedule round trip (~0.3 s) per cold chain build (r17)."""
+    analyze+schedule round trip (~0.3 s) per cold chain build."""
     return [seconds for _, _, _, seconds in timeframe_rows(cfg)]
 
 

@@ -45,17 +45,17 @@ def _events_ts_unit(path: str) -> str | None:
     the epoch unit ("ns"/"us"/"ms"/"s") of the raw INT64 / TIMESTAMP(NANOS)
     column that needs an explicit conversion.
 
-    The fixture corpus has shipped multiple encodings across driver rounds,
-    so hardcoding a unit silently corrupts when the environment drifts —
-    detect, don't assume. For UNANNOTATED int64 the footer alone can't name
-    the unit, so it is inferred from magnitude (ADVICE r3: assuming nanos
-    would corrupt a micros fixture 1000×): epoch-2024 is ~1.7e18 ns,
-    ~1.7e15 µs, ~1.7e12 ms, ~1.7e9 s — regimes 1000× apart, unambiguous
-    for any date within ±200 years. The probe value is max(|min|, |max|)
-    from the row-group column STATISTICS (no data read; stats ignore
-    nulls), falling back to the max |v| over the first non-null data batch
-    — never a single first value, so a leading NULL can't raise and a
-    0/sentinel epoch can't misclassify the whole table (ADVICE r4).
+    The fixture corpus has shipped more than one encoding, so hardcoding a
+    unit silently corrupts when the environment drifts — detect, don't
+    assume. For UNANNOTATED int64 the footer alone can't name the unit, so
+    it is inferred from magnitude (assuming nanos would corrupt a micros
+    fixture 1000×): epoch-2024 is ~1.7e18 ns, ~1.7e15 µs, ~1.7e12 ms,
+    ~1.7e9 s — regimes 1000× apart, unambiguous for any date within ±200
+    years. The probe value is max(|min|, |max|) from the row-group column
+    STATISTICS (no data read; stats ignore nulls), falling back to the max
+    |v| over the first non-null data batch — never a single first value,
+    so a leading NULL can't raise and a 0/sentinel epoch can't misclassify
+    the whole table.
     """
     import glob
     import os
@@ -78,9 +78,9 @@ def _events_ts_unit(path: str) -> str | None:
     ci = names.index("ts")
     # Max over ALL row groups' stats, not the first one carrying stats: a
     # leading row group of zero-sentinels (min=max=0) must not decide the
-    # unit for the whole table when later row groups hold real epochs
-    # (ADVICE r5). Stats are cheap footer metadata — scanning every row
-    # group reads no data.
+    # unit for the whole table when later row groups hold real epochs.
+    # Stats are cheap footer metadata — scanning every row group reads no
+    # data.
     v = None
     for rg in range(md.num_row_groups):
         st = md.row_group(rg).column(ci).statistics
@@ -142,41 +142,48 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _with_event_time(stream, unit)
 
 
-def tickify(events: DataFrame) -> DataFrame:
-    """Parse/validate events into the tick shape (S2 + P6-P9 + J2).
+def _enriched(events: DataFrame, how: str) -> DataFrame:
+    """The shared parse/enrich of :func:`tickify` and
+    :func:`tickify_with_dlq`: pair = user_id mod 6 joined (``how``) against
+    the broadcast dim_currency; bid = event value; ask = bid + spread from
+    the props JSON key; time = ts truncated to the second.
 
-    bid = event value; ask = bid + spread derived from the props JSON key
-    (exercising the JSON-parse path the reference applies to websocket
-    frames); pair = user_id mod 6 joined against dim_currency. Works on
-    batch AND streaming inputs — the dim join is stream-static broadcast.
-    """
+    The props JSON is parsed ONCE per row: the ask spread and the validity
+    predicates all derive from $.k, and with a plain deterministic
+    projection the optimizer re-inlines the parse into every consumer — 4
+    get_json_object calls in the executed plan, measured ~0.9 s of the
+    1.4 s single-split streaming tickify at sf0.1. The always-true
+    nondeterministic guard pins the projection (CollapseProject will not
+    duplicate a multi-referenced nondeterministic expression), so the parse
+    runs once; the VALUE is unchanged (partition ids are always >= 0; a
+    rand() guard does NOT work — Spark 4 range-folds rand comparisons to a
+    literal and re-inlines)."""
     dim = dim_currency(events.sparkSession)
-    # Parse the props JSON ONCE per row (r17, guide §4.4 applied to a
-    # builtin): the ask spread and two of the three validity predicates
-    # derive from $.k, and with a plain deterministic projection the
-    # optimizer re-inlines the parse into every consumer — 4
-    # get_json_object calls in the executed plan, measured ~0.9 s of the
-    # 1.4 s single-split streaming tickify at sf0.1. The always-true
-    # nondeterministic guard pins the projection (CollapseProject will not
-    # duplicate a multi-referenced nondeterministic expression), so the
-    # parse runs once; the VALUE is unchanged (partition ids are always
-    # >= 0; a rand() guard does NOT work — Spark 4 range-folds rand
-    # comparisons to a literal and re-inlines). The pushable validity
-    # predicate (bid = value > 0, an exact alias) moves BELOW the guard so
-    # the events scan keeps its PushedFilters; the two k-derived
-    # predicates stay above, same conjunction, same NULL-drop semantics.
     k = F.when(
         F.spark_partition_id() >= 0,
         F.get_json_object("props", "$.k").cast("int"),
     )
     return (
-        events.filter(F.col("value") > 0)
-        .withColumn("pair_id", (F.col("user_id") % 6 + 1).cast("int"))
-        .join(F.broadcast(dim), F.col("pair_id") == dim.id, "inner")
+        events.withColumn("pair_id", (F.col("user_id") % 6 + 1).cast("int"))
+        .join(F.broadcast(dim), F.col("pair_id") == dim.id, how)
         .withColumn("k", k)
         .withColumn("bid", F.col("value"))
         .withColumn("ask", F.col("value") + ((F.col("k") % 10) + 1) * F.lit(0.001))
         .withColumn("time", F.date_trunc("second", F.col("ts")))
+    )
+
+
+def tickify(events: DataFrame) -> DataFrame:
+    """Parse/validate events into the tick shape (S2 + P6-P9 + J2).
+
+    Works on batch AND streaming inputs — the dim join is stream-static
+    broadcast. The pushable validity predicate (bid = value > 0, an exact
+    alias) runs BELOW the parse guard so the events scan keeps its
+    PushedFilters; the two k-derived predicates stay above, same
+    conjunction, same NULL-drop semantics.
+    """
+    return (
+        _enriched(events.filter(F.col("value") > 0), "inner")
         .filter((F.col("ask") > 0) & (F.col("bid") <= F.col("ask")))
         .select("currency_pair_code", "time", "bid", "ask", "ts", "event_id")
     )
@@ -226,11 +233,10 @@ def raw_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parsed, validated ticks before dedup — batch entry point.
 
     The events scan is SPREAD to defaultParallelism when it arrives
-    under-split (the r9 knn diagnosis applied to the ingest path: the
-    driver fixture is ONE small parquet file = one task, and the JSON
-    parse + broadcast enrich in tickify are the chain's CPU cost — they
-    ran single-threaded before every keyed shuffle). The round-robin
-    spread of the raw rows is cheap and shows up as a
+    under-split: the driver fixture is ONE small parquet file = one task,
+    and the JSON parse + broadcast enrich in tickify are the chain's CPU
+    cost — they would run single-threaded before every keyed shuffle. The
+    round-robin spread of the raw rows is cheap and shows up as a
     roundrobinpartitioning exchange, distinct from the chain's single
     KEYED shuffle; a real 100 TB events table arrives as many splits and
     the guard no-ops. Batch-only — streaming sources manage their own
@@ -239,9 +245,11 @@ def raw_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tickify(spread_if_underpartitioned(ev, ev, f"{sf_dir}/events.parquet"))
 
 
-def load_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deduplicated tick table (S3): first tick per (pair, second) wins,
-    ordered by original event time then event_id for determinism.
+def first_tick_per_second(raw: DataFrame, *carry: str) -> DataFrame:
+    """S3 dedup: the first tick per (pair, ``carry``…, second) wins, ordered
+    by original event time then event_id for determinism. ``raw`` is
+    :func:`tickify` output; ``carry`` columns (functions of the key, e.g.
+    the candle chain's partition bucket) are grouped on and kept.
 
     Expressed as ``min_by(struct(values), struct(order))`` hash-agg rather
     than a row_number window: hash aggregation gets map-side partial combine
@@ -251,11 +259,15 @@ def load_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     first = F.min_by(F.struct("bid", "ask"), F.struct("ts", "event_id")).alias("f")
     return (
-        raw_ticks(spark, sf_dir)
-        .groupBy("currency_pair_code", "time")
+        raw.groupBy("currency_pair_code", *carry, "time")
         .agg(first)
-        .select("currency_pair_code", "time", F.col("f.bid"), F.col("f.ask"))
+        .select("currency_pair_code", *carry, "time", F.col("f.bid"), F.col("f.ask"))
     )
+
+
+def load_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deduplicated tick table (S3) of the sf dir's events."""
+    return first_tick_per_second(raw_ticks(spark, sf_dir))
 
 
 # --- DuckDB oracle twins (same semantics, ANSI SQL over the driver's views) ---
@@ -302,23 +314,8 @@ def tickify_with_dlq(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     sides from one pass via ``foreachBatch``). Reasons are evaluated in
     priority order so each bad row gets exactly one verdict.
     """
-    dim = dim_currency(events.sparkSession)
-    # same one-evaluation guard as tickify (r17, guide §4.4): the reason
-    # chain references ask three more times, so an unguarded parse would
-    # re-inline per consumer. No value pre-filter here — the DLQ must KEEP
-    # invalid rows.
-    k = F.when(
-        F.spark_partition_id() >= 0,
-        F.get_json_object("props", "$.k").cast("int"),
-    )
-    parsed = (
-        events.withColumn("pair_id", (F.col("user_id") % 6 + 1).cast("int"))
-        .join(F.broadcast(dim), F.col("pair_id") == dim.id, "left")
-        .withColumn("k", k)
-        .withColumn("bid", F.col("value"))
-        .withColumn("ask", F.col("value") + ((F.col("k") % 10) + 1) * F.lit(0.001))
-        .withColumn("time", F.date_trunc("second", F.col("ts")))
-    )
+    # No value pre-filter here — the DLQ must KEEP invalid rows.
+    parsed = _enriched(events, "left")
     reason = (
         F.when(F.col("currency_pair_code").isNull(), "unknown_pair")
         .when(F.col("bid").isNull(), "missing_value")
