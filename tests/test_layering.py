@@ -1,5 +1,5 @@
 """Package layering: operators/, sources/ and streaming/ sit below queries/
-and never import from it."""
+and never import from it; streams start in one module."""
 
 import ast
 import pathlib
@@ -31,3 +31,19 @@ def test_lower_layers_never_import_queries():
         if any(n == QUERIES or n.startswith(QUERIES + ".") for n in names)
     ]
     assert not offenders, offenders
+
+
+def test_streams_start_in_one_module():
+    """Every stream start (``writeStream``) and the per-symbol state
+    scaffold (``applyInPandasWithState``) live in ``streaming/__init__.py``:
+    the trigger and the state-partition sizing are decided in one place."""
+    for attr in ("writeStream", "applyInPandasWithState"):
+        users = sorted(
+            str(path.relative_to(PKG))
+            for path in PKG.rglob("*.py")
+            if any(
+                isinstance(node, ast.Attribute) and node.attr == attr
+                for node in ast.walk(ast.parse(path.read_text()))
+            )
+        )
+        assert users == ["streaming/__init__.py"], (attr, users)

@@ -150,6 +150,27 @@ def test_candle_chain_matches_pipeline_composition(spark, monkeypatch):
             tq.clear_candle_caches(spark)
 
 
+def test_candle_chain_rekeys_on_timeframe_config(spark, monkeypatch):
+    """The chain is cached per timeframe set: adding a timeframe within a
+    session is served on the next call, with no cache clear in between."""
+    from trading_etl_spark.queries import trading as tq
+
+    sf_dir = "/root/testdata/sf0.001"
+
+    def derived_codes():
+        derived = tq.candle_chain(spark, sf_dir)[1]
+        return {r[0] for r in derived.select("timeframe_code").distinct().collect()}
+
+    monkeypatch.delenv("ETL_EXTRA_TIMEFRAMES", raising=False)
+    tq.clear_candle_caches(spark)
+    try:
+        assert "2h" not in derived_codes()
+        monkeypatch.setenv("ETL_EXTRA_TIMEFRAMES", "2h:7200")
+        assert "2h" in derived_codes()
+    finally:
+        tq.clear_candle_caches(spark)
+
+
 def test_clear_candle_caches_evicts_and_unpersists(spark):
     from trading_etl_spark.queries import trading as tq
 

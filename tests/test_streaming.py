@@ -250,29 +250,59 @@ def test_latest_value_cache_with_relay_hook(spark, tmp_path):
     assert all("timestamp" in f for f in frames)
 
 
-def test_state_sized_context_scopes_and_restores_conf(spark):
-    """The gate drains run under STREAM_STATE_PARTITIONS and must restore
-    the caller's shuffle-partition conf afterwards — including on error
-    (a leaked value would silently resize every later batch shuffle)."""
+def test_state_partitions_scope_restores_conf(spark):
+    """The gate drains run under STATE_PARTITIONS and must restore the
+    caller's shuffle-partition conf afterwards — including on error (a
+    leaked value would silently resize every later batch shuffle)."""
     import pytest as _pytest
 
-    from trading_etl_spark.queries import streamgate as sg
+    from trading_etl_spark import streaming
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    assert prev != sg.STREAM_STATE_PARTITIONS or int(prev) == int(
-        sg.STREAM_STATE_PARTITIONS
-    )
-    with sg._state_sized(spark):
-        assert (
-            spark.conf.get("spark.sql.shuffle.partitions")
-            == sg.STREAM_STATE_PARTITIONS
+    assert int(prev) != streaming.STATE_PARTITIONS
+    with streaming.state_partitions(spark, streaming.STATE_PARTITIONS):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+            streaming.STATE_PARTITIONS
         )
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
     with _pytest.raises(RuntimeError):
-        with sg._state_sized(spark):
+        with streaming.state_partitions(spark, streaming.STATE_PARTITIONS):
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_tick_ingest_processing_time_trigger_runs_until_stopped(spark, tmp_path):
+    """``processing_time`` set: a micro-batch stream that keeps running
+    after the backlog (``None`` drains and stops, as the tests above use)."""
+    src = _write_frames(tmp_path, FRAMES)
+    sink, ckpt = str(tmp_path / "out_pt"), str(tmp_path / "ckpt_pt")
+    q = start_tick_ingest(spark, src, sink, ckpt, processing_time="100 milliseconds")
+    try:
+        q.processAllAvailable()
+        assert q.isActive
+        assert spark.read.parquet(sink).count() == 3
+    finally:
+        q.stop()
+
+
+def test_gate_run_dirs_keep_current_and_previous(tmp_path, monkeypatch):
+    """Each gate keeps its current run dir and the previous one (whose
+    returned DataFrame the caller may still read lazily); older ones are
+    removed, and each gate's dirs are counted on their own."""
+    import os
+    import tempfile
+
+    from trading_etl_spark.queries import streamgate as sg
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(sg, "_RUN_DIRS", {})
+    a1, a2 = sg._fresh_run_dir("gate_a_"), sg._fresh_run_dir("gate_a_")
+    b1 = sg._fresh_run_dir("gate_b_")
+    a3 = sg._fresh_run_dir("gate_a_")
+    assert len({a1, a2, a3}) == 3
+    assert not os.path.exists(a1)
+    assert all(os.path.isdir(d) for d in (a2, a3, b1))
 
 
 def test_starter_n_state_partitions_sizes_checkpoint_state(spark, tmp_path):

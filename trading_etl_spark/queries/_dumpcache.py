@@ -1,14 +1,15 @@
 """Shared FIFO-bounded disk-dump cache for gate/bench fixtures.
 
-Two gate surfaces materialize a small on-disk fixture once per
-(applicationId, sf_dir) and reuse it across invocations — the streaming
-gates' single-file candle dump and the compaction gate's many-small-files
-events twin. Both need an eviction the in-memory session cache
+The one retention rule for on-disk gate directories. Two gate surfaces
+materialize a small on-disk fixture once per (applicationId, sf_dir) and
+reuse it across invocations — the streaming gates' single-file candle dump
+and the compaction gate's many-small-files events twin — and the streaming
+gates' per-call run directories are the same cache with bound 2 and a
+fresh key per call. All need an eviction the in-memory session cache
 (``trading_etl_spark.cache``) does not provide: an evicted entry must also
-rmtree its directory, and every root registers an atexit cleanup (review r9:
-the two hand-rolled copies of this loop must not evolve separately). Like
-the session cache, each entry stores the fingerprint of the source files
-it was built from, so an append under the source directory rebuilds it.
+rmtree its directory, and every root registers an atexit cleanup. Like the
+session cache, each entry stores the fingerprint of the source files it was
+built from, so an append under the source directory rebuilds it.
 """
 
 from __future__ import annotations

@@ -23,41 +23,17 @@ append + watermark so state is reclaimed at the horizon.
 
 from __future__ import annotations
 
+import itertools
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources import ticks
 from ..sources.dims import currency_values_sql as _currency_sql
-
-import contextlib
-
-# State-store partition sizing (r10): a streaming query's state partition
-# count is FIXED at the first checkpoint, and every partition carries a
-# state-store instance plus a per-micro-batch commit — so it should be
-# sized to the stream's KEY cardinality (6 currency pairs × minutes here),
-# not inherited from the batch shuffle default. Measured on the sf0.1 OHLC
-# availableNow drain: 32 partitions 2.46-2.61 s vs 8 partitions
-# 1.90-2.25 s (~20%, pure state/commit overhead — results are hash-
-# partition-invariant). At production scale this is the knob you set per
-# stream from expected distinct keys (r11, VERDICT r10 task #4: the drain
-# context takes ``n_state_partitions`` so callers actually CAN — the gate
-# queries use the default sized to this fixture's 6-pair cardinality);
-# re-sizing later means a new checkpoint (gate runs use fresh run dirs
-# every call, so it is safe here).
-STREAM_STATE_PARTITIONS = "8"
-
-
-@contextlib.contextmanager
-def _state_sized(spark: SparkSession, n_state_partitions: int | str | None = None):
-    # one save/set/restore implementation lives in streaming.ticks
-    # (_state_conf); this wrapper only supplies the gate default, so a
-    # future conf-handling fix cannot silently diverge between the two.
-    from ..streaming.ticks import _state_conf
-
-    n = STREAM_STATE_PARTITIONS if n_state_partitions is None else n_state_partitions
-    with _state_conf(spark, int(n)):
-        yield
+from ..streaming import drain
+from ._dumpcache import get_or_build_dump
 
 
 _SINK = "gate_streaming_ohlc_1m"
@@ -87,50 +63,26 @@ def q_streaming_ohlc_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_ticks",
         )
     )
-    with _state_sized(spark):
-        q = (
-            candles.writeStream.format("memory")
-            .queryName(_SINK)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(_SINK)
+    return drain(candles, _SINK, "complete")
 
 
 _ENRICH_SINK = "gate_streaming_enrich"
 
 
 def q_streaming_enrich_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-STATIC broadcast join as its own gate row (r10-born): the
-    dim join every tick pipeline runs internally, graded directly — the
-    event stream parses/validates and joins the 6-row currency dim with
-    an explicit broadcast, and the output carries dim ATTRIBUTES
-    (base/quote), so the oracle certifies the join itself, not just the
-    derived key. The plan is entirely STATELESS streaming (map-side
-    parse + broadcast hash join — no state store, no watermark, nothing
-    to reclaim), which is exactly why the stream side never shuffles at
-    any scale; drained availableNow in append mode."""
-    from ..sources import dims as dims_mod
-
+    """STREAM-STATIC broadcast join as its own gate row: the dim join
+    every tick pipeline runs internally, graded directly — the event stream
+    parses/validates and joins the 6-row currency dim with an explicit
+    broadcast (``ticks.enriched``, the same once-evaluated ``$.k`` parse,
+    spread and second truncation as ``tickify``), and the output carries
+    dim ATTRIBUTES (base/quote), so the oracle certifies the join itself,
+    not just the derived key. The plan is entirely STATELESS streaming
+    (map-side parse + broadcast hash join — no state store, no watermark,
+    nothing to reclaim), which is exactly why the stream side never
+    shuffles at any scale; drained availableNow in append mode."""
     ev = ticks.stream_events(spark, sf_dir)
-    dim = dims_mod.dim_currency(spark)
-    # one-evaluation parse guard + pushable value pre-filter, exactly as
-    # sources.ticks.tickify (r17, guide §4.4) — bid is an exact alias of
-    # value, so filtering value > 0 below the guard is the same predicate
-    k = F.when(
-        F.spark_partition_id() >= 0,
-        F.get_json_object("props", "$.k").cast("int"),
-    )
     enriched = (
-        ev.filter(F.col("value") > 0)
-        .withColumn("pair_id", (F.col("user_id") % 6 + 1).cast("int"))
-        .join(F.broadcast(dim), F.col("pair_id") == dim.id)
-        .withColumn("k", k)
-        .withColumn("bid", F.col("value"))
-        .withColumn("ask", F.col("value") + ((F.col("k") % 10) + 1) * F.lit(0.001))
-        .withColumn("time", F.date_trunc("second", F.col("ts")))
+        ticks.enriched(ev.filter(F.col("value") > 0), "inner")
         .filter((F.col("ask") > 0) & (F.col("bid") <= F.col("ask")))
         .select(
             "event_id",
@@ -142,7 +94,7 @@ def q_streaming_enrich_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ask",
         )
     )
-    return _drain_append(enriched, _ENRICH_SINK)
+    return drain(enriched, _ENRICH_SINK)
 
 
 _SLIDING_SINK = "gate_streaming_sliding"
@@ -182,16 +134,7 @@ def q_streaming_sliding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_bid",
         )
     )
-    with _state_sized(spark):
-        q = (
-            stats.writeStream.format("memory")
-            .queryName(_SLIDING_SINK)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(_SLIDING_SINK)
+    return drain(stats, _SLIDING_SINK, "complete")
 
 
 _SSJOIN_SINK = "gate_streaming_ss_join"
@@ -225,16 +168,7 @@ def q_streaming_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AND click_ts <= view_ts + interval 30 minutes"
         ),
     ).select(F.col("v_user").alias("user_id"), "view_ts", "click_ts")
-    with _state_sized(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(_SSJOIN_SINK)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(_SSJOIN_SINK)
+    return drain(joined, _SSJOIN_SINK)
 
 
 _FIRSTWINS_PREFIX = "gate_streaming_firstwins_"
@@ -262,11 +196,7 @@ def q_streaming_firstwins_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .. import io as tio
 
-    # The returned DataFrame reads this dir lazily (the driver collects it
-    # after we return), so it can't be removed here — _fresh_run_dir
-    # reclaims the PREVIOUS invocation's dir now and this one at exit, so
-    # repeated gate/bench runs hold at most one copy.
-    base = _fresh_run_dir("firstwins", _FIRSTWINS_PREFIX)
+    base = _fresh_run_dir(_FIRSTWINS_PREFIX)
     table = f"{base}/table"
     t = ticks.tickify(ticks.stream_events(spark, sf_dir))
 
@@ -280,14 +210,7 @@ def q_streaming_firstwins_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     for run in ("initial", "replay"):
-        with _state_sized(spark):
-            q = (
-                t.writeStream.foreachBatch(append_first_wins)
-                .option("checkpointLocation", f"{base}/ckpt_{run}")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(t, append_first_wins, checkpoint=f"{base}/ckpt_{run}")
     return spark.read.parquet(table).select(
         "currency_pair_code", "time", "bid", "ask"
     )
@@ -332,16 +255,7 @@ def q_streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_copies"),
         )
     )
-    with _state_sized(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(_DEDUP_SINK)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(_DEDUP_SINK).select(
+    return drain(agg, _DEDUP_SINK, "complete").select(
         "keeper_doc_id", "n_copies", "content_hash"
     )
 
@@ -367,7 +281,7 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ex = docs.select(F.explode(F.split("text", " ")).alias("tok"))
     # the Spark-side one-md5 cell form + eval_once pin, exactly as the
-    # batch operator (r18 — identical values, see _cms_cell_expr_spark)
+    # batch operator (identical values, see _cms_cell_expr_spark)
     cells_arr = F.array(
         *[
             F.expr(tx._cms_cell_expr_spark("tok", i, tx.CMS_WIDTH))
@@ -380,16 +294,7 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("row", "cell")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    with _state_sized(spark):
-        q = (
-            sketch.writeStream.format("memory")
-            .queryName(_CMS_SINK)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    grid = spark.table(_CMS_SINK)
+    grid = drain(sketch, _CMS_SINK, "complete")
     # batch-side probe of the drained grid: distinct tokens → min over cells
     cand = (
         spark.read.schema(_DOCS_RAW_SCHEMA)
@@ -424,9 +329,6 @@ def _candle_symbol_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow drain is a single micro-batch whose rows each state
     update sorts by time per symbol — the exact batch order (the
     determinism contract all three stateful gates share)."""
-    import tempfile
-
-    from ._dumpcache import get_or_build_dump
     from .trading import _ohlc_1h
 
     root = get_or_build_dump(
@@ -453,20 +355,6 @@ def _candle_symbol_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _drain_append(out: DataFrame, sink: str) -> DataFrame:
-    """availableNow append-mode drain into a memory sink; returns the table."""
-    with _state_sized(out.sparkSession):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return out.sparkSession.table(sink)
-
-
 def _indicator_shape(t: DataFrame, value_col: str) -> DataFrame:
     return t.select(
         F.col("currency_pair_symbol").alias("currency_pair_code"),
@@ -478,45 +366,37 @@ def _indicator_shape(t: DataFrame, value_col: str) -> DataFrame:
     )
 
 
-# per-gate run dirs: the PREVIOUS invocation's dir must stay alive (its
-# returned DataFrame may still be lazily read by the caller), so each call
-# reclaims only GRANDPARENT generations — repeated gate/bench runs hold at
-# most two copies instead of accreting until interpreter exit.
-#
-# Lifetime CONTRACT (advisor, r6): keep-last-2 serves the gate's
-# call-once-collect-once pattern. A caller that holds a lazily-read
-# DataFrame across ≥2 further invocations of the SAME gate will see
-# FileNotFound on collect — such callers must materialize (collect/cache)
-# before re-invoking, or raise the retention here.
-_RUN_DIRS: dict = {}
+# per-gate run dirs, one dump cache per gate: bound 2 with a fresh key per
+# call keeps the current dir and the previous one, whose returned DataFrame
+# the caller may still read lazily. A caller that holds a lazily-read
+# DataFrame across two further invocations of the same gate must
+# materialize it first.
+_RUN_DIRS: dict[str, dict] = {}
+_RUN_SEQ = itertools.count()
 
 
-def _fresh_run_dir(tag: str, prefix: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    dirs = _RUN_DIRS.setdefault(tag, [])
-    while len(dirs) > 1:  # keep only the immediately-previous dir
-        shutil.rmtree(dirs.pop(0), ignore_errors=True)
-    base = tempfile.mkdtemp(prefix=prefix)
-    dirs.append(base)
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    return base
+def _fresh_run_dir(prefix: str) -> str:
+    return get_or_build_dump(
+        _RUN_DIRS.setdefault(prefix, {}),
+        2,
+        next(_RUN_SEQ),
+        lambda: tempfile.mkdtemp(prefix=prefix),
+        lambda _root: None,
+    )
 
 
 _EMA_SINK = "gate_streaming_ema_14_1h"
 
 
 def q_streaming_ema_14_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The STATEFUL custom streaming operator with oracle-grade evidence
-    (VERDICT r5 task #7): 1h candles arrive as a file stream (production:
-    the candle chain's landing zone) and ``streaming.indicators.
-    stream_ema`` — ``applyInPandasWithState``, per-symbol O(1) state of
-    (seed-count, seed-sum, ema) — maintains the TA-Lib EMA(14) live. The
-    drained append-mode output is shaped to the batch indicator schema,
-    so the oracle is the SAME recursive CTE that certifies batch
-    ``ema_14_1h``: the streaming recursion must replay the batch
+    """The STATEFUL custom streaming operator with oracle-grade evidence:
+    1h candles arrive as a file stream (production: the candle chain's
+    landing zone) and ``streaming.indicators.stream_ema`` — the per-symbol
+    state scaffold with O(1) state of (seed-count, seed-sum, ema) —
+    maintains the TA-Lib EMA(14) live. The drained append-mode output is
+    shaped to the batch indicator schema, so the oracle is the SAME
+    recursive CTE that certifies batch ``ema_14_1h``: the streaming
+    recursion must replay the batch
     trajectory step for step (identical seed = SMA-of-14, identical
     ``ema += k·(x − ema)`` update, identical 6dp rounding).
 
@@ -532,15 +412,15 @@ def q_streaming_ema_14_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.indicators import stream_ema
 
     out = stream_ema(_candle_symbol_stream(spark, sf_dir), period=14)
-    return _indicator_shape(_drain_append(out, _EMA_SINK), "ema")
+    return _indicator_shape(drain(out, _EMA_SINK), "ema")
 
 
 _RSI_SINK = "gate_streaming_rsi_14_1h"
 
 
 def q_streaming_rsi_14_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stream_rsi twin of q_streaming_ema_14_1h (r6-born): the Wilder
-    RSI(14) recursion maintained live by ``applyInPandasWithState`` —
+    """The stream_rsi twin of q_streaming_ema_14_1h: the Wilder RSI(14)
+    recursion maintained live by the per-symbol state scaffold —
     per-symbol state is (prev price, seed accumulators, avg gain/loss),
     O(1) across micro-batches and restarts. Same single-file availableNow
     drain, so the stateful path must replay the batch ``rsi_14_1h``
@@ -548,16 +428,16 @@ def q_streaming_rsi_14_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.indicators import stream_rsi
 
     out = stream_rsi(_candle_symbol_stream(spark, sf_dir), period=14)
-    return _indicator_shape(_drain_append(out, _RSI_SINK), "rsi")
+    return _indicator_shape(drain(out, _RSI_SINK), "rsi")
 
 
 _SESSIONS_SINK = "gate_streaming_sessions"
 
 
 def q_streaming_tick_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R7 SESSION windows under real streaming (r6-born — the batch
-    ``tick_sessions`` twin): gap-merged trading sessions maintained live by
-    the session-window state store over the validated tick stream,
+    """R7 SESSION windows under real streaming (the batch ``tick_sessions``
+    twin): gap-merged trading sessions maintained live by the
+    session-window state store over the validated tick stream,
     complete-mode drained. Like ``streaming_ohlc_1m`` this runs pre-dedup,
     so the oracle is the gaps-and-islands SQL over ``raw_ticks``.
 
@@ -586,26 +466,16 @@ def q_streaming_tick_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_bid",
         )
     )
-    with _state_sized(spark):
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(_SESSIONS_SINK)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(_SESSIONS_SINK)
+    return drain(sess, _SESSIONS_SINK, "complete")
 
 
 _CROSS_SINK = "gate_streaming_sma_cross"
 
 
 def q_streaming_sma_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LAST pytest-only streaming path brought into the oracle gate
-    (r6-born): golden/dead SMA(14/28) cross detection live via
-    ``applyInPandasWithState`` — per-symbol state is the rolling 28-close
-    tail plus the previous (short, long) pair, O(long_period) doubles.
+    """Golden/dead SMA(14/28) cross detection live on the per-symbol state
+    scaffold — per-symbol state is the rolling 28-close tail plus the
+    previous (short, long) pair, O(long_period) doubles.
     ``round_dp=6`` makes the kernel share the batch path's half-up 6dp
     decision regime, so the drained BUY∪SELL stream hash-matches the
     batch golden+dead SQL (the same paired-SMA CTE, both predicates).
@@ -621,7 +491,7 @@ def q_streaming_sma_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
         long_period=28,
         round_dp=6,
     )
-    return _drain_append(out, _CROSS_SINK).select(
+    return drain(out, _CROSS_SINK).select(
         F.col("time").alias("event_datetime"),
         F.col("currency_pair_symbol").alias("currency_pair_code"),
         F.col("short_value").alias("price"),
@@ -638,7 +508,7 @@ _SCD2_PREFIX = "gate_streaming_scd2_"
 
 
 def q_streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental view maintenance UNDER STREAMING (r6-born): the SCD2
+    """Incremental view maintenance UNDER STREAMING: the SCD2
     dimension history maintained live by ``foreachBatch`` →
     ``reconcile.scd2_apply``. The event log splits into three time slices
     written as separate files with ascending mtimes; ``maxFilesPerTrigger=1``
@@ -662,7 +532,7 @@ def q_streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.reconcile import scd2_apply
     from ..sources.ticks import load_events
 
-    base = _fresh_run_dir("scd2", _SCD2_PREFIX)
+    base = _fresh_run_dir(_SCD2_PREFIX)
     feed = f"{base}/feed"
     os.makedirs(feed)
     hist_dir = f"{base}/history"
@@ -732,14 +602,7 @@ def q_streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
-    with _state_sized(spark):
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(stream, apply_batch, checkpoint=f"{base}/ckpt")
     return spark.read.parquet(hist_dir).select(
         "user_id", "dim_value", "valid_from", "valid_to", "is_current"
     )
@@ -750,7 +613,7 @@ _INGEST_DEDUP_PREFIX = "gate_streaming_ingest_dedup_"
 
 def q_streaming_ingest_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming incremental near-dedup ingest gate as an oracle-graded
-    query (r12-born; VERDICT r11 task #2): newly crawled docs land as
+    query: newly crawled docs land as
     files, and ``streaming/docs.py`` probes each micro-batch against the
     STATIC corpus LSH band index — the gate a 100 TB corpus build runs on
     ingest, where the all-pairs pass ran once at bootstrap.
@@ -777,7 +640,7 @@ def q_streaming_ingest_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators import text as tx
     from ..streaming.docs import build_corpus_index, start_incremental_dedup_stream
 
-    base = _fresh_run_dir("ingest_dedup", _INGEST_DEDUP_PREFIX)
+    base = _fresh_run_dir(_INGEST_DEDUP_PREFIX)
     feed, sink = f"{base}/feed", f"{base}/matches"
     docs = tx.load_documents(spark, sf_dir).select("doc_id", "text")
     is_batch = (
@@ -897,7 +760,7 @@ ORACLES["streaming_heavy_hitters"] = _dp.ORACLES["text_heavy_hitters_cms"]
 ORACLES["streaming_ingest_dedup_gate"] = _dp.ORACLES["dedup_incremental_minhash"]
 
 # the stateful streaming EMA shares the batch indicator's recursive-CTE
-# oracle verbatim: the applyInPandasWithState recursion must replay the
+# oracle verbatim: the per-symbol state recursion must replay the
 # batch trajectory (same seed, same update, same rounding) step for step
 from . import trading as _tr  # noqa: E402
 

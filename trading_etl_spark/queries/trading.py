@@ -50,14 +50,16 @@ def candle_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
 
     Public API: the SQL catalog (catalog.register_views) builds its ohlc_1m /
     ohlc_all_tf views from this, and every in-module consumer query reads
-    through it so the chain runs once per (app, sf_dir).
+    through it so the chain runs once per (app, sf_dir, timeframe set): the
+    configured timeframe rows are part of the key, so a timeframe config
+    change within a session builds a new chain.
     """
+    # ONE config read feeds the key, the dim relation and the driver-local
+    # duration list: the durations MUST come from the same config as the
+    # timeframes or the LCM buckets on the wrong grid
+    cfg = dims.EngineConfig.from_env()
 
     def build():
-        # ONE config read feeds both the dim relation and the driver-local
-        # duration list: the durations MUST come from the same config as
-        # the timeframes or the LCM buckets on the wrong grid
-        cfg = dims.EngineConfig.from_env()
         base, derived = ohlc.ohlc_chain_single_shuffle(
             ticks.raw_ticks(spark, sf_dir),
             dims.dim_timeframe(spark, cfg),
@@ -74,7 +76,9 @@ def candle_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
         # so chain consumers' plans stay shallow anyway.
         return base.cache(), derived.cache()
 
-    return cache.cached(spark, "chain", build, sf_dir)
+    return cache.cached(
+        spark, "chain", build, sf_dir, tuple(dims.timeframe_rows(cfg))
+    )
 
 
 def _ohlc_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -280,7 +284,7 @@ def q_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MACD(12,26,9) on 1h candles — three coupled EMA recursions in one
-    grouped pandas kernel (r6-born; extends the reference's single-EMA
+    grouped pandas kernel (extends the reference's single-EMA
     family, transform_services.py:268-270). Rows where all three outputs
     are defined (signal warm-up complete)."""
     out = indicators.macd(_ohlc_1h(spark, sf_dir), 12, 26, 9)
@@ -295,7 +299,7 @@ def q_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt linear-trend one-step-ahead forecast on 1h closes (r7-born):
+    """Holt linear-trend one-step-ahead forecast on 1h closes:
     coupled level+trend exponential recursion in the grouped Arrow kernel
     shape of EMA/RSI/MACD — the forecasting member of the indicator
     family. Causal init (trend_1 = 0, no lookahead); first row of each
@@ -314,7 +318,7 @@ def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ATR(14) on 1h candles, Wilder smoothing over true range (r6-born)."""
+    """ATR(14) on 1h candles, Wilder smoothing over true range."""
     out = indicators.atr(_ohlc_1h(spark, sf_dir), 14)
     return out.filter(F.col("value").isNotNull()).withColumn(
         "value", F.round("value", 6)
@@ -322,9 +326,8 @@ def q_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADX(14) + ±DI on 1h candles — the four-recursion Wilder kernel
-    (r10-born). Rows kept from the first defined ADX (±DI are defined
-    there too)."""
+    """ADX(14) + ±DI on 1h candles — the four-recursion Wilder kernel.
+    Rows kept from the first defined ADX (±DI are defined there too)."""
     out = indicators.adx(_ohlc_1h(spark, sf_dir), 14)
     return out.filter(F.col("adx").isNotNull()).select(
         "currency_pair_code",
@@ -338,7 +341,7 @@ def q_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bollinger(20, 2σ_pop) bands on 1h candles — pure native windows,
-    zero Python (r6-born). Warm-up rows excluded."""
+    zero Python. Warm-up rows excluded."""
     out = indicators.bollinger(_ohlc_1h(spark, sf_dir), 20, 2.0)
     return out.filter(F.col("mid").isNotNull()).select(
         "currency_pair_code",
@@ -352,7 +355,7 @@ def q_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_donchian(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Donchian(20) channels on 1h candles — native min/max windows, zero
-    Python (r9-born). Warm-up rows excluded."""
+    Python. Warm-up rows excluded."""
     out = indicators.donchian(_ohlc_1h(spark, sf_dir), 20)
     return out.filter(F.col("mid").isNotNull()).select(
         "currency_pair_code",
@@ -366,7 +369,7 @@ def q_donchian(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ichimoku(9, 26, 52) on 1h candles — midpoint windows + row offsets,
-    zero Python (r9-born). ALL rows kept: each component is NULL exactly
+    zero Python. ALL rows kept: each component is NULL exactly
     until its input window exists (senkou lines additionally lag 26), and
     the oracle reproduces the same NULL pattern natively — nothing to
     filter (the NaN→NULL exclusion convention applies only to pandas-UDF
@@ -385,8 +388,8 @@ def q_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_williams_r(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Williams %R(14) on 1h candles — native min/max windows, zero Python
-    (r10-born). Warm-up rows excluded."""
+    """Williams %R(14) on 1h candles — native min/max windows, zero
+    Python. Warm-up rows excluded."""
     out = indicators.williams_r(_ohlc_1h(spark, sf_dir), 14)
     return out.filter(F.col("pct_r").isNotNull()).withColumn(
         "pct_r", F.round("pct_r", 6)
@@ -395,7 +398,7 @@ def q_williams_r(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCI(20) on 1h candles — native windows + a codegen list fold for the
-    per-row-anchored mean deviation, zero Python (r10-born). Warm-up and
+    per-row-anchored mean deviation, zero Python. Warm-up and
     zero-deviation rows excluded (NULL in both engines)."""
     out = indicators.cci(_ohlc_1h(spark, sf_dir), 20)
     return out.filter(F.col("cci").isNotNull()).withColumn(
@@ -405,7 +408,7 @@ def q_cci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fast stochastic %K(14)/%D(3) on 1h candles — native min/max/avg
-    windows, zero Python (r6-born). Rows with both outputs defined."""
+    windows, zero Python. Rows with both outputs defined."""
     out = indicators.stochastic(_ohlc_1h(spark, sf_dir), 14, 3)
     return out.filter(F.col("pct_d").isNotNull()).select(
         "currency_pair_code",
@@ -417,7 +420,7 @@ def q_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling volatility pair on 1h candles (r8-born): realized
+    """Rolling volatility pair on 1h candles: realized
     (stddev_samp of 20 log returns) + Parkinson high-low range estimator —
     pure native windows, zero Python (operators/indicators.volatility).
     Warm-up rows excluded."""
@@ -433,7 +436,7 @@ def q_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keltner Channels EMA(20) ± 2·ATR(10) on 1h candles — the two Wilder
-    recursions composed in ONE grouped Arrow kernel pass (r11-born). Rows
+    recursions composed in ONE grouped Arrow kernel pass. Rows
     where the slower recursion (EMA 20) is seeded; both engines define the
     channel on the same rows."""
     out = indicators.keltner(_ohlc_1h(spark, sf_dir), 20, 10, 2.0)
@@ -449,7 +452,7 @@ def q_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_trix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRIX(15) on 1h candles — triple-EMA cascade + 1-row ROC in one
-    grouped Arrow kernel (r11-born). Warm-up rows excluded."""
+    grouped Arrow kernel. Warm-up rows excluded."""
     out = indicators.trix(_ohlc_1h(spark, sf_dir), 15)
     return out.filter(F.col("value").isNotNull()).withColumn(
         "value", F.round("value", 6)
@@ -458,7 +461,7 @@ def q_trix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """On-Balance Volume on hourly tick-count candles — native signed
-    cumulative window, zero Python (r11-born). OBV is integer-exact (a
+    cumulative window, zero Python. OBV is integer-exact (a
     sum of signed tick counts), so no rounding is needed anywhere."""
     out = indicators.obv(_ohlc_1h_vol(spark, sf_dir), volume_col="volume")
     return out.select(
@@ -468,8 +471,8 @@ def q_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_vwap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-anchored VWAP over hourly tick-count candles — two running sums
-    on one (pair, day) window, zero Python (r11-born). r13: integer
-    fixed-point accumulation AND exact integer 6dp rounding inside the
+    on one (pair, day) window, zero Python. Integer fixed-point
+    accumulation AND exact integer 6dp rounding inside the
     operator (round_dp=6) — reduction-order- and engine-independent; no
     F.round here (divergence classes 4+5, see vwap_anchored)."""
     out = indicators.vwap_anchored(
@@ -485,7 +488,7 @@ def q_vwap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_candle_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candlestick pattern mining on 1h candles (r11-born): doji / hammer /
+    """Candlestick pattern mining on 1h candles: doji / hammer /
     engulfing flags from pure codegen comparisons + one LAG; only candles
     matching at least one pattern surface (the mining result, not the
     full per-candle flag matrix)."""
@@ -676,13 +679,13 @@ def q_close_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns. Explicit pivot values keep the plan a single hash-agg pass —
     no extra distinct-values job, same one shuffle as a plain groupBy.
 
-    r13: the 6dp rounding of the average is EXACT-INTEGER (divergence
+    The 6dp rounding of the average is EXACT-INTEGER (divergence
     classes 4+5, the vwap recipe): closes live on the 1e-2 tick grid, so
     with k = Σ floor(close·100 + 0.5) and n = count, the rounded average
     is ((2·k·10⁴ + n) div (2·n)) / 10⁶ — the true half-up rounding of the
     exact rational k/(100·n), reduction-order- and engine-independent.
-    The r13 sf0.001 sweep caught the native round(avg(close), 6) form
-    flipping on an exact 7dp half-tie (avg over 224 = 2⁵·7 candles with a
+    The native round(avg(close), 6) form was seen flipping on an exact
+    7dp half-tie at sf0.001 (avg over 224 = 2⁵·7 candles with a
     7-divisible sum terminates at …5); int64-safe to ~8e9 rows per group
     at these price scales."""
     base, derived = candle_chain(spark, sf_dir)
@@ -732,7 +735,7 @@ ZSCORE_THRESHOLD = 3.0
 
 
 def q_tick_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling z-score surveillance (r6-born): each deduped tick judged
+    """Rolling z-score surveillance: each deduped tick judged
     against the trailing ``ZSCORE_WINDOW``-tick mean/σ_pop of its pair with
     the current row EXCLUDED from the frame (the self-exclusion every
     anomaly detector needs — a spike must not inflate its own baseline);
@@ -761,16 +764,16 @@ CORR_WINDOW = 24  # trailing day of 1h candles
 
 
 def q_pair_rolling_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling cross-pair correlation, keyed all-pairs form (r6-born,
-    generalized per VERDICT r6 task #3): trailing-24h sample correlation
-    between the 1h closes of EVERY unordered pair of currency pairs — the
+    """Rolling cross-pair correlation, keyed all-pairs form: trailing-24h
+    sample correlation between the 1h closes of EVERY unordered pair of
+    currency pairs — the
     pairs-trading / risk-regime matrix. The per-pair series align with ONE
     equi-join on the hour bucket (each hour fans out to ≤C(|pairs|,2) rows,
     |pairs| tiny), then a single corr window PARTITIONED BY the (pair_a,
     pair_b) key — every pair-pair series is its own window partition, so
     parallelism scales with the number of combinations and the plan is
     free of the unpartitioned-window warning the single-pair form emitted
-    (the r5 bm25 standard). Warm-up rows excluded; corr rounds to 6dp.
+    (as bm25 does). Warm-up rows excluded; corr rounds to 6dp.
     Zero Python."""
     candles = _ohlc_1h(spark, sf_dir)
     a = candles.select(
@@ -805,12 +808,12 @@ FRESHNESS_SLA_S = 3600
 
 
 def q_ticks_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Freshness-SLA report over the tick feed (r7-born — VERDICT r6 task
-    #9, oracle-grade evidence for the maintenance layer): per currency
-    pair, latest tick time, lag against the ORCHESTRATOR'S clock (a passed
-    literal — plans/maintenance.freshness_report never reads wall-clock,
-    so the report is deterministic and engine-comparable), and the stale
-    flag against a 1-hour SLA. Scale shape: one MAX hash-agg per pair —
+    """Freshness-SLA report over the tick feed (oracle-grade evidence for
+    the maintenance layer): per currency pair, latest tick time, lag
+    against the ORCHESTRATOR'S clock (a passed literal —
+    plans/maintenance.freshness_report never reads wall-clock, so the
+    report is deterministic and engine-comparable), and the stale flag
+    against a 1-hour SLA. Scale shape: one MAX hash-agg per pair —
     partial-combinable, shuffle bounded by |pairs|."""
     from ..plans.maintenance import freshness_report
 
@@ -855,7 +858,7 @@ def q_equity_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak cumulative PnL + max drawdown per strategy (r8-born) — the
+    """Peak cumulative PnL + max drawdown per strategy — the
     running-max window over the equity curve, collapsed to one row per
     (pair, timeframe, period)."""
     from ..operators.backtest import max_drawdown
@@ -885,7 +888,7 @@ def q_event_asof_tick(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_event_asof_tick_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PLAIN as-of twin (r8): one window partitioned on the join key
+    """The PLAIN as-of twin: one window partitioned on the join key
     only — same oracle and identical rows as event_asof_tick. Registered
     so the plain/bucketed trade-off is MEASURED, not asserted: at sf0.1
     the plain form wins ~5x on fixed overhead (one shuffle, no
@@ -1954,8 +1957,8 @@ FROM (SELECT *,
                                           ORDER BY time) AS d
       FROM ohlc_1h_vol)"""
 
-# Integer fixed-point accumulation + exact integer 6dp rounding (r13,
-# matches vwap_anchored's redesign — divergence classes 4 AND 5): per-row
+# Integer fixed-point accumulation + exact integer 6dp rounding (as
+# vwap_anchored — divergence classes 4 AND 5): per-row
 # tpv is quantized to 1e-6-unit BIGINTs and summed exactly, so DuckDB's
 # pairwise window SUM and Spark's sequential running frame agree under any
 # reduction order; then the 6dp half-up rounding is ALSO integer-exact —

@@ -142,9 +142,9 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _with_event_time(stream, unit)
 
 
-def _enriched(events: DataFrame, how: str) -> DataFrame:
-    """The shared parse/enrich of :func:`tickify` and
-    :func:`tickify_with_dlq`: pair = user_id mod 6 joined (``how``) against
+def enriched(events: DataFrame, how: str) -> DataFrame:
+    """The shared parse/enrich of :func:`tickify`, :func:`tickify_with_dlq`
+    and the ``streaming_enrich_dim_join`` gate: pair = user_id mod 6 joined (``how``) against
     the broadcast dim_currency; bid = event value; ask = bid + spread from
     the props JSON key; time = ts truncated to the second.
 
@@ -183,7 +183,7 @@ def tickify(events: DataFrame) -> DataFrame:
     conjunction, same NULL-drop semantics.
     """
     return (
-        _enriched(events.filter(F.col("value") > 0), "inner")
+        enriched(events.filter(F.col("value") > 0), "inner")
         .filter((F.col("ask") > 0) & (F.col("bid") <= F.col("ask")))
         .select("currency_pair_code", "time", "bid", "ask", "ts", "event_id")
     )
@@ -315,7 +315,7 @@ def tickify_with_dlq(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     priority order so each bad row gets exactly one verdict.
     """
     # No value pre-filter here — the DLQ must KEEP invalid rows.
-    parsed = _enriched(events, "left")
+    parsed = enriched(events, "left")
     reason = (
         F.when(F.col("currency_pair_code").isNull(), "unknown_pair")
         .when(F.col("bid").isNull(), "missing_value")

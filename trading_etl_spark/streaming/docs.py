@@ -1,4 +1,4 @@
-"""Continuous document ingest with incremental near-dedup (r11).
+"""Continuous document ingest with incremental near-dedup.
 
 The streaming twin of ``operators/text.dedup_incremental_minhash``: newly
 crawled documents land as files (production: the crawler's landing zone),
@@ -37,6 +37,7 @@ from ..operators.text import (
     incremental_probe,
     shingles,
 )
+from . import start
 
 DOC_STREAM_SCHEMA = T.StructType(
     [
@@ -104,8 +105,8 @@ def start_incremental_dedup_stream(
         from .. import io as tio
 
         # Spread the arriving files across the session's cores BEFORE the
-        # shingle explode (r18, guide §2.5 input skew): under the file-
-        # grained backpressure knob a micro-batch is typically ONE parquet
+        # shingle explode (input skew): under the file-grained
+        # backpressure knob a micro-batch is typically ONE parquet
         # split, so without this every downstream stage up to the first
         # shuffle — the explode, the shingle md5s, the cache write — runs
         # as a single task (measured 14.5 s of a 30 s docs100 batch). The
@@ -139,9 +140,4 @@ def start_incremental_dedup_stream(
             batch_bands.unpersist()
             sh_batch.unpersist()
 
-    return (
-        new_docs.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(new_docs, probe, checkpoint=checkpoint_path)

@@ -5,8 +5,9 @@ Batch detects crosses with a self-join + LAG over the full fact_sma relation
 (operators/signals.py). Streaming needs only a rolling tail: per symbol, the
 last ``long_period`` closes plus the previous (short, long) SMA pair. That
 state is a fixed-size array — O(long_period) doubles per symbol — carried by
-``applyInPandasWithState`` across micro-batches and restarts, replacing the
-unbounded-history join with an online recurrence.
+the per-symbol state scaffold (``streaming.per_symbol_state``) across
+micro-batches and restarts, replacing the unbounded-history join with an
+online recurrence.
 
 Emits one row per detected cross: BUY when the short SMA crosses strictly
 above the long SMA (prev_short ≤ prev_long ∧ short > long), SELL mirrored —
@@ -16,13 +17,7 @@ event on identical input (tested).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -31,6 +26,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from . import per_symbol_state
 
 CROSS_OUT_SCHEMA = StructType(
     [
@@ -82,50 +79,22 @@ def stream_sma_cross(
             math.floor(abs(x) * scale + 0.5) / scale, x
         ) + 0.0
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (symbol,) = key
-        if state.exists:
-            closes_raw, prev_short, prev_long = state.get
-            closes = list(closes_raw)
-        else:
-            closes, prev_short, prev_long = [], None, None
-        rows: list[tuple] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(time_col)
-            for t, c in zip(pdf[time_col], pdf[close_col]):
-                closes.append(float(c))
-                if len(closes) > long_period:
-                    closes.pop(0)
-                if len(closes) == long_period:
-                    short_v = _r(sum(closes[-short_period:]) / short_period)
-                    long_v = _r(sum(closes) / long_period)
-                    if prev_short is not None:
-                        if prev_short <= prev_long and short_v > long_v:
-                            rows.append((symbol, t, "BUY", short_v, long_v))
-                        elif prev_short >= prev_long and short_v < long_v:
-                            rows.append((symbol, t, "SELL", short_v, long_v))
-                    prev_short, prev_long = short_v, long_v
-        state.update((closes, prev_short, prev_long))
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "currency_pair_symbol",
-                    "time",
-                    "event_type",
-                    "short_value",
-                    "long_value",
-                ],
-            )
+    def step(s: tuple, c: float) -> tuple[tuple, tuple | None]:
+        closes, prev_short, prev_long = s
+        closes = [*closes, c][-long_period:]
+        if len(closes) < long_period:
+            return (closes, prev_short, prev_long), None
+        short_v = _r(sum(closes[-short_period:]) / short_period)
+        long_v = _r(sum(closes) / long_period)
+        out = None
+        if prev_short is not None:
+            if prev_short <= prev_long and short_v > long_v:
+                out = ("BUY", short_v, long_v)
+            elif prev_short >= prev_long and short_v < long_v:
+                out = ("SELL", short_v, long_v)
+        return (closes, short_v, long_v), out
 
-    return candles.groupBy("currency_pair_symbol").applyInPandasWithState(
-        update,
-        outputStructType=CROSS_OUT_SCHEMA,
-        stateStructType=CROSS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return per_symbol_state(
+        candles, step, ([], None, None), CROSS_OUT_SCHEMA, CROSS_STATE_SCHEMA,
+        time_col=time_col, value_col=close_col,
     )

@@ -20,21 +20,13 @@ bounded by watermark horizon × tick rate, not history; the stateful exchange
 hash-partitions on the dedup key, which is the same key every downstream
 OHLC window agg groups on.
 
-State-partition sizing: set ``spark.sql.shuffle.partitions`` BEFORE the
-first start of each stream to its expected key cardinality (6 pairs ×
-watermark horizon here — single digits, not the batch default). The count
-is frozen into the checkpoint, and every partition costs a state-store
-instance + a per-micro-batch commit; measured ~20% of the sf0.1 drain
-(queries/streamgate.py:_state_sized does this for the gate runs). The
-stateful starters below take ``n_state_partitions`` (r11, VERDICT r10
-task #4) and scope the conf around ``.start()`` — the count binds at the
+Starting a stream (trigger, state-partition sizing) is ``streaming.start``.
+The stateful starters take ``n_state_partitions``; the count binds at the
 FIRST start of a checkpoint, so pass it on the run that creates the
-checkpoint; ``None`` leaves session conf to the caller as before.
+checkpoint. ``None`` leaves the session conf to the caller.
 """
 
 from __future__ import annotations
-
-import contextlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +34,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.scalars import mid_price, utc_second
 from ..schemas import TICK_MESSAGE_SCHEMA
+from . import start
 
 
 def read_tick_frames(spark: SparkSession, path: str) -> DataFrame:
@@ -124,23 +117,6 @@ def stream_ohlc_1m(ticks: DataFrame) -> DataFrame:
     )
 
 
-@contextlib.contextmanager
-def _state_conf(spark: SparkSession, n_state_partitions: int | None):
-    """Scope ``spark.sql.shuffle.partitions`` around a stream start so the
-    state-store partition count (frozen into the new checkpoint) is sized
-    to the stream's expected key cardinality instead of the batch default.
-    ``None`` = no-op (caller manages session conf)."""
-    if n_state_partitions is None:
-        yield
-        return
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state_partitions))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
 def start_ohlc_stream(
     spark: SparkSession,
     source_path: str,
@@ -151,15 +127,10 @@ def start_ohlc_stream(
 ) -> StreamingQuery:
     """Frames → parse → dedup → 1-minute OHLC → parquet append."""
     candles = stream_ohlc_1m(dedup_ticks(parse_ticks(read_tick_frames(spark, source_path))))
-    with _state_conf(spark, n_state_partitions):
-        return (
-            candles.writeStream.format("parquet")
-            .option("path", sink_path)
-            .option("checkpointLocation", checkpoint_path)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+    return start(
+        candles, sink_path, checkpoint=checkpoint_path,
+        n_state_partitions=n_state_partitions,
+    )
 
 
 def start_tick_ingest(
@@ -168,16 +139,15 @@ def start_tick_ingest(
     sink_path: str,
     checkpoint_path: str,
     *,
-    available_now: bool = True,
-    processing_time: str = "1 second",
+    processing_time: str | None = None,
     watermark: str = "10 seconds",
     n_state_partitions: int | None = None,
 ) -> StreamingQuery:
     """End-to-end ingest: frames → parse → validate → dedup → parquet append.
 
-    ``available_now=True`` drains the backlog and stops (test/batch-catchup
-    mode); otherwise micro-batches on ``processing_time`` — the streaming
-    equivalent of the relay's 1 s poll cadence (ws_ticker_server.py:53).
+    ``processing_time=None`` drains the backlog and stops (test/batch-catchup
+    mode); ``"1 second"`` micro-batches at the relay's 1 s poll cadence
+    (ws_ticker_server.py:53).
 
     ``watermark`` is the late-arrival tolerance of the R6 dedup: events
     older than (max seen event time − watermark) are dropped and dedup
@@ -192,18 +162,10 @@ def start_tick_ingest(
     ticks = dedup_ticks(
         parse_ticks(read_tick_frames(spark, source_path)), watermark=watermark
     )
-    writer = (
-        ticks.writeStream.format("parquet")
-        .option("path", sink_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
+    return start(
+        ticks, sink_path, checkpoint=checkpoint_path,
+        processing_time=processing_time, n_state_partitions=n_state_partitions,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    with _state_conf(spark, n_state_partitions):
-        return writer.start()
 
 
 def start_tick_ingest_maintained(
@@ -212,8 +174,7 @@ def start_tick_ingest_maintained(
     sink_path: str,
     checkpoint_path: str,
     *,
-    available_now: bool = True,
-    processing_time: str = "1 second",
+    processing_time: str | None = None,
     watermark: str = "10 seconds",
     retention_cutoff: str | None = None,
     n_state_partitions: int | None = None,
@@ -234,11 +195,11 @@ def start_tick_ingest_maintained(
     pipeline uses.
 
     ``retention_cutoff`` (ISO date, the same value handed to
-    ``maintenance.maintain_table``) closes the replay/retention race
-    (ADVICE r4): after retention drops a ``dt`` partition, a checkpointed
-    micro-batch REPLAYED from before the drop would sail through the
-    first-wins gate (the existing side was deleted and range-pruned to the
-    batch) and silently resurrect the expired partition. The foreachBatch
+    ``maintenance.maintain_table``) closes the replay/retention race:
+    after retention drops a ``dt`` partition, a checkpointed micro-batch
+    REPLAYED from before the drop would sail through the first-wins gate
+    (the existing side was deleted and range-pruned to the batch) and
+    silently resurrect the expired partition. The foreachBatch
     therefore drops rows with ``dt < retention_cutoff`` before appending —
     expired data can never re-enter. Without a cutoff, run
     ``maintain_table`` only after the stream's checkpoint horizon has
@@ -263,15 +224,10 @@ def start_tick_ingest_maintained(
             partition_by=["dt"],
         )
 
-    writer = ticks.writeStream.foreachBatch(append_first_wins).option(
-        "checkpointLocation", checkpoint_path
+    return start(
+        ticks, append_first_wins, checkpoint=checkpoint_path,
+        processing_time=processing_time, n_state_partitions=n_state_partitions,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    with _state_conf(spark, n_state_partitions):
-        return writer.start()
 
 
 def start_latest_value_cache(
@@ -280,7 +236,7 @@ def start_latest_value_cache(
     checkpoint_path: str,
     view_name: str = "latest_ticks",
     *,
-    available_now: bool = True,
+    processing_time: str | None = None,
     emit: "Callable[[dict], None] | None" = None,
     relay_hook_kwargs: dict | None = None,
 ) -> StreamingQuery:
@@ -294,7 +250,8 @@ def start_latest_value_cache(
     error-frame/retry semantics around every micro-batch. The view is a
     GLOBAL temp view (read it as ``global_temp.<view_name>``): foreachBatch
     runs on a cloned micro-batch session, so a plain temp view would be
-    invisible to the caller's session.
+    invisible to the caller's session. ``processing_time`` is the trigger,
+    as in :func:`start_tick_ingest`.
     """
     parsed = parse_ticks(read_tick_frames(spark, source_path))
 
@@ -324,9 +281,6 @@ def start_latest_value_cache(
 
         hook = RelayHook(upsert_latest, emit, **(relay_hook_kwargs or {}))
 
-    writer = parsed.writeStream.foreachBatch(hook).option(
-        "checkpointLocation", checkpoint_path
+    return start(
+        parsed, hook, checkpoint=checkpoint_path, processing_time=processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
