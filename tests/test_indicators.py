@@ -17,21 +17,28 @@ from pyspark.sql import functions as F
 
 from trading_etl_spark.operators.indicators import (
     GROUP_KEYS,
+    _adx_series,
     _atr_series,
     _ema_series,
+    _holt_series,
     _macd_series,
     _rsi_series,
+    _trix_series,
+    adx,
     atr,
     bollinger,
     ema,
     ema_periods,
+    holt_forecast,
     keep_col,
+    keltner,
     macd,
     rsi,
     rsi_periods,
     sma,
     sma_periods,
     stochastic,
+    trix,
 )
 from trading_etl_spark.schemas import OHLC_SCHEMA
 
@@ -101,7 +108,7 @@ def test_groups_are_independent(spark):
     assert eur[2:] == pytest.approx([20.0, 30.0])
 
 
-# --- r6 additions: MACD / ATR / Bollinger / Stochastic -----------------------
+# --- MACD / ATR / Bollinger / Stochastic -------------------------------------
 
 
 def test_macd_series_golden():
@@ -390,13 +397,7 @@ def test_cci_linear_trend_constant_value(spark):
 def test_keltner_composes_ema_and_atr(spark):
     """Keltner mid/upper/lower must equal EMA(close) ± mult·ATR computed by
     the standalone kernels — the one-pass composition cannot drift from its
-    parts (r11)."""
-    from trading_etl_spark.operators.indicators import (
-        _atr_series,
-        _ema_series,
-        keltner,
-    )
-
+    parts."""
     closes = [float(c) for c in (10, 11, 13, 12, 14, 15, 13, 16, 17, 18)]
     t0 = datetime(2024, 1, 1)
     rows = [
@@ -422,11 +423,88 @@ def test_keltner_composes_ema_and_atr(spark):
     assert all(out[i]["mid"] is None for i in range(4))
 
 
+def _keltner_series(high, low, close):
+    e, a = _ema_series(close, 3), _atr_series(high, low, close, 2)
+    return e, e + 2.0 * a, e - 2.0 * a
+
+
+# name -> (the DataFrame call, its output columns, the same indicator as
+# ``_*_series`` arrays over one series' high, low and close in time order)
+_KERNELS = {
+    "adx": (
+        lambda df: adx(df, 3),
+        ("plus_di", "minus_di", "adx"),
+        lambda h, lo, c: _adx_series(h, lo, c, 3),
+    ),
+    "macd": (
+        lambda df: macd(df, 2, 3, 2),
+        ("macd", "macd_signal", "macd_hist"),
+        lambda h, lo, c: _macd_series(c, 2, 3, 2),
+    ),
+    "atr": (
+        lambda df: atr(df, 3),
+        ("value",),
+        lambda h, lo, c: (_atr_series(h, lo, c, 3),),
+    ),
+    "holt_forecast": (
+        holt_forecast,
+        ("forecast", "level", "trend"),
+        lambda h, lo, c: _holt_series(c),
+    ),
+    "keltner": (
+        lambda df: keltner(df, 3, 2, 2.0),
+        ("mid", "upper", "lower"),
+        _keltner_series,
+    ),
+    "trix": (
+        lambda df: trix(df, 2),
+        ("value",),
+        lambda h, lo, c: (_trix_series(c, 2),),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_KERNELS))
+def test_per_series_kernels_match_series_functions(spark, name):
+    """Every grouped recursive indicator returns, per (pair, timeframe)
+    series, its ``_*_series`` arrays over that series in time order, with
+    NaN as NULL and the pair, timeframe and time carried on each row —
+    whatever order the rows arrive in."""
+    call, outputs, series_fn = _KERNELS[name]
+    rng = np.random.default_rng(7)
+    t0 = datetime(2024, 1, 1)
+    series = {}
+    rows = []
+    for pair in ("USD/JPY", "EUR/USD"):
+        for tf in ("1h", "4h"):
+            close = 100.0 + np.cumsum(rng.normal(0, 1, 14))
+            high = close + rng.uniform(0.1, 1.0, 14)
+            low = close - rng.uniform(0.1, 1.0, 14)
+            times = [t0 + timedelta(hours=i) for i in range(14)]
+            series[(pair, tf)] = (times, series_fn(high, low, close))
+            rows += [
+                (pair, tf, t, float(c), float(h), float(lo), float(c))
+                for t, h, lo, c in zip(times, high, low, close)
+            ]
+    order = rng.permutation(len(rows))
+    df = spark.createDataFrame([rows[i] for i in order], OHLC_SCHEMA)
+    out = call(df)
+    assert out.columns == [*GROUP_KEYS, "time", *outputs]
+    got = {(r[0], r[1], r[2]): r for r in out.collect()}
+    assert len(got) == len(rows)
+    for key, (times, arrays) in series.items():
+        for i, t in enumerate(times):
+            r = got[(*key, t)]
+            for col, arr in zip(outputs, arrays):
+                if np.isnan(arr[i]):
+                    assert r[col] is None, (key, t, col)
+                else:
+                    assert r[col] == arr[i], (key, t, col)
+
+
 def test_trix_cascade_offsets_and_constant_series():
     """Stage k of the triple-EMA cascade is defined from index k·(p−1);
-    TRIX of a constant series is exactly 0 once defined (r11)."""
-    from trading_etl_spark.operators.indicators import _trix_series
-
+    TRIX of a constant series is exactly 0 once defined."""
     p = 3
     const = _trix_series(np.full(12, 5.0), p)
     first = 3 * (p - 1) + 1  # lag consumes one more row
@@ -439,7 +517,7 @@ def test_trix_cascade_offsets_and_constant_series():
 
 
 def test_obv_golden_vector(spark):
-    """OBV: +vol on up-close, −vol on down, 0 on flat, first row 0 (r11)."""
+    """OBV: +vol on up-close, −vol on down, 0 on flat, first row 0."""
     from trading_etl_spark.operators.indicators import obv
 
     t0 = datetime(2024, 1, 1)
@@ -460,7 +538,7 @@ def test_obv_golden_vector(spark):
 
 def test_vwap_resets_at_day_anchor(spark):
     """VWAP is the running typical-price mean weighted by volume and resets
-    at the UTC day boundary (r11)."""
+    at the UTC day boundary."""
     from trading_etl_spark.operators.indicators import vwap_anchored
 
     t0 = datetime(2024, 1, 1, 22)
@@ -484,7 +562,7 @@ def test_vwap_resets_at_day_anchor(spark):
 
 
 def test_candle_patterns_known_shapes(spark):
-    """Doji, hammer, and engulfing classify hand-built candles (r11)."""
+    """Doji, hammer, and engulfing classify hand-built candles."""
     from trading_etl_spark.operators.indicators import candle_patterns
 
     t0 = datetime(2024, 1, 1)

@@ -8,6 +8,7 @@ plan SHAPE is data-independent, so tiny frames prove the 100 TB property.
 
 from datetime import datetime, timedelta
 
+import pytest
 from pyspark.sql import functions as F
 
 from trading_etl_spark.operators import ohlc, text
@@ -222,28 +223,6 @@ def test_bollinger_stochastic_single_window_shuffle_no_python(spark):
     ):
         plan = _physical(df)
         assert "EvalPython" not in plan and "InPandas" not in plan, plan
-        assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
-def test_macd_atr_one_group_shuffle(spark):
-    """The r6 recursive indicators ride ONE groupBy(pair, timeframe)
-    exchange into their grouped Arrow kernel — same shape as EMA/RSI."""
-    from trading_etl_spark.operators import indicators
-
-    t0 = datetime(2024, 1, 1)
-    rows = [
-        ("USD/JPY", "1h", t0 + timedelta(hours=i), float(i), float(i) + 1,
-         float(i) - 1, float(i))
-        for i in range(40)
-    ]
-    ohlc_df = spark.createDataFrame(
-        rows,
-        "currency_pair_code string, timeframe_code string, time timestamp,"
-        " open double, high double, low double, close double",
-    )
-    for df in (indicators.macd(ohlc_df, 12, 26, 9), indicators.atr(ohlc_df, 14)):
-        plan = _physical(df)
-        assert "FlatMapGroupsInPandas" in plan, plan
         assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
@@ -480,9 +459,13 @@ def test_r10_native_indicators_single_window_shuffle_no_python(spark):
         assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_adx_one_group_shuffle(spark):
-    """ADX rides ONE groupBy(pair, timeframe) exchange into the grouped
-    Arrow kernel — the same shape as EMA/RSI/MACD/ATR."""
+@pytest.mark.parametrize(
+    "name", ["adx", "macd", "atr", "holt_forecast", "keltner", "trix"]
+)
+def test_recursive_indicator_one_group_shuffle(spark, name):
+    """Each recursive indicator rides ONE groupBy(pair, timeframe) exchange
+    into the grouped Arrow kernel (``indicators._per_series``) — the same
+    shape as EMA/RSI."""
     from trading_etl_spark.operators import indicators
 
     t0 = datetime(2024, 1, 1)
@@ -496,7 +479,7 @@ def test_adx_one_group_shuffle(spark):
         "currency_pair_code string, timeframe_code string, time timestamp,"
         " open double, high double, low double, close double",
     )
-    plan = _physical(indicators.adx(ohlc_df, 14))
+    plan = _physical(getattr(indicators, name)(ohlc_df))
     assert "FlatMapGroupsInPandas" in plan, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
 

@@ -5,7 +5,7 @@ from datetime import datetime
 
 from trading_etl_spark.operators.backtest import backtest_pnl
 from trading_etl_spark.operators.signals import buysell_events, dead_cross, golden_cross
-from trading_etl_spark.schemas import INDICATOR_SCHEMA
+from trading_etl_spark.schemas import EVENT_SCHEMA, INDICATOR_SCHEMA
 
 
 def _fixture(spark):
@@ -43,6 +43,12 @@ def test_dead_cross_fires_exactly_once(spark):
     assert len(events) == 1
     assert events[0]["event_datetime"] == datetime(2024, 1, 2, 11)
     assert events[0]["event_type"] == "SELL"
+
+
+def test_buysell_events_have_event_schema(spark):
+    """The signal relation is the declared event fact, field for field,
+    nullability included."""
+    assert buysell_events(_fixture(spark), 14, 28).schema == EVENT_SCHEMA
 
 
 def test_timeframe_scoping(spark):

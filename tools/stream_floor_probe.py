@@ -1,11 +1,11 @@
-"""Long-lived processingTime stream floor probe (r18 — VERDICT r17 task #5).
+"""Long-lived processingTime stream floor probe.
 
 The bench's streaming_ohlc_1m line is GATE-shaped: one availableNow drain
 per call, so every call pays the full stream start/stop + WAL/offsets +
 no-AQE planning machinery (~0.8 s at sf0.1, decomposed in
-OPTIMIZATION_r17.md) on top of the actual micro-batch compute. r17
-measured-and-rejected every cheap knob (RocksDB, pre-parse repartition,
-state partitions < 8): what remains is engine machinery a per-call drain
+OPTIMIZATION_r17.md) on top of the actual micro-batch compute. The cheap
+knobs were measured and rejected (RocksDB, pre-parse repartition, state
+partitions < 8): what remains is engine machinery a per-call drain
 cannot avoid — it only amortizes under the PRODUCTION shape, a long-lived
 ``trigger(processingTime=...)`` stream (streaming/ticks.py).
 
@@ -14,9 +14,12 @@ complete-mode OHLC stream over a landing directory, drops the fixture's
 event files in one at a time (the poll-cycle arrival pattern), and reports
 per-micro-batch ``triggerExecution``/``addBatch`` durations from the query
 progress log. The delta between the gate line's per-drain wall and the
-steady-state per-batch cost here IS the amortized fixed floor. Test-only
-measurement: the gate-shaped bench line is unchanged (the driver's
-methodology stays comparable), and nothing here is cached across runs.
+steady-state per-batch cost here IS the amortized fixed floor. The stream
+starts through ``streaming.start`` under the gate's state-partition count
+(``streaming.STATE_PARTITIONS``), so it is compared like with like against
+``streaming.drain``. Test-only measurement: the gate-shaped bench line is
+unchanged (the driver's methodology stays comparable), and nothing here is
+cached across runs.
 
 Usage: python tools/stream_floor_probe.py [sf_dir]   (default sf0.1)
 """
@@ -39,6 +42,7 @@ sys.path.insert(0, REPO)
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from trading_etl_spark import streaming
     from trading_etl_spark.session import get_spark
     from trading_etl_spark.sources import ticks
 
@@ -76,13 +80,14 @@ def main() -> None:
             F.count("*").alias("n_ticks"),
         )
     )
-    q = (
-        candles.writeStream.format("memory")
-        .queryName("stream_floor_probe_sink")
-        .outputMode("complete")
-        .trigger(processingTime="500 milliseconds")
-        .option("checkpointLocation", f"{base}/ckpt")
-        .start()
+    q = streaming.start(
+        candles,
+        "stream_floor_probe_sink",
+        checkpoint=f"{base}/ckpt",
+        mode="complete",
+        fmt="memory",
+        processing_time="500 milliseconds",
+        n_state_partitions=streaming.STATE_PARTITIONS,
     )
     try:
         # drop one file per poll cycle; wait until each is consumed

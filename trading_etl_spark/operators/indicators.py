@@ -12,6 +12,9 @@ The reference pulls time-ordered closes out of Postgres into NumPy and calls
   one ``WindowExec`` with a frame per period, and :func:`ema_periods` /
   :func:`rsi_periods` are one grouped pass that runs every period on each
   sorted series, so the per-pass cost is paid once, not once per period.
+- The other recursive indicators (MACD, ATR, ADX, Holt, Keltner, TRIX) are
+  one :func:`_per_series` call each: one grouped pass that runs a
+  ``_*_series`` NumPy kernel over each time-sorted series.
 
 TA-Lib semantics reproduced exactly (FIXTURES.md §8 golden vectors), with one
 representation choice: TA-Lib's warm-up NaN is stored as NULL — the
@@ -40,7 +43,7 @@ from typing import Iterable
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 GROUP_KEYS = ["currency_pair_code", "timeframe_code"]
@@ -235,6 +238,39 @@ def rsi(ohlc: DataFrame, period: int, calc_version: str = "0") -> DataFrame:
     return rsi_periods(ohlc, [period], calc_version)
 
 
+def _per_series(
+    ohlc: DataFrame, inputs: list[str], outputs: list[str], fn
+) -> DataFrame:
+    """One ``groupBy(pair, tf).applyInPandas`` that sorts each series by
+    ``time`` once and runs ``fn`` over it: ``fn`` takes one float64 array
+    per ``inputs`` column and returns one array per ``outputs`` column (a
+    bare array for one output). Each output row carries the pair, timeframe
+    and time of its input row; NaN leaves the kernel as NULL."""
+    schema = ", ".join(
+        [f"{k} string" for k in GROUP_KEYS]
+        + ["time timestamp"]
+        + [f"{c} double" for c in outputs]
+    )
+
+    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("time")
+        values = fn(*(pdf[c].to_numpy(dtype=np.float64) for c in inputs))
+        if len(outputs) == 1:
+            values = (values,)
+        return pd.DataFrame(
+            {
+                **{c: pdf[c].to_numpy() for c in (*GROUP_KEYS, "time")},
+                **dict(zip(outputs, values)),
+            }
+        )
+
+    return (
+        ohlc.select(*GROUP_KEYS, "time", *inputs)
+        .groupBy(*GROUP_KEYS)
+        .applyInPandas(compute, schema)
+    )
+
+
 def _macd_series(
     closes: np.ndarray, fast: int, slow: int, signal: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -330,12 +366,6 @@ def _adx_series(
     return pdi, mdi, adx
 
 
-ADX_OUT_SCHEMA = (
-    "currency_pair_code string, timeframe_code string, time timestamp, "
-    "plus_di double, minus_di double, adx double"
-)
-
-
 def adx(ohlc: DataFrame, period: int = 14) -> DataFrame:
     """ADX(period) with ±DI per (pair, timeframe) — THREE
     coupled Wilder smoothings (+DM, −DM, TR) feeding a fourth (DX→ADX),
@@ -344,37 +374,12 @@ def adx(ohlc: DataFrame, period: int = 14) -> DataFrame:
     replays the identical trajectory as chained recursive CTEs with the
     DX relation MATERIALIZED (the MACD lesson — the ADX recursion
     re-reads it every iteration)."""
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("time")
-        p, m, a = _adx_series(
-            pdf["high"].to_numpy(dtype=np.float64),
-            pdf["low"].to_numpy(dtype=np.float64),
-            pdf["close"].to_numpy(dtype=np.float64),
-            period,
-        )
-        return pd.DataFrame(
-            {
-                "currency_pair_code": pdf["currency_pair_code"].to_numpy(),
-                "timeframe_code": pdf["timeframe_code"].to_numpy(),
-                "time": pdf["time"].to_numpy(),
-                "plus_di": p,
-                "minus_di": m,
-                "adx": a,
-            }
-        )
-
-    return (
-        ohlc.select(*GROUP_KEYS, "time", "high", "low", "close")
-        .groupBy(*GROUP_KEYS)
-        .applyInPandas(compute, ADX_OUT_SCHEMA)
+    return _per_series(
+        ohlc,
+        ["high", "low", "close"],
+        ["plus_di", "minus_di", "adx"],
+        lambda h, lo, c: _adx_series(h, lo, c, period),
     )
-
-
-MACD_OUT_SCHEMA = (
-    "currency_pair_code string, timeframe_code string, time timestamp, "
-    "macd double, macd_signal double, macd_hist double"
-)
 
 
 def macd(
@@ -385,60 +390,22 @@ def macd(
     carry NaN (→ NULL across the Arrow boundary). Reference computes single
     EMAs driver-side (``src/etl/flows/transform_services.py:268-270``); MACD
     extends that family with the same seeding discipline."""
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("time")
-        m, s, h = _macd_series(
-            pdf["close"].to_numpy(dtype=np.float64), fast, slow, signal
-        )
-        return pd.DataFrame(
-            {
-                "currency_pair_code": pdf["currency_pair_code"].to_numpy(),
-                "timeframe_code": pdf["timeframe_code"].to_numpy(),
-                "time": pdf["time"].to_numpy(),
-                "macd": m,
-                "macd_signal": s,
-                "macd_hist": h,
-            }
-        )
-
-    return (
-        ohlc.select(*GROUP_KEYS, "time", "close")
-        .groupBy(*GROUP_KEYS)
-        .applyInPandas(compute, MACD_OUT_SCHEMA)
+    return _per_series(
+        ohlc,
+        ["close"],
+        ["macd", "macd_signal", "macd_hist"],
+        lambda c: _macd_series(c, fast, slow, signal),
     )
-
-
-ATR_OUT_SCHEMA = (
-    "currency_pair_code string, timeframe_code string, time timestamp, value double"
-)
 
 
 def atr(ohlc: DataFrame, period: int = 14) -> DataFrame:
     """ATR(period), Wilder smoothing (recursive → grouped ``applyInPandas``,
     same shuffle shape as :func:`rsi` but over (high, low, close))."""
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("time")
-        values = _atr_series(
-            pdf["high"].to_numpy(dtype=np.float64),
-            pdf["low"].to_numpy(dtype=np.float64),
-            pdf["close"].to_numpy(dtype=np.float64),
-            period,
-        )
-        return pd.DataFrame(
-            {
-                "currency_pair_code": pdf["currency_pair_code"].to_numpy(),
-                "timeframe_code": pdf["timeframe_code"].to_numpy(),
-                "time": pdf["time"].to_numpy(),
-                "value": values,
-            }
-        )
-
-    return (
-        ohlc.select(*GROUP_KEYS, "time", "high", "low", "close")
-        .groupBy(*GROUP_KEYS)
-        .applyInPandas(compute, ATR_OUT_SCHEMA)
+    return _per_series(
+        ohlc,
+        ["high", "low", "close"],
+        ["value"],
+        lambda h, lo, c: _atr_series(h, lo, c, period),
     )
 
 
@@ -541,10 +508,6 @@ def stochastic(ohlc: DataFrame, k_period: int = 14, d_period: int = 3) -> DataFr
 
 
 HOLT_ALPHA, HOLT_BETA = 0.2, 0.1
-HOLT_OUT_SCHEMA = (
-    "currency_pair_code string, timeframe_code string, time timestamp, "
-    "forecast double, level double, trend double"
-)
 
 
 def _holt_series(
@@ -585,27 +548,11 @@ def holt_forecast(
     ahead forecast alongside the smoothed level and trend states; the
     first row of each group carries a NULL forecast (nothing to predict
     it from)."""
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("time")
-        f, ls, bs = _holt_series(
-            pdf["close"].to_numpy(dtype=np.float64), alpha, beta
-        )
-        return pd.DataFrame(
-            {
-                "currency_pair_code": pdf["currency_pair_code"].to_numpy(),
-                "timeframe_code": pdf["timeframe_code"].to_numpy(),
-                "time": pdf["time"].to_numpy(),
-                "forecast": f,
-                "level": ls,
-                "trend": bs,
-            }
-        )
-
-    return (
-        ohlc.select(*GROUP_KEYS, "time", "close")
-        .groupBy(*GROUP_KEYS)
-        .applyInPandas(compute, HOLT_OUT_SCHEMA)
+    return _per_series(
+        ohlc,
+        ["close"],
+        ["forecast", "level", "trend"],
+        lambda c: _holt_series(c, alpha, beta),
     )
 
 
@@ -748,12 +695,6 @@ def ichimoku(
     )
 
 
-KELTNER_OUT_SCHEMA = (
-    "currency_pair_code string, timeframe_code string, time timestamp, "
-    "mid double, upper double, lower double"
-)
-
-
 def keltner(
     ohlc: DataFrame,
     ema_period: int = 20,
@@ -770,30 +711,13 @@ def keltner(
     EMAs driver-side (src/etl/flows/transform_services.py:268-270); the
     channel composition follows the published Keltner/Chester formulation."""
 
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("time")
-        e = _ema_series(pdf["close"].to_numpy(dtype=np.float64), ema_period)
-        a = _atr_series(
-            pdf["high"].to_numpy(dtype=np.float64),
-            pdf["low"].to_numpy(dtype=np.float64),
-            pdf["close"].to_numpy(dtype=np.float64),
-            atr_period,
-        )
-        return pd.DataFrame(
-            {
-                "currency_pair_code": pdf["currency_pair_code"].to_numpy(),
-                "timeframe_code": pdf["timeframe_code"].to_numpy(),
-                "time": pdf["time"].to_numpy(),
-                "mid": e,
-                "upper": e + mult * a,
-                "lower": e - mult * a,
-            }
-        )
+    def fn(high, low, close):
+        e = _ema_series(close, ema_period)
+        a = _atr_series(high, low, close, atr_period)
+        return e, e + mult * a, e - mult * a
 
-    return (
-        ohlc.select(*GROUP_KEYS, "time", "high", "low", "close")
-        .groupBy(*GROUP_KEYS)
-        .applyInPandas(compute, KELTNER_OUT_SCHEMA)
+    return _per_series(
+        ohlc, ["high", "low", "close"], ["mid", "upper", "lower"], fn
     )
 
 
@@ -820,24 +744,8 @@ def trix(ohlc: DataFrame, period: int = 15) -> DataFrame:
     Three chained order-sensitive recursions → one grouped Arrow kernel,
     single (pair, timeframe) shuffle like :func:`macd` (which chains two).
     NaN (→ NULL) until the third cascade stage and its 1-row lag exist."""
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("time")
-        return pd.DataFrame(
-            {
-                "currency_pair_code": pdf["currency_pair_code"].to_numpy(),
-                "timeframe_code": pdf["timeframe_code"].to_numpy(),
-                "time": pdf["time"].to_numpy(),
-                "value": _trix_series(
-                    pdf["close"].to_numpy(dtype=np.float64), period
-                ),
-            }
-        )
-
-    return (
-        ohlc.select(*GROUP_KEYS, "time", "close")
-        .groupBy(*GROUP_KEYS)
-        .applyInPandas(compute, ATR_OUT_SCHEMA)
+    return _per_series(
+        ohlc, ["close"], ["value"], lambda c: _trix_series(c, period)
     )
 
 

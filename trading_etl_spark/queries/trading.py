@@ -8,14 +8,18 @@ Conventions shared with the DuckDB oracles:
 - indicator warm-up (NaN) rows are excluded from query outputs (NaN vs NULL
   cannot hash-compare) — warm-up semantics are unit-tested in pytest instead;
 - every computed column is aliased identically on both sides.
+
+The indicator queries apply the first two rules through :func:`_round6`.
 """
 
 from __future__ import annotations
 
 import math as _math
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
 from .. import cache
 from ..cache import materialize
@@ -31,6 +35,25 @@ LOOKBACK = "2024-01-14 20:00:00"  # W2 recompute-window start (cursor − lookba
 
 
 # --- Spark-side builders -----------------------------------------------------
+
+
+def _round6(out: DataFrame, warm: str | None, **renamed: str) -> DataFrame:
+    """The indicator queries' output convention: keep the rows where
+    ``warm`` is not NULL (all rows for ``None``), round every double column
+    to 6dp and rename columns per ``renamed``."""
+    if warm is not None:
+        out = out.filter(F.col(warm).isNotNull())
+    return out.select(
+        *(
+            F.round(f.name, 6).alias(renamed.get(f.name, f.name))
+            if isinstance(f.dataType, DoubleType)
+            else F.col(f.name).alias(renamed[f.name])
+            if f.name in renamed
+            else f.name
+            for f in out.schema.fields
+        )
+    )
+
 
 # Session relations read by the consumer queries below, one cache kind each;
 # the in-session analog of the reference's materialized tables
@@ -132,14 +155,8 @@ def _fact_sma_1h(spark: SparkSession, sf_dir: str, periods: list[int]) -> DataFr
 
     def build():
         candles = _ohlc_1h(spark, sf_dir)
-        parts = [
-            indicators.sma(candles, p).withColumn("value", F.round("value", 6))
-            for p in periods
-        ]
-        df = parts[0]
-        for part in parts[1:]:
-            df = df.unionByName(part)
-        return materialize(df)
+        parts = [_round6(indicators.sma(candles, p), None) for p in periods]
+        return materialize(reduce(DataFrame.unionByName, parts))
 
     return cache.cached(spark, "sma", build, sf_dir, tuple(periods))
 
@@ -252,34 +269,23 @@ def q_sma_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform.py:85-119). Warm-up rows excluded."""
     base, derived = candle_chain(spark, sf_dir)
     candles = base.unionByName(derived)
-    parts = [
-        indicators.sma(candles, p)
-        .filter(F.col("value").isNotNull())
-        .withColumn("value", F.round("value", 6))
-        for p in (14, 28, 56)
-    ]
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return out
+    parts = [_round6(indicators.sma(candles, p), "value") for p in (14, 28, 56)]
+    return reduce(DataFrame.unionByName, parts)
 
 
 def q_sma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SMA(14) on 1h candles, warm-up rows excluded."""
-    out = indicators.sma(_ohlc_1h(spark, sf_dir), 14)
-    return out.filter(F.col("value").isNotNull()).withColumn("value", F.round("value", 6))
+    return _round6(indicators.sma(_ohlc_1h(spark, sf_dir), 14), "value")
 
 
 def q_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EMA(14) on 1h candles via grouped pandas UDF (TA-Lib seeding)."""
-    out = indicators.ema(_ohlc_1h(spark, sf_dir), 14)
-    return out.filter(F.col("value").isNotNull()).withColumn("value", F.round("value", 6))
+    return _round6(indicators.ema(_ohlc_1h(spark, sf_dir), 14), "value")
 
 
 def q_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RSI(14), Wilder smoothing, via grouped pandas UDF."""
-    out = indicators.rsi(_ohlc_1h(spark, sf_dir), 14)
-    return out.filter(F.col("value").isNotNull()).withColumn("value", F.round("value", 6))
+    return _round6(indicators.rsi(_ohlc_1h(spark, sf_dir), 14), "value")
 
 
 def q_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -287,15 +293,7 @@ def q_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped pandas kernel (extends the reference's single-EMA
     family, transform_services.py:268-270). Rows where all three outputs
     are defined (signal warm-up complete)."""
-    out = indicators.macd(_ohlc_1h(spark, sf_dir), 12, 26, 9)
-    return out.filter(F.col("macd_signal").isNotNull()).select(
-        "currency_pair_code",
-        "timeframe_code",
-        "time",
-        F.round("macd", 6).alias("macd"),
-        F.round("macd_signal", 6).alias("macd_signal"),
-        F.round("macd_hist", 6).alias("macd_hist"),
-    )
+    return _round6(indicators.macd(_ohlc_1h(spark, sf_dir), 12, 26, 9), "macd_signal")
 
 
 def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -306,64 +304,33 @@ def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair has nothing to predict from and is excluded; outputs round to
     6dp against a recursive-CTE oracle replaying the identical
     double-precision trajectory."""
-    out = indicators.holt_forecast(_ohlc_1h(spark, sf_dir))
-    return out.filter(F.col("forecast").isNotNull()).select(
-        "currency_pair_code",
-        "timeframe_code",
-        "time",
-        F.round("forecast", 6).alias("forecast"),
-        F.round("level", 6).alias("level"),
-        F.round("trend", 6).alias("trend"),
-    )
+    return _round6(indicators.holt_forecast(_ohlc_1h(spark, sf_dir)), "forecast")
 
 
 def q_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ATR(14) on 1h candles, Wilder smoothing over true range."""
-    out = indicators.atr(_ohlc_1h(spark, sf_dir), 14)
-    return out.filter(F.col("value").isNotNull()).withColumn(
-        "value", F.round("value", 6)
-    )
+    return _round6(indicators.atr(_ohlc_1h(spark, sf_dir), 14), "value")
 
 
 def q_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADX(14) + ±DI on 1h candles — the four-recursion Wilder kernel.
     Rows kept from the first defined ADX (±DI are defined there too)."""
-    out = indicators.adx(_ohlc_1h(spark, sf_dir), 14)
-    return out.filter(F.col("adx").isNotNull()).select(
-        "currency_pair_code",
-        "timeframe_code",
-        "time",
-        F.round("plus_di", 6).alias("plus_di"),
-        F.round("minus_di", 6).alias("minus_di"),
-        F.round("adx", 6).alias("adx"),
-    )
+    return _round6(indicators.adx(_ohlc_1h(spark, sf_dir), 14), "adx")
 
 
 def q_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bollinger(20, 2σ_pop) bands on 1h candles — pure native windows,
     zero Python. Warm-up rows excluded."""
     out = indicators.bollinger(_ohlc_1h(spark, sf_dir), 20, 2.0)
-    return out.filter(F.col("mid").isNotNull()).select(
-        "currency_pair_code",
-        "timeframe_code",
-        "time",
-        F.round("mid", 6).alias("mid"),
-        F.round("upper", 6).alias("upper_band"),
-        F.round("lower", 6).alias("lower_band"),
-    )
+    return _round6(out, "mid", upper="upper_band", lower="lower_band")
 
 
 def q_donchian(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Donchian(20) channels on 1h candles — native min/max windows, zero
     Python. Warm-up rows excluded."""
     out = indicators.donchian(_ohlc_1h(spark, sf_dir), 20)
-    return out.filter(F.col("mid").isNotNull()).select(
-        "currency_pair_code",
-        "timeframe_code",
-        "time",
-        F.round("upper", 6).alias("upper_channel"),
-        F.round("lower", 6).alias("lower_channel"),
-        F.round("mid", 6).alias("mid_channel"),
+    return _round6(
+        out, "mid", upper="upper_channel", lower="lower_channel", mid="mid_channel"
     )
 
 
@@ -374,49 +341,26 @@ def q_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle reproduces the same NULL pattern natively — nothing to
     filter (the NaN→NULL exclusion convention applies only to pandas-UDF
     outputs)."""
-    out = indicators.ichimoku(_ohlc_1h(spark, sf_dir))
-    return out.select(
-        "currency_pair_code",
-        "timeframe_code",
-        "time",
-        F.round("tenkan_sen", 6).alias("tenkan_sen"),
-        F.round("kijun_sen", 6).alias("kijun_sen"),
-        F.round("senkou_a", 6).alias("senkou_a"),
-        F.round("senkou_b_ln", 6).alias("senkou_b_ln"),
-        F.round("chikou", 6).alias("chikou"),
-    )
+    return _round6(indicators.ichimoku(_ohlc_1h(spark, sf_dir)), None)
 
 
 def q_williams_r(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Williams %R(14) on 1h candles — native min/max windows, zero
     Python. Warm-up rows excluded."""
-    out = indicators.williams_r(_ohlc_1h(spark, sf_dir), 14)
-    return out.filter(F.col("pct_r").isNotNull()).withColumn(
-        "pct_r", F.round("pct_r", 6)
-    )
+    return _round6(indicators.williams_r(_ohlc_1h(spark, sf_dir), 14), "pct_r")
 
 
 def q_cci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCI(20) on 1h candles — native windows + a codegen list fold for the
     per-row-anchored mean deviation, zero Python. Warm-up and
     zero-deviation rows excluded (NULL in both engines)."""
-    out = indicators.cci(_ohlc_1h(spark, sf_dir), 20)
-    return out.filter(F.col("cci").isNotNull()).withColumn(
-        "cci", F.round("cci", 6)
-    )
+    return _round6(indicators.cci(_ohlc_1h(spark, sf_dir), 20), "cci")
 
 
 def q_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fast stochastic %K(14)/%D(3) on 1h candles — native min/max/avg
     windows, zero Python. Rows with both outputs defined."""
-    out = indicators.stochastic(_ohlc_1h(spark, sf_dir), 14, 3)
-    return out.filter(F.col("pct_d").isNotNull()).select(
-        "currency_pair_code",
-        "timeframe_code",
-        "time",
-        F.round("pct_k", 6).alias("pct_k"),
-        F.round("pct_d", 6).alias("pct_d"),
-    )
+    return _round6(indicators.stochastic(_ohlc_1h(spark, sf_dir), 14, 3), "pct_d")
 
 
 def q_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,13 +369,7 @@ def q_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure native windows, zero Python (operators/indicators.volatility).
     Warm-up rows excluded."""
     out = indicators.volatility(_ohlc_1h(spark, sf_dir), 20)
-    return out.filter(F.col("realized_vol").isNotNull()).select(
-        "currency_pair_code",
-        "timeframe_code",
-        "time",
-        F.round("realized_vol", 6).alias("realized_vol"),
-        F.round("parkinson_vol", 6).alias("parkinson_vol"),
-    )
+    return _round6(out, "realized_vol")
 
 
 def q_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -440,23 +378,15 @@ def q_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
     where the slower recursion (EMA 20) is seeded; both engines define the
     channel on the same rows."""
     out = indicators.keltner(_ohlc_1h(spark, sf_dir), 20, 10, 2.0)
-    return out.filter(F.col("mid").isNotNull()).select(
-        "currency_pair_code",
-        "timeframe_code",
-        "time",
-        F.round("mid", 6).alias("mid_line"),
-        F.round("upper", 6).alias("upper_channel"),
-        F.round("lower", 6).alias("lower_channel"),
+    return _round6(
+        out, "mid", mid="mid_line", upper="upper_channel", lower="lower_channel"
     )
 
 
 def q_trix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRIX(15) on 1h candles — triple-EMA cascade + 1-row ROC in one
     grouped Arrow kernel. Warm-up rows excluded."""
-    out = indicators.trix(_ohlc_1h(spark, sf_dir), 15)
-    return out.filter(F.col("value").isNotNull()).withColumn(
-        "value", F.round("value", 6)
-    )
+    return _round6(indicators.trix(_ohlc_1h(spark, sf_dir), 15), "value")
 
 
 def q_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
