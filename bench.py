@@ -17,11 +17,11 @@ repeat, so a query's 5 samples are spread across the full bench duration
 instead of being consecutive — a multi-minute load burst poisons one round
 of every query rather than all 5 runs of a few (consecutive runs under a
 sustained burst once crept far enough to force a re-run even at
-min-of-5). The COLD lines (candle_chain_cold, candle_cache_cold,
-kmeans_train_cold, ivf_index_build_cold) stay consecutive: they must clear the relation caches
-to be cold, and doing that inside the headline rounds would force every
-warm query onto fresh cached-relation identities (new plans + codegen)
-each round — a measured +1.5-2 s artifact. ``queries`` holds per-query
+min-of-5). The COLD lines (the ``*_cold`` builds in ``cold_lines``)
+stay consecutive: they must clear the relation caches to be cold, and
+doing that inside the headline rounds would force every warm query
+onto fresh cached-relation identities (new plans + codegen) each round —
+a measured +1.5-2 s artifact. ``queries`` holds per-query
 MEDIANS (``value`` = their sum, the series-comparable headline) and
 ``queries_min`` per-query MINIMA (``min_total_sec`` = their sum) — min is
 the standard noise-robust estimator for a CPU-bound deterministic
@@ -163,13 +163,17 @@ def main() -> None:
     #   and the IVF inverted lists the ANN/SemDeDup lines serve from;
     # - lsh_bands_build_cold, exsub_positions_build_cold, bloom_build_cold:
     #   the persisted index/filter artifacts of a corpus rollout; the
-    #   upstream shingle relation stays warm.
+    #   upstream shingle relation stays warm;
+    # - simhash_build_cold, srp_bands_build_cold: the simhash signature
+    #   relation (the simhash/CC/dup-graph family) and the SRP band index
+    #   (embedding LSH near-dup and the dup-graph queries).
     # The cold lines stay CONSECUTIVE deliberately: interleaving them into
     # the headline rounds would clear the relation caches every round,
     # forcing every headline query onto fresh cached-relation identities
     # (new plans, fresh codegen) — measured +1.5-2 s of per-round re-warm
     # on the as-of query alone, an artifact, not query cost.
     from trading_etl_spark import cache
+    from trading_etl_spark.operators import similarity
     from trading_etl_spark.operators import text as text_mod
     from trading_etl_spark.queries import datapipe
     from trading_etl_spark.queries import trading as trading_mod
@@ -205,6 +209,10 @@ def main() -> None:
          lambda: text_mod._positions_cached(docs_rel, text_mod.EXSUB_K)),
         ("bloom_build_cold", ("bloom",),
          lambda: text_mod._bloom_cached(test_rel)),
+        ("simhash_build_cold", ("simhash",),
+         lambda: text_mod._simhash_cached(docs_rel)),
+        ("srp_bands_build_cold", ("srp_bands",),
+         lambda: similarity._srp_banded_cached(datapipe._emb(spark, sf_dir))),
     ]
     for line, kinds, build in cold_lines:
         samples: list[float] = []

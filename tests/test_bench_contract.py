@@ -28,6 +28,8 @@ def _fake_runs():
         "lsh_bands_build_cold",
         "exsub_positions_build_cold",
         "bloom_build_cold",
+        "simhash_build_cold",
+        "srp_bands_build_cold",
         "events_scan_full",
         "events_scan_pruned_3d",
         "skew_join_agg_naive",

@@ -1562,6 +1562,121 @@ def test_dedup_incremental_probes_corpus_only(spark):
     ).count() == 0
 
 
+def _shingle_sets(texts):
+    """{doc_id: set of distinct space-joined token 3-grams}."""
+    out = {}
+    for doc_id, text in texts.items():
+        toks = text.split(" ")
+        out[doc_id] = {
+            " ".join(toks[i:i + tx.SHINGLE_N])
+            for i in range(len(toks) - tx.SHINGLE_N + 1)
+        }
+    return out
+
+
+def _ratio6(num, den):
+    """Half-up 6dp rounding of num/den over exact integers; None on den 0."""
+    return ((2000000 * num + den) // (2 * den)) / 1000000.0 if den else None
+
+
+def _jaccard6(a, b):
+    return _ratio6(len(a & b), len(a | b))
+
+
+def _band_collisions(sets):
+    """Pairs (a < b) sharing any MinHash band key, recomputed from md5 the
+    way the signature and band relations define it."""
+    import hashlib
+    from itertools import combinations
+
+    r = tx.MINHASH_SEEDS // tx.MINHASH_BANDS
+    keys = {}
+    for doc_id, sh in sets.items():
+        if not sh:
+            continue  # no shingle rows → no signature, no band rows
+        digests = [hashlib.md5(x.encode()).hexdigest() for x in sh]
+        sig = [
+            min(
+                (int(d[:15], 16) + s * int(d[16:24], 16)) % tx.MINHASH_CW_P
+                for d in digests
+            )
+            for s in range(tx.MINHASH_SEEDS)
+        ]
+        keys[doc_id] = {
+            (b, hashlib.md5("|".join(str(h) for h in sig[b * r:(b + 1) * r])
+                            .encode()).hexdigest())
+            for b in range(tx.MINHASH_BANDS)
+        }
+    return {(a, b) for a, b in combinations(sorted(keys), 2) if keys[a] & keys[b]}
+
+
+def test_minhash_containment_matches_brute_force(spark):
+    """A short document planted verbatim inside a long one is contained
+    in it (containment 1.0) while its jaccard stays below 1; an unrelated
+    document shares no shingle and never appears. Both containment
+    directions and the jaccard equal a brute force over the shingle sets,
+    rounded half-up to 6dp."""
+    short = " ".join(f"w{i}" for i in range(20))
+    texts = {
+        1: short,
+        2: "lead in " + short + " tail words",
+        3: "nothing here overlaps with any other document in this corpus",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    rows = tx.dedup_minhash_containment(docs).collect()
+    assert [(r["doc_a"], r["doc_b"]) for r in rows] == [(1, 2)]
+    sets = _shingle_sets(texts)
+    a, b = sets[1], sets[2]
+    got = rows[0]
+    assert got["containment_a_in_b"] == _ratio6(len(a & b), len(a)) == 1.0
+    assert got["containment_b_in_a"] == _ratio6(len(a & b), len(b))
+    assert got["jaccard"] == _jaccard6(a, b) < 1.0
+
+
+def _lsh_eval_brute(texts, threshold=0.5):
+    from itertools import combinations
+
+    sets = _shingle_sets(texts)
+    cand = _band_collisions(sets)
+    verified = {p for p in cand if _jaccard6(sets[p[0]], sets[p[1]]) >= threshold}
+    exact = {
+        (a, b)
+        for a, b in combinations(sorted(sets), 2)
+        if sets[a] & sets[b] and _jaccard6(sets[a], sets[b]) >= threshold
+    }
+    return len(cand), len(verified), len(exact)
+
+
+@pytest.mark.parametrize("corpus", ["near_dups", "disjoint"])
+def test_lsh_eval_report_matches_brute_force(spark, corpus):
+    """The report's three counts equal a brute force (band collisions
+    recomputed from md5, jaccard over the shingle sets) and its two
+    ratios are their 6dp ratios. On a corpus whose documents share no
+    shingle nothing is exact, so recall is NULL, not an error."""
+    if corpus == "near_dups":
+        texts = {r[0]: r[1] for r in _docs(spark).collect()}
+        base = "one two three four five six seven eight nine ten eleven twelve"
+        texts.update({
+            10: base,
+            11: base.replace("twelve", "dozen"),
+            12: base.replace("six", "half"),
+        })
+    else:
+        texts = {i: " ".join(f"d{i}t{j}" for j in range(8)) for i in range(5)}
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    (got,) = tx.lsh_eval_report(docs).collect()
+    n_cand, n_ver, n_exact = _lsh_eval_brute(texts)
+    assert (got["n_candidates"], got["n_verified"], got["n_exact"]) == (
+        n_cand, n_ver, n_exact
+    )
+    assert got["candidate_precision"] == _ratio6(n_ver, n_cand)
+    assert got["recall"] == _ratio6(n_ver, n_exact)
+    if corpus == "disjoint":
+        assert n_exact == 0 and got["recall"] is None
+    else:
+        assert n_exact > 0 and n_cand > 0
+
+
 def test_hard_negatives_picks_similar_wrong_label(spark):
     """r11: the miner must rank by similarity WITHIN the wrong-label set,
     report the best same-label similarity as the positive, and exclude

@@ -637,14 +637,14 @@ def test_product_profit_q9_pushes_name_predicate(spark):
 
 
 def test_incremental_dedup_probe_is_one_sided(spark):
-    """r11: the incremental gate's candidate join must key on
+    """The incremental gate's candidate join must key on
     (band_idx, band_key) — an equi-join, never a cartesian — and the
     static exchange count stays bounded (the pinned nodes include the
     cached shingle subtree's repeats across the verify branches — which
-    collapse to one materialization at runtime — plus, since the r18
-    sided verify, the per-side size aggregates and the colliding-doc
+    collapse to one materialization at runtime — plus, with the sided
+    verify, the per-side size aggregates and the colliding-doc
     broadcast semi-join's candidate subtree; a repartition slipping into
-    _band_keys or the split filter would push it past the pin). The
+    band_keys or the split filter would push it past the pin). The
     corpus side must carry the semi-join prune (LeftSemi + a broadcast
     of the distinct colliding doc ids) so no corpus-shingle shuffle can
     reappear upstream of the verify joins."""
@@ -655,13 +655,13 @@ def test_incremental_dedup_probe_is_one_sided(spark):
     plan = _physical(text.dedup_incremental_minhash(docs))
     assert "CartesianProduct" not in plan, plan
     assert "band_key" in plan, plan
-    assert "LeftSemi" in plan, plan  # r18: colliding-doc corpus prune
+    assert "LeftSemi" in plan, plan  # colliding-doc corpus prune
     n_exchange = plan.count("Exchange")
     assert n_exchange <= 21, f"exchange count regressed: {n_exchange}\n{plan}"
 
 
 def test_streaming_probe_inner_plan_cached_index_broadcast_batch(spark):
-    """VERDICT r11 task #4: the streaming ingest gate's per-micro-batch
+    """The streaming ingest gate's per-micro-batch
     probe (the exact composition streaming/docs.py::probe builds —
     batch bands ⋈ persisted corpus band index, verify over batch∪corpus
     shingles) at plan-pin parity with its batch twin above. Two
@@ -675,8 +675,7 @@ def test_streaming_probe_inner_plan_cached_index_broadcast_batch(spark):
       BROADCAST (batch ≪ corpus index), never a cartesian.
     """
     from trading_etl_spark.operators.text import (
-        _band_keys,
-        _minhash_from_shingles,
+        band_keys,
         incremental_probe,
         shingles,
     )
@@ -698,7 +697,7 @@ def test_streaming_probe_inner_plan_cached_index_broadcast_batch(spark):
     )
     sh_batch = shingles(batch)
     matches = incremental_probe(
-        _band_keys(_minhash_from_shingles(sh_batch)),
+        band_keys(sh_batch),
         corpus_bands,
         sh_batch,
         sh_corpus,

@@ -359,8 +359,7 @@ def test_incremental_dedup_stream_matches_batch_probe(spark, tmp_path):
     (statelessness), and an arrival near-duplicating another ARRIVAL (not
     the corpus) must pass through unmatched."""
     from trading_etl_spark.operators.text import (
-        _band_keys,
-        _minhash_from_shingles,
+        band_keys,
         incremental_probe,
         shingles,
     )
@@ -391,8 +390,8 @@ def test_incremental_dedup_stream_matches_batch_probe(spark, tmp_path):
     want = {
         (r["doc_id"], r["dup_of"], r["jaccard"])
         for r in incremental_probe(
-            _band_keys(_minhash_from_shingles(sh_a)),
-            _band_keys(_minhash_from_shingles(sh_c)),
+            band_keys(sh_a),
+            band_keys(sh_c),
             sh_a,
             sh_c,
         ).collect()

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..cache import cached, materialize
 from ..sources.ticks import spread_if_underpartitioned
+from .text import colliding_pairs
 
 N_QUERIES = 16  # vec_id < 16 are the demo query vectors
 TOP_K = 3
@@ -175,7 +176,7 @@ def knn_filtered(
     n_queries: int = N_QUERIES,
     label: int = FILTER_LABEL,
 ) -> DataFrame:
-    """FILTERED vector search (r10-born): exact top-k cosine among corpus
+    """FILTERED vector search: exact top-k cosine among corpus
     vectors satisfying a metadata predicate (``label == FILTER_LABEL``) —
     the retrieval-with-constraints shape every production vector store
     serves (tenant/language/source filters on top of similarity).
@@ -199,7 +200,7 @@ def knn_filtered(
 def hard_negatives(
     emb: DataFrame, k: int = TOP_K, n_queries: int = N_QUERIES
 ) -> DataFrame:
-    """Contrastive hard-negative mining (r11-born): for each query vector,
+    """Contrastive hard-negative mining: for each query vector,
     the top-k most-similar corpus vectors with a DIFFERENT label, plus the
     query's best same-label similarity (``positive_sim``) and the margin
     ``positive_sim − cos_sim`` — the standard training-pair miner for
@@ -213,7 +214,7 @@ def hard_negatives(
     and the different-label top-k rank ride the SAME query_id window
     exchange, so the expensive cosine stage is never replayed for a
     second consumer (the multi-consumer-recompute trap triangle_stats
-    fixed in r11). Queries with no same-label partner drop out
+    also avoids). Queries with no same-label partner drop out
     (positive_sim IS NULL — inner-join semantics)."""
     scored = _exact_scored(emb, emb, n_queries, labels=True).select(
         "query_id", "_qlabel", "neighbor_id", "_clabel", "cos_sim"
@@ -371,7 +372,7 @@ KMEANS_ITERS = 3
 
 def _mean_update(assigned: DataFrame, col: str, dim: int) -> DataFrame:
     """Centroid mean update — (cell, cv) rows via posexplode → one
-    (cell, pos) hash-agg. MEASURED DECISION (r13): an alternative with
+    (cell, pos) hash-agg. MEASURED DECISION: an alternative with
     ``dim`` per-component AVG buffers in one groupBy(cell) was tried and
     REVERTED — it benchmarked 2.5-3× SLOWER (isolated A/B at sf0.1,
     3 Lloyd iterations: 2.0 s explode vs 6.5 s wide-agg cold, 1.2 vs
@@ -396,7 +397,7 @@ def _mean_update(assigned: DataFrame, col: str, dim: int) -> DataFrame:
 
 def _mean_update_rows(assigned: DataFrame, col: str) -> list[tuple[int, list[float]]]:
     """Centroid mean update collected straight off the (cell, pos) agg —
-    the driver-loop twin of :func:`_mean_update` (r17, guide §5). Both
+    the driver-loop twin of :func:`_mean_update` (guide §5). Both
     Lloyd loops pull the k×dim result to the driver every iteration
     anyway, so the second (cell) shuffle plus the collect_list /
     array_sort / transform assembly — re-analyzed per iteration, the loop
@@ -547,7 +548,7 @@ def assign_cells(emb: DataFrame, codebook: Codebook) -> DataFrame:
 def ivf_inverted_index(emb: DataFrame, codebook: Codebook) -> DataFrame:
     """The IVF INVERTED-LIST relation — (neighbor_id, cell, nv, nnorm):
     every corpus vector tagged with its trained coarse cell, its norm
-    materialized once per row (r10). This is index-BUILD state, exactly
+    materialized once per row. This is index-BUILD state, exactly
     what FAISS's IndexIVF stores: production serving never re-assigns the
     corpus per query, it reads the prebuilt lists. Callers cache/persist
     this relation next to the codebook (queries/datapipe._ivf_index) so
@@ -571,7 +572,7 @@ def ivf_drift_report(
     assigned: DataFrame | None = None,
     min_mean_cos: float = DRIFT_MIN_MEAN_COS,
 ) -> DataFrame:
-    """Per-cell quantizer-drift report (r10-born) — the RETRAIN gate that
+    """Per-cell quantizer-drift report — the RETRAIN gate that
     closes the ANN lifecycle (train → index → serve → recall-eval →
     drift-detect): for each trained cell, its population, corpus share,
     and the mean/min cosine of member vectors to THEIR OWN centroid.
@@ -840,7 +841,7 @@ def knn_ivfadc(
 ) -> DataFrame:
     """IVFADC (Jégou et al., TPAMI 2011 §IV) — the production ANN read
     path a 100 TB vector store actually runs, composing this repo's two
-    halves (VERDICT r5 task #5): an IVF coarse quantizer restricts WHICH
+    halves: an IVF coarse quantizer restricts WHICH
     vectors are scored (probe the ``nprobe`` nearest of ``n_coarse``
     learned cells) and PQ codes + asymmetric distance computation decide
     HOW each candidate is scored (m table lookups on integer codes — the
@@ -874,7 +875,7 @@ def knn_ivfadc(
     if assigned is None:
         # standalone path; production callers pass the CACHED inverted-list
         # relation (queries/datapipe._ivf_index) so the Arrow assignment
-        # stage runs at index-build time, not per query (r10)
+        # stage runs at index-build time, not per query
         assigned = ivf_inverted_index(emb, codebook)
     assigned = assigned.select("neighbor_id", F.col("cell").alias("ivf_cell"))
     codes, books = pq if pq is not None else pq_model(emb, m, pq_k, pq_iters, dim)
@@ -1013,7 +1014,7 @@ def _srp_band_keys_udf(dim: int, n_bands: int, band_bits: int, seed: str = SRP_S
         keys = bits.reshape(len(V), n_bands, band_bits) @ weights  # (n, n_bands)
         return pd.Series(list(keys.astype("int32")))
 
-    # asNondeterministic (guide §4.4, r18): the posexplode over the UDF
+    # asNondeterministic (guide §4.4): the posexplode over the UDF
     # column makes InferFiltersFromGenerate add a size/isnotnull filter
     # whose pushdown re-inlines the UDF — the plan carried TWO
     # ArrowEvalPython nodes, every row crossing the Python boundary and
@@ -1090,14 +1091,10 @@ def embedding_near_dup_lsh(
     """
     banded = _srp_banded_cached(emb, dim=dim, n_bands=n_bands,
                                 band_bits=band_bits)
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band_idx", "band_key"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
+    cand = colliding_pairs(
+        banded, ["band_idx", "band_key"], "vec_id", "vec_a", "vec_b"
     )
-    # Per-VECTOR norms computed below the join (r18, guide §2.3): the
+    # Per-VECTOR norms computed below the join (guide §2.3): the
     # inline cosine() ran three interpreted array folds per candidate
     # PAIR (dot + both self-norms) — on the near-orthogonal fixture the
     # banding admits ~all pairs, so two of the three folds repeated per
@@ -1154,7 +1151,7 @@ def quantize_int8(emb: DataFrame) -> DataFrame:
 
 
 SIL_Q = 10000  # component quantization grid: 1e-4 units
-# enforced input contract (ADVICE r14): |component| ≤ SIL_MAX_ABS, checked
+# enforced input contract: |component| ≤ SIL_MAX_ABS, checked
 # AT quantization time on both engines (Spark raise_error / DuckDB error),
 # so the BIGINT pipeline can never wrap silently under Spark's non-ANSI
 # arithmetic while DuckDB raises — the asymmetric failure mode is closed.
@@ -1162,15 +1159,15 @@ SIL_Q = 10000  # component quantization grid: 1e-4 units
 # so d² ≤ dim·4e10 and the s-ratio's 2·|b−a|·1e6 term stays < 2^63 for
 # dim ≤ 115 (fixture dim = 8; unit-ish embeddings sit 10× inside the bound).
 SIL_MAX_ABS = 10.0
-# ceiling on the centroid codebook embedded as SQL literals (VERDICT r14
-# watch item): the two-job pattern inlines k·dim BIGINTs into ONE
-# map()/named_struct expression, which Catalyst must parse/analyze/codegen
+# ceiling on the centroid codebook embedded as SQL literals: the two-job
+# pattern inlines k·dim BIGINTs into ONE map()/named_struct expression,
+# which Catalyst must parse/analyze/codegen
 # — fine at today's label counts, quadratic pain beyond. Above this bound
 # the operator fails loudly with the designed alternative (broadcast-join
 # the codebook on label: one extra k·dim-row broadcast hash join, no
 # literal growth) rather than compiling a multi-MB expression tree.
 SIL_MAX_CODEBOOK_LITERALS = 200_000
-# DERIVED dim ceiling (ADVICE r15): the SIL_MAX_ABS headroom math above is
+# DERIVED dim ceiling: the SIL_MAX_ABS headroom math above is
 # valid only while dim·(2·SIL_MAX_ABS·SIL_Q)²·1e6·2 < 2^63 — the per-
 # component contract alone cannot stop a high-dim max-magnitude vector
 # from wrapping Spark's non-ANSI BIGINT s-ratio while DuckDB raises, the
@@ -1187,8 +1184,8 @@ from .text import half_away_div  # noqa: E402
 
 
 def cluster_silhouette(emb: DataFrame) -> DataFrame:
-    """Simplified silhouette per label (r14-born — the cluster-quality
-    eval of the embedding lifecycle, next to :func:`ivf_drift_report`):
+    """Simplified silhouette per label (the cluster-quality eval of
+    the embedding lifecycle, next to :func:`ivf_drift_report`):
     for each point, a = squared distance to its OWN label centroid, b =
     min squared distance to any OTHER label centroid, s = (b−a)/max(a,b);
     the per-label mean-s says how separable that label's cluster is.
@@ -1201,14 +1198,14 @@ def cluster_silhouette(emb: DataFrame) -> DataFrame:
     silhouette is undefined at k = 1 and the NULL says so rather than
     faking a score.
 
-    Exactness (the post-r13 discipline — no float-margin class): every
+    Exactness (no float-margin class): every
     component quantizes to the BIGINT 1e-4 grid (floor(x·1e4 + 0.5) of
     the exact float→double cast), centroids are half-away-from-zero
     integer means, a/b are exact integer squared distances, per-point s
     is the round-half-up integer ratio in 1e-6 units, and the per-label
     mean goes through the fixed6 integer mean — order-, partitioning-
     and engine-independent by construction. Overflow headroom is
-    ENFORCED, not assumed (ADVICE r14): quantization raises on any
+    ENFORCED, not assumed: quantization raises on any
     component with |x| > ``SIL_MAX_ABS`` — on BOTH engines (Spark
     raise_error, DuckDB error), so a large-magnitude vector fails
     loudly instead of wrapping silently in Spark's non-ANSI BIGINT
@@ -1218,7 +1215,7 @@ def cluster_silhouette(emb: DataFrame) -> DataFrame:
     points per label. (Unit-ish embeddings — this corpus — sit 10×
     inside the bound.)
 
-    Codebook-literal ceiling (VERDICT r14 watch item): the map()/
+    Codebook-literal ceiling: the map()/
     named_struct codebook below is a LITERAL-STRING plan that grows
     with k·dim — Catalyst parse/analysis/codegen cost and plan-size
     limits make it the wrong shape past ~10⁵ literals, so the operator
@@ -1253,13 +1250,13 @@ def cluster_silhouette(emb: DataFrame) -> DataFrame:
         # carries the same two-arm CASE with DuckDB's error()). The NULL
         # arm is explicit so the failure message is truthful: without it
         # a NULL comparison would fall into the overflow ELSE and
-        # misdiagnose corrupt data as an overflow (r15 self-review).
+        # misdiagnose corrupt data as an overflow.
         eval_once(F.expr(
-            # the dim arm (ADVICE r15) fires before any component quantizes:
+            # the dim arm fires before any component quantizes:
             # past SIL_MAX_DIM the headroom derivation no longer bounds the
             # s-ratio under 2^63, so the operator fails loudly on BOTH
             # engines instead of wrapping silently on one.
-            # eval_once (r18): qv feeds the posexplode centroid agg (whose
+            # eval_once: qv feeds the posexplode centroid agg (whose
             # inferred generator filter would re-inline the quantizing
             # transform twice more per row) AND both distance expressions
             # of the scoring projection — pin it to one evaluation per row.

@@ -54,7 +54,7 @@ def with_tokens(docs: DataFrame) -> DataFrame:
 
 def ratio6(num, den):
     """Exact 6dp half-up rounding of an INTEGER ratio num/den as a Column
-    expression (divergence classes 4+5, r13): round6(num/den) =
+    expression: round6(num/den) =
     (t − t mod 2·den) / 2·den / 10⁶ with t = 2·10⁶·num + den — all
     intermediate values are exact integers, the final two divisions are
     exact-multiple and power-of-ten divisions (correctly rounded IEEE), so
@@ -91,8 +91,8 @@ def shingle_arrays(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
 
 def eval_once(col) -> Column:
     """Pin a COMPUTED column to one evaluation per row behind an
-    always-true nondeterministic guard — the r17 tickify pattern (guide
-    §4.4 applied to builtins), generalized in r18 for GENERATOR inputs:
+    always-true nondeterministic guard (guide §4.4 applied to builtins),
+    the same pattern the tick parse uses, here for GENERATOR inputs:
     ``InferFiltersFromGenerate`` adds ``size(e) > 0 AND isnotnull(e)``
     under every non-outer explode/posexplode, and predicate pushdown then
     re-inlines the full generator expression into that filter — the
@@ -128,7 +128,7 @@ def shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     ``.distinct()`` would shuffle the widest relation in the whole dedup
     pipeline (measured 2.3× on the 260k-shingle sf0.1 corpus; at 100 TB it
     removes the largest exchange outright). The explode input is pinned
-    with :func:`eval_once` (r18) so the inferred generator filter cannot
+    with :func:`eval_once` so the inferred generator filter cannot
     re-inline the shingle chain 2× more per doc."""
     return shingle_arrays(docs, n).select(
         "doc_id", eval_once(F.col("sh")).alias("sh")
@@ -175,7 +175,7 @@ def mixture_plan(
     weights: dict[str, float] | None = None,
     budget_factor: float = 1.0,
 ) -> DataFrame:
-    """Training-mixture sampling plan (r11-born): given target language
+    """Training-mixture sampling plan: given target language
     weights and a token budget (``budget_factor`` × the corpus's total
     tokens), the per-language sampling rate and epoch count a data-mixing
     pipeline needs — rate > 1 means the language must repeat (epochs is
@@ -220,7 +220,7 @@ def mixture_plan(
 
 
 def ngram_diversity(docs: DataFrame, max_n: int = 3) -> DataFrame:
-    """Distinct-n diversity per document (r10-born): for n = 1..``max_n``,
+    """Distinct-n diversity per document: for n = 1..``max_n``,
     the share of distinct token n-grams among all n-grams — the
     "distinct-1/2/3" repetition diagnostic of text-generation eval
     (low distinct-2/3 = loops and boilerplate; the corpus-level analog of
@@ -385,7 +385,7 @@ def domain_mix_sample(docs: DataFrame, weight_col: str = "weight") -> DataFrame:
     # min, not first: identical under the constant-weight-per-source
     # contract, deterministic (and oracle-matching) outside it — first()
     # is partition-order-dependent and would silently diverge from the
-    # DuckDB twin's min(w) on a violated contract (ADVICE r5)
+    # DuckDB twin's min(w) on a violated contract
     per_src = d.groupBy("source").agg(
         F.min("w").alias("w"), F.sum("n_tokens").alias("avail")
     )
@@ -427,7 +427,7 @@ def _cms_cell_expr(tok_col: str, row: int, width: int) -> str:
 
 
 def _cms_cell_expr_spark(tok_col: str, row: int, width: int) -> str:
-    """Spark-side twin of :func:`_cms_cell_expr` (r18): the instr form
+    """Spark-side twin of :func:`_cms_cell_expr`: the instr form
     inlines the md5 into each of its 8 digit terms, so every token row
     paid 8 md5 evaluations per hash row — 32 per token at depth 4
     (measured 4.97 s of the 4.7 s sketch aggregation at sf0.1). ``conv``
@@ -474,7 +474,7 @@ def cms_heavy_hitters(
         *[F.expr(_cms_cell_expr_spark("tok", i, width)) for i in range(depth)]
     )
     sketch = (
-        # eval_once (r18): the inferred generator filter would re-inline
+        # eval_once: the inferred generator filter would re-inline
         # the depth×(md5+conv) cell-hash array twice more per token row
         ex.select(eval_once(cells_arr).alias("cells"))
         .select(F.posexplode("cells").alias("row", "cell"))
@@ -505,9 +505,9 @@ def unigram_logprob(docs: DataFrame) -> DataFrame:
     exact given identical ln bits, both engines), the doc reduction is an
     exact integer sum (ORDER-INDEPENDENT — no float-summation drift for
     any partitioning), and the mean rounds half-away-from-zero via signed
-    integer division. This is the r12 PageRank / r13 vwap discipline
-    applied to the last margin-based float-sum family (VERDICT r13 task
-    #3): the only residual cross-engine hazard is a per-token ln() ulp
+    integer division. This is the PageRank / vwap fixed-point discipline
+    applied to the last margin-based float-sum family: the only
+    residual cross-engine hazard is a per-token ln() ulp
     difference landing within ~2e-9 of a quantization boundary, strictly
     smaller than the per-row summation-order tie window it replaces.
 
@@ -517,7 +517,7 @@ def unigram_logprob(docs: DataFrame) -> DataFrame:
     a 1-row relation broadcast into the scoring join. The vocab join's
     LEFT side is NOT the fully-exploded token relation: token frequency is
     Zipfian, so shuffling one row per token occurrence keys the exchange
-    on exactly the stopword hot spots (VERDICT r5 What's-wrong #3).
+    on exactly the stopword hot spots.
     Instead the exploded tokens pre-aggregate to per-doc distinct
     (doc_id, tok, cnt) — a partial-combinable groupBy keyed on the
     composite (doc_id, tok), which no single token value can skew — and
@@ -605,7 +605,7 @@ def chunk_documents(
         f" i -> slice(toks, i * {stride} + 1, {size}))"
     )
     return (
-        # eval_once (r18): same inferred-generator-filter duplication class
+        # eval_once: same inferred-generator-filter duplication class
         # as shingles() — without the pin the chunk-slicing transform
         # evaluates 3× per doc in the scan stage
         with_tokens(docs)
@@ -649,7 +649,7 @@ def bigram_pmi(docs: DataFrame, min_count: int = PMI_MIN_COUNT) -> DataFrame:
         " i -> struct(toks[i] AS w1, toks[i + 1] AS w2))"
     )
     bigrams = (
-        # eval_once (r18): pin the bigram-struct transform to one
+        # eval_once: pin the bigram-struct transform to one
         # evaluation (inferred-generator-filter duplication class)
         d.filter(F.size("toks") >= 2)
         .select(eval_once(bg).alias("bg"))
@@ -728,7 +728,7 @@ def pack_sequences(
     broadcast offsets — no global single-partition window, which is how a
     naive ``sum() over (order by …)`` would execute at 100 TB.
 
-    Global-order guarantee (VERDICT r3 task #6): ``n_buckets`` must be a
+    Global-order guarantee: ``n_buckets`` must be a
     power of 16 so the bucket id is exactly a hex PREFIX of the md5 —
     then (bucket, h, doc_id) order == (h, doc_id) order and results
     hash-match the oracle's one-window form. Any other count would
@@ -737,7 +737,7 @@ def pack_sequences(
     The tokenized relation (doc_id, n_tokens, h — ~50 bytes/row, never
     the text) is localCheckpoint'ed before the totals collect, so the
     final projection reuses the materialized pass instead of re-scanning
-    and re-tokenizing the corpus (ADVICE r3; same lineage-truncation
+    and re-tokenizing the corpus (same lineage-truncation
     pattern as similarity.kmeans_codebook).
     """
     prefix_len = max(1, (n_buckets.bit_length() - 1) // 4)
@@ -788,14 +788,14 @@ def pack_sequences(
 # leftmost-first alternation and ASCII \b — no lookaround, no backreferences.
 # That is what makes the redaction oracle-matchable.
 PII_EMAIL_RE = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z][a-zA-Z]+"
-# Phone (VERDICT r3 task #5): the old free-form [0-9() -]{7,14} ate any digit
+# Phone: a free-form [0-9() -]{7,14} would eat any digit
 # run with spaces ("2024 2025 2026" → one "phone"). Require real phone shape:
 #   1. +country then 2-4 separator-joined groups   +81 90-1234-5678
 #   2. (area) then two 3-4 digit groups            (03) 1234-5678
 #   3. >=3 hyphen-joined groups, \b-guarded        090-1234-5678 / 555-123-4567 / 0120-444-444
 #      — a 4-digit lead additionally requires a 3-digit second group, so
 #      hyphen-joined year lists ("2024-2025-2026", all groups 4-digit) miss
-#      (ADVICE r4: the old {2,4}-lead form matched them); dates
+#      (a {2,4}-lead form would match them); dates
 #      ("2024-08-13") miss on the 2-digit tail either way.
 #   4. bare 9-12 digit run, \b-guarded             09012345678 (ISBN-13 = 13 digits, excluded)
 # Single [ -] separators only (no runs), so space-separated year lists,
@@ -861,7 +861,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
     return d.select(
         "doc_id",
         "n_tokens",
-        # output ratios are exact-integer 6dp (classes 4+5, r13); score
+        # output ratios are exact-integer 6dp (ratio6); score
         # keeps the raw-double formula (off-grid composite, sweep-netted)
         ratio6(F.col("n_chars") - (n_tok - 1), n_tok).alias("mean_token_len"),
         ratio6(F.col("stop_hits"), n_tok).alias("stopword_ratio"),
@@ -1007,7 +1007,7 @@ def bm25_scores(
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)  # TakeOrderedAndProject — distributed top-k, no global window
     )
-    # Rank WITHOUT a window (VERDICT r5 #4): an unpartitioned row_number
+    # Rank WITHOUT a window: an unpartitioned row_number
     # here — even over the bounded k-row input — makes WindowExec log its
     # "No Partition Defined" scale warning on every execution, and a
     # foldable partition key (lit(0)) gets optimized away in Spark 4, so
@@ -1146,26 +1146,44 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
     )
 
 
-def _jaccard_verify(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
-    """Exact jaccard over shingle sets for candidate (doc_a, doc_b) pairs
-    where BOTH sides' shingles live in one relation ``sh`` (the symmetric
-    all-pairs callers). Sided twin: :func:`_jaccard_verify_sided`."""
-    return _jaccard_verify_sided(cand, sh, sh, threshold)
-
-
-def _jaccard_verify_sided(
-    cand: DataFrame, sa_src: DataFrame, sb_src: DataFrame, threshold: float
+def colliding_pairs(
+    keyed: DataFrame,
+    on: str | list[str],
+    id_col: str = "doc_id",
+    a: str = "doc_a",
+    b: str = "doc_b",
+    *carry: str,
 ) -> DataFrame:
-    """Exact jaccard for (doc_a, doc_b) candidate pairs whose two sides
-    draw from SEPARATE shingle relations: every ``doc_a`` must have its
-    shingles in ``sa_src`` and every ``doc_b`` in ``sb_src`` (r18 — the
-    incremental/streaming probe's batch ids are disjoint from corpus ids,
-    so scanning the batch∪corpus union for the batch-keyed joins paid a
-    full corpus-shingle aggregation + two union-wide joins per micro-batch
-    for rows that could never match; guide §2.3 "shuffle fewer bytes").
-    Sizes are computed per side — identical values, since a doc's shingle
-    rows all live on its own side. The symmetric form passes the same
-    relation for both sides and is unchanged."""
+    """The symmetric candidate self-join every near-dup operator filters
+    with: rows of ``keyed`` that agree on ``on`` (a shingle, a band key)
+    pair up once as distinct ``(a, b)`` with ``a < b`` on ``id_col``. Each
+    ``carry`` column rides along as ``<c>_a``/``<c>_b``. An equi-join on
+    the bucket key, so the cost is the number of collisions, never the
+    cross product."""
+
+    def side(s: str, out: str) -> list[Column]:
+        return [F.col(f"{s}.{id_col}").alias(out)] + [
+            F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry
+        ]
+
+    return (
+        keyed.alias("a")
+        .join(keyed.alias("b"), on)
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(*side("a", a), *side("b", b))
+        .distinct()
+    )
+
+
+def _shingle_overlap(
+    cand: DataFrame, sa_src: DataFrame, sb_src: DataFrame
+) -> DataFrame:
+    """(doc_a, doc_b, inter, sz_a, sz_b) for candidate pairs: the shared
+    shingle count and both shingle-set sizes. Every ``doc_a`` must have
+    its shingles in ``sa_src`` and every ``doc_b`` in ``sb_src``; the
+    symmetric callers pass one relation twice, the incremental probe its
+    batch and corpus sides, so a batch never scans corpus-side shingles
+    it cannot match."""
     sizes_a = sa_src.groupBy("doc_id").agg(F.count("*").alias("sz"))
     sizes_b = sb_src.groupBy("doc_id").agg(F.count("*").alias("sz"))
     sa = sa_src.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -1176,26 +1194,33 @@ def _jaccard_verify_sided(
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter"))
     )
+    return inter.join(
+        sizes_a.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"),
+        "doc_a",
+    ).join(
+        sizes_b.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"),
+        "doc_b",
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame, sa_src: DataFrame, sb_src: DataFrame, threshold: float
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the candidates whose exact 6dp shingle
+    jaccard reaches ``threshold`` — the verify half of every
+    filter-then-verify near-dup operator (sides as in
+    :func:`_shingle_overlap`)."""
+    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
     return (
-        inter.join(sizes_a.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-        .join(sizes_b.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-        .withColumn(
-            # exact-integer 6dp ratio of ints (classes 4+5, r13):
-            # ((2e6·inter + union) div (2·union)) / 1e6
-            "jaccard",
-            F.expr(
-                "(2000000 * inter + (sz_a + sz_b - inter))"
-                " div (2 * (sz_a + sz_b - inter))"
-            )
-            / 1000000.0,
-        )
+        _shingle_overlap(cand, sa_src, sb_src)
+        .withColumn("jaccard", ratio6(F.col("inter"), union))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
 
 
 def decontaminate_fuzzy(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """FUZZY decontamination (r9-born): flag TRAIN documents that are
+    """FUZZY decontamination: flag TRAIN documents that are
     NEAR-duplicates of TEST/benchmark documents — the LSH complement of
     :func:`decontaminate`'s exact n-gram scan (an eval document
     paraphrased or lightly edited into the corpus shares few exact
@@ -1210,16 +1235,9 @@ def decontaminate_fuzzy(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     Scale shape: identical to the LSH dedup path (banded candidate
     equi-join, O(collisions)); the split predicate is map-side."""
     sh = _shingles_cached(docs)
-    verified = _jaccard_verify(_minhash_band_candidates(sh), sh, threshold)
-
-    def split_of(c: Column) -> Column:
-        h = F.substring(F.md5(c.cast("string")), 1, 2)
-        return F.when(h < SPLIT_HEX_THRESHOLD, "train").otherwise("test")
-
-    cross = verified.filter(
-        split_of(F.col("doc_a")) != split_of(F.col("doc_b"))
-    ).select(
-        F.when(split_of(F.col("doc_a")) == "train", F.col("doc_a"))
+    verified = _jaccard_verify(_minhash_band_candidates(sh), sh, sh, threshold)
+    cross = verified.filter(_split_col("doc_a") != _split_col("doc_b")).select(
+        F.when(_split_col("doc_a") == "train", F.col("doc_a"))
         .otherwise(F.col("doc_b"))
         .alias("train_doc_id"),
         "jaccard",
@@ -1240,16 +1258,7 @@ def dedup_ngram_jaccard(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     the corpus 4×; at 100 TB this is a materialized shingle table.
     """
     sh = _shingles_cached(docs)
-    cand = (
-        sh.alias("a")
-        .join(sh.alias("b"), "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    return _jaccard_verify(cand, sh, threshold)
+    return _jaccard_verify(colliding_pairs(sh, "shingle"), sh, sh, threshold)
 
 
 MINHASH_SEEDS = 12
@@ -1265,11 +1274,11 @@ MINHASH_CW_P = 2305843009213693951
 def _minhash_from_shingles(sh: DataFrame) -> DataFrame:
     """Per-doc MinHash signature via ONE md5 per shingle + a Carter-Wegman
     seed family — h_s = (h1 + s·h2) mod P over two integer slices of the
-    single digest (the textbook one-strong-hash construction). The r1-r8
-    form hashed every shingle MINHASH_SEEDS times (12 md5s/row, string
-    mins); one digest + long arithmetic cut the sf0.1 signature stage
-    ~4x (r9 bench diagnosis). DuckDB twin: minhash_sig_sql (the hex→int
-    parse matches Spark's conv exactly)."""
+    single digest (the textbook one-strong-hash construction). Hashing
+    every shingle MINHASH_SEEDS times (12 md5s/row, string mins) made the
+    sf0.1 signature stage ~4x slower than one digest + long arithmetic.
+    DuckDB twin: minhash_sig_sql (the hex→int parse matches Spark's conv
+    exactly)."""
     m = F.md5(F.col("shingle"))
     h1 = F.conv(F.substring(m, 1, 15), 16, 10).cast("long")
     h2 = F.conv(F.substring(m, 17, 8), 16, 10).cast("long")
@@ -1290,12 +1299,14 @@ def dedup_minhash_lsh(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     explode+distinct instead of recomputing it 4× (materialized at scale).
     """
     sh = _shingles_cached(docs)
-    return _jaccard_verify(_minhash_band_candidates(sh), sh, threshold)
+    return _jaccard_verify(_minhash_band_candidates(sh), sh, sh, threshold)
 
 
-def _band_keys(sig: DataFrame) -> DataFrame:
-    """(doc_id, band_idx, band_key) rows from a signature relation — the
-    LSH index relation itself (what a production rollout persists)."""
+def band_keys(sh: DataFrame) -> DataFrame:
+    """(doc_id, band_idx, band_key) rows from a shingle relation: MinHash
+    signatures, then one md5 band key per band — the LSH index relation
+    itself (what a production rollout persists)."""
+    sig = _minhash_from_shingles(sh)
     r = MINHASH_SEEDS // MINHASH_BANDS
     bands = F.array(
         *[
@@ -1308,8 +1319,8 @@ def _band_keys(sig: DataFrame) -> DataFrame:
             for b in range(MINHASH_BANDS)
         ]
     )
-    # eval_once (r18): without the pin the inferred generator filter
-    # re-inlines the 6-md5 band array twice more per signature row
+    # eval_once: without the pin the inferred generator filter re-inlines
+    # the 6-md5 band array twice more per signature row
     return sig.select("doc_id", eval_once(bands).alias("bands")).select(
         "doc_id", F.explode("bands").alias("bd")
     ).select("doc_id", "bd.band_idx", "bd.band_key")
@@ -1323,7 +1334,7 @@ def _band_keys_cached(sh: DataFrame) -> DataFrame:
     return cached(
         sh.sparkSession,
         "bands",
-        lambda: materialize(_band_keys(_minhash_from_shingles(sh))),
+        lambda: materialize(band_keys(sh)),
         sh,
     )
 
@@ -1331,14 +1342,7 @@ def _band_keys_cached(sh: DataFrame) -> DataFrame:
 def _minhash_band_candidates(sh: DataFrame) -> DataFrame:
     """LSH candidate pairs from a shingle relation: signatures → band keys
     → band-bucket equi-join, distinct (doc_a < doc_b)."""
-    doc_bands = _band_keys_cached(sh)
-    return (
-        doc_bands.alias("a")
-        .join(doc_bands.alias("b"), ["band_idx", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return colliding_pairs(_band_keys_cached(sh), ["band_idx", "band_key"])
 
 
 CONTAINMENT_THRESHOLD = 0.7
@@ -1347,8 +1351,8 @@ CONTAINMENT_THRESHOLD = 0.7
 def dedup_minhash_containment(
     docs: DataFrame, threshold: float = CONTAINMENT_THRESHOLD
 ) -> DataFrame:
-    """Asymmetric CONTAINMENT screening over the banded candidates
-    (r10-born): for each LSH candidate pair, C(A⊆B) = |A∩B|/|A| and
+    """Asymmetric CONTAINMENT screening over the banded candidates: for
+    each LSH candidate pair, C(A⊆B) = |A∩B|/|A| and
     C(B⊆A) = |A∩B|/|B| alongside jaccard, kept when the larger direction
     reaches ``threshold`` — the doc-in-doc detector (a short document
     verbatim-embedded in a long one has containment ≈ 1 but jaccard ≈
@@ -1365,41 +1369,13 @@ def dedup_minhash_containment(
     screening exactly as implemented. Threshold decisions are on
     6dp-rounded values in both engines."""
     sh = _shingles_cached(docs)
-    cand = _minhash_band_candidates(sh)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    scored = (
-        inter.join(
-            sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"),
-            "doc_a",
-        )
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            # exact-integer 6dp ratios of ints (classes 4+5, r13)
-            (F.expr("(2000000 * inter + sz_a) div (2 * sz_a)") / 1000000.0
-             ).alias("containment_a_in_b"),
-            (F.expr("(2000000 * inter + sz_b) div (2 * sz_b)") / 1000000.0
-             ).alias("containment_b_in_a"),
-            (
-                F.expr(
-                    "(2000000 * inter + (sz_a + sz_b - inter))"
-                    " div (2 * (sz_a + sz_b - inter))"
-                )
-                / 1000000.0
-            ).alias("jaccard"),
-        )
+    inter, sz_a, sz_b = F.col("inter"), F.col("sz_a"), F.col("sz_b")
+    scored = _shingle_overlap(_minhash_band_candidates(sh), sh, sh).select(
+        "doc_a",
+        "doc_b",
+        ratio6(inter, sz_a).alias("containment_a_in_b"),
+        ratio6(inter, sz_b).alias("containment_b_in_a"),
+        ratio6(inter, sz_a + sz_b - inter).alias("jaccard"),
     )
     return scored.filter(
         F.greatest("containment_a_in_b", "containment_b_in_a") >= threshold
@@ -1414,7 +1390,7 @@ INCREMENTAL_BATCH_REM = 7
 
 
 def dedup_incremental_minhash(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Incremental (batch-vs-corpus) MinHash dedup (r11-born): near-dedupe a
+    """Incremental (batch-vs-corpus) MinHash dedup: near-dedupe a
     NEW ingest batch against the EXISTING corpus without re-deduping the
     corpus against itself — the steady-state shape of a production corpus
     build, where the all-pairs pass (:func:`dedup_minhash_lsh`) runs once
@@ -1462,8 +1438,8 @@ def incremental_probe(
     verification, and the top-1 dup-of election per batch doc (highest
     6dp-rounded jaccard, smallest corpus doc_id on ties).
 
-    Shingles arrive SPLIT BY SIDE (r18; both call sites already hold the
-    two relations separately): every candidate's doc_a is batch-side and
+    Shingles arrive SPLIT BY SIDE (both call sites already hold the two
+    relations separately): every candidate's doc_a is batch-side and
     doc_b corpus-side by construction, so the union form made the sizes
     aggregation and both verify joins scan the WHOLE corpus shingle
     relation per call for rows that could never match. The corpus side is
@@ -1484,7 +1460,7 @@ def incremental_probe(
     )
     cand_docs = cand.select(F.col("doc_b").alias("doc_id")).distinct()
     sb_src = sh_corpus.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-    verified = _jaccard_verify_sided(cand, sh_batch, sb_src, threshold)
+    verified = _jaccard_verify(cand, sh_batch, sb_src, threshold)
     w = Window.partitionBy("doc_a").orderBy(F.col("jaccard").desc(), F.col("doc_b"))
     return (
         verified.withColumn("rn", F.row_number().over(w))
@@ -1506,48 +1482,27 @@ def lsh_eval_report(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     surfaced; the theoretical banding bound made measurable).
 
     One row: (n_candidates, n_verified, n_exact, candidate_precision,
-    recall). The exact side shares :func:`dedup_ngram_jaccard`'s
+    recall). The exact side is :func:`dedup_ngram_jaccard`'s
     deliberately-quadratic candidate join — this is an evaluation
     baseline for sampled data, not a production path (the production path
     IS the LSH being evaluated). All three counts are 1-row aggregates
     cross-joined lazily; the cached shingle relation feeds every stage.
+    Both ratios are NULL when their denominator is 0.
     """
     sh = _shingles_cached(docs)
     cand = _minhash_band_candidates(sh)
-    verified = _jaccard_verify(cand, sh, threshold)
-    exact_cand = (
-        sh.alias("a")
-        .join(sh.alias("b"), "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    exact = _jaccard_verify(exact_cand, sh, threshold)
+    verified = _jaccard_verify(cand, sh, sh, threshold)
+    exact = _jaccard_verify(colliding_pairs(sh, "shingle"), sh, sh, threshold)
     n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
     n_ver = verified.agg(F.count(F.lit(1)).alias("n_verified"))
     n_ex = exact.agg(F.count(F.lit(1)).alias("n_exact"))
-    return (
-        n_cand.crossJoin(n_ver)
-        .crossJoin(n_ex)
-        .select(
-            "n_candidates",
-            "n_verified",
-            "n_exact",
-            F.when(
-                F.col("n_candidates") > 0,
-                F.expr(
-                "(2000000 * n_verified + n_candidates) div (2 * n_candidates)"
-            )
-            / 1000000.0,
-            ).alias("candidate_precision"),
-            F.when(
-                F.col("n_exact") > 0,
-                F.expr("(2000000 * n_verified + n_exact) div (2 * n_exact)")
-            / 1000000.0,
-            ).alias("recall"),
-        )
+    n_verified = F.col("n_verified")
+    return n_cand.crossJoin(n_ver).crossJoin(n_ex).select(
+        "n_candidates",
+        "n_verified",
+        "n_exact",
+        ratio6(n_verified, F.col("n_candidates")).alias("candidate_precision"),
+        ratio6(n_verified, F.col("n_exact")).alias("recall"),
     )
 
 
@@ -1588,7 +1543,7 @@ def _simhash_cached(docs: DataFrame) -> DataFrame:
 
 def _hamming64_sql(a: str, b: str) -> str:
     """Exact hamming distance between two 64-char '0'/'1' signature
-    strings via integer XOR popcount (r18): each differing character is
+    strings via integer XOR popcount: each differing character is
     exactly one differing bit of the 64-bit value the string spells, so
     bit_count(xor) over the two 32-bit halves equals the old 64-term
     substring-comparison sum — pinned equal on random signatures by
@@ -1620,14 +1575,12 @@ def dedup_simhash(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     100 TB the signature relation is tiny (one 64-char bit string per doc)
     and the bucket join is the only data movement.
 
-    r18 (guide §1 decomposition at sf0.1 — 63.7 s/call, the costliest
-    registered path after the CC pair): the signature relation is served
-    from the session cache (both self-join sides re-derived the 64-sum
-    token aggregation per call — the persisted signature table is exactly
-    what a rollout probes), and the hamming verify is the integer XOR
-    popcount form (:func:`_hamming64_sql`) instead of 64 substring
-    compares per candidate row. Output provably unchanged: same
-    signatures, same distance values."""
+    The signature relation is served from the session cache (otherwise
+    both self-join sides re-derive the 64-sum token aggregation per call —
+    the persisted signature table is exactly what a rollout probes), and
+    the hamming verify is the integer XOR popcount form
+    (:func:`_hamming64_sql`) instead of 64 substring compares per
+    candidate row."""
     w = SIMHASH_BITS // SIMHASH_BANDS
     sh = _simhash_cached(docs)
     bands = F.array(
@@ -1644,19 +1597,10 @@ def dedup_simhash(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     ).select("doc_id", "simhash", F.explode("bd_arr").alias("bd")).select(
         "doc_id", "simhash", "bd.band_idx", "bd.band_bits"
     )
-    cand = (
-        db.alias("a")
-        .join(db.alias("b"), ["band_idx", "band_bits"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
+    cand = colliding_pairs(
+        db, ["band_idx", "band_bits"], "doc_id", "doc_a", "doc_b", "simhash"
     )
-    ham = F.expr(_hamming64_sql("sim_a", "sim_b"))
+    ham = F.expr(_hamming64_sql("simhash_a", "simhash_b"))
     return (
         cand.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
@@ -1668,10 +1612,10 @@ SPLIT_HEX_THRESHOLD = "e6"  # md5(doc_id) first-2-hex < 'e6' → train (≈89.8%
 CONTAM_SHINGLE_N = 8  # contamination n-gram size (8-grams, à la GPT-3/PaLM decontamination)
 
 
-def _split_col():
+def _split_col(id_col: str = "doc_id") -> Column:
     """The deterministic train/test assignment shared with
-    queries.datapipe.q_train_test_split — md5 hex-bucket of doc_id."""
-    h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
+    queries.datapipe.q_train_test_split — md5 hex-bucket of ``id_col``."""
+    h = F.substring(F.md5(F.col(id_col).cast("string")), 1, 2)
     return F.when(h < SPLIT_HEX_THRESHOLD, "train").otherwise("test")
 
 
@@ -1696,10 +1640,9 @@ def decontaminate(
 
     ``test_docs`` is the benchmark side (doc_id, text); when None, the
     deterministic 10% md5 hash-split of ``docs`` stands in (the gate
-    fixture shape). Join strategy (VERDICT r3 task #3 — the old code
-    broadcast unconditionally, which at 100 TB would broadcast a 10 TB
-    hash-split): ``broadcast_test=True/False`` forces the path;
-    ``test_docs_count`` is a catalog-style size hint compared against
+    fixture shape). Join strategy (an unconditional broadcast would, at
+    100 TB, broadcast a 10 TB hash-split): ``broadcast_test=True/False``
+    forces the path; ``test_docs_count`` is a catalog-style size hint compared against
     ``DECONTAM_BROADCAST_MAX_TEST_DOCS`` with no job. Construction is LAZY
     whenever either is given (asserted by
     tests/test_datapipe.py::test_decontaminate_lazy_construction).
@@ -1775,7 +1718,7 @@ def dsir_resample(
 
     Scale shape: reuses the de-skewed LM shape — the exploded tokens
     pre-aggregate to per-doc-distinct (doc_id, tok, cnt) before any
-    token-keyed join (VERDICT r5 #3); both LM vocabularies are token-keyed
+    token-keyed join; both LM vocabularies are token-keyed
     partial-combinable aggs; the (N, V) totals broadcast as 1-row
     relations; the final top-k is ``orderBy().limit(k)`` —
     TakeOrderedAndProject, per-partition heads then a k-row merge, never a
@@ -1803,7 +1746,7 @@ def dsir_resample(
     # Per-token log-ratio quantized to BIGINT 1e-6 units before the doc
     # reduction (exact integer sum — order-independent), mean rounded by
     # signed integer division: the fixed-point discipline that closed the
-    # margin-based ln()-sum class (VERDICT r13 task #3; see
+    # margin-based ln()-sum class (see
     # unigram_logprob). exp/pow below stay per-row transcendentals on the
     # already-quantized 6dp value.
     q = F.floor((lp_t - lp_r) * F.lit(1000000.0) + F.lit(0.5))
@@ -1900,7 +1843,7 @@ def _bloom_cached(
     test: DataFrame, m_bits: int = BLOOM_M_BITS, k: int = BLOOM_K
 ) -> bytes:
     """The decontamination bitmap through the session cache, keyed per
-    (test-relation plan, sizing) (r17): it is the persisted filter artifact
+    (test-relation plan, sizing): it is the persisted filter artifact
     of a decontamination rollout — built once per eval-set release, probed
     by every ingest — and rebuilding the m/8-byte partials job per query
     call re-paid a full test-side scan for bytes that cannot change under
@@ -2415,6 +2358,15 @@ def band_sql() -> str:
     body = "\n  UNION ALL\n".join(selects)
     return f"doc_bands AS (\n{body}\n)"
 
+
+BAND_CAND_SQL = """
+cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM doc_bands a
+  JOIN doc_bands b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
+  WHERE a.doc_id < b.doc_id
+)
+""".strip()
 
 JACCARD_VERIFY_SQL = """
 sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),

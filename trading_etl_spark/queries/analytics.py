@@ -730,12 +730,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day_offset",
         "n_active",
         "cohort_size",
-        (
-            F.expr(
-                "(2000000 * n_active + cohort_size) div (2 * cohort_size)"
-            )
-            / 1000000.0
-        ).alias("retention"),  # exact-integer 6dp ratio (r13)
+        ratio6(F.col("n_active"), F.col("cohort_size")).alias("retention"),
     )
 
 

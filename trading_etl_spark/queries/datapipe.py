@@ -78,7 +78,7 @@ def _trained_codebook(spark: SparkSession, sf_dir: str) -> sim.Codebook:
 
 
 def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cached IVF inverted-list relation (r10): corpus cell
+    """The cached IVF inverted-list relation: corpus cell
     assignments + norms are index-BUILD state (what FAISS's IndexIVF
     stores), so serving reads the prebuilt lists instead of re-running
     the Arrow assignment stage per query. Measured at sf0.1: the serving
@@ -118,27 +118,27 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring dedup APPLIED (r8-born): strip ≥16-token duplicated
+    """Exact-substring dedup APPLIED: strip ≥16-token duplicated
     spans keeping each window's first (doc_id, pos) occurrence; per-doc
     before/removed/after counts + cleaned-text md5."""
     return tx.strip_duplicate_spans(_docs(spark, sf_dir))
 
 
 def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment over the banded LSH candidates (r10-born):
+    """Asymmetric containment over the banded LSH candidates:
     the doc-in-doc detector a jaccard gate misses."""
     return tx.dedup_minhash_containment(_docs(spark, sf_dir))
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental batch-vs-corpus near-dedup (r11-born): each newly
+    """Incremental batch-vs-corpus near-dedup: each newly
     ingested doc's single best corpus match over the banded LSH probe —
     the steady-state ingest gate of a production corpus build."""
     return tx.dedup_incremental_minhash(_docs(spark, sf_dir))
 
 
 def q_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash banding quality report (r8-born): candidate precision +
+    """MinHash banding quality report: candidate precision +
     empirical recall vs the exact co-shingle baseline — the sampled eval
     a dedup rollout runs before trusting LSH at corpus scale."""
     return tx.lsh_eval_report(_docs(spark, sf_dir))
@@ -169,7 +169,7 @@ def q_emb_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_keeper_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup capstone composition (r7-born): near-dup pair finding
+    """The dedup capstone composition: near-dup pair finding
     (SRP-LSH, certain recall) → connected components (which cluster) →
     PageRank (which member matters) → per-cluster keeper election by
     HIGHEST centrality, ties to the lowest vec_id — canonicalization by
@@ -180,8 +180,8 @@ def q_dedup_keeper_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components_two_phase, pagerank
 
     emb = _emb(spark, sf_dir)
-    # Materialize the verified pair relation ONCE inside the query (r18,
-    # guide §5 lineage truncation — the triangle_stats/pagerank pattern):
+    # Materialize the verified pair relation ONCE inside the query (guide
+    # §5 lineage truncation — the triangle_stats/pagerank pattern):
     # BOTH graph stages (CC and PageRank) eagerly checkpoint derived edge
     # relations from `pairs`, so without this the SRP candidate join +
     # cosine verification ran twice per call (measured ~2× the edge-
@@ -210,7 +210,7 @@ def q_dedup_keeper_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE fertility stats (r7-born): whitespace vs trained-BPE token
+    """BPE fertility stats: whitespace vs trained-BPE token
     counts per document and their ratio — the tokenizer-evaluation query
     run before freezing a vocabulary. Shares the train-once fitted state
     with bpe_train_merges (:func:`_bpe_fitted`)."""
@@ -220,7 +220,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE tokenizer-merge training over the documents corpus (r7-born):
+    """BPE tokenizer-merge training over the documents corpus:
     the 12 highest-count adjacent-symbol merges, character-level start,
     word-frequency weighted, deterministic tie-break — see
     operators/text.py::bpe_train. Oracle: the identical fixed-iteration
@@ -232,8 +232,8 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dupgraph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle/transitivity report over the embedding near-dup graph
-    (r9-born): n_nodes (nodes with ≥1 edge), n_edges, n_triangles,
+    """Triangle/transitivity report over the embedding near-dup graph:
+    n_nodes (nodes with ≥1 edge), n_edges, n_triangles,
     n_wedges, transitivity = 3·triangles/wedges — the clustering-quality
     diagnostic of the dup graph (dense clusters → near 1; chains of
     borderline pairs → near 0, a banding-threshold smell). Edges are the
@@ -246,7 +246,7 @@ def q_dupgraph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dupgraph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the embedding near-dup graph (r7-born): 5 power
+    """PageRank over the embedding near-dup graph: 5 power
     iterations, damping 0.85, teleport-only dangling mass — scores each
     vector by how central it is to its near-dup neighborhood (the
     representativeness-based keeper choice; CC picks clusters, this ranks
@@ -287,7 +287,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy (MinHash-banded) decontamination (r9-born): train docs that
+    """Fuzzy (MinHash-banded) decontamination: train docs that
     NEAR-duplicate a test-split doc — the LSH complement of the exact
     8-gram scan; paraphrased eval leakage shares few exact n-grams but
     survives banding. Same O(collisions) shape as dedup_minhash_lsh."""
@@ -307,7 +307,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval via reciprocal rank fusion (r6-born): the BM25
+    """Hybrid retrieval via reciprocal rank fusion: the BM25
     top-20 (fixed query terms) fused with the dense cosine top-20 against
     the vec_id-0 query embedding (doc_id ≡ vec_id in the fixture —
     the document's embedding row). RRF keeps the incomparable raw scores
@@ -335,15 +335,15 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance resampling toward the src0 domain (r6-born):
+    """DSIR importance resampling toward the src0 domain:
     importance weight = exp(mean token log-ratio of the target vs raw
     unigram LMs), deterministic A-Res top-30 by u^(1/w) keys."""
     return tx.dsir_resample(_docs(spark, sf_dir))
 
 
 def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The eval-leak scan through the Bloom runtime-prefilter path
-    (r6-born): broadcast 128 KiB bitmap probe map-side, exact confirm
+    """The eval-leak scan through the Bloom runtime-prefilter path:
+    broadcast 128 KiB bitmap probe map-side, exact confirm
     join kills false positives — result identical to the broadcast
     decontaminate, certified by the SAME oracle."""
     return tx.decontaminate_bloom(
@@ -357,9 +357,9 @@ def q_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring duplication spans (Lee et al. 2022; r7-born —
-    VERDICT r6 task #6): maximal ≥16-token verbatim cross-document spans
-    per document, located by position. See
+    """Exact-substring duplication spans (Lee et al. 2022): maximal
+    ≥16-token verbatim cross-document spans per document, located by
+    position. See
     operators/text.py::exact_substring_spans for the construction and the
     one documented relaxation vs a true suffix array."""
     return tx.exact_substring_spans(_docs(spark, sf_dir))
@@ -396,7 +396,7 @@ def q_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN recall@k report (r9-born) — the pre-rollout quality gate for the
+    """ANN recall@k report — the pre-rollout quality gate for the
     IVF serving path, the ANN analog of dedup_lsh_eval: exact brute-force
     top-k as ground truth, trained-kmeans IVF top-k (nprobe=2 of 8 cells)
     as the candidate, one report row (n_queries, k, n_exact, n_hits,
@@ -424,15 +424,12 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(sim.TOP_K).alias("k"),
         "n_exact",
         "n_hits",
-        (
-            F.expr("(2000000 * n_hits + n_exact) div (2 * n_exact)")
-            / 1000000.0
-        ).alias("recall_at_k"),  # exact-integer 6dp ratio (r13)
+        tx.ratio6(F.col("n_hits"), F.col("n_exact")).alias("recall_at_k"),
     )
 
 
 def q_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filtered vector search (r10-born): exact top-k cosine among corpus
+    """Filtered vector search: exact top-k cosine among corpus
     vectors matching a metadata predicate (label = 2), predicate pushed
     to the parquet scan — retrieval-with-constraints, the shape every
     production vector store serves."""
@@ -440,13 +437,13 @@ def q_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-1/2/3 n-gram diversity per document (r10-born) — map-side
+    """Distinct-1/2/3 n-gram diversity per document — map-side
     n-gram construction + array_distinct, zero shuffles."""
     return tx.ngram_diversity(_docs(spark, sf_dir))
 
 
 def q_ivf_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cell quantizer drift report (r10-born): the retrain gate of the
+    """Per-cell quantizer drift report: the retrain gate of the
     ANN lifecycle, over the cached codebook + inverted lists."""
     return sim.ivf_drift_report(
         _emb(spark, sf_dir),
@@ -456,21 +453,21 @@ def q_ivf_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contrastive hard-negative mining (r11-born): per query, the top-k
+    """Contrastive hard-negative mining: per query, the top-k
     most-similar DIFFERENT-label vectors with the positive-similarity
     margin — the training-pair miner for embedding models."""
     return _as_long(sim.hard_negatives(_emb(spark, sf_dir)), "rank")
 
 
 def q_cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label simplified silhouette (r14-born): the cluster-quality
+    """Per-label simplified silhouette: the cluster-quality
     eval of the embedding lifecycle — all-integer (quantized grid), so
     the score is order-, partitioning- and engine-independent."""
     return sim.cluster_silhouette(_emb(spark, sf_dir))
 
 
 def q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-mixture sampling plan (r11-born): per-lang sampling rates
+    """Language-mixture sampling plan: per-lang sampling rates
     and epoch counts for the target weights — |langs| output rows at any
     corpus size."""
     return tx.mixture_plan(_docs(spark, sf_dir))
@@ -672,7 +669,7 @@ def q_knn_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (r6-born): trained-kmeans cells bound the pairwise cosine
+    """SemDeDup: trained-kmeans cells bound the pairwise cosine
     compare; within-cell duplicate balls keep their min-id member. Output =
     surviving (vec_id, cell)."""
     return _as_long(
@@ -684,7 +681,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka two-stage ANN (r6-born): coarse rank on the first 16
+    """Matryoshka two-stage ANN: coarse rank on the first 16
     dims (4x narrower scan), exact full-dim rerank of the top-32
     candidates per query."""
     return _as_long(sim.knn_matryoshka(_emb(spark, sf_dir)), "rank")
@@ -705,7 +702,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. 2020,
-    arXiv:1911.00359; r6-born): documents ranked by the corpus-trained
+    arXiv:1911.00359): documents ranked by the corpus-trained
     unigram-LM score and cut into head/middle/tail TERCILES per language —
     the quality tiers CCNet samples from when building CommonCrawl
     corpora. ntile over the (desc score, doc_id) TOTAL order is
@@ -748,7 +745,7 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL pixel resize (VERDICT r7 task #7): synthesized 24-bit BMP
+    """REAL pixel resize: synthesized 24-bit BMP
     payloads decoded, nearest-neighbor-downscaled to max_dim=16, and
     re-encoded — all pure NumPy in the Arrow-batched kernel. The oracle
     recomputes the integer-math output dims and BMP byte length; pixel
@@ -761,7 +758,7 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL perceptual dHash fingerprints (r9-born): synthesized BMP
+    """REAL perceptual dHash fingerprints: synthesized BMP
     payloads pixel-decoded, grayscaled, 9×8-sampled, and packed into a
     64-bit difference hash — the image near-dup fingerprint (band it like
     dedup_simhash for the scaled join). The oracle recomputes every bit
@@ -771,8 +768,8 @@ def q_media_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio feature extraction (r9-born — the WAV analog of the BMP
-    pixel path): synthesized 16-bit PCM WAV payloads RIFF-decoded and
+    """REAL audio feature extraction (the WAV analog of the BMP pixel
+    path): synthesized 16-bit PCM WAV payloads RIFF-decoded and
     reduced to waveform stats (duration, rms, peak, zero crossings) in
     the Arrow-batched kernel. Every sample value is a closed-form
     function of doc_id, so the oracle recomputes the features from
@@ -1143,14 +1140,7 @@ FROM documents GROUP BY md5(text)
         tx.SHINGLES_SQL,
         tx.minhash_sig_sql(),
         tx.band_sql(),
-        """
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM doc_bands a
-  JOIN doc_bands b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-  WHERE a.doc_id < b.doc_id
-)
-""".strip(),
+        tx.BAND_CAND_SQL,
         tx.JACCARD_VERIFY_SQL,
     )
     + "\nSELECT doc_a, doc_b, jaccard FROM verified WHERE jaccard >= 0.5",
@@ -1161,14 +1151,7 @@ cand AS (
         tx.SHINGLES_SQL,
         tx.minhash_sig_sql(),
         tx.band_sql(),
-        """
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM doc_bands a
-  JOIN doc_bands b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-  WHERE a.doc_id < b.doc_id
-)
-""".strip(),
+        tx.BAND_CAND_SQL,
         """
 sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
 inter AS (
@@ -1225,14 +1208,7 @@ SELECT doc_a AS doc_id, doc_b AS dup_of, jaccard FROM (
         tx.SHINGLES_SQL,
         tx.minhash_sig_sql(),
         tx.band_sql(),
-        """
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM doc_bands a
-  JOIN doc_bands b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-  WHERE a.doc_id < b.doc_id
-)
-""".strip(),
+        tx.BAND_CAND_SQL,
         tx.JACCARD_VERIFY_SQL,
         f"""
 crossed AS (
@@ -1255,14 +1231,7 @@ FROM crossed GROUP BY 1
         tx.SHINGLES_SQL,
         tx.minhash_sig_sql(),
         tx.band_sql(),
-        """
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM doc_bands a
-  JOIN doc_bands b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-  WHERE a.doc_id < b.doc_id
-)
-""".strip(),
+        tx.BAND_CAND_SQL,
         """
 pair_inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
@@ -1996,11 +1965,11 @@ WHERE {tx.hex32_unit_expr('mix_h')} <= keep_rate
 # Unigram-LM oracle: per-token ln quantizes to BIGINT 1e-6 units
 # (floor(x*1e6 + 0.5) — exact given identical ln bits), the doc reduction
 # is an exact integer sum (ORDER-INDEPENDENT: the float-summation-order
-# margin class is closed, VERDICT r13 task #3), and the mean rounds
+# margin class is closed), and the mean rounds
 # half-away-from-zero via fixed6_mean_sql — bit-identical to the Spark
-# fixed6_mean_expr path. Mirrors the de-skewed Spark shape (VERDICT r5
-# #4): the vocab join's probe side is the per-doc-distinct
-# (doc_id, tok, cnt) pre-aggregate.
+# fixed6_mean_expr path. Mirrors the de-skewed Spark shape: the vocab
+# join's probe side is the per-doc-distinct (doc_id, tok, cnt)
+# pre-aggregate.
 ORACLES["text_unigram_logprob"] = (
     "WITH "
     + tx.DOCS_TOKS_SQL
@@ -2403,13 +2372,13 @@ LIMIT {tx.DSIR_SAMPLE_K}"""
 
 def _pagerank_parts() -> tuple[list[str], str]:
     """iters chained non-recursive CTEs replaying the fixed-iteration power
-    method in the operator's INTEGER fixed-point arithmetic (r12): ranks
+    method in the operator's INTEGER fixed-point arithmetic: ranks
     in BIGINT 1e-6 units, per-edge contributions quantized to 1e-12 units
     via round-half-up integer division (round(a/b) = (2a+b)//(2b)), the
     per-node reduction an exact integer sum — order-independent, so both
     engines produce bit-identical trajectories (the float formulation's
     sum-order ulp drift flipped 6/2000 ranks at round-half ties at sf0.1,
-    caught by the r12 cross-SF sweep). Damping enters as the exact
+    caught by the cross-SF sweep). Damping enters as the exact
     rational from graph.damping_fraction (0.85 → 17/20); dangling nodes
     teleport-only. Returns (CTE parts, name of the final ranks CTE) so
     the keeper-election composition can reuse the identical trajectory —
@@ -2599,14 +2568,14 @@ ORACLES["bpe_encode_fertility"] = _bpe_encode_sql()
 # list_zip structs are unnamed in DuckDB — fields are s[1]/s[2];
 # centroid lists assemble in pos order (list(... ORDER BY i)), pairing
 # positionwise exactly like Spark's zip_with over the
-# posexplode-ordered transform. r15 (ADVICE r14): the e CTE now drops
+# posexplode-ordered transform. The e CTE drops
 # NULL-label rows exactly like the Spark side's isNotNull filter (the
 # documented drop-unassigned contract), enforces the SIL_MAX_ABS
 # overflow contract inside the quantizing transform with DuckDB's
 # error() (the twin of Spark's raise_error — both engines fail loudly),
 # and the ab regroup keys on a row-unique rid instead of vec_id so a
 # non-unique vec_id in a future fixture cannot collapse two scored
-# points that Spark scores independently. r16 (ADVICE r15): the dim arm
+# points that Spark scores independently. The dim arm
 # guards the headroom DERIVATION — past sim.SIL_MAX_DIM the per-component
 # bound no longer keeps the s-ratio under 2^63 — with DuckDB's error()
 # twinning Spark's raise_error, so both engines fail loudly.

@@ -68,7 +68,7 @@ _DEFER: list[str] = [
     "backtest_equity_curve",  # cumulative window; twin: vwap_daily_1h (staying cumulative-window rep)
     "backtest_trades",        # LAG signal chain; twin: vwap_daily_1h (staying cumulative-window rep)
     "candle_cube",            # grouping-set cube; the 1m agg keeps the candle family [twin: ohlc_1m]
-    "dedup_ngram_jaccard",    # banded n-gram Jaccard; twin: streaming_ingest_dedup_gate (same banded probe)
+    "dedup_ngram_jaccard",    # exact co-shingle self-join, no banding; twin: streaming_ingest_dedup_gate (same jaccard verify)
     "embedding_knn_bruteforce",  # exact top-k baseline; twin: embedding_ann_recall_eval (runs brute force as its truth side)
     "embedding_knn_ivf",      # IVF top-k; twin: embedding_ann_recall_eval (IVF-family evaluator)
     "embedding_near_dup",     # cosine near-dup; twin: embedding_ann_recall_eval (ANN family)

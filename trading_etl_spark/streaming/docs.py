@@ -31,12 +31,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..cache import cached
-from ..operators.text import (
-    _band_keys,
-    _minhash_from_shingles,
-    incremental_probe,
-    shingles,
-)
+from ..operators.text import band_keys, incremental_probe, shingles
 from . import start
 
 DOC_STREAM_SCHEMA = T.StructType(
@@ -58,7 +53,7 @@ def build_corpus_index(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     def build():
         sh = shingles(corpus).cache()
-        return sh, _band_keys(_minhash_from_shingles(sh)).cache()
+        return sh, band_keys(sh).cache()
 
     return cached(corpus.sparkSession, "corpus_index", build, corpus)
 
@@ -121,7 +116,7 @@ def start_incremental_dedup_stream(
         # the band relation is likewise referenced twice (candidate join +
         # the colliding-doc semi-join's broadcast subtree)
         sh_batch = shingles(batch).cache()
-        batch_bands = _band_keys(_minhash_from_shingles(sh_batch)).cache()
+        batch_bands = band_keys(sh_batch).cache()
         try:
             matches = incremental_probe(
                 batch_bands,
