@@ -2,8 +2,9 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 compact JSON line LAST: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: median_sec}, "min_total_sec": ..., "sf": ...}. The full
-per-run series + methodology go to BENCH_DETAIL.json next to this file
-(the driver tail-captures stdout; see summarize()).
+per-run series + methodology go to $BENCH_DETAIL_PATH (default
+BENCH_DETAIL.json next to this file; the driver tail-captures stdout; see
+summarize()).
 
 Each query executes end-to-end into a noop sink (full plan, no driver
 collect). Timings exclude session startup.
@@ -400,10 +401,7 @@ def main() -> None:
     spark.stop()
     headline_json, detail = summarize(runs, sf)
     detail["partition_pruning"] = pruning_files
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    write_detail(detail, detail_path)
+    write_detail(detail, bench_detail_path())
     # LAST stdout line, after spark.stop() so no shutdown logging can trail
     # it: the driver tail-captures output, so the headline JSON must be
     # compact and final (see summarize()).
@@ -421,6 +419,15 @@ DETAIL_REQUIRED_KEYS = (
     "partition_pruning",
     "scaling",
 )
+
+
+def bench_detail_path() -> str:
+    """$BENCH_DETAIL_PATH, or the committed BENCH_DETAIL.json next to this
+    file: a smoke run points it elsewhere instead of overwriting the
+    committed record."""
+    return os.environ.get("BENCH_DETAIL_PATH") or os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+    )
 
 
 def write_detail(detail: dict, detail_path: str) -> dict:

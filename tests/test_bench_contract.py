@@ -101,6 +101,24 @@ def test_detail_corrupt_prior_is_loud_not_silent(tmp_path, capsys):
     assert "scaling" not in json.load(open(path))
 
 
+def test_detail_path_env_redirects_the_write(tmp_path, monkeypatch):
+    """$BENCH_DETAIL_PATH sends the detail record elsewhere, and the
+    committed BENCH_DETAIL.json is left as it was."""
+    import os
+
+    committed = os.path.join(os.path.dirname(bench.__file__), "BENCH_DETAIL.json")
+    before = open(committed, "rb").read()
+    target = str(tmp_path / "smoke_detail.json")
+    monkeypatch.setenv("BENCH_DETAIL_PATH", target)
+    assert bench.bench_detail_path() == target
+    _, detail = bench.summarize(_fake_runs(), sf=0.001)
+    bench.write_detail(detail, bench.bench_detail_path())
+    assert json.load(open(target))["queries_min"] == detail["queries_min"]
+    assert open(committed, "rb").read() == before
+    monkeypatch.delenv("BENCH_DETAIL_PATH")
+    assert bench.bench_detail_path() == committed
+
+
 def test_committed_detail_file_has_required_proof_blocks():
     import os
 

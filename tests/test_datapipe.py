@@ -67,6 +67,55 @@ def test_simhash_identical_docs_same_signature(spark):
     assert sigs[0] != sigs[4]
 
 
+def _brute_simhash(text):
+    """Simhash by definition: md5 of each distinct token, bit j from hex
+    digit j÷4 (bit 3−j%4), '1' iff more than half the tokens set it."""
+    import hashlib
+
+    toks = set(text.split(" "))
+    digests = [hashlib.md5(t.encode()).hexdigest() for t in toks]
+    ones = [
+        sum((int(d[j // 4], 16) >> (3 - j % 4)) & 1 for d in digests)
+        for j in range(tx.SIMHASH_BITS)
+    ]
+    return "".join("1" if 2 * c > len(toks) else "0" for c in ones), ones
+
+
+def test_simhash_fold_matches_brute_force(spark):
+    texts = {
+        0: "",  # one empty token
+        1: "a  b",  # double space: the empty token between a and b
+        2: "x x x y",  # repeated tokens count once
+        3: "solo",
+        4: "日本語 ünï çø",
+        5: "p q",  # two tokens: every 1-of-2 bit is a tie
+        6: None,  # no tokens, no row
+    }
+    docs = spark.createDataFrame(
+        [(i, t, "en") for i, t in texts.items()], DOC_SCHEMA
+    )
+    got = {r["doc_id"]: r["simhash"] for r in tx.simhash(docs).collect()}
+    want = {i: _brute_simhash(t)[0] for i, t in texts.items() if t is not None}
+    assert got == want
+    # the even-n case really has a tie, and a tie is '0'
+    sig, ones = _brute_simhash(texts[5])
+    ties = [j for j, c in enumerate(ones) if c == 1]
+    assert ties and all(sig[j] == "0" for j in ties)
+
+
+def test_simhash_plan_is_one_map_side_fold(spark):
+    """The signature is a projection over the respread documents: no
+    aggregate and no keyed shuffle, only the round-robin respread of a
+    one-split corpus."""
+    docs = _docs(spark).coalesce(1)
+    sig = tx.simhash(docs)
+    sig.collect()
+    plan = sig._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" not in plan, plan
+    assert "hashpartitioning" not in plan, plan
+    assert "RoundRobinPartitioning" in plan, plan
+
+
 def test_cms_cell_expr_spark_matches_portable(spark):
     """r18: the Spark-side one-md5 conv cell index must equal the
     engine-portable instr-sum form (the one the DuckDB oracle replays)

@@ -1,9 +1,10 @@
 """Property tests for connected components and PageRank.
 
-Large-star/small-star (Kiveris et al., SoCC'14) must produce the
-union-find components on arbitrary graphs, and must converge in O(log n)
-rounds on a path graph, where min-label propagation would need O(n) (one
-hop of label travel per round).
+Both connected-components branches — union-find on the driver and the
+large-star/small-star loop (Kiveris et al., SoCC'14) — must produce the
+union-find components on arbitrary graphs, and the loop must converge in
+O(log n) rounds on a path graph, where min-label propagation would need
+O(n) (one hop of label travel per round).
 """
 
 import random
@@ -42,7 +43,19 @@ def _brute_components(n_nodes, edge_list):
     return {i: find(i) for i in range(n_nodes)}
 
 
-def test_two_phase_matches_min_label_on_random_graphs(spark):
+def _star_loop(spark, n_nodes, edge_list, max_iter=30):
+    """The distributed branch alone: (labels, rounds) of the star loop run
+    directly on the distinct edge set, whatever the driver bound says."""
+    _, edges = _frames(spark, n_nodes, edge_list)
+    e = edges.filter("u != v").distinct().localCheckpoint()
+    star, rounds = gr._star_loop(e, max_iter)
+    labels = {i: i for i in range(n_nodes)}
+    for r in star.collect():
+        labels[r["u"]] = min(labels[r["u"]], r["v"])
+    return labels, rounds
+
+
+def test_two_phase_matches_min_label_on_random_graphs(spark, monkeypatch):
     rng = random.Random(42)
     graphs = []
     for _ in range(3):
@@ -56,10 +69,18 @@ def test_two_phase_matches_min_label_on_random_graphs(spark):
     leaves = [i for i in range(1, 202) if i != 100]
     hub = [(100, i) for i in leaves] + [(i, i + 1) for i in range(201, 221)]
     graphs.append((230, hub))
-    for n, edge_list in graphs:
-        nodes, edges = _frames(spark, n, edge_list)
-        truth = _brute_components(n, edge_list)
-        assert _labels(gr.connected_components_two_phase(nodes, edges)) == truth
+    # clique 10..17 + path 0-1-2 + isolated 3..9, and no edges at all
+    clique = [(a, b) for a in range(10, 18) for b in range(a + 1, 18)]
+    graphs.append((18, clique + [(0, 1), (1, 2)]))
+    graphs.append((5, []))
+    # every graph here is below the driver bound; -1 forces the star loop
+    for bound in (gr.DRIVER_CC_MAX_EDGES, -1):
+        monkeypatch.setattr(gr, "DRIVER_CC_MAX_EDGES", bound)
+        for n, edge_list in graphs:
+            nodes, edges = _frames(spark, n, edge_list)
+            truth = _brute_components(n, edge_list)
+            got = _labels(gr.connected_components_two_phase(nodes, edges))
+            assert got == truth, (bound, n)
 
 
 def test_two_phase_path_graph_converges_in_log_rounds(spark):
@@ -67,33 +88,44 @@ def test_two_phase_path_graph_converges_in_log_rounds(spark):
     # 999 rounds; two-phase collapses the whole path in O(log n) rounds.
     n = 1000
     edge_list = [(i, i + 1) for i in range(n - 1)]
-    nodes, edges = _frames(spark, n, edge_list)
-    labels, rounds = gr.connected_components_two_phase(
-        nodes, edges, return_rounds=True
-    )
+    labels, rounds = _star_loop(spark, n, edge_list)
     # exact count: each round's edge set is fixed by the algorithm, so any
     # change in the round count means the star steps changed
     assert rounds == 11, f"two-phase took {rounds} rounds on a 1000-node path"
-    assert _labels(labels) == {i: 0 for i in range(n)}
+    assert labels == {i: 0 for i in range(n)}
 
 
 def test_two_phase_clique_isolated_and_empty(spark):
     # clique 10..17 + path 0-1-2 + isolated 3..9
     clique = [(a, b) for a in range(10, 18) for b in range(a + 1, 18)]
     edge_list = clique + [(0, 1), (1, 2)]
-    nodes, edges = _frames(spark, 18, edge_list)
-    labels, rounds = gr.connected_components_two_phase(
-        nodes, edges, return_rounds=True
-    )
+    labels, rounds = _star_loop(spark, 18, edge_list)
     expected = {i: 10 for i in range(10, 18)} | {0: 0, 1: 0, 2: 0}
     expected |= {i: i for i in range(3, 10)}
-    assert _labels(labels) == expected
+    assert labels == expected
     assert rounds <= 4  # near-cliques collapse almost immediately
     # no edges at all → every node a singleton
     nodes2, edges2 = _frames(spark, 5, [])
     assert _labels(gr.connected_components_two_phase(nodes2, edges2)) == {
         i: i for i in range(5)
     }
+
+
+def test_two_phase_below_bound_runs_at_most_three_jobs(spark):
+    """Below DRIVER_CC_MAX_EDGES the whole operator is the edge checkpoint
+    (which also counts the edges) and one Arrow collect; the labels are
+    lazy. Counted under a job group, as the pagerank build test does."""
+    edge_list = [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2)]
+    nodes, edges = _frames(spark, 41, edge_list)
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("cc-driver-branch", "probe")
+        labels = gr.connected_components_two_phase(nodes, edges)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("cc-driver-branch"))
+    finally:
+        sc.setJobGroup("", "")
+    assert n_jobs <= 3, n_jobs
+    assert _labels(labels) == _brute_components(41, edge_list)
 
 
 def test_pagerank_fixed_point_and_dangling(spark):
@@ -243,6 +275,5 @@ def test_two_phase_raises_when_max_iter_ends_before_fixed_point(spark):
     # a 50-node chain needs several rounds; one round can never confirm a
     # fixed point, so the call must fail rather than return its labels
     edge_list = [(i, i + 1) for i in range(49)]
-    nodes, edges = _frames(spark, 50, edge_list)
     with pytest.raises(RuntimeError, match="no fixed point in 1 rounds"):
-        gr.connected_components_two_phase(nodes, edges, max_iter=1)
+        _star_loop(spark, 50, edge_list, max_iter=1)

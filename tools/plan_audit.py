@@ -148,11 +148,11 @@ AUDITED = [
     # driver-side merge table (createDataFrame), so a static audit would
     # show nothing — its per-round plan shapes are covered by the operator
     # docstring + tests instead.
-    # dedup_connected_components (= dedup_cc_two_phase) runs the iterative
-    # large-star/small-star loop (plan depth O(1) per round via
+    # dedup_connected_components (= dedup_cc_two_phase) labels its edge set
+    # by union-find on the driver, or above graph.DRIVER_CC_MAX_EDGES by the
+    # iterative large-star/small-star loop (plan depth O(1) per round via
     # localCheckpoint) — a static audit of the final labels frame would only
-    # show the final star groupBy and its join to the nodes, so it is not
-    # listed here.
+    # show the join of the labels to the nodes, so it is not listed here.
 ]
 
 

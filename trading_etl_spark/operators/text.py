@@ -15,8 +15,9 @@ Scale notes (the point of each design):
 - ngram jaccard: the exact quadratic baseline, expressed as a shingle
   self-join (co-shingled pairs only, never a true cross join). Use for
   verification / small corpora; at 100 TB use the LSH path.
-- simhash: per-doc signature via 16 independent bit-aggregations — a single
-  groupBy, embarrassingly parallel.
+- simhash: per-doc signature as one map-side fold — each document's
+  distinct-token md5s are folded into 64 bit counters inside one projection
+  over the respread documents: no shuffle, no per-bit aggregate.
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cache import cached, materialize
+from ..sources.ticks import spread_if_underpartitioned
 
 # --- tokenization / shingles -------------------------------------------------
 
@@ -1510,26 +1512,40 @@ SIMHASH_BITS = 64
 SIMHASH_BANDS = 4  # 4 bands × 16 bits — candidates must agree on ≥1 whole band
 
 
+# Bit j of a token is bit 31 - j % 32 of the j÷32-th 32-bit half of the
+# first 16 hex digits of md5(token), i.e. bit 3 - j % 4 of hex digit j÷4.
+_SIMHASH_FOLD_SQL = f"""concat_ws('', transform(
+  aggregate(
+    transform(transform(_t, t -> md5(t)), m -> array(
+      cast(conv(substr(m, 1, 8), 16, 10) as bigint),
+      cast(conv(substr(m, 9, 8), 16, 10) as bigint))),
+    array_repeat(0, {SIMHASH_BITS}),
+    (acc, h) -> transform(acc, (a, j) ->
+      a + cast(shiftright(if(j < 32, h[0], h[1]), 31 - j % 32) & 1 as int))),
+  c -> if(2 * c > size(_t), '1', '0')))"""
+
+
 def simhash(docs: DataFrame) -> DataFrame:
     """64-bit simhash over distinct tokens: bit j comes from hex digit
-    j÷4 of md5(token) (bit 3−j%4), contributions ±1, sign → bit.
+    j÷4 of md5(token) (bit 3−j%4), contributions ±1, sign → bit, i.e.
+    '1' iff more than half of the document's distinct tokens set it.
+    Documents with NULL text have no tokens and no row.
+
+    One map-side fold, no shuffle: each document's distinct-token array
+    is folded into 64 counters by ``aggregate`` in a single projection,
+    where a per-(doc, token) explode and a ``groupBy`` of 64 sums would
+    pay a shuffle and a 64-aggregate codegen that dominates a cold
+    session. The fold is per-row work, so an under-split corpus is
+    respread first: as one task it would run on one core.
 
     64 bits (vs a smaller hash) is the scale choice: it makes hamming ≤ 3 a
     tight near-dup threshold AND gives the banded candidate join 2¹⁶
     distinct band keys, so bucket collisions — and thus candidate-join
     fan-out — stay proportional to true near-dups, not corpus size."""
-    toks = with_tokens(docs).select("doc_id", F.explode("toks").alias("tok")).distinct()
-    toks = toks.withColumn("th", F.md5("tok"))
-    bit_sums = []
-    for j in range(SIMHASH_BITS):
-        digit = F.expr(f"instr('0123456789abcdef', substr(th, {j // 4 + 1}, 1)) - 1")
-        bit = F.floor(digit / (2 ** (3 - j % 4))) % 2
-        bit_sums.append(F.sum(bit * 2 - 1).alias(f"s{j}"))
-    agg = toks.groupBy("doc_id").agg(*bit_sums)
-    sim = F.concat(
-        *[F.when(F.col(f"s{j}") > 0, "1").otherwise("0") for j in range(SIMHASH_BITS)]
-    )
-    return agg.select("doc_id", sim.alias("simhash"))
+    toks = spread_if_underpartitioned(docs, docs, docs).filter(
+        F.col("text").isNotNull()
+    ).select("doc_id", F.array_distinct(F.split("text", " ")).alias("_t"))
+    return toks.select("doc_id", F.expr(_SIMHASH_FOLD_SQL).alias("simhash"))
 
 
 def _simhash_cached(docs: DataFrame) -> DataFrame:
@@ -1576,7 +1592,7 @@ def dedup_simhash(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     and the bucket join is the only data movement.
 
     The signature relation is served from the session cache (otherwise
-    both self-join sides re-derive the 64-sum token aggregation per call —
+    both self-join sides re-derive the :func:`simhash` fold per call —
     the persisted signature table is exactly what a rollout probes), and
     the hamming verify is the integer XOR popcount form
     (:func:`_hamming64_sql`) instead of 64 substring compares per

@@ -268,9 +268,11 @@ def q_dupgraph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dup-cluster canonicalization: simhash near-dup pairs → connected
-    components (large-star/small-star, O(log n) rounds on any topology —
-    Kiveris et al., SoCC'14) → one keeper per cluster (component_id = min
-    doc_id; singletons keep themselves). Registered under both
+    components (union-find on the driver up to
+    ``graph.DRIVER_CC_MAX_EDGES`` edges, large-star/small-star above it:
+    O(log n) rounds on any topology — Kiveris et al., SoCC'14) → one
+    keeper per cluster (component_id = min doc_id; singletons keep
+    themselves). Registered under both
     ``dedup_connected_components`` and ``dedup_cc_two_phase``, which share
     one oracle."""
     docs = _docs(spark, sf_dir)
