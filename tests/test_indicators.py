@@ -605,6 +605,17 @@ def _walks(spark):
     return spark.createDataFrame(rows, OHLC_SCHEMA)
 
 
+def _masked(ohlc):
+    """``ohlc`` with a :func:`keep_col` mask per period of ``ALL_PERIODS``,
+    keeping rows from the end of each series: period 3's suffix starts
+    mid-series, so its warm-up must count from that suffix's start."""
+    kept = {3: 8, 5: 25, 14: 40}
+    newest_first = Window.partitionBy(*GROUP_KEYS).orderBy(F.desc("time"))
+    return ohlc.withColumn("_r", F.row_number().over(newest_first)).select(
+        *ohlc.columns, *[(F.col("_r") <= n).alias(keep_col(p)) for p, n in kept.items()]
+    )
+
+
 def _fact_rows(df):
     return sorted(
         df.collect(), key=lambda r: (r["currency_pair_code"], r["period"], r["time"])
@@ -626,16 +637,47 @@ def test_all_periods_kernel_equals_single_period_union(spark, single, multi):
         want[0].unionByName(want[1]).unionByName(want[2])
     )
 
-    # rows kept from the end of each series, per period: period 3's suffix
-    # starts mid-series, so its warm-up must count from that suffix's start
-    kept = {3: 8, 5: 25, 14: 40}
-    newest_first = Window.partitionBy(*GROUP_KEYS).orderBy(F.desc("time"))
-    masked = ohlc.withColumn("_r", F.row_number().over(newest_first)).select(
-        *ohlc.columns, *[(F.col("_r") <= n).alias(keep_col(p)) for p, n in kept.items()]
-    )
+    masked = _masked(ohlc)
     want = [
         single(masked.filter(keep_col(p)).select(*ohlc.columns), p) for p in ALL_PERIODS
     ]
     got = _fact_rows(multi(masked, ALL_PERIODS))
     assert got == _fact_rows(want[0].unionByName(want[1]).unionByName(want[2]))
     assert len(got) == 8 + 8 + 25 + 10 + 40 + 10
+
+
+BRANCH_KERNELS = {
+    "ema": lambda o: ema_periods(o, ALL_PERIODS),
+    "ema_masked": lambda o: ema_periods(_masked(o), ALL_PERIODS),
+    "rsi": lambda o: rsi_periods(o, ALL_PERIODS),
+    "rsi_masked": lambda o: rsi_periods(_masked(o), ALL_PERIODS),
+    "macd": macd,
+    "atr": atr,
+    "adx": adx,
+    "holt_forecast": holt_forecast,
+    "keltner": keltner,
+    "trix": trix,
+}
+
+
+@pytest.mark.parametrize("name", list(BRANCH_KERNELS))
+def test_driver_branch_equals_executor_branch(spark, monkeypatch, name):
+    """Below ``DRIVER_SERIES_MAX_ROWS`` a grouped kernel runs on the
+    driver; the same closure through ``applyInPandas`` (the bound forced
+    below the input) must give the same rows bit for bit, each warm-up NaN
+    arriving as NULL on both branches."""
+    from trading_etl_spark.operators import indicators
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    kernel = BRANCH_KERNELS[name]
+    ohlc = _walks(spark)
+    driver = kernel(ohlc)  # the branch is chosen when the relation is built
+    monkeypatch.setattr(indicators, "DRIVER_SERIES_MAX_ROWS", -1)
+    executors = kernel(ohlc)
+    assert "InPandas" not in plan(driver), plan(driver)
+    assert "FlatMapGroupsInPandas" in plan(executors), plan(executors)
+    got = sorted(map(repr, driver.collect()))
+    assert got == sorted(map(repr, executors.collect()))
+    assert any("None" in r for r in got) and not any("nan" in r for r in got)

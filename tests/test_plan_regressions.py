@@ -6,6 +6,7 @@ These parse the optimized logical / physical plan of small synthetic inputs —
 plan SHAPE is data-independent, so tiny frames prove the 100 TB property.
 """
 
+import re
 from datetime import datetime, timedelta
 
 import pytest
@@ -57,6 +58,28 @@ def test_candle_chain_single_exchange(spark):
     assert n_hash_exchanges == 1, f"chain has {n_hash_exchanges} exchanges:\n{plan}"
     # and the broadcast of the timeframe dim must not have become a shuffle
     assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan or plan.count("Exchange") == 1
+
+
+def test_candle_chain_union_reuses_the_keyed_exchange(spark):
+    """A new candle table is written as the union of the chain's pair
+    (``pipelines.ohlc_pipeline``): derived is built on base, so both union
+    branches hold the keyed exchange, and the executed plan must run it
+    once and reuse it in the other branch."""
+    from trading_etl_spark.sources import ticks
+
+    base, derived = ohlc.ohlc_chain_single_shuffle(
+        ticks.raw_ticks(spark, "/root/testdata/sf0.001"),
+        dims.dim_timeframe(spark),
+        durations=dims.timeframe_durations(),
+    )
+    union = base.unionByName(derived)
+    union.collect()  # the final adaptive plan shows reuse only once run
+    plan = _physical(union).split("== Initial Plan ==")[0]
+    keyed = [
+        line for line in plan.splitlines()
+        if re.search(r"Exchange hashpartitioning\(currency_pair_code#\d+, _b", line)
+    ]
+    assert ["ReusedExchange" in line for line in keyed] == [False, True], plan
 
 
 def test_bigram_pmi_no_cartesian_no_token_self_join(spark):
@@ -462,12 +485,14 @@ def test_r10_native_indicators_single_window_shuffle_no_python(spark):
 @pytest.mark.parametrize(
     "name", ["adx", "macd", "atr", "holt_forecast", "keltner", "trix"]
 )
-def test_recursive_indicator_one_group_shuffle(spark, name):
-    """Each recursive indicator rides ONE groupBy(pair, timeframe) exchange
-    into the grouped Arrow kernel (``indicators._per_series``) — the same
-    shape as EMA/RSI."""
+def test_recursive_indicator_one_group_shuffle(spark, monkeypatch, name):
+    """Above the driver bound, each recursive indicator rides ONE
+    groupBy(pair, timeframe) exchange into the grouped Arrow kernel
+    (``indicators._per_series``) — the same shape as EMA/RSI. The bound
+    is forced below the input so the executor branch is planned."""
     from trading_etl_spark.operators import indicators
 
+    monkeypatch.setattr(indicators, "DRIVER_SERIES_MAX_ROWS", -1)
     t0 = datetime(2024, 1, 1)
     rows = [
         ("USD/JPY", "1h", t0 + timedelta(hours=i), float(i), float(i) + 1,

@@ -19,8 +19,9 @@ typically small → Catalyst/AQE broadcasts it.
 from __future__ import annotations
 
 import contextlib
+from typing import Sequence
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import fs
@@ -104,6 +105,7 @@ def first_wins_append(
     prune_on: str = "time",
     partition_by: list[str] | None = None,
     lock: bool = True,
+    observe: tuple[Observation, Sequence[Column]] | None = None,
 ) -> int:
     """Idempotently append ``incoming`` to the parquet table at ``path``.
 
@@ -118,14 +120,24 @@ def first_wins_append(
 
     A new table is one write job; the row count is observed on that job.
     An existing table is appended by :func:`_append_existing`.
+
+    ``observe`` = (observation, metrics) observes ``metrics`` over the rows
+    written, on either path (a split of the count by kind, say). It is
+    filled whenever the returned count is non-zero; an existing-table
+    append of an empty batch runs no job and leaves it unfilled.
     """
     batch = incoming.dropDuplicates(keys)
     guard = writer_lock(spark, path) if lock else contextlib.nullcontext()
     with guard:
         if fs.exists(spark, path):
-            return _append_existing(spark, path, batch, keys, prune_on, partition_by)
+            return _append_existing(
+                spark, path, batch, keys, prune_on, partition_by, observe
+            )
         obs = Observation()
-        writer = batch.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append")
+        rows = batch.observe(obs, F.count(F.lit(1)).alias("n"))
+        if observe:
+            rows = rows.observe(observe[0], *observe[1])
+        writer = rows.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
@@ -147,6 +159,7 @@ def _append_existing(
     keys: list[str],
     prune_on: str,
     partition_by: list[str] | None,
+    observe: tuple[Observation, Sequence[Column]] | None = None,
 ) -> int:
     """Anti-join a key-deduped ``batch`` against the existing table at
     ``path`` and append the rows whose key is new.
@@ -183,7 +196,7 @@ def _append_existing(
         for c in part_keys:
             existing = existing.filter(F.col(c).isin(seen[c]))
         fresh = first_wins(existing, batch, keys).cache()
-        n = fresh.count()
+        n = (fresh.observe(observe[0], *observe[1]) if observe else fresh).count()
         if n:
             writer = fresh.write.mode("append")
             if partition_by:

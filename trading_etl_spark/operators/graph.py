@@ -82,7 +82,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-# Measured by tools/cc_bound_probe.py (see connected_components_two_phase).
+# Measured by tools/driver_bound_probe.py (see connected_components_two_phase).
 DRIVER_CC_MAX_EDGES = 1_000_000
 
 
@@ -195,7 +195,7 @@ def connected_components_two_phase(
     ``RuntimeError`` when ``max_iter`` rounds pass without a confirmed
     fixed point.
 
-    The bound is measured (tools/cc_bound_probe.py: random graphs with
+    The bound is measured (``tools/driver_bound_probe.py cc``: random graphs with
     as many vertices as edges, a fresh ``local[4]`` session per run on a
     4-core host, build plus one aggregate over the labels, median of 3):
 

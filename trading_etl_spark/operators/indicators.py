@@ -6,8 +6,10 @@ The reference pulls time-ordered closes out of Postgres into NumPy and calls
 
 - SMA is a native frame window (JVM-side, whole-stage codegen) — no UDF.
 - EMA and RSI are order-sensitive recursions, not expressible as Spark frame
-  windows → grouped ``applyInPandas`` per (pair, timeframe): each group's
-  series lands in one task in time order, vectorized via Arrow.
+  windows → a grouped NumPy kernel per (pair, timeframe) series, run by
+  :func:`_grouped`: on the driver up to ``DRIVER_SERIES_MAX_ROWS`` input
+  rows (Arrow in, Arrow out, no Python worker), above it as
+  ``applyInPandas``, where each group's series lands in one task.
 - A fact table's periods share one pass: :func:`sma_periods` is one sort and
   one ``WindowExec`` with a frame per period, and :func:`ema_periods` /
   :func:`rsi_periods` are one grouped pass that runs every period on each
@@ -29,9 +31,11 @@ across the Arrow pandas→Spark boundary anyway):
   matching TA-Lib's guard); NaN for the first ``period`` rows.
 
 Scale notes: groups are (pair, timeframe) — thousands of independent series,
-each modest in length; ``applyInPandas`` shuffles once on the group key and
-the recursion is O(n) NumPy per group. Skew across pairs is bounded by the
-time-bucket grain. The indicator output is written with W1 first-wins append
+each modest in length. Above the driver bound ``applyInPandas`` shuffles
+once on the group key and the recursion is O(n) NumPy per group; below it
+the whole input is one bounded collect, which is cheaper than starting the
+executors' Python workers for a few thousand candles. Skew across pairs is
+bounded by the time-bucket grain. The indicator output is written with W1 first-wins append
 + the W2 MAX(time) cursor, so incremental runs recompute only trailing rows.
 """
 
@@ -42,9 +46,12 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..sources.local import local_relation
 
 GROUP_KEYS = ["currency_pair_code", "timeframe_code"]
 
@@ -177,12 +184,70 @@ def _rsi_series(closes: np.ndarray, period: int) -> np.ndarray:
     return out
 
 
+# Measured by tools/driver_bound_probe.py (see _grouped).
+DRIVER_SERIES_MAX_ROWS = 100_000
+
+
+def _grouped(inputs: DataFrame, compute, schema: str) -> DataFrame:
+    """``compute`` over each (pair, timeframe) group of ``inputs``: one
+    pandas frame in, one out, with NaN leaving as NULL. Up to
+    ``DRIVER_SERIES_MAX_ROWS`` input rows it runs on the driver, Arrow in
+    and Arrow out; above the bound, as ``groupBy(pair, tf).applyInPandas``
+    on the executors. The size test is one bounded collect
+    (``limit(bound + 1)``), whose rows are the driver branch's input.
+
+    Either branch hands ``compute`` the same frame: timestamps as
+    naive wall times in the session time zone, which is how
+    ``applyInPandas`` delivers them and how ``createDataFrame`` reads
+    them back. The driver branch starts no Python worker: in a fresh
+    session the workers and their pandas/pyarrow import cost more than
+    the kernels themselves.
+
+    The bound is measured (``tools/driver_bound_probe.py series``: EMA
+    over every default period on 36 series of 1h candles with random
+    closes, a fresh
+    ``local[4]`` session per run on a 4-core host, build plus one
+    aggregate over the output, median of 3):
+
+    ======== ========== ========== ===========================
+    rows     driver     executors  driver Python peak RSS
+    ======== ========== ========== ===========================
+    10k      5.5 s      7.3 s      150 MB
+    100k     7.7 s      8.5 s      188 MB
+    300k     11.3 s     9.0 s      258 MB
+    1M       11.2 s     10.1 s     527 MB (141 MB on executors)
+    ======== ========== ========== ===========================
+
+    The driver wins up to 100k rows, where the executors' fixed cost
+    (the Python workers, their imports, one shuffle) outweighs a
+    single-threaded kernel; from 300k on, four executor cores win and
+    the driver's memory grows with the input (~0.4 KB per row). The
+    bound is the largest measured size at which the driver wins. A
+    backfill's EMA input is ~2k candles, and a sf0.1 indicator query's
+    4,320 1h candles.
+    """
+    head = inputs.limit(DRIVER_SERIES_MAX_ROWS + 1).toArrow()
+    if head.num_rows > DRIVER_SERIES_MAX_ROWS:
+        return inputs.groupBy(*GROUP_KEYS).applyInPandas(compute, schema)
+    pdf = head.to_pandas()
+    for c in pdf.select_dtypes("datetimetz"):
+        pdf[c] = pdf[c].dt.tz_localize(None)
+    groups = pdf.groupby(GROUP_KEYS, sort=False, dropna=False)
+    spark = inputs.sparkSession
+    if not groups.ngroups:
+        return local_relation(spark, [], schema)
+    out = pd.concat([compute(g) for _, g in groups], ignore_index=True)
+    return spark.createDataFrame(
+        pa.Table.from_pandas(out, preserve_index=False), schema
+    )
+
+
 def _grouped_periods(
     ohlc: DataFrame, periods: Iterable[int], calc_version: str, fn
 ) -> DataFrame:
-    """One ``groupBy(pair, tf).applyInPandas`` for every period: each group
-    is sorted once and ``fn`` runs per period over the rows its
-    :func:`keep_col` mask keeps (all rows without one)."""
+    """One :func:`_grouped` pass for every period: each group is sorted
+    once and ``fn`` runs per period over the rows its :func:`keep_col`
+    mask keeps (all rows without one)."""
     periods = list(periods)
     masks = {p: keep_col(p) for p in periods if keep_col(p) in ohlc.columns}
 
@@ -207,10 +272,10 @@ def _grouped_periods(
             )
         return pd.concat(parts, ignore_index=True)
 
-    return (
-        ohlc.select(*GROUP_KEYS, "time", "close", *masks.values())
-        .groupBy(*GROUP_KEYS)
-        .applyInPandas(compute, INDICATOR_OUT_SCHEMA)
+    return _grouped(
+        ohlc.select(*GROUP_KEYS, "time", "close", *masks.values()),
+        compute,
+        INDICATOR_OUT_SCHEMA,
     )
 
 
@@ -229,20 +294,20 @@ def rsi_periods(
 
 
 def ema(ohlc: DataFrame, period: int, calc_version: str = "0") -> DataFrame:
-    """Exponential moving average, TA-Lib seeding (recursive → applyInPandas)."""
+    """Exponential moving average, TA-Lib seeding (recursive → grouped kernel)."""
     return ema_periods(ohlc, [period], calc_version)
 
 
 def rsi(ohlc: DataFrame, period: int, calc_version: str = "0") -> DataFrame:
-    """Relative Strength Index, Wilder smoothing (recursive → applyInPandas)."""
+    """Relative Strength Index, Wilder smoothing (recursive → grouped kernel)."""
     return rsi_periods(ohlc, [period], calc_version)
 
 
 def _per_series(
     ohlc: DataFrame, inputs: list[str], outputs: list[str], fn
 ) -> DataFrame:
-    """One ``groupBy(pair, tf).applyInPandas`` that sorts each series by
-    ``time`` once and runs ``fn`` over it: ``fn`` takes one float64 array
+    """One :func:`_grouped` pass that sorts each series by ``time`` once
+    and runs ``fn`` over it: ``fn`` takes one float64 array
     per ``inputs`` column and returns one array per ``outputs`` column (a
     bare array for one output). Each output row carries the pair, timeframe
     and time of its input row; NaN leaves the kernel as NULL."""
@@ -264,11 +329,7 @@ def _per_series(
             }
         )
 
-    return (
-        ohlc.select(*GROUP_KEYS, "time", *inputs)
-        .groupBy(*GROUP_KEYS)
-        .applyInPandas(compute, schema)
-    )
+    return _grouped(ohlc.select(*GROUP_KEYS, "time", *inputs), compute, schema)
 
 
 def _macd_series(
@@ -386,7 +447,7 @@ def macd(
     ohlc: DataFrame, fast: int = 12, slow: int = 26, signal: int = 9
 ) -> DataFrame:
     """MACD(fast, slow, signal) per (pair, timeframe) — order-sensitive EMA
-    recursions → grouped ``applyInPandas`` like :func:`ema`. Warm-up rows
+    recursions → one grouped kernel like :func:`ema`. Warm-up rows
     carry NaN (→ NULL across the Arrow boundary). Reference computes single
     EMAs driver-side (``src/etl/flows/transform_services.py:268-270``); MACD
     extends that family with the same seeding discipline."""
@@ -399,8 +460,8 @@ def macd(
 
 
 def atr(ohlc: DataFrame, period: int = 14) -> DataFrame:
-    """ATR(period), Wilder smoothing (recursive → grouped ``applyInPandas``,
-    same shuffle shape as :func:`rsi` but over (high, low, close))."""
+    """ATR(period), Wilder smoothing (recursive → one grouped kernel, the
+    same shape as :func:`rsi` but over (high, low, close))."""
     return _per_series(
         ohlc,
         ["high", "low", "close"],

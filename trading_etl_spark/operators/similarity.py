@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cache import cached, materialize
+from ..sources.local import local_relation
 from ..sources.ticks import spread_if_underpartitioned
 from .text import colliding_pairs
 
@@ -480,7 +481,7 @@ def kmeans_codebook(
     construction, so the result is engine-independent."""
     rows = _lloyd_rows(emb, "emb", list(enumerate(_seed_vectors(emb, k))), iters)
     return Codebook(
-        rows, emb.sparkSession.createDataFrame(rows, "cell int, cv array<double>")
+        rows, local_relation(emb.sparkSession, rows, "cell int, cv array<double>")
     )
 
 
@@ -754,7 +755,8 @@ def _adc_scored(
     identically. The tables are n_queries×m×k rows."""
     m = len(books)
     dsub = dim // m
-    books_df = q.sparkSession.createDataFrame(
+    books_df = local_relation(
+        q.sparkSession,
         [(s, cell, cv) for s, rows in enumerate(books) for cell, cv in rows],
         "s int, cell int, cv array<double>",
     )
@@ -1290,8 +1292,8 @@ def cluster_silhouette(emb: DataFrame) -> DataFrame:
         # empty (or all-NULL-label) input: 0 labels — emit an empty frame
         # with the contract schema instead of generating untyped map()/
         # array() literals the analyzer rejects
-        return emb.sparkSession.createDataFrame(
-            [], "label long, n_points long, mean_silhouette double"
+        return local_relation(
+            emb.sparkSession, [], "label long, n_points long, mean_silhouette double"
         )
     n_literals = sum(len(cv) for cv in cent_arrays.values())
     if n_literals > SIL_MAX_CODEBOOK_LITERALS:

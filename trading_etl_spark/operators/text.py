@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cache import cached, materialize
+from ..sources.local import local_relation
 from ..sources.ticks import spread_if_underpartitioned
 
 # --- tokenization / shingles -------------------------------------------------
@@ -191,7 +192,8 @@ def mixture_plan(
     arithmetic rounds to 6dp before the ceiling decision, so both engines
     pick identical epoch counts."""
     spec_rows = sorted((weights or MIX_WEIGHTS).items())
-    spec = docs.sparkSession.createDataFrame(
+    spec = local_relation(
+        docs.sparkSession,
         [(lang, float(w)) for lang, w in spec_rows],
         "lang string, target_weight double",
     )
@@ -2177,7 +2179,8 @@ def bpe_train(
     Python reference. ``fitted`` short-circuits with a shared
     :func:`_bpe_fit` result (the query layer's train-once cache)."""
     merges, _ = fitted if fitted is not None else _bpe_fit(docs, n_merges)
-    return docs.sparkSession.createDataFrame(
+    return local_relation(
+        docs.sparkSession,
         merges,
         "merge_rank int, left string, right string, merged string, pair_count bigint",
     )

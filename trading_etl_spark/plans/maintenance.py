@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fs
+from ..sources.local import local_relation
 
 
 def list_partitions(spark: SparkSession, path: str, column: str) -> list[str]:
@@ -229,7 +230,8 @@ def compaction_plan(
         for value in list_partitions(spark, path, column)
         for sizes in [fs.file_sizes(spark, f"{path}/{column}={value}")]
     ]
-    ldf = spark.createDataFrame(
+    ldf = local_relation(
+        spark,
         listing, "partition_value string, files_before int, bytes long"
     )
     # pathGlobFilter: the row-count scan must see exactly the committed
@@ -285,7 +287,8 @@ def orphan_report(
         committed = fs.file_sizes(spark, part, suffix=committed_suffix)
         orphans = fs.file_sizes(spark, part, suffix=orphan_suffix)
         rows.append((value, len(committed), len(orphans)))
-    df = spark.createDataFrame(
+    df = local_relation(
+        spark,
         rows, "partition_value string, files_committed int, files_orphan int"
     )
     return df.withColumn(

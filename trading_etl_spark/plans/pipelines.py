@@ -11,7 +11,13 @@ Here each flow is a function: the Prefect ``wait_for`` DAG becomes plain
 DataFrame dependency, per-pair task fan-out becomes partition parallelism,
 and every write is the W1 first-wins idempotent append (io.first_wins_append)
 — re-running any pipeline adds zero rows, the reference's ON CONFLICT
-DO NOTHING contract.
+DO NOTHING contract. The base→derived ``wait_for`` edge applies to an
+existing candle table; a new one is written in one append (see
+:func:`ohlc_pipeline`).
+
+A fresh-session backfill starts no Python worker: the dims are Arrow-backed
+and the EMA/RSI kernels run on the driver below their row bound
+(``indicators.DRIVER_SERIES_MAX_ROWS``).
 
 Warehouse layout (parquet, UTC):
 - ``{wh}/ohlc``                 partitioned by timeframe_code, currency_pair_code
@@ -29,11 +35,11 @@ from __future__ import annotations
 import operator
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import fs
-from ..config import DEFAULT_INDICATOR_PERIODS
+from ..config import DEFAULT_INDICATOR_PERIODS, EngineConfig
 from ..io import first_wins_append
 from ..operators import indicators, ohlc, signals
 from ..sources import dims, ticks
@@ -55,23 +61,46 @@ EVENT_KEYS = [
 def ohlc_pipeline(spark: SparkSession, sf_dir: str, warehouse: str) -> dict[str, int]:
     """Ticks → 1m candles → derived timeframes, idempotently appended.
 
-    Mirrors transform.py:23-76: derived aggregation reads the *written* 1m
-    relation (the reference's base→derived wait_for edge), so incremental
-    runs re-derive only from the materialized base table.
+    On an existing table this mirrors transform.py:23-76: the 1m candles
+    are appended, and derived aggregation reads the *written* 1m relation
+    (the reference's base→derived wait_for edge), so incremental runs
+    re-derive only from the materialized base table.
+
+    A new table has no written 1m candles but the batch's own, so the
+    read-back is skipped: :func:`ohlc.ohlc_chain_single_shuffle` builds
+    both kinds over one keyed exchange, which the two union branches
+    share, and one append writes them: at most 5 jobs (the two dim
+    broadcasts, the keyed exchange, the append's key dedup and the
+    write) instead of 14. The append
+    repeats the existence check under its writer lock, so a table created
+    in between is still appended first-wins. The row counts of each kind
+    are observed on that write.
     """
     path = f"{warehouse}/ohlc"
+    partition_by = ["timeframe_code", "currency_pair_code"]
+    if not fs.exists(spark, path):
+        cfg = EngineConfig.from_env()
+        base, derived = ohlc.ohlc_chain_single_shuffle(
+            ticks.raw_ticks(spark, sf_dir),
+            dims.dim_timeframe(spark, cfg),
+            durations=dims.timeframe_durations(cfg),
+        )
+        obs = Observation()
+        n = first_wins_append(
+            spark, path, base.unionByName(derived), OHLC_KEYS,
+            partition_by=partition_by,
+            observe=(obs, [F.count_if(F.col("timeframe_code") == "1m").alias("n_1m")]),
+        )
+        n_base = obs.get["n_1m"] if n else 0
+        return {"ohlc_base_rows": n_base, "ohlc_derived_rows": n - n_base}
     base = ohlc.ohlc_base(ticks.load_ticks(spark, sf_dir))
-    n_base = first_wins_append(
-        spark, path, base, OHLC_KEYS,
-        partition_by=["timeframe_code", "currency_pair_code"],
-    )
+    n_base = first_wins_append(spark, path, base, OHLC_KEYS, partition_by=partition_by)
     written_1m = spark.read.parquet(path).filter("timeframe_code = '1m'")
     derived = ohlc.ohlc_derived(written_1m, dims.dim_timeframe(spark)).select(
         *ohlc.OHLC_COLS
     )
     n_derived = first_wins_append(
-        spark, path, derived, OHLC_KEYS,
-        partition_by=["timeframe_code", "currency_pair_code"],
+        spark, path, derived, OHLC_KEYS, partition_by=partition_by
     )
     return {"ohlc_base_rows": n_base, "ohlc_derived_rows": n_derived}
 

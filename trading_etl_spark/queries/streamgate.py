@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from ..sources import ticks
 from ..sources.dims import currency_values_sql as _currency_sql
+from ..sources.local import local_relation
 from ..streaming import drain
 from ._dumpcache import get_or_build_dump
 
@@ -578,7 +579,7 @@ def q_streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist = (
             spark.read.parquet(hist_dir)
             if os.path.isdir(hist_dir)
-            else spark.createDataFrame([], hist_schema)
+            else local_relation(spark, [], hist_schema)
         )
         staged = f"{base}/history_next_{batch_id}"
         # overwrite: a failed/retried batch re-invokes foreachBatch with

@@ -6,7 +6,9 @@ dim_timeframe seed: e2444ebd2a06:135-141 + 0a3601d18004_add_timeframe.py:23-27.
 Dims are tiny — always broadcast-joined (replacing the reference's driver-side
 scalar code→id lookups, ``src/etl/flows/transform_helpers.py:18-42``). At
 100 TB the fact side scales; the dim side stays 6 rows, so these joins never
-shuffle.
+shuffle. Both dims are Arrow-backed :func:`local.local_relation` relations:
+a row-list ``createDataFrame`` would start the Python workers on its first
+job, which in a fresh session cost more than the dim's whole use.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig
 from ..schemas import DIM_CURRENCY_SCHEMA, DIM_TIMEFRAME_SCHEMA
+from .local import local_relation
 
 CURRENCY_SEED: list[tuple] = [
     (1, "USD", "JPY", "USD/JPY", "USD_JPY"),
@@ -63,11 +66,11 @@ def timeframe_durations(cfg: EngineConfig | None = None) -> list[int]:
 
 
 def dim_currency(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(CURRENCY_SEED, DIM_CURRENCY_SCHEMA)
+    return local_relation(spark, CURRENCY_SEED, DIM_CURRENCY_SCHEMA)
 
 
 def dim_timeframe(spark: SparkSession, cfg: EngineConfig | None = None) -> DataFrame:
-    return spark.createDataFrame(timeframe_rows(cfg), DIM_TIMEFRAME_SCHEMA)
+    return local_relation(spark, timeframe_rows(cfg), DIM_TIMEFRAME_SCHEMA)
 
 
 def currency_values_sql() -> str:
