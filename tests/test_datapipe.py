@@ -849,6 +849,94 @@ def test_kmeans_codebook_tolerates_emptied_cells(spark):
     assert assigned.select("vec_id").distinct().count() == 10
 
 
+def _fixture_emb(spark, sf):
+    import os
+
+    root = os.path.dirname(
+        os.environ.get("SPARK_GRAFT_FIXTURE_DIR", os.path.expanduser("~/testdata/sf0.001"))
+    )
+    if not os.path.isdir(os.path.join(root, sf)):
+        pytest.skip("driver testdata corpus not present")
+    return sim.load_embeddings(spark, os.path.join(root, sf))
+
+
+def _vector_models(emb):
+    book = sim.kmeans_codebook(emb)
+    cells = sorted(
+        tuple(r) for r in sim.assign_cells(emb, book).select("vec_id", "cell", "emb").collect()
+    )
+    codes, books = sim.pq_model(emb)
+    return book.rows, cells, books, sorted(tuple(r) for r in codes.collect())
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
+def test_vectors_driver_branch_equals_executors(spark, monkeypatch, sf):
+    """Below ``DRIVER_VECTORS_MAX_ROWS`` the seed pick, Lloyd loop and
+    assignment run on the driver; the codebook rows, the assigned cells
+    and the PQ books and codes equal the executor branch's (bound forced
+    to -1) row for row, on the fixture embeddings."""
+    emb = _fixture_emb(spark, sf)
+    assert sim._local_vectors(emb) is not None
+    driver = _vector_models(emb)
+    monkeypatch.setattr(sim, "DRIVER_VECTORS_MAX_ROWS", -1)
+    assert sim._local_vectors(emb) is None
+    executors = _vector_models(emb)
+    for name, got, want in zip(("codebook", "cells", "books", "codes"), driver, executors):
+        assert got == want, name
+
+
+def _fixture_means(spark, sf):
+    """Every unrounded centroid mean the k-means and PQ training of the
+    fixture embeddings computes, iteration by iteration."""
+    local = sim._local_vectors(_fixture_emb(spark, sf))
+    seeds = sim._seed_vectors(None, max(sim.KMEANS_K, sim.PQ_K), local)
+    dsub = sim.EMB_DIM // sim.PQ_M
+    runs = [(local.V, list(enumerate(seeds[: sim.KMEANS_K])), sim.KMEANS_ITERS)] + [
+        (
+            local.V[:, s * dsub : (s + 1) * dsub],
+            [(i, v[s * dsub : (s + 1) * dsub]) for i, v in enumerate(seeds[: sim.PQ_K])],
+            sim.PQ_ITERS,
+        )
+        for s in range(sim.PQ_M)
+    ]
+    means = []
+    for V, cent, iters in runs:
+        for _ in range(iters):
+            raw = sim._cell_means(V, sim._nearest_kernel(cent)(V))
+            means += [x for _, m in raw for x in m.tolist()]
+            cent = sim._lloyd_local(V, cent, 1)
+    return means
+
+
+def test_round6_matches_spark_round(spark):
+    """The driver's 6dp rule is ``F.round(x, 6)``: on near-ties one ulp
+    either side, negatives, signed zeros, extremes, random doubles and
+    every mean the fixtures' k-means and PQ training produces."""
+    import random
+
+    from trading_etl_spark.sources.local import local_relation
+
+    values = [0.0, -0.0, 1e-300, -1e-300, 1e22, -1e22, 1e300, float("nan"), float("inf")]
+    for tie in (5e-7, 1.5e-6, 2.5e-7, 0.1234565, 0.0012345, 1.0000005, 123.4567895, 0.2500005):
+        for x in (tie, math.nextafter(tie, 0.0), math.nextafter(tie, math.inf)):
+            values += [x, -x]
+    rng = random.Random(3)
+    values += [rng.uniform(-1.0, 1.0) for _ in range(2000)]
+    values += [rng.uniform(-1.0, 1.0) * 10.0 ** rng.randint(-9, 9) for _ in range(2000)]
+    for sf in ("sf0.001", "sf0.1"):
+        values += _fixture_means(spark, sf)
+    rel = local_relation(spark, [(i, x) for i, x in enumerate(values)], "i int, x double")
+    got = {
+        r.i: r.r for r in rel.select("i", F.round("x", 6).alias("r")).collect()
+    }
+    mismatches = [
+        (x, got[i], sim._round6(x))
+        for i, x in enumerate(values)
+        if repr(got[i]) != repr(sim._round6(x))
+    ]
+    assert not mismatches, mismatches[:10]
+
+
 def test_chunk_documents_coverage_and_overlap(spark):
     # size=8 stride=6: doc of 20 tokens → chunks at 0,6,12 (last ragged);
     # short doc → one full chunk; every token covered by some chunk.
@@ -1349,19 +1437,55 @@ def test_semantic_dedup_drop_is_one_pass_not_transitive(spark):
 
 
 def test_bloom_no_false_negatives_and_low_fp(spark):
-    import numpy as np
-
-    keys = spark.createDataFrame([(int(i),) for i in range(1000)], "h long")
+    keys = spark.range(1000).select(F.col("id").alias("h"))
     bloom = tx.bloom_build(keys, "h", m_bits=1 << 14, k=7)
-    probe_df = spark.createDataFrame(
-        [(int(i),) for i in range(5000)], "h long"
-    ).withColumn("hit", tx._bloom_probe_udf(bloom, 1 << 14, 7)(F.col("h")))
-    rows = {r.h: r.hit for r in probe_df.collect()}
+    probe_df = tx.bloom_probe(
+        spark.range(5000).select(F.col("id").alias("h")), "h", bloom, 1 << 14, 7
+    )
+    rows = {r.h: r.bloom_hit for r in probe_df.collect()}
     # members: never a false negative
     assert all(rows[i] for i in range(1000))
     # non-members: fp rate stays near the design point (m/n=16.4, k=7 → ~1%)
     fp = sum(rows[i] for i in range(1000, 5000)) / 4000
     assert fp < 0.05, fp
+
+
+def _bloom_reference(keys, m_bits, k):
+    """The NumPy Bloom build: Kirsch–Mitzenmacher positions in uint64
+    arithmetic, bits set with ``np.bitwise_or.at`` (bit p is bit p & 7
+    of byte p >> 3)."""
+    import numpy as np
+
+    h = np.array(keys, dtype=np.int64).astype(np.uint64)
+    h1 = h & np.uint64(0xFFFFFFFF)
+    h2 = (h >> np.uint64(32)) | np.uint64(1)
+    i = np.arange(k, dtype=np.uint64)[:, None]
+    pos = ((h1[None, :] + i * h2[None, :]) % np.uint64(m_bits)).astype(np.int64).ravel()
+    bits = np.zeros(m_bits // 8, dtype=np.uint8)
+    np.bitwise_or.at(bits, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
+    return bits.tobytes()
+
+
+@pytest.mark.parametrize("m_bits,k", [(1 << 20, 7), (1 << 14, 7), (3 * 64, 3)])
+def test_bloom_build_matches_numpy_reference(spark, m_bits, k):
+    """The JVM build sets exactly the bits of the NumPy reference, on the
+    sign and width edges of the int64 key (0, -1, Long.MIN, Long.MAX)
+    and random keys of both signs; every built key probes as a hit."""
+    import random
+
+    rng = random.Random(11)
+    keys = [0, -1, 1, -(2**63), 2**63 - 1, 2**32 - 1, 2**32] + [
+        rng.randrange(-(2**63), 2**63) for _ in range(300)
+    ] + [-rng.randrange(1, 2**63) for _ in range(100)]
+    df = spark.createDataFrame([(x,) for x in keys], "h long")
+    bloom = tx.bloom_build(df, "h", m_bits, k)
+    assert bloom == _bloom_reference(keys, m_bits, k)
+    assert all(r.bloom_hit for r in tx.bloom_probe(df, "h", bloom, m_bits, k).collect())
+
+
+def test_bloom_build_empty_keys_gives_empty_bitmap(spark):
+    empty = spark.range(0).select(F.col("id").alias("h"))
+    assert tx.bloom_build(empty, "h", 1 << 12, 5) == bytes((1 << 12) // 8)
 
 
 def test_decontaminate_bloom_equals_exact(spark):

@@ -218,11 +218,33 @@ except Exception:
     print("TRAP_FIRED")
 """
 
+# the queries of the corpus_build benchmark workload
+CORPUS_QUERIES = (
+    "text_quality_score",
+    "text_ngram_diversity",
+    "dedup_minhash_lsh",
+    "dedup_cc_two_phase",
+    "decontaminate_bloom_prefilter",
+    "embedding_knn_ivf_kmeans",
+)
 
-def test_run_etl_starts_no_python_worker(tmp_path):
-    """A fresh-session ``run_etl`` must start no Python worker: the session
-    names a worker module that raises, so any worker start fails the run.
-    The script then starts one on purpose to prove the trap is armed."""
+CORPUS_UNDER_TRAP = f"""
+from pyspark.sql import functions as F
+from trading_etl_spark.queries import datapipe
+from trading_etl_spark.session import get_spark
+spark = get_spark("worker-trap", master="local[2]", shuffle_partitions=2)
+for q in {CORPUS_QUERIES!r}:
+    print("ROWS", q, len(datapipe.QUERIES[q](spark, {SF_DIR!r}).collect()))
+try:
+    spark.range(1).select(F.udf(lambda x: x, "long")("id")).collect()
+except Exception:
+    print("TRAP_FIRED")
+"""
+
+
+def _run_under_trap(tmp_path, script: str, *args: str) -> subprocess.CompletedProcess:
+    """Run ``script`` in a fresh session whose Python daemon and worker
+    modules raise, so any worker start fails the job that started it."""
     (tmp_path / "python_worker_trap.py").write_text(TRAP)
     trap = " ".join(
         f"--conf spark.python.{kind}.module=python_worker_trap"
@@ -234,8 +256,26 @@ def test_run_etl_starts_no_python_worker(tmp_path):
         PYSPARK_SUBMIT_ARGS=f"{trap} pyspark-shell",
     )
     p = subprocess.run(
-        [sys.executable, "-c", ETL_UNDER_TRAP, str(tmp_path / "wh")],
+        [sys.executable, "-c", script, *args],
         env=env, capture_output=True, text=True, timeout=600,
     )
     assert p.returncode == 0, p.stderr[-4000:]
+    return p
+
+
+def test_run_etl_starts_no_python_worker(tmp_path):
+    """A fresh-session ``run_etl`` must start no Python worker: the session
+    names a worker module that raises, so any worker start fails the run.
+    The script then starts one on purpose to prove the trap is armed."""
+    p = _run_under_trap(tmp_path, ETL_UNDER_TRAP, str(tmp_path / "wh"))
     assert "STATS" in p.stdout and "TRAP_FIRED" in p.stdout, p.stdout + p.stderr[-4000:]
+
+
+def test_corpus_build_queries_start_no_python_worker(tmp_path):
+    """The corpus_build queries in a fresh session start no Python worker
+    (the Bloom prefilter and the k-means IVF search included), and a
+    deliberate UDF afterwards still trips the trap."""
+    p = _run_under_trap(tmp_path, CORPUS_UNDER_TRAP)
+    ran = [line.split()[1] for line in p.stdout.splitlines() if line.startswith("ROWS ")]
+    assert tuple(ran) == CORPUS_QUERIES, p.stdout + p.stderr[-4000:]
+    assert "TRAP_FIRED" in p.stdout, p.stdout + p.stderr[-4000:]

@@ -252,7 +252,8 @@ def test_bollinger_stochastic_single_window_shuffle_no_python(spark):
 def test_semantic_dedup_one_cell_shuffle(spark):
     """SemDeDup's pairwise compare must ride the ONE groupBy(cell)
     exchange; the cell assignment itself is the zero-shuffle broadcast-
-    codebook Arrow matmul (an ArrowEvalPython in the scan stage)."""
+    codebook NumPy matmul (on the driver below the vector bound, an
+    ArrowEvalPython in the scan stage above it)."""
     from trading_etl_spark.operators import similarity as sim
 
     rows = [(i, [float(i == j) for j in range(8)]) for i in range(20)]
@@ -263,23 +264,58 @@ def test_semantic_dedup_one_cell_shuffle(spark):
 
 
 def test_bloom_probe_is_map_side(spark):
-    """The Bloom prefilter must run in the scan stage (broadcast bitmap
-    closed over by the Arrow probe) — no exchange below the probe filter;
-    the confirm join is the first shuffle consumer."""
+    """The Bloom prefilter must run in the scan stage: the bitmap words
+    are broadcast and the probe is a JVM expression over them — no
+    shuffle exchange below the probe filter and no Python stage; the
+    confirm join is the first shuffle consumer."""
     from trading_etl_spark.operators import text as tx
 
     keys = spark.createDataFrame([(int(i),) for i in range(100)], "h long")
     bloom = tx.bloom_build(keys, "h", m_bits=1 << 12, k=5)
-    probe = tx._bloom_probe_udf(bloom, 1 << 12, 5)
     train = spark.createDataFrame(
         [(1, "x"), (2, "y")], "doc_id long, shingle string"
     )
-    probed = train.withColumn("h", F.xxhash64("shingle")).filter(
-        probe(F.col("h"))
-    )
+    probed = tx.bloom_probe(
+        train.withColumn("h", F.xxhash64("shingle")), "h", bloom, 1 << 12, 5
+    ).filter("bloom_hit")
     plan = _physical(probed)
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" in plan, plan
+    assert "ShuffleExchange" not in plan and "hashpartitioning" not in plan, plan
+    assert "BroadcastExchange" in plan, plan
+    assert "EvalPython" not in plan, plan
+
+
+def test_decontaminate_bloom_runs_no_python(spark, monkeypatch):
+    """Neither the Bloom build nor the probe of ``decontaminate_bloom``
+    has a Python stage: the executed plans of the build's collect and of
+    the query hold no ``MapInPandas``, ``ArrowEvalPython`` or
+    ``BatchEvalPython``."""
+    from trading_etl_spark import cache
+    from trading_etl_spark.operators import text as tx
+    from trading_etl_spark.sources.local import local_relation
+
+    docs = local_relation(
+        spark,
+        [(i, " ".join(f"w{(i * 7 + j) % 40}" for j in range(30)), "en")
+         for i in range(40)],
+        "doc_id long, text string, lang string",
+    )
+    plans = []
+    to_arrow = type(docs).toArrow
+
+    def spy(df):
+        out = to_arrow(df)
+        plans.append(_physical(df))
+        return out
+
+    monkeypatch.setattr(type(docs), "toArrow", spy)
+    cache.clear(spark, "bloom")
+    out = tx.decontaminate_bloom(docs)
+    out.collect()
+    plans.append(_physical(out))
+    assert len(plans) == 2, plans  # the build's collect, then the query
+    for plan in plans:
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, plan
 
 
 def test_copairs_build_submits_no_job(spark):

@@ -51,7 +51,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..sources.local import local_relation
+from ..sources.local import bounded_arrow, local_relation
 
 GROUP_KEYS = ["currency_pair_code", "timeframe_code"]
 
@@ -194,7 +194,8 @@ def _grouped(inputs: DataFrame, compute, schema: str) -> DataFrame:
     ``DRIVER_SERIES_MAX_ROWS`` input rows it runs on the driver, Arrow in
     and Arrow out; above the bound, as ``groupBy(pair, tf).applyInPandas``
     on the executors. The size test is one bounded collect
-    (``limit(bound + 1)``), whose rows are the driver branch's input.
+    (:func:`~trading_etl_spark.sources.local.bounded_arrow`), whose rows
+    are the driver branch's input.
 
     Either branch hands ``compute`` the same frame: timestamps as
     naive wall times in the session time zone, which is how
@@ -226,8 +227,8 @@ def _grouped(inputs: DataFrame, compute, schema: str) -> DataFrame:
     backfill's EMA input is ~2k candles, and a sf0.1 indicator query's
     4,320 1h candles.
     """
-    head = inputs.limit(DRIVER_SERIES_MAX_ROWS + 1).toArrow()
-    if head.num_rows > DRIVER_SERIES_MAX_ROWS:
+    head = bounded_arrow(inputs, DRIVER_SERIES_MAX_ROWS)
+    if head is None:
         return inputs.groupBy(*GROUP_KEYS).applyInPandas(compute, schema)
     pdf = head.to_pandas()
     for c in pdf.select_dtypes("datetimetz"):

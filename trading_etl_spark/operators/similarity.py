@@ -16,12 +16,20 @@ pieces, each written once:
 - :func:`_probe_cells` — the ``nprobe`` cells with the highest 6dp cosine
   to the query, lowest cell id on ties;
 - :func:`_adc_scored` — PQ asymmetric-distance scoring;
-- :func:`_seed_vectors`, :func:`_lloyd_rows` and :func:`_cosines6_kernel`
-  — the md5 seed pick, the Lloyd loop and the NumPy rounding kernel
-  behind every trained codebook.
+- :func:`_seed_vectors`, :func:`_lloyd_rows` and :func:`_nearest_kernel`
+  (over :func:`_cosines6_kernel`) — the md5 seed pick, the Lloyd loop and
+  the NumPy assignment kernel behind every trained codebook.
 
 A trained coarse quantizer is one :class:`Codebook` value carrying both of
 its forms.
+
+Training and assignment (k-means, PQ, SemDeDup's cells) run on the driver
+below ``DRIVER_VECTORS_MAX_ROWS`` vectors: one bounded Arrow collect
+(:func:`_local_vectors`), NumPy for the seed pick, the Lloyd loop and the
+assignment, and the assigned cells back as an Arrow-backed relation — no
+Python worker starts. Above the bound the same kernel runs on the
+executors as a ``pandas_udf`` (:func:`_nearest_cell_udf`) and the mean
+update is a Spark aggregate; both branches give the same rows.
 
 Scale notes:
 - Brute-force top-k is the O(n·q) baseline: queries × candidates with the
@@ -40,16 +48,22 @@ from __future__ import annotations
 
 import functools
 import hashlib
+import heapq
+import math
 import operator
+from decimal import ROUND_HALF_UP, Context, Decimal
 from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cache import cached, materialize
-from ..sources.local import local_relation
+from ..sources.local import bounded_arrow, local_relation
 from ..sources.ticks import spread_if_underpartitioned
 from .text import colliding_pairs
 
@@ -423,10 +437,71 @@ def _mean_update_rows(assigned: DataFrame, col: str) -> list[tuple[int, list[flo
     ]
 
 
-def _seed_vectors(emb: DataFrame, k: int) -> list[list[float]]:
+# Measured by tools/driver_bound_probe.py (see _local_vectors).
+DRIVER_VECTORS_MAX_ROWS = 100_000
+
+
+class _Local(NamedTuple):
+    """A relation's vectors held on the driver: ``table`` is the bounded
+    Arrow collect of (vec_id, emb), ``V`` its vectors as an (n, dim)
+    NumPy array."""
+
+    table: pa.Table
+    V: np.ndarray
+
+
+def _local_vectors(emb: DataFrame) -> _Local | None:
+    """(vec_id, emb) of ``emb`` on the driver, or ``None`` above
+    ``DRIVER_VECTORS_MAX_ROWS`` rows. Below the bound the seed pick, the
+    Lloyd loop and the cell assignment run in NumPy on this collect and
+    start no Python worker; above it they run on the executors.
+
+    The bound is measured (``tools/driver_bound_probe.py vectors``: 8-cell
+    k-means, 3 Lloyd iterations plus the assignment, on dim-64 vectors, a
+    fresh ``local[4]`` session per run on a 4-core host, build plus one
+    aggregate over the assigned cells, median of 3):
+
+    ======== ========== ========== ===========================
+    rows     driver     executors  driver Python peak RSS
+    ======== ========== ========== ===========================
+    2k       5.0 s      9.0 s      148 MB
+    20k      5.0 s      9.1 s      194 MB
+    100k     7.3 s      13.4 s     352 MB
+    1M       failed     45.9 s     1.8 GB (one run of 25.9 s)
+    ======== ========== ========== ===========================
+
+    The driver wins up to 100k rows: the executors pay the Python
+    workers, a pandas-UDF assignment and a mean aggregate per Lloyd
+    iteration, the driver one collect and a few NumPy matmuls. At 1M
+    rows the collect is 512 MB of doubles, and with a 2 GB driver JVM
+    all three probe runs lost the collect's task result (one earlier run
+    finished in 25.9 s). The bound is the largest measured size at which
+    the driver wins and finishes. The corpus's 200–2,000 vectors sit far
+    below it.
+    """
+    t = bounded_arrow(emb.select("vec_id", "emb"), DRIVER_VECTORS_MAX_ROWS)
+    if t is None:
+        return None
+    vecs = t.column("emb").combine_chunks()
+    flat = vecs.flatten().to_numpy(zero_copy_only=False).astype("float64", copy=False)
+    dim = pc.max(pc.list_value_length(vecs)).as_py() or 0
+    if len(flat) != len(vecs) * dim:
+        raise ValueError("emb: vectors of unequal length or NULL")
+    return _Local(t, flat.reshape(len(vecs), dim))
+
+
+def _seed_vectors(emb: DataFrame, k: int, local: _Local | None = None) -> list[list[float]]:
     """The ``k`` vectors with the smallest ``md5(vec_id)`` hex (vec_id
     tie-break), in that order — reproducible sampling, no RNG state; the
-    oracles replay the same pick."""
+    oracles replay the same pick. With ``local``, picked on the driver."""
+    if local is not None:
+        ids = local.table.column("vec_id").to_pylist()
+        pick = heapq.nsmallest(
+            k,
+            range(len(ids)),
+            key=lambda i: (hashlib.md5(str(ids[i]).encode()).hexdigest(), ids[i]),
+        )
+        return local.V[pick].tolist()
     rows = (
         emb.select("vec_id", "emb", F.md5(F.col("vec_id").cast("string")).alias("h"))
         .orderBy("h", "vec_id")
@@ -436,14 +511,63 @@ def _seed_vectors(emb: DataFrame, k: int) -> list[list[float]]:
     return [[float(x) for x in r["emb"]] for r in rows]
 
 
+_DEC6 = Decimal("1e-6")
+_DEC_CONTEXT = Context(prec=400)
+
+
+def _round6(x: float) -> float:
+    """``F.round(x, 6)`` on the driver: Spark reads a double as the
+    decimal digits of the JVM's ``Double.toString`` and rounds them
+    HALF_UP; ``repr`` gives the same shortest round-trip digits. A
+    rounded zero is +0.0, as Spark's decimal has no signed zero."""
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(_DEC6, ROUND_HALF_UP, _DEC_CONTEXT)) + 0.0
+
+
+def _cell_means(V: np.ndarray, cells: np.ndarray) -> list[tuple[int, np.ndarray]]:
+    """Per cell of ``cells`` (ascending), the unrounded component means of
+    its rows of ``V``, as Spark's ``avg`` computes them: a double sum from
+    0.0 in row order, divided by the count. ``cumsum`` adds strictly in
+    order where ``sum`` would add pairwise, and the final ``+ 0.0`` is the
+    sum buffer's initial zero, which turns an all-``-0.0`` sum into +0.0."""
+    out = []
+    for cell in np.unique(cells):
+        members = V[cells == cell]
+        out.append((int(cell), (np.cumsum(members, axis=0)[-1] + 0.0) / len(members)))
+    return out
+
+
+def _lloyd_local(
+    V: np.ndarray, cent_rows: list[tuple[int, list[float]]], iters: int
+) -> list[tuple[int, list[float]]]:
+    """:func:`_lloyd_rows` on the driver over the (n, dim) array ``V``:
+    the assignment is the NumPy kernel the executors run, and the mean
+    update equals :func:`_mean_update_rows` (:func:`_cell_means`, rounded
+    by :func:`_round6`)."""
+    for _ in range(iters):
+        cells = _nearest_kernel(cent_rows)(V)
+        cent_rows = [
+            (cell, [_round6(x) for x in mean.tolist()])
+            for cell, mean in _cell_means(V, cells)
+        ]
+    return cent_rows
+
+
 def _lloyd_rows(
-    vecs: DataFrame, col: str, cent_rows: list[tuple[int, list[float]]], iters: int
+    vecs: DataFrame,
+    col: str,
+    cent_rows: list[tuple[int, list[float]]],
+    iters: int,
+    V: np.ndarray | None = None,
 ) -> list[tuple[int, list[float]]]:
     """Deterministic Lloyd over ``vecs[col]`` starting from ``cent_rows``;
-    returns the trained (cell, centroid) rows, sorted by cell.
+    returns the trained (cell, centroid) rows, sorted by cell. ``V``, the
+    same vectors as an (n, dim) driver array, runs the loop on the driver
+    (:func:`_lloyd_local`) with the same result.
 
     - assignment: argmax of 6dp-rounded cosine, ties to the lowest cell id
-      (:func:`_nearest_cell_udf`);
+      (:func:`_nearest_kernel`);
     - update: component-wise mean, rounded to 6dp. Rounding at every stage
       keeps cross-engine float drift (~1e-15) far below the decision
       threshold (5e-7), so DuckDB replays the identical trajectory.
@@ -454,6 +578,8 @@ def _lloyd_rows(
     assignment kernel — lineage is truncated every iteration, no growing
     plan. At 100 TB you train on a sample (``vecs.sample(frac)``) and only
     the final full-corpus assignment scans everything once."""
+    if V is not None:
+        return _lloyd_local(V, cent_rows, iters)
     for _ in range(iters):
         nearest = _nearest_cell_udf(cent_rows)
         assigned = vecs.select(nearest(F.col(col)).alias("cell"), F.col(col).alias("sv"))
@@ -464,7 +590,7 @@ def _lloyd_rows(
 class Codebook(NamedTuple):
     """A trained coarse quantizer in both of its forms, built once where it
     is trained: ``rows``, the driver-local (cell, centroid) pairs sorted
-    by cell that the Arrow assignment kernel closes over, and ``rel``, the
+    by cell that the NumPy assignment kernel closes over, and ``rel``, the
     same rows as a (cell int, cv array<double>) relation the probes
     broadcast. k×dim doubles either way."""
 
@@ -479,7 +605,9 @@ def kmeans_codebook(
     md5-ranked seed vectors (:func:`_seed_vectors`) seed cells 0..k-1,
     then ``iters`` rounds of :func:`_lloyd_rows`. Deterministic by
     construction, so the result is engine-independent."""
-    rows = _lloyd_rows(emb, "emb", list(enumerate(_seed_vectors(emb, k))), iters)
+    local = _local_vectors(emb)
+    seeds = list(enumerate(_seed_vectors(emb, k, local)))
+    rows = _lloyd_rows(emb, "emb", seeds, iters, None if local is None else local.V)
     return Codebook(
         rows, local_relation(emb.sparkSession, rows, "cell int, cv array<double>")
     )
@@ -512,38 +640,63 @@ def _cosines6_kernel():
     return cosines6
 
 
-def _nearest_cell_udf(cent_rows: list[tuple[int, list[float]]]):
-    """Arrow-vectorized nearest-centroid kernel: one ``V @ Cᵀ`` matmul per
-    batch. The interpreted ``zip_with``/``aggregate`` cosine costs seconds
-    per few thousand vectors at n×cells×dim scale (the SRP lesson —
-    measured 5.0 s → ~1 s for the sf0.1 kmeans query); NumPy does the same
-    double math per Arrow batch. ``argmax`` of the
-    :func:`_cosines6_kernel` sims takes the FIRST maximum, i.e. the
+def _nearest_kernel(cent_rows: list[tuple[int, list[float]]]):
+    """The nearest-centroid kernel ``nearest(V)``: the int32 cell of each
+    row of the (n, dim) array ``V``, one ``V @ Cᵀ`` matmul. ``argmax`` of
+    the :func:`_cosines6_kernel` sims takes the FIRST maximum, i.e. the
     lowest cell id — identical to the (desc csim, asc cell) window
-    ordering and the DuckDB oracle's row_number ordering."""
+    ordering and the DuckDB oracle's row_number ordering. A closure, like
+    :func:`_cosines6_kernel`, so a UDF ships it by value."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
     rows = sorted(cent_rows)
     cells = np.array([c for c, _ in rows], dtype="int64")
     C = np.array([v for _, v in rows], dtype="float64")  # (k, dim)
     cosines6 = _cosines6_kernel()
 
+    def nearest(V):
+        if not len(V):
+            return np.zeros(0, dtype="int32")
+        return cells[np.argmax(cosines6(V, C), axis=1)].astype("int32")
+
+    return nearest
+
+
+def _nearest_cell_udf(cent_rows: list[tuple[int, list[float]]]):
+    """:func:`_nearest_kernel` as an Arrow-vectorized UDF, one matmul per
+    batch: the assignment above ``DRIVER_VECTORS_MAX_ROWS``, where it
+    runs on the executors (below it, :func:`_local_vectors` runs the same
+    kernel on the driver). The interpreted ``zip_with``/``aggregate``
+    cosine costs seconds per few thousand vectors at n×cells×dim scale
+    (the SRP lesson — measured 5.0 s → ~1 s for the sf0.1 kmeans query);
+    NumPy does the same double math per Arrow batch."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    kernel = _nearest_kernel(cent_rows)
+
     @pandas_udf("int")
     def nearest(emb: pd.Series) -> pd.Series:
-        V = np.vstack(emb.to_numpy()).astype("float64")
-        sims = cosines6(V, C)
-        return pd.Series(cells[np.argmax(sims, axis=1)].astype("int32"))
+        return pd.Series(kernel(np.vstack(emb.to_numpy()).astype("float64")))
 
     return nearest
 
 
 def assign_cells(emb: DataFrame, codebook: Codebook) -> DataFrame:
     """Nearest-centroid assignment (vec_id, cell, emb): the k×dim codebook
-    rows are closed over by the Arrow kernel (the broadcast-codebook
-    pattern); the corpus side never shuffles."""
-    nearest = _nearest_cell_udf(codebook.rows)
-    return emb.select("vec_id", nearest(F.col("emb")).alias("cell"), "emb")
+    rows are closed over by the NumPy kernel (the broadcast-codebook
+    pattern); the corpus side never shuffles. Below
+    ``DRIVER_VECTORS_MAX_ROWS`` rows the kernel runs on the driver and
+    the cells come back as an Arrow-backed relation."""
+    local = _local_vectors(emb)
+    if local is None:
+        nearest = _nearest_cell_udf(codebook.rows)
+        return emb.select("vec_id", nearest(F.col("emb")).alias("cell"), "emb")
+    cells = _nearest_kernel(codebook.rows)(local.V)
+    t = local.table
+    return emb.sparkSession.createDataFrame(
+        pa.table({"vec_id": t.column("vec_id"), "cell": cells, "emb": t.column("emb")})
+    )
 
 
 def ivf_inverted_index(emb: DataFrame, codebook: Codebook) -> DataFrame:
@@ -722,17 +875,28 @@ def pq_model(
     ``(codes, books)`` where codes = (vec_id, emb, _c0.._c{m-1}) and
     books[s] = that subspace's trained (cell, centroid) rows."""
     dsub = dim // m
-    seeds = _seed_vectors(emb, k)
+    local = _local_vectors(emb)
+    seeds = _seed_vectors(emb, k, local)
     out = emb.select("vec_id", "emb")
+    codes = {}
     books = []
     for s in range(m):
         sv = F.slice("emb", s * dsub + 1, dsub)
+        sub = None if local is None else local.V[:, s * dsub : (s + 1) * dsub]
         cent_rows = [
             (i, v[s * dsub : (s + 1) * dsub]) for i, v in enumerate(seeds)
         ]
-        cent_rows = _lloyd_rows(emb.select(sv.alias("sv")), "sv", cent_rows, iters)
-        out = out.withColumn(f"_c{s}", _nearest_cell_udf(cent_rows)(sv))
+        cent_rows = _lloyd_rows(emb.select(sv.alias("sv")), "sv", cent_rows, iters, sub)
+        if local is None:
+            out = out.withColumn(f"_c{s}", _nearest_cell_udf(cent_rows)(sv))
+        else:
+            codes[f"_c{s}"] = _nearest_kernel(cent_rows)(sub)
         books.append(sorted(cent_rows))
+    if local is not None:
+        out = emb.sparkSession.createDataFrame(
+            pa.table({"vec_id": local.table.column("vec_id"),
+                      "emb": local.table.column("emb"), **codes})
+        )
     return out, books
 
 
@@ -876,7 +1040,7 @@ def knn_ivfadc(
         codebook = kmeans_codebook(emb, n_coarse, coarse_iters)
     if assigned is None:
         # standalone path; production callers pass the CACHED inverted-list
-        # relation (queries/datapipe._ivf_index) so the Arrow assignment
+        # relation (queries/datapipe._ivf_index) so the assignment
         # stage runs at index-build time, not per query
         assigned = ivf_inverted_index(emb, codebook)
     assigned = assigned.select("neighbor_id", F.col("cell").alias("ivf_cell"))
@@ -939,10 +1103,11 @@ def semantic_dedup(
 
     Scale shape (100 TB): the codebook trains on a sample
     (:func:`kmeans_codebook`); assignment is the zero-shuffle broadcast-
-    codebook Arrow matmul; the ONE shuffle is the groupBy(cell), after which
-    each cell's Gram matrix is a single NumPy matmul. n_cells must scale
-    with the corpus (cells of ~10³-10⁴ vectors) so per-cell work stays
-    bounded — exactly the SemDeDup paper's deployment regime; a skewed
+    codebook NumPy matmul (:func:`assign_cells`); the ONE shuffle is the
+    groupBy(cell), after which each cell's Gram matrix is a single NumPy
+    matmul. n_cells must scale with the corpus (cells of ~10³-10⁴
+    vectors) so per-cell work stays bounded — exactly the SemDeDup
+    paper's deployment regime; a skewed
     giant cell is the operator's known hot spot and is what the paper's
     k ∝ n guidance prevents.
 

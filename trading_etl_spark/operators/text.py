@@ -24,8 +24,6 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1800,61 +1798,74 @@ def dsir_resample(
 BLOOM_M_BITS = 1 << 20  # 128 KiB bitmap — ~1% fp at ~100k keys (m/n≈10, k=7)
 BLOOM_K = 7
 
-def _bloom_positions(h, m_bits: int, k: int):
-    """k probe positions per 64-bit key via Kirsch–Mitzenmacher double
-    hashing: pos_i = (h1 + i·h2) mod m, with the stride forced odd so it
-    cycles the full table. Returns a (k, n) int64 array."""
-    import numpy as np
-
-    h = h.astype(np.uint64)
-    h1 = h & np.uint64(0xFFFFFFFF)
-    h2 = (h >> np.uint64(32)) | np.uint64(1)
-    i = np.arange(k, dtype=np.uint64)[:, None]
-    return ((h1[None, :] + i * h2[None, :]) % np.uint64(m_bits)).astype(np.int64)
+def _bloom_positions(h: Column, m_bits: int, k: int) -> Column:
+    """The k probe positions of an int64 key column as one
+    ``array<bigint>``, by Kirsch–Mitzenmacher double hashing:
+    pos_i = (h1 + i·h2) mod m with h1 the low 32 bits of the key and h2
+    the high 32 bits, forced odd so the stride cycles the full table.
+    Both halves are read unsigned and every term stays below 2^36, so
+    signed longs give the positions unsigned 64-bit arithmetic would."""
+    h1 = h.bitwiseAND(F.lit(0xFFFFFFFF))
+    h2 = F.shiftrightunsigned(h, 32).bitwiseOR(F.lit(1))
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(k - 1)),
+        lambda i: F.pmod(h1 + i * h2, F.lit(m_bits)),
+    )
 
 
 def bloom_build(keys: DataFrame, key_col: str = "h", m_bits: int = BLOOM_M_BITS,
                 k: int = BLOOM_K) -> bytes:
-    """Distributed Bloom-filter build over an int64 key column: each Arrow
-    batch sets its bits into a partition-local bitmap (``mapInPandas``),
-    and the m/8-byte partials OR-merge on the driver — the treeAggregate
-    shape, driver traffic = partitions × m/8 bytes regardless of key count.
-    Size ``m_bits`` from catalog stats (~10 bits/key for ~1% fp)."""
+    """Distributed Bloom-filter build over an int64 key column, returned
+    as the m/8 bitmap bytes (bit ``p`` is bit ``p & 7`` of byte
+    ``p >> 3``). One partial-aggregable aggregate on the JVM: the
+    positions are exploded and ``bit_or``-ed into their 64-bit word,
+    keyed by word index ``p >> 6``, so the shuffle and the collect carry
+    at most m/64 rows whatever the key count. Size ``m_bits`` (a multiple
+    of 64) from catalog stats (~10 bits/key for ~1% fp)."""
     import numpy as np
 
-    def partials(it):
-        bits = np.zeros(m_bits // 8, dtype=np.uint8)
-        dirty = False
-        for pdf in it:
-            if len(pdf):
-                dirty = True
-                pos = _bloom_positions(pdf[key_col].to_numpy(), m_bits, k).ravel()
-                np.bitwise_or.at(
-                    bits, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8)
-                )
-        if dirty:
-            yield pd.DataFrame({"bloom": [bits.tobytes()]})
+    if m_bits % 64:
+        raise ValueError(f"m_bits must be a multiple of 64, got {m_bits}")
 
-    out = np.zeros(m_bits // 8, dtype=np.uint8)
-    for r in keys.mapInPandas(partials, "bloom binary").collect():
-        out |= np.frombuffer(r["bloom"], dtype=np.uint8)
+    words = (
+        keys.select(F.explode(_bloom_positions(F.col(key_col), m_bits, k)).alias("p"))
+        .groupBy(F.shiftright("p", 6).alias("w"))
+        .agg(F.bit_or(F.expr("shiftleft(1L, p & 63)")).alias("bits"))
+        .toArrow()
+    )
+    out = np.zeros(m_bits // 64, dtype="<i8")
+    out[words.column("w").to_numpy()] = words.column("bits").to_numpy()
     return out.tobytes()
 
 
-def _bloom_probe_udf(bloom: bytes, m_bits: int, k: int):
-    """Arrow-vectorized membership probe (no false negatives)."""
+def bloom_probe(
+    rel: DataFrame, key_col: str, bloom: bytes, m_bits: int = BLOOM_M_BITS,
+    k: int = BLOOM_K,
+) -> DataFrame:
+    """``rel`` with a boolean ``bloom_hit`` column: whether every probe
+    position of the int64 ``key_col`` is set in ``bloom`` (never false for
+    a built key). The bitmap's m/64 words are one ``array<bigint>`` row of
+    an Arrow-backed relation, broadcast-cross-joined to ``rel``, so the
+    probe runs map-side on the JVM."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
-    bits = np.frombuffer(bloom, dtype=np.uint8)
-
-    @pandas_udf("boolean")
-    def probe(h: pd.Series) -> pd.Series:
-        pos = _bloom_positions(h.to_numpy(), m_bits, k)  # (k, n)
-        hit = (bits[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-        return pd.Series(hit.all(axis=0))
-
-    return probe
+    words = local_relation(
+        rel.sparkSession,
+        [(np.frombuffer(bloom, dtype="<i8").tolist(),)],
+        "_bloom_words array<bigint>",
+    )
+    is_set = F.forall(
+        _bloom_positions(F.col(key_col), m_bits, k),
+        lambda p: F.getbit(
+            F.element_at("_bloom_words", F.shiftright(p, 6).cast("int") + 1),
+            p.bitwiseAND(63).cast("int"),
+        ) == 1,
+    )
+    return (
+        rel.crossJoin(F.broadcast(words))
+        .withColumn("bloom_hit", is_set)
+        .drop("_bloom_words")
+    )
 
 
 def _bloom_cached(
@@ -1863,9 +1874,9 @@ def _bloom_cached(
     """The decontamination bitmap through the session cache, keyed per
     (test-relation plan, sizing): it is the persisted filter artifact
     of a decontamination rollout — built once per eval-set release, probed
-    by every ingest — and rebuilding the m/8-byte partials job per query
-    call re-paid a full test-side scan for bytes that cannot change under
-    the same test relation. bench.py's bloom_build_cold line clears this
+    by every ingest — and rebuilding it per query call re-paid a full
+    test-side scan for bytes that cannot change under the same test
+    relation. bench.py's bloom_build_cold line clears this
     cache and times the build alone, keeping the moved cost measured."""
     return cached(
         test.sparkSession,
@@ -1894,14 +1905,16 @@ def decontaminate_bloom(
 
     Two-phase, like every runtime filter (cf. Spark's AQE
     ``runtime.bloomFilter``): (1) build the bitmap over the test side's
-    distinct ``xxhash64(shingle)`` (one job at construction time — the
-    documented eager step); (2) probe the TRAIN shingle relation map-side
-    with the broadcast bitmap, so the shuffle into the confirm join carries
+    ``xxhash64(shingle)`` (:func:`bloom_build`, one aggregate at
+    construction time — the documented eager step); (2) probe the TRAIN
+    shingle relation map-side with the broadcast bitmap
+    (:func:`bloom_probe`), so the shuffle into the confirm join carries
     only true matches + the ~1% false-positive tail instead of the full
     train shingle relation — at 100 TB that shuffle is the pipeline's
     biggest exchange. The exact confirm join then kills the false
     positives, so the result is IDENTICAL to :func:`decontaminate` (no
-    false negatives by construction) and shares its oracle.
+    false negatives by construction) and shares its oracle. Build and
+    probe are JVM expressions, so neither starts a Python worker.
     """
     if test_docs is None:
         sh = (
@@ -1919,13 +1932,16 @@ def decontaminate_bloom(
             F.col("doc_id").alias("test_doc_id"), "shingle"
         )
     # no .distinct() before the build: bitmap insertion is idempotent, so
-    # deduping the hashes would only add a full shuffle to what is
-    # otherwise a single map-only pass over the test scan.
-    probe = _bloom_probe_udf(_bloom_cached(test, m_bits, k), m_bits, k)
+    # deduping the hashes would only add a full shuffle of the hashes in
+    # front of the word aggregate, whose own shuffle is at most m/64 rows
+    # per partition.
     candidates = (
-        train.withColumn("h", F.xxhash64("shingle"))
-        .filter(probe(F.col("h")))
-        .drop("h")
+        bloom_probe(
+            train.withColumn("h", F.xxhash64("shingle")), "h",
+            _bloom_cached(test, m_bits, k), m_bits, k,
+        )
+        .filter("bloom_hit")
+        .drop("h", "bloom_hit")
     )
     return (
         candidates.join(test, "shingle")

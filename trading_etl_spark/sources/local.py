@@ -1,4 +1,5 @@
-"""Relations built from rows the driver already holds.
+"""Relations built from rows the driver already holds, and the bounded
+collect that brings a small relation to the driver.
 
 ``spark.createDataFrame(rows, schema)`` turns a Python row list into a
 pickled-row RDD, and the first job over that RDD starts the Python daemon
@@ -33,3 +34,15 @@ def local_relation(
         [pa.array(c, f.type) for c, f in zip(columns, arrow)], schema=arrow
     )
     return spark.createDataFrame(table, schema)
+
+
+def bounded_arrow(df: DataFrame, bound: int) -> pa.Table | None:
+    """``df`` as one ``pyarrow.Table`` when it has at most ``bound`` rows,
+    else ``None``. The size test is the collect itself
+    (``limit(bound + 1).toArrow()``), so a relation that fits is read
+    once and one that does not costs at most ``bound + 1`` rows. A
+    negative ``bound`` always gives ``None``."""
+    if bound < 0:
+        return None
+    head = df.limit(bound + 1).toArrow()
+    return head if head.num_rows <= bound else None
