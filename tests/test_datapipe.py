@@ -866,7 +866,8 @@ def _vector_models(emb):
         tuple(r) for r in sim.assign_cells(emb, book).select("vec_id", "cell", "emb").collect()
     )
     codes, books = sim.pq_model(emb)
-    return book.rows, cells, books, sorted(tuple(r) for r in codes.collect())
+    knn = sorted(tuple(r) for r in sim.knn_ivf_kmeans(emb).collect())
+    return book.rows, cells, books, sorted(tuple(r) for r in codes.collect()), knn
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
@@ -881,15 +882,31 @@ def test_vectors_driver_branch_equals_executors(spark, monkeypatch, sf):
     monkeypatch.setattr(sim, "DRIVER_VECTORS_MAX_ROWS", -1)
     assert sim._local_vectors(emb) is None
     executors = _vector_models(emb)
-    for name, got, want in zip(("codebook", "cells", "books", "codes"), driver, executors):
+    names = ("codebook", "cells", "books", "codes", "knn_ivf_kmeans")
+    for name, got, want in zip(names, driver, executors):
         assert got == want, name
+
+
+def test_training_and_assignment_share_one_collect(spark, monkeypatch):
+    """A standalone ``knn_ivf_kmeans`` or ``semantic_dedup`` trains the
+    codebook and assigns the corpus to it over one driver collect of the
+    embeddings, not one per step."""
+    rows = [(i, [float(i % 3), float(i % 5), 1.0]) for i in range(30)]
+    emb = spark.createDataFrame(rows, "vec_id long, emb array<double>")
+    calls = []
+    collect = sim._local_vectors
+    monkeypatch.setattr(sim, "_local_vectors", lambda e: calls.append(1) or collect(e))
+    sim.knn_ivf_kmeans(emb, n_queries=2, n_cells=3, iters=2)
+    assert len(calls) == 1
+    sim.semantic_dedup(emb, n_cells=3, iters=2)
+    assert len(calls) == 2
 
 
 def _fixture_means(spark, sf):
     """Every unrounded centroid mean the k-means and PQ training of the
     fixture embeddings computes, iteration by iteration."""
     local = sim._local_vectors(_fixture_emb(spark, sf))
-    seeds = sim._seed_vectors(None, max(sim.KMEANS_K, sim.PQ_K), local)
+    seeds = sim._seed_local(local, max(sim.KMEANS_K, sim.PQ_K))
     dsub = sim.EMB_DIM // sim.PQ_M
     runs = [(local.V, list(enumerate(seeds[: sim.KMEANS_K])), sim.KMEANS_ITERS)] + [
         (

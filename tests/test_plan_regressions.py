@@ -266,8 +266,8 @@ def test_semantic_dedup_one_cell_shuffle(spark):
 def test_bloom_probe_is_map_side(spark):
     """The Bloom prefilter must run in the scan stage: the bitmap words
     are broadcast and the probe is a JVM expression over them — no
-    shuffle exchange below the probe filter and no Python stage; the
-    confirm join is the first shuffle consumer."""
+    exchange below the probe filter but the words' broadcast and no
+    Python stage; the confirm join is the first shuffle consumer."""
     from trading_etl_spark.operators import text as tx
 
     keys = spark.createDataFrame([(int(i),) for i in range(100)], "h long")
@@ -279,7 +279,7 @@ def test_bloom_probe_is_map_side(spark):
         train.withColumn("h", F.xxhash64("shingle")), "h", bloom, 1 << 12, 5
     ).filter("bloom_hit")
     plan = _physical(probed)
-    assert "ShuffleExchange" not in plan and "hashpartitioning" not in plan, plan
+    assert "Exchange" not in plan.replace("BroadcastExchange", ""), plan
     assert "BroadcastExchange" in plan, plan
     assert "EvalPython" not in plan, plan
 

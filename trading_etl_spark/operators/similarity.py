@@ -490,18 +490,10 @@ def _local_vectors(emb: DataFrame) -> _Local | None:
     return _Local(t, flat.reshape(len(vecs), dim))
 
 
-def _seed_vectors(emb: DataFrame, k: int, local: _Local | None = None) -> list[list[float]]:
+def _seed_vectors(emb: DataFrame, k: int) -> list[list[float]]:
     """The ``k`` vectors with the smallest ``md5(vec_id)`` hex (vec_id
     tie-break), in that order — reproducible sampling, no RNG state; the
-    oracles replay the same pick. With ``local``, picked on the driver."""
-    if local is not None:
-        ids = local.table.column("vec_id").to_pylist()
-        pick = heapq.nsmallest(
-            k,
-            range(len(ids)),
-            key=lambda i: (hashlib.md5(str(ids[i]).encode()).hexdigest(), ids[i]),
-        )
-        return local.V[pick].tolist()
+    oracles replay the same pick."""
     rows = (
         emb.select("vec_id", "emb", F.md5(F.col("vec_id").cast("string")).alias("h"))
         .orderBy("h", "vec_id")
@@ -509,6 +501,18 @@ def _seed_vectors(emb: DataFrame, k: int, local: _Local | None = None) -> list[l
         .collect()
     )
     return [[float(x) for x in r["emb"]] for r in rows]
+
+
+def _seed_local(local: _Local, k: int) -> list[list[float]]:
+    """:func:`_seed_vectors` on the driver collect ``local``: the same
+    md5-then-vec_id order, so the same pick."""
+    ids = local.table.column("vec_id").to_pylist()
+    pick = heapq.nsmallest(
+        k,
+        range(len(ids)),
+        key=lambda i: (hashlib.md5(str(ids[i]).encode()).hexdigest(), ids[i]),
+    )
+    return local.V[pick].tolist()
 
 
 _DEC6 = Decimal("1e-6")
@@ -555,16 +559,11 @@ def _lloyd_local(
 
 
 def _lloyd_rows(
-    vecs: DataFrame,
-    col: str,
-    cent_rows: list[tuple[int, list[float]]],
-    iters: int,
-    V: np.ndarray | None = None,
+    vecs: DataFrame, col: str, cent_rows: list[tuple[int, list[float]]], iters: int
 ) -> list[tuple[int, list[float]]]:
     """Deterministic Lloyd over ``vecs[col]`` starting from ``cent_rows``;
-    returns the trained (cell, centroid) rows, sorted by cell. ``V``, the
-    same vectors as an (n, dim) driver array, runs the loop on the driver
-    (:func:`_lloyd_local`) with the same result.
+    returns the trained (cell, centroid) rows, sorted by cell.
+    :func:`_lloyd_local` is the same loop on the driver.
 
     - assignment: argmax of 6dp-rounded cosine, ties to the lowest cell id
       (:func:`_nearest_kernel`);
@@ -578,8 +577,6 @@ def _lloyd_rows(
     assignment kernel — lineage is truncated every iteration, no growing
     plan. At 100 TB you train on a sample (``vecs.sample(frac)``) and only
     the final full-corpus assignment scans everything once."""
-    if V is not None:
-        return _lloyd_local(V, cent_rows, iters)
     for _ in range(iters):
         nearest = _nearest_cell_udf(cent_rows)
         assigned = vecs.select(nearest(F.col(col)).alias("cell"), F.col(col).alias("sv"))
@@ -605,12 +602,22 @@ def kmeans_codebook(
     md5-ranked seed vectors (:func:`_seed_vectors`) seed cells 0..k-1,
     then ``iters`` rounds of :func:`_lloyd_rows`. Deterministic by
     construction, so the result is engine-independent."""
+    return _train_codebook(emb, k, iters)[0]
+
+
+def _train_codebook(
+    emb: DataFrame, k: int, iters: int
+) -> tuple[Codebook, _Local | None]:
+    """:func:`kmeans_codebook` and the driver collect it trained on
+    (``None`` above the bound), for a caller that assigns ``emb`` to the
+    codebook next (:func:`assign_cells`' ``local``)."""
     local = _local_vectors(emb)
-    seeds = list(enumerate(_seed_vectors(emb, k, local)))
-    rows = _lloyd_rows(emb, "emb", seeds, iters, None if local is None else local.V)
-    return Codebook(
-        rows, local_relation(emb.sparkSession, rows, "cell int, cv array<double>")
-    )
+    if local is None:
+        rows = _lloyd_rows(emb, "emb", list(enumerate(_seed_vectors(emb, k))), iters)
+    else:
+        rows = _lloyd_local(local.V, list(enumerate(_seed_local(local, k))), iters)
+    rel = local_relation(emb.sparkSession, rows, "cell int, cv array<double>")
+    return Codebook(rows, rel), local
 
 
 def _cosines6_kernel():
@@ -682,13 +689,19 @@ def _nearest_cell_udf(cent_rows: list[tuple[int, list[float]]]):
     return nearest
 
 
-def assign_cells(emb: DataFrame, codebook: Codebook) -> DataFrame:
+def assign_cells(
+    emb: DataFrame, codebook: Codebook, local: _Local | None = None
+) -> DataFrame:
     """Nearest-centroid assignment (vec_id, cell, emb): the k×dim codebook
     rows are closed over by the NumPy kernel (the broadcast-codebook
     pattern); the corpus side never shuffles. Below
     ``DRIVER_VECTORS_MAX_ROWS`` rows the kernel runs on the driver and
-    the cells come back as an Arrow-backed relation."""
-    local = _local_vectors(emb)
+    the cells come back as an Arrow-backed relation. ``local``, the
+    driver collect of ``emb`` that trained the codebook
+    (:func:`_train_codebook`), lets training and assignment share one
+    collect; without it the bounded collect runs here."""
+    if local is None:
+        local = _local_vectors(emb)
     if local is None:
         nearest = _nearest_cell_udf(codebook.rows)
         return emb.select("vec_id", nearest(F.col("emb")).alias("cell"), "emb")
@@ -699,7 +712,9 @@ def assign_cells(emb: DataFrame, codebook: Codebook) -> DataFrame:
     )
 
 
-def ivf_inverted_index(emb: DataFrame, codebook: Codebook) -> DataFrame:
+def ivf_inverted_index(
+    emb: DataFrame, codebook: Codebook, local: _Local | None = None
+) -> DataFrame:
     """The IVF INVERTED-LIST relation — (neighbor_id, cell, nv, nnorm):
     every corpus vector tagged with its trained coarse cell, its norm
     materialized once per row. This is index-BUILD state, exactly
@@ -708,8 +723,8 @@ def ivf_inverted_index(emb: DataFrame, codebook: Codebook) -> DataFrame:
     this relation next to the codebook (queries/datapipe._ivf_index) so
     the serving path is the probe join alone; at 100 TB the lists are a
     written table partitioned by cell, and a probe reads nprobe
-    partitions."""
-    return assign_cells(emb, codebook).select(
+    partitions. ``local`` as in :func:`assign_cells`."""
+    return assign_cells(emb, codebook, local).select(
         F.col("vec_id").alias("neighbor_id"),
         "cell",
         F.col("emb").alias("nv"),
@@ -807,10 +822,11 @@ def knn_ivf_kmeans(
     becomes exhaustive). On a real clusterable corpus recall tracks the
     cluster structure; probing cost is nprobe/n_cells of the corpus.
     """
+    local = None
     if codebook is None:
-        codebook = kmeans_codebook(emb, n_cells, iters)
+        codebook, local = _train_codebook(emb, n_cells, iters)
     if assigned is None:
-        assigned = ivf_inverted_index(emb, codebook)
+        assigned = ivf_inverted_index(emb, codebook, local)
     q = _queries(
         emb, n_queries, F.col("emb").alias("qv"), _norm(F.col("emb")).alias("qnorm")
     )
@@ -875,29 +891,37 @@ def pq_model(
     ``(codes, books)`` where codes = (vec_id, emb, _c0.._c{m-1}) and
     books[s] = that subspace's trained (cell, centroid) rows."""
     dsub = dim // m
+    subspaces = [slice(s * dsub, (s + 1) * dsub) for s in range(m)]
     local = _local_vectors(emb)
-    seeds = _seed_vectors(emb, k, local)
-    out = emb.select("vec_id", "emb")
-    codes = {}
-    books = []
-    for s in range(m):
-        sv = F.slice("emb", s * dsub + 1, dsub)
-        sub = None if local is None else local.V[:, s * dsub : (s + 1) * dsub]
-        cent_rows = [
-            (i, v[s * dsub : (s + 1) * dsub]) for i, v in enumerate(seeds)
+    seeds = _seed_vectors(emb, k) if local is None else _seed_local(local, k)
+    seed_rows = [[(i, v[sub]) for i, v in enumerate(seeds)] for sub in subspaces]
+    if local is None:
+        svs = [F.slice("emb", sub.start + 1, dsub) for sub in subspaces]
+        books = [
+            sorted(_lloyd_rows(emb.select(sv.alias("sv")), "sv", rows, iters))
+            for sv, rows in zip(svs, seed_rows)
         ]
-        cent_rows = _lloyd_rows(emb.select(sv.alias("sv")), "sv", cent_rows, iters, sub)
-        if local is None:
-            out = out.withColumn(f"_c{s}", _nearest_cell_udf(cent_rows)(sv))
-        else:
-            codes[f"_c{s}"] = _nearest_kernel(cent_rows)(sub)
-        books.append(sorted(cent_rows))
-    if local is not None:
-        out = emb.sparkSession.createDataFrame(
-            pa.table({"vec_id": local.table.column("vec_id"),
-                      "emb": local.table.column("emb"), **codes})
+        codes = emb.select(
+            "vec_id",
+            "emb",
+            *[
+                _nearest_cell_udf(b)(sv).alias(f"_c{s}")
+                for s, (sv, b) in enumerate(zip(svs, books))
+            ],
         )
-    return out, books
+        return codes, books
+    books = [
+        sorted(_lloyd_local(local.V[:, sub], rows, iters))
+        for sub, rows in zip(subspaces, seed_rows)
+    ]
+    codes = {
+        f"_c{s}": _nearest_kernel(b)(local.V[:, sub])
+        for s, (sub, b) in enumerate(zip(subspaces, books))
+    }
+    t = local.table
+    return emb.sparkSession.createDataFrame(
+        pa.table({"vec_id": t.column("vec_id"), "emb": t.column("emb"), **codes})
+    ), books
 
 
 def _adc_scored(
@@ -1036,13 +1060,14 @@ def knn_ivfadc(
     (resolution m·log2(k) bits), and the exact kNN remains the labeled
     verification baseline.
     """
+    local = None
     if codebook is None:
-        codebook = kmeans_codebook(emb, n_coarse, coarse_iters)
+        codebook, local = _train_codebook(emb, n_coarse, coarse_iters)
     if assigned is None:
         # standalone path; production callers pass the CACHED inverted-list
         # relation (queries/datapipe._ivf_index) so the assignment
         # stage runs at index-build time, not per query
-        assigned = ivf_inverted_index(emb, codebook)
+        assigned = ivf_inverted_index(emb, codebook, local)
     assigned = assigned.select("neighbor_id", F.col("cell").alias("ivf_cell"))
     codes, books = pq if pq is not None else pq_model(emb, m, pq_k, pq_iters, dim)
     q = _queries(emb, n_queries, "emb")
@@ -1114,8 +1139,9 @@ def semantic_dedup(
     The threshold compares :func:`_cosines6_kernel` values, so the DuckDB
     oracle replays the identical drop set.
     """
+    local = None
     if codebook is None:
-        codebook = kmeans_codebook(emb, n_cells, iters)
+        codebook, local = _train_codebook(emb, n_cells, iters)
     cosines6 = _cosines6_kernel()
 
     def survivors(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1131,7 +1157,7 @@ def semantic_dedup(
         return pdf.loc[keep, ["vec_id", "cell"]]
 
     return (
-        assign_cells(emb, codebook)
+        assign_cells(emb, codebook, local)
         .groupBy("cell")
         .applyInPandas(survivors, "vec_id bigint, cell int")
     )
